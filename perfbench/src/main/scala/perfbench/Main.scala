@@ -52,7 +52,8 @@ object Main {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
+      // no System.gc inside a timed operation: the loops call [[settle]]
+      .config("spark.cleaner.periodicGC.interval", "1h")
       .config("spark.local.dir", new File(work, "spark-local").getAbsolutePath)
       .config("spark.sql.warehouse.dir",
         new File(work, "warehouse").getAbsolutePath)
@@ -126,6 +127,18 @@ object Main {
       .filter(_.getType == java.lang.management.MemoryType.HEAP)
       .flatMap(p => Option(p.getCollectionUsage)).map(_.getUsed).sum / 1048576.0
   }
+
+  /** Run after every batch and every pass over the query list, outside any
+    * timed interval: a full GC lets Spark's ContextCleaner release the
+    * shuffles, broadcasts and pinned blocks left behind, and the pause gives
+    * the cleaner time to do so. Without it that work piles up and lands on
+    * whichever operation runs when a GC finally finds it. */
+  def settle(): Unit = {
+    System.gc()
+    Thread.sleep(settleMs)
+  }
+
+  val settleMs = 250L
 
   /** Tracks the peak of [[heapAfterGcMb]] over the samples taken. */
   final class HeapPeak {

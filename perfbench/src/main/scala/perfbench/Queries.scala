@@ -21,7 +21,11 @@ object Queries {
 
   /** A traced run's fixed pass count (run once untraced, once traced), so
     * its counts repeat for a seed. */
-  val tracedPasses = 2
+  val tracedPasses = 1
+
+  /** Fewest passes a timed loop runs, so each query's median has three
+    * samples however slow the machine is. */
+  val minPasses = 3
 
   /** Per-query deadline, about 3x the slowest on-time query of the lists. */
   val deadlineS = 30.0
@@ -99,13 +103,15 @@ object Queries {
     // set-up: one untimed pass in the list's fixed order warms the JIT and
     // the codegen cache, which a cold pass pays unevenly whatever the seed
     val setupS = sessionS + Main.timeS(names.foreach(n => once(n, -1, off)))
+    Main.settle()
 
     // the operation sequence: passes over the list, each in a seeded order
     val sequence: Iterator[(String, Int)] = Iterator.from(0).flatMap { pass =>
       new scala.util.Random(args.seed * 1000003L + pass).shuffle(names).map(_ -> pass)
     }
 
-    // operations until the loop has run `seconds`, or exactly `plan`
+    // whole passes until the loop has run `seconds`, or exactly `plan`, so
+    // every query of the list is timed equally often
     def loop(plan: Option[Seq[(String, Int)]], spans: Spans, heap: Main.HeapPeak)
         : (Seq[Op], Double) = {
       val ops = ArrayBuffer.empty[Op]
@@ -113,12 +119,15 @@ object Queries {
       val t0 = System.nanoTime()
       def more = plan match {
         case Some(p) => ops.size < p.size
-        case None => Main.another(ops.size, (System.nanoTime() - t0) / 1e9, args.seconds)
+        case None => ops.size % names.size != 0 ||
+          ops.size < minPasses * names.size || Main.another(
+            ops.size / names.size, (System.nanoTime() - t0) / 1e9, args.seconds)
       }
       while (more) {
         val (n, pass) = it.next()
         ops += once(n, pass, spans)
-        heap.sample()
+        // between passes, outside every query's timed interval
+        if (ops.size % names.size == 0) { Main.settle(); heap.sample() }
       }
       (ops.toSeq, (System.nanoTime() - t0) / 1e9)
     }
@@ -131,13 +140,19 @@ object Queries {
     val failures = ops.filter(_.status != "ok").map(o => s"${o.name} (pass ${o.pass}): ${o.status}")
     def wrong(os: Seq[Op]) = os.exists(_.status.startsWith("wrong"))
     val correct = !wrong(ops)
-    val onTime = ops.filter(_.status == "ok").map(_.wallS)
+    // each query's median on-time latency over the passes
+    val perQueryS = names.flatMap { n =>
+      val ts = ops.filter(o => o.name == n && o.status == "ok").map(_.wallS)
+      if (ts.isEmpty) None else Some(n -> Main.median(ts))
+    }
     val notes = Seq(f"${ops.size} queries (${passes} pass(es) over ${names.size}) " +
-      f"in $loopS%.3f s; timings from ${onTime.size} on-time queries")
+      f"in $loopS%.3f s") ++ perQueryS.map { case (n, t) =>
+        f"median $n: $t%.3f s of " + ops.filter(_.name == n)
+          .map(o => f"${o.wallS}%.2f").mkString(",") }
 
     if (!args.trace)
-      Outcome(ops.size, failures, correct, Main.endToEnd(
-        setupS, onTime, ops.size / loopS), notes)
+      Outcome(ops.size, failures, correct, Main.endToEnd(setupS,
+        perQueryS.map(_._2), perQueryS.size / perQueryS.map(_._2).sum), notes)
     else {
       val listener = new LayerListener
       spark.sparkContext.addSparkListener(listener)

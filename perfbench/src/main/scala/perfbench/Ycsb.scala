@@ -16,7 +16,7 @@ import perfbench.Main.{Args, Metric, Outcome}
   * with reordering, and committed as the table's next version.
   */
 object Ycsb {
-  val tableRows = 50000L // keys 1..49,999, as TxnGen.bulkLoad counts
+  val tableRows = 20001L // keys 1..20,000 (the ops' key range), as TxnGen.bulkLoad counts
   val txnsPerBatch = 300L
   val warmupBatches = 2
   /** A traced run's fixed batch count (run once untraced, once traced), so
@@ -77,6 +77,7 @@ object Ycsb {
         (hist, v)
       }
       val latency = (System.nanoTime() - t0) / 1e9
+      Main.settle()
       // check, outside the timed interval: the simulator's history and
       // last writers from the same seeded ops
       val (simHist, simWritten) = AriaSim.run(
@@ -206,8 +207,7 @@ object Ycsb {
         .getOrElse(TxnGen.payload(seed, k).toSeq)
     }
     val coldBad = t.filter($"k" > keysMax)
-      .map { case (k, f) => if (f == TxnGen.payload(seed, k).toSeq) 0L else 1L }
-      .reduce(_ + _)
+      .filter { kf => kf._2 != TxnGen.payload(seed, kf._1).toSeq }.count()
     val total = t.count()
     hotOk && coldBad == 0 && total == tableRows - 1
   }
