@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftaccess.BusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
@@ -37,15 +38,14 @@ object JobCount {
         synchronized { stages += 1 }
     })
     for (q <- qs) {
-      // listener events are posted asynchronously; settle before reading
-      // the window (listenerBus.waitUntilEmpty is private[spark]; a short
-      // sleep after the action returns is enough for a diagnostic count)
-      Thread.sleep(1000)
+      // listener events are posted asynchronously; drain the bus before
+      // reading each end of the window so the counts are exact
+      BusAccess.waitUntilEmpty(spark.sparkContext)
       val (jobs0, stages0) = synchronized { (jobs, stages) }
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(q)(spark, dir).count()
       val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000)
+      BusAccess.waitUntilEmpty(spark.sparkContext)
       val (jobs1, stages1) = synchronized { (jobs, stages) }
       println(f"""{"query":"$q","rows":$n,"jobs":${jobs1 - jobs0},"stages":${stages1 - stages0},"sec":$secs%.3f}""")
     }

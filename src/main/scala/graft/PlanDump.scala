@@ -49,24 +49,6 @@ object PlanDump {
       s.stop()
       return
     }
-    // --wedge-stats <dir>: oriented out-degree distribution + wedge
-    // volume of the contracted graph — the quantities that decide
-    // whether the degree-capped close can pay (volume = sum od*(od-1)/2;
-    // the cap bounds it by cap*m only when the od tail is heavy).
-    val wi = args.indexOf("--wedge-stats")
-    if (wi >= 0) {
-      import org.apache.spark.sql.functions._
-      val dir = args(wi + 1)
-      val od = graft.operators.TextOps.orientedOutDegrees(s, dir)
-      od.agg(count(lit(1)).as("sources"), sum(col("od")).as("m"),
-          max(col("od")).as("max_od"),
-          sum(col("od") * (col("od") - 1) / 2).as("wedge_volume"),
-          sum(least(col("od"), lit(32L)) * (least(col("od"), lit(32L)) - 1) / 2)
-            .as("wedge_volume_cap32"))
-        .show(false)
-      s.stop()
-      return
-    }
     // --unpinned-check q1,q2: rebuild each named query with Pin.withoutPins
     // (the `.pin` identity mode) and compare its collected result against
     // the normal pinned build — proves the query does not DEPEND on the

@@ -1301,8 +1301,10 @@ object Relational {
     * to q33's ranking battery: first_value / last_value / nth_value are
     * the remaining SQL-standard navigation functions.
     *
-    * Scale: one window shuffle on the partition key; ROWS frames keep the
-    * running evaluation O(1) per row (no re-scan per frame).
+    * Scale: one window shuffle on the partition key; the ROWS frames are
+    * the running prefix and the whole partition (whose last row is the
+    * last row at or after the current one), both O(1) per row — a
+    * CURRENT ROW → UNBOUNDED FOLLOWING frame re-scans its suffix per row.
     */
   def q44WindowBattery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1310,11 +1312,12 @@ object Relational {
     val w = Window.partitionBy($"o_orderpriority")
       .orderBy($"o_orderdate", $"o_orderkey")
     val upToHere = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fromHere = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val whole = w.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
     Tables.orders(s, dir)
       .select($"o_orderkey", $"o_orderpriority", $"o_orderdate")
       .withColumn("first_k", first($"o_orderkey").over(upToHere))
-      .withColumn("last_k", last($"o_orderkey").over(fromHere))
+      .withColumn("last_k", last($"o_orderkey").over(whole))
       .withColumn("third_k", nth_value($"o_orderkey", 3).over(upToHere))
       .select($"o_orderkey", $"o_orderpriority",
         date_format($"o_orderdate", "yyyy-MM-dd").as("od"),
@@ -2104,7 +2107,7 @@ object Relational {
       .agg(max(struct($"dev".as("d"), (-$"v").as("nv"))).as("m"))
       .select(lit(n1).as("n1"), lit(n2).as("n2"),
         $"m.d".as("ks_num"), (-$"m.nv").as("v_at_max_cents"),
-        expr(s"(1000 * m.d) div (${n1} * ${n2})").as("ks_pm"))
+        expr(s"(1000 * m.d) div (${n1}L * ${n2}L)").as("ks_pm"))
   }
 
   val statKsDriftSql: String =

@@ -412,8 +412,6 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val emb = qEmb(s, dir).pin(true) // fit + membership scoring
     val n = lit(nCells.toLong)
-    val cents = broadcast(ivfCentroids(s, emb, nCells)
-      .withColumn("cn2", norm2($"cq")))
     // nprobe=2 membership: the (d2, cid) pack makes the per-vector top-2
     // deterministic; the window is nCells rows per vector, never
     // corpus-wide. memb CARRIES (q, n2) so the verify runs INLINE in the
@@ -422,9 +420,8 @@ object Similarity {
     // candidate shuffle, not the compares, was the wall); this shape
     // verifies in the join like the grid join and distincts only the
     // surviving ε-pairs (a pair can co-occur in both probed cells).
-    val memb = emb.crossJoin(cents)
-      .withColumn("key",
-        ($"n2" - lit(2L) * dot($"q", $"cq") + $"cn2") * n + $"cid")
+    val memb = centroidD2(emb, ivfCentroids(s, emb, nCells))
+      .withColumn("key", $"d2" * n + $"cid")
       .withColumn("rn", row_number().over(
         Window.partitionBy($"vec_id").orderBy($"key")))
       .filter($"rn" <= 2)
@@ -610,15 +607,80 @@ object Similarity {
       |    ORDER BY cos DESC, vec_id) AS rn FROM scored) t
       |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin
 
-  /** IVF coarse quantizer: seeded k-means in pure DataFrame ops. Init
-    * centroids are the vectors with vec_id 0..nCells-1 (deterministic
-    * seed), then `iters` Lloyd iterations refine them. Centroids stay
-    * INTEGER vectors — each iteration re-quantizes the cluster mean per
-    * component as floor(sum/m) (sum, m exact int64, the division exact in
-    * doubles since |sum/m − k| is either 0 or ≥ 1/m ≫ ulp) — so every
-    * distance is exact int64 and the SQL oracle reproduces assignment
-    * bit-for-bit. Empty clusters keep their previous centroid. No driver
-    * collect: the whole fit is one DAG over nCells×64 centroid cells.
+  /** Exact squared L2 from every point (vec_id, keys…, q, n2) to every
+    * centroid (keys…, cid, cq) of its key group: ‖a−c‖² = ‖a‖² − 2a·c +
+    * ‖c‖², all int64. The centroid table is bounded, so it is broadcast;
+    * with no key every point meets every centroid.
+    */
+  private def centroidD2(points: DataFrame, cents: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
+    import points.sparkSession.implicits._
+    val withN = broadcast(cents.withColumn("cn2", norm2($"cq")))
+    (if (keys.isEmpty) points.crossJoin(withN) else points.join(withN, keys))
+      .withColumn("d2", $"n2" - lit(2L) * dot($"q", $"cq") + $"cn2")
+  }
+
+  /** Nearest centroid per (vec_id, keys…) as `cid`: smallest d2, ties to
+    * the smallest id — d2 ≥ 0 and 0 ≤ cid < k, so min(d2·k + cid) % k is
+    * the tie-broken argmin packed into one int64 (d2 ≤ ~4·(2e4)²·64 ≈
+    * 1e11 for quantized embeddings, far from overflow for any plausible
+    * k). `carry` adds further aggregates over each point's rows.
+    */
+  private def nearestCentroid(points: DataFrame, cents: DataFrame,
+      keys: Seq[String], k: Int, carry: Column*): DataFrame = {
+    import points.sparkSession.implicits._
+    val n = lit(k.toLong)
+    centroidD2(points, cents, keys)
+      .groupBy(("vec_id" +: keys).map(col): _*)
+      .agg((min($"d2" * n + $"cid") % n).as("cid"), carry: _*)
+  }
+
+  /** The one Lloyd k-means fit: every key group of `points` (vec_id,
+    * keys…, q, n2) is refined independently from its `seeds` (keys…, cid,
+    * cq), cid in [0, k). Each round assigns every point to its
+    * [[nearestCentroid]] and re-quantizes the cluster mean per component
+    * as floor(sum/m) (sum, m exact int64, the division exact in doubles
+    * since |sum/m − c| is either 0 or ≥ 1/m ≫ ulp), so centroids stay
+    * INTEGER vectors, every distance is exact int64 and the SQL oracles
+    * reproduce each assignment bit-for-bit. An empty cluster keeps its
+    * previous centroid. No driver collect: each round is one DAG over
+    * the points plus the bounded centroid table, returned pinned.
+    */
+  private def lloyd(points: DataFrame, seeds: DataFrame, keys: Seq[String],
+      k: Int, iters: Int): DataFrame = {
+    import points.sparkSession.implicits._
+    val ck = (keys :+ "cid").map(col)
+    var cents = seeds
+    for (_ <- 1 to iters) {
+      // carry q THROUGH the assignment aggregate (first() over a group
+      // whose q values are all copies of the same row — deterministic by
+      // construction) instead of re-joining the points afterwards: that
+      // shape paid a second corpus scan plus a corpus-sized sort-merge
+      // join per round just to reattach the vector the aggregate already
+      // had (guide §2.3: shuffle the payload once).
+      val next = nearestCentroid(points, cents, keys, k, first($"q").as("q"))
+        .select(ck :+ posexplode($"q"): _*)
+        .groupBy(ck :+ $"pos": _*)
+        .agg(sum($"col").as("sv"), count(lit(1)).as("cnt"))
+        .withColumn("c", floor($"sv".cast("double") / $"cnt").cast("long"))
+        .groupBy(ck: _*)
+        .agg(transform(array_sort(collect_list(struct($"pos", $"c"))),
+          x => x.getField("c")).as("cq2"))
+      // pin the bounded centroid table EVERY round, not only after the
+      // loop: unpinned, round t's frame references round t-1's twice
+      // (broadcast side + carry join), so the final single DAG re-scanned
+      // the points ~2^iters times. Each round now scans them exactly once.
+      cents = cents.join(next, keys :+ "cid", "left")
+        .select(ck :+ coalesce($"cq2", $"cq").as("cq"): _*)
+        .pin(true)
+    }
+    // the last pin IS the materialized table downstream queries probe
+    // from several plan branches (guarded for a zero-round fit)
+    if (iters <= 0) cents.pin(true) else cents
+  }
+
+  /** IVF coarse quantizer: the [[lloyd]] fit over the whole corpus, no
+    * key, seeded with the vectors vec_id 0..nCells-1 (deterministic).
     *
     * The gate queries pin (nCells=8, iters=2) — right for the 500-vector
     * gate corpus, and the oracle SQL mirrors exactly those values. A real
@@ -633,52 +695,13 @@ object Similarity {
       nCells: Int = 8, iters: Int = kmeansIters): DataFrame = {
     import s.implicits._
     require(nCells > 0, s"nCells must be positive, got $nCells")
-    // the min(d2*n + cid) % n tie-break packs (distance, id) into one
-    // int64: d2 ≤ ~4·(2e4)²·64 ≈ 1e11 for quantized embeddings, so the
-    // product stays far from overflow for any plausible cell count
-    val n = lit(nCells.toLong)
-    var cents = emb.filter($"vec_id" < nCells)
-      .select($"vec_id".as("cid"), $"q".as("cq"))
-    for (_ <- 1 to iters) {
-      val withN = broadcast(cents.withColumn("cn2", norm2($"cq")))
-      // carry q THROUGH the assignment aggregate (first() over a group
-      // whose q values are all copies of the same row — deterministic by
-      // construction) instead of re-joining emb on vec_id afterwards: the
-      // r16 shape paid a second corpus scan plus a corpus-sized
-      // sort-merge join per iteration just to reattach the vector the
-      // aggregate already had (guide §2.3: shuffle the payload once).
-      val assigned = emb.crossJoin(withN)
-        .withColumn("d2", $"n2" - lit(2L) * dot($"q", $"cq") + $"cn2")
-        .groupBy($"vec_id")
-        .agg((min($"d2" * n + $"cid") % n).as("cid"), first($"q").as("q"))
-      val sums = assigned
-        .select($"cid", posexplode($"q"))
-        .groupBy($"cid", $"pos")
-        .agg(sum($"col").as("sv"), count(lit(1)).as("m"))
-        .withColumn("c", floor($"sv".cast("double") / $"m").cast("long"))
-      val next = sums.groupBy($"cid")
-        .agg(transform(array_sort(collect_list(struct($"pos", $"c"))),
-          x => x.getField("c")).as("cq2"))
-      // pin the nCells-row centroid table EVERY iteration (bounded at any
-      // corpus size), not only after the loop: unpinned, iteration t's
-      // frame references iteration t-1's twice (broadcast side + carry
-      // join), so the final single DAG re-scanned the corpus ~2^iters
-      // times (the r16 plan embedded ~10 emb scans for iters=2). Each
-      // iteration now scans the corpus exactly once.
-      cents = cents.join(next, Seq("cid"), "left")
-        .select($"cid", coalesce($"cq2", $"cq").as("cq"))
-        .pin(true)
-    }
-    // the loop's last pin IS the materialized table downstream queries
-    // probe from several plan branches (guarded for a zero-iteration fit)
-    if (iters <= 0) cents.pin(true) else cents
+    lloyd(emb, emb.filter($"vec_id" < nCells)
+      .select($"vec_id".as("cid"), $"q".as("cq")), Nil, nCells, iters)
   }
 
-  /** Cell assignment against the fitted centroids: smallest exact integer
-    * squared-L2 distance (‖a−c‖² = ‖a‖² − 2a·c + ‖c‖², all int64),
-    * tie-break smallest id — d2 ≥ 0 and cid < 8, so min(d2*8 + cid) % 8 is
-    * the tie-broken nearest centroid. At scale, ANN probes only the query's
-    * cell (nprobe=1 here).
+  /** Cell assignment against the fitted centroids: the
+    * [[nearestCentroid]] of each vector. At scale, ANN probes only the
+    * query's cell (nprobe=1 here).
     */
   private def ivfAssignRaw(s: SparkSession, dir: String): DataFrame = {
     val emb = qEmb(s, dir)
@@ -692,15 +715,9 @@ object Similarity {
     * low digits mod nCells).
     */
   private[operators] def ivfAssignOf(emb: DataFrame, centroids: DataFrame,
-      nCells: Int = 8): DataFrame = {
-    import emb.sparkSession.implicits._
-    val n = lit(nCells.toLong)
-    val cents = broadcast(centroids.withColumn("cn2", norm2($"cq")))
-    emb.crossJoin(cents)
-      .withColumn("d2", $"n2" - lit(2L) * dot($"q", $"cq") + $"cn2")
-      .groupBy($"vec_id")
-      .agg((min($"d2" * n + $"cid") % n).as("centroid"))
-  }
+      nCells: Int = 8): DataFrame =
+    nearestCentroid(emb, centroids, Nil, nCells)
+      .withColumnRenamed("cid", "centroid")
 
   /** SQL mirror of the k-means fit: one (cn, cd, a) assignment block per
     * iteration plus (s, k, cent) mean-requantization blocks; the final
@@ -783,11 +800,8 @@ object Similarity {
     import s.implicits._
     val emb = qEmb(s, dir).pin(true) // fit + the distance fan
     val n = lit(nCells.toLong)
-    val cents = broadcast(ivfCentroids(s, emb, nCells)
-      .withColumn("cn2", norm2($"cq")))
-    val dall = emb.crossJoin(cents)
-      .select($"vec_id", $"cid",
-        ($"n2" - lit(2L) * dot($"q", $"cq") + $"cn2").as("d2"))
+    val dall = centroidD2(emb, ivfCentroids(s, emb, nCells))
+      .select($"vec_id", $"cid", $"d2")
       .pin(true) // own-argmin agg + the other-cell min
     val own = dall.groupBy($"vec_id")
       .agg(min($"d2" * n + $"cid").as("pack"))
@@ -1199,11 +1213,10 @@ object Similarity {
     *
     * Seeding is the deterministic farthest-pair rule: child A seeds at
     * the member farthest from the parent centroid, child B at the member
-    * farthest from A (ties to the smallest vec_id). `iters` Lloyd
-    * rounds then refine (assignment: exact int64 squared L2, ties to
-    * child A; update: per-component floor mean, the repo's standard
-    * exact requantization; an empty child keeps its previous centroid —
-    * the same rules as [[ivfCentroids]]).
+    * farthest from A (ties to the smallest vec_id). `iters` rounds of the
+    * [[lloyd]] fit, keyed by the parent cell with child 0|1 as the
+    * centroid id, then refine the pair (ties go to child A; an empty child
+    * keeps its centroid).
     *
     * Input `members`: (cid, vec_id, q, n2) of the cells to split;
     * `cents`: (cid, cq) their parent centroids. Returns
@@ -1212,52 +1225,32 @@ object Similarity {
     * assignment, which [[splitIvfIndex]] uses to re-point the
     * assignment table).
     *
-    * Scale: every stage is keyed by cid (or (cid, child, pos)) — the
-    * split of one hot cell never shuffles another cell's members, and
-    * the per-round state frames are ≤ 2·|cells| rows.
+    * Scale: every stage is keyed by the parent cell — the split of one
+    * hot cell never shuffles another cell's members, and the per-round
+    * centroid table is 2·|cells| rows.
     */
   private[operators] def ivfSplit2Means(members: DataFrame,
       cents: DataFrame, iters: Int = splitIters)
       : (DataFrame, DataFrame) = {
     import members.sparkSession.implicits._
     val mem = members.pin(true) // re-read every round
-    var ca = farthestFrom(mem, cents.select($"cid", $"cq".as("aq")), "sq")
-      .select($"cid", $"sq".as("aq")).pin(true)
-    var cb = farthestFrom(mem, ca.select($"cid", $"aq"), "sq")
-      .select($"cid", $"sq".as("bq")).pin(true)
-    // re-evaluated against the CURRENT (ca, cb) — the last evaluation
-    // after the loop is the final assignment
-    def assigned = mem
-      .join(broadcast(ca), Seq("cid")).join(broadcast(cb), Seq("cid"))
-      .withColumn("d2a", $"n2" - lit(2L) * dot($"q", $"aq") + norm2($"aq"))
-      .withColumn("d2b", $"n2" - lit(2L) * dot($"q", $"bq") + norm2($"bq"))
-      .withColumn("child",
-        when($"d2a" <= $"d2b", lit(0L)).otherwise(lit(1L)))
-    for (_ <- 1 to iters) {
-      val next = assigned
-        .select($"cid", $"child", posexplode($"q"))
-        .groupBy($"cid", $"child", $"pos")
-        .agg(sum($"col").as("sv"), count(lit(1)).as("m"))
-        .withColumn("c", floor($"sv".cast("double") / $"m").cast("long"))
-        .groupBy($"cid", $"child")
-        .agg(transform(array_sort(collect_list(struct($"pos", $"c"))),
-          x => x.getField("c")).as("cq2"))
-        .pin(true) // ≤ 2·|cells| rows; feeds both children
-      ca = ca.join(next.filter($"child" === 0L).select($"cid", $"cq2"),
-          Seq("cid"), "left")
-        .select($"cid", coalesce($"cq2", $"aq").as("aq"))
-        .pin(true)
-      cb = cb.join(next.filter($"child" === 1L).select($"cid", $"cq2"),
-          Seq("cid"), "left")
-        .select($"cid", coalesce($"cq2", $"bq").as("bq"))
-        .pin(true)
-    }
-    val membership = assigned.select($"cid", $"vec_id", $"child")
+    val ca = farthestFrom(mem, cents.select($"cid", $"cq".as("aq")), "aq")
+      .pin(true) // seeds child A and anchors child B
+    val cb = farthestFrom(mem, ca, "bq")
+    val pts = mem.select($"cid".as("cell"), $"vec_id", $"q", $"n2")
+    val seeds = ca
+      .select($"cid".as("cell"), lit(0L).as("cid"), $"aq".as("cq"))
+      .unionByName(
+        cb.select($"cid".as("cell"), lit(1L).as("cid"), $"bq".as("cq")))
+      .pin(true) // round 1 reads it twice (broadcast side + carry join)
+    val fit = lloyd(pts, seeds, Seq("cell"), 2, iters)
+    val membership = nearestCentroid(pts, fit, Seq("cell"), 2)
+      .select($"cell".as("cid"), $"vec_id", $"cid".as("child"))
       .pin(true) // masses here + re-pointing in the commit
     val masses = membership.groupBy($"cid", $"child")
       .agg(count(lit(1)).as("m"))
-    val cells = ca.select($"cid", lit(0L).as("child"), $"aq".as("ccq"))
-      .unionByName(cb.select($"cid", lit(1L).as("child"), $"bq".as("ccq")))
+    val cells = fit
+      .select($"cell".as("cid"), $"cid".as("child"), $"cq".as("ccq"))
       .join(masses, Seq("cid", "child"), "left")
       .select($"cid", $"child", $"ccq", coalesce($"m", lit(0L)).as("m"))
     (cells, membership)
@@ -1685,10 +1678,7 @@ object Similarity {
       .pin(true)
     // per query: ALL centroids ranked by exact integer distance; each
     // nprobe setting keeps a prefix of the same ranking
-    val withN = broadcast(cents.withColumn("cn2", norm2($"cq")))
-    val qcells = withCell.filter($"vec_id" < 10)
-      .crossJoin(withN)
-      .withColumn("d2", $"n2" - lit(2L) * dot($"q", $"cq") + $"cn2")
+    val qcells = centroidD2(withCell.filter($"vec_id" < 10), cents)
       .withColumn("cell_rank", row_number().over(
         Window.partitionBy($"vec_id").orderBy($"d2", $"cid")))
       .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"),
@@ -1853,60 +1843,36 @@ object Similarity {
   private val embDim = 64
   private val pqDims = embDim / pqM // the oracle CTEs render the gate geometry
 
-  /** Subvector frame (vec_id, m, sq, sn2): each vector exploded into its
+  /** Subvector frame (vec_id, m, q, n2): each vector exploded into its
     * M subspace slices. ONE frame feeds the codebook fit, the corpus
     * encode, and the query LUT. `m` must divide the embedding dim.
     */
-  private def pqSub(emb: DataFrame, mSub: Int = pqM): DataFrame = {
+  private[operators] def pqSub(emb: DataFrame,
+      mSub: Int = pqM): DataFrame = {
     import emb.sparkSession.implicits._
     require(embDim % mSub == 0, s"pq M=$mSub must divide dim $embDim")
     val dims = embDim / mSub
     emb.select($"vec_id", explode(array((0 until mSub).map { m =>
         struct(lit(m.toLong).as("m"),
-          slice($"q", m * dims + 1, dims).as("sq"))
+          slice($"q", m * dims + 1, dims).as("q"))
       }: _*)).as("e"))
-      .select($"vec_id", $"e.m".as("m"), $"e.sq".as("sq"))
-      .withColumn("sn2", norm2($"sq"))
+      .select($"vec_id", $"e.m".as("m"), $"e.q".as("q"))
+      .withColumn("n2", norm2($"q"))
   }
 
   /** PQ codebook (Jégou, Douze, Schmid, "Product Quantization for Nearest
     * Neighbor Search", TPAMI 2011): an independent k-means per subspace —
-    * run here as ONE k-means keyed (m, cid), so all M fits ride the same
-    * jobs: the per-iteration cost is a broadcast join + two aggregations
-    * regardless of M, and no driver loop over subspaces exists. Same
-    * integer-exact floor-mean requantization as [[ivfCentroids]]. Output:
-    * the M×k codebook (m, cid, cq), checkpointed (32 rows).
+    * run here as ONE [[lloyd]] fit keyed by m, so all M fits ride the
+    * same jobs: the per-round cost is a broadcast join + two aggregations
+    * regardless of M, and no driver loop over subspaces exists. Output:
+    * the M×k codebook (m, cid, cq), pinned (32 rows).
     */
-  private def pqCodebook(sub: DataFrame, kCents: Int = pqK): DataFrame = {
+  private[operators] def pqCodebook(sub: DataFrame,
+      kCents: Int = pqK): DataFrame = {
     import sub.sparkSession.implicits._
-    val k = lit(kCents.toLong)
-    var cents = sub.filter($"vec_id" < kCents)
-      .select($"m", $"vec_id".as("cid"), $"sq".as("cq"))
-    for (_ <- 1 to kmeansIters) {
-      val withN = broadcast(cents.withColumn("cn2", norm2($"cq")))
-      // same two moves as [[ivfCentroids]]: carry sq through the
-      // assignment aggregate (first() over identical per-group copies)
-      // instead of re-joining the corpus-sized sub frame, and pin the
-      // M×k-row codebook every iteration (bounded at any corpus size) so
-      // the per-iteration double reference (broadcast side + carry join)
-      // cannot nest into ~2^iters scans of the pinned sub frame.
-      val assigned = sub.join(withN, Seq("m"))
-        .withColumn("d2", $"sn2" - lit(2L) * dot($"sq", $"cq") + $"cn2")
-        .groupBy($"vec_id", $"m")
-        .agg((min($"d2" * k + $"cid") % k).as("cid"), first($"sq").as("sq"))
-      val sums = assigned
-        .select($"m", $"cid", posexplode($"sq"))
-        .groupBy($"m", $"cid", $"pos")
-        .agg(sum($"col").as("sv"), count(lit(1)).as("cnt"))
-        .withColumn("c", floor($"sv".cast("double") / $"cnt").cast("long"))
-      val next = sums.groupBy($"m", $"cid")
-        .agg(transform(array_sort(collect_list(struct($"pos", $"c"))),
-          x => x.getField("c")).as("cq2"))
-      cents = cents.join(next, Seq("m", "cid"), "left")
-        .select($"m", $"cid", coalesce($"cq2", $"cq").as("cq"))
-        .pin(true)
-    }
-    if (kmeansIters <= 0) cents.pin(true) else cents
+    lloyd(sub, sub.filter($"vec_id" < kCents)
+      .select($"m", $"vec_id".as("cid"), $"q".as("cq")),
+      Seq("m"), kCents, kmeansIters)
   }
 
   /** The ADC (asymmetric distance computation) top-3: corpus vectors are
@@ -1944,16 +1910,9 @@ object Similarity {
     import s.implicits._
     val sub = pqSub(qEmb(s, dir), mSub).pin(true)
     val book = pqCodebook(sub, kCents)
-    val withN = broadcast(book.withColumn("cn2", norm2($"cq")))
-    val d2 = $"sn2" - lit(2L) * dot($"sq", $"cq") + $"cn2"
-    val k = lit(kCents.toLong)
-    val codes = sub.join(withN, Seq("m"))
-      .withColumn("d2", d2)
-      .groupBy($"vec_id", $"m")
-      .agg((min($"d2" * k + $"cid") % k).as("cid"))
-    val lut = sub.filter($"vec_id" < 10)
-      .join(withN, Seq("m"))
-      .select($"vec_id".as("qid"), $"m", $"cid", d2.as("qd2"))
+    val codes = nearestCentroid(sub, book, Seq("m"), kCents)
+    val lut = centroidD2(sub.filter($"vec_id" < 10), book, Seq("m"))
+      .select($"vec_id".as("qid"), $"m", $"cid", $"d2".as("qd2"))
     (codes, lut)
   }
 
@@ -1977,9 +1936,7 @@ object Similarity {
   def pqDistortion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sub = pqSub(qEmb(s, dir)).pin(true)
-    val withN = broadcast(pqCodebook(sub).withColumn("cn2", norm2($"cq")))
-    sub.join(withN, Seq("m"))
-      .withColumn("d2", $"sn2" - lit(2L) * dot($"sq", $"cq") + $"cn2")
+    centroidD2(sub, pqCodebook(sub), Seq("m"))
       .groupBy($"vec_id", $"m").agg(min($"d2").as("d2"))
       .groupBy($"m")
       .agg(count(lit(1)).as("n_vecs"), sum($"d2").as("total_d2"))
@@ -2233,11 +2190,9 @@ object Similarity {
       .join(ivfAssignOf(emb, cents, nCells), Seq("vec_id"))
       .pin(true)
     // distance to the OWN cell centroid — the keep-rule score
-    val selfD2 = withCell
-      .join(broadcast(cents.withColumn("cn2", norm2($"cq"))),
-        $"centroid" === $"cid")
-      .select($"vec_id",
-        ($"n2" - lit(2L) * dot($"q", $"cq") + $"cn2").as("d2"))
+    val selfD2 = centroidD2(withCell.withColumnRenamed("centroid", "cid"),
+        cents, Seq("cid"))
+      .select($"vec_id", $"d2")
     val l = withCell.select($"centroid", $"vec_id".as("a"), $"q".as("qa"),
       $"n2".as("na"))
     val r = withCell.select($"centroid", $"vec_id".as("b"), $"q".as("qb"),

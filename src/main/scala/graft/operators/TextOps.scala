@@ -3808,45 +3808,15 @@ object TextOps {
     * teleport mass 150000 (= 0.15 × 10^6); mass lost to floors is the
     * standard fixed-point tradeoff and identical cross-engine.
     *
-    * Scale: the canonical BSP shape — per iteration one join of edges
-    * against the rank frame (both hash-partitioned on src), one map-side
-    * combinable contribution sum keyed by dst, one left join back to
-    * nodes. Edges + degrees are computed ONCE and localCheckpointed (every
-    * iteration re-reads them — the multiply-consumed-frame rule); the rank
-    * frame itself is consumed once per round, so it stays lazy and the
-    * whole k-round recursion is one DAG. At real scale this is exactly
-    * GraphX/Pregel's data layout: partition edges by src, ship ranks to
-    * edges, aggregate messages by dst.
+    * Runs [[pageRankBsp]] with every document a seed (uniform init and
+    * uniform teleport).
     */
   def pageRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
     import s.implicits._
-    val pairs = minhashCandidates(s, dir).pin(true) // union reads it twice
-    val edges = pairs.select($"a".as("src"), $"b".as("dst"))
-      .unionByName(pairs.select($"b".as("src"), $"a".as("dst")))
-      .pin(true) // re-joined every round (2 narrow columns)
-    // fold the out-degree INTO the rank frame (r17; was folded into the
-    // edge list): the degree divides the SOURCE's rank, so it can ride
-    // the |V|-row rank frame through each round's join instead of being
-    // duplicated onto every out-edge — the per-round edge exchange drops
-    // a column of |E| longs and the setup pays a |V|-row join instead of
-    // re-joining the full |E|-row edge frame against deg (guide §2.3:
-    // shuffle keys and small metadata, not per-edge copies).
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("d"))
-    val nodes = Tables.documents(s, dir).select($"doc_id")
-      .join(deg.withColumnRenamed("src", "doc_id"), Seq("doc_id"), "left")
-      .select($"doc_id", coalesce($"d", lit(1L)).as("d"))
-      .pin(true) // re-read every round (rank left-join base, degree inline)
-    var r = nodes.select($"doc_id", $"d", lit(1000000L).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = edges
-        .join(r.withColumnRenamed("doc_id", "src"), "src")
-        .select($"dst".as("doc_id"), expr("r div d").as("c"))
-        .groupBy($"doc_id").agg(sum($"c").as("s"))
-      r = nodes.join(contrib, Seq("doc_id"), "left")
-        .select($"doc_id", $"d",
-          (lit(150000L) + expr("(85 * coalesce(s, 0)) div 100")).as("r"))
-    }
-    r.select($"doc_id", $"r".as("rank")).orderBy($"doc_id")
+    pageRankBsp(
+      Tables.documents(s, dir).select($"doc_id".as("v"), lit(true).as("seed")),
+      minhashCandidates(s, dir), iters)
+      .select($"v".as("doc_id"), $"rank").orderBy($"doc_id")
   }
 
   val pageRankSql: String = {
@@ -3870,28 +3840,23 @@ object TextOps {
       "\nSELECT doc_id, r AS rank FROM r3 ORDER BY doc_id"
   }
 
-  /** Personalized PageRank (Haveliwala, WWW'02; the push/seed-restart
-    * form every "find documents related to THIS set" expansion uses —
-    * seed-set expansion over the near-dup graph is how a curation
-    * pipeline grows a topic slice from a few exemplars). Identical BSP
-    * loop, fixed-point arithmetic, and edge layout as [[pageRank]]; the
-    * ONE change is the teleport vector: mass restarts only at the seed
-    * set (here the deterministic ~1% slice doc_id ≡ 0 mod 97), so rank
-    * measures proximity to the seeds instead of global centrality —
-    * non-seed docs hold rank 0 until contribution mass reaches them,
-    * and anything outside the seeds' components stays exactly 0 (the
-    * locality that makes PPR the scalable choice: mass touches only
-    * the seeds' neighborhoods, however big the graph).
+  /** The one fixed-point BSP PageRank loop, shared by [[pageRank]],
+    * [[pprRank]], [[pprRankGroups]], [[pageRankGroups]] and
+    * [[textRankTerms]]: `nodes0` carries (v, seed), `pairs` the undirected
+    * edge list (a, b); returns the FULL (v, seed, rank) frame. With
+    * seed = true on every node this is exactly plain PageRank (uniform
+    * init 10^6, uniform teleport 150000); with a seed subset it is
+    * Haveliwala PPR. [[pprLoop]] layers the top-20 readout on top.
     *
-    * Output: the top-20 ranked docs (rank desc, doc_id) with their seed
-    * flag — the expansion list, seeds naturally at the top.
-    */
-  /** The shared seed-restart BSP loop of [[pprRank]], [[pprRankGroups]]
-    * and [[pageRankGroups]]: `nodes0` carries (v, seed), `pairs` the
-    * undirected edge list (a, b); returns the FULL (v, seed, rank) frame.
-    * With seed = true on every node this is exactly plain PageRank
-    * (uniform init 10^6, uniform teleport 150000); with a seed subset it
-    * is Haveliwala PPR. [[pprLoop]] layers the top-20 readout on top.
+    * Scale: the canonical BSP shape — per round one join of edges against
+    * the rank frame (both hash-partitioned on src), one map-side
+    * combinable contribution sum keyed by dst, one left join back to
+    * nodes. Edges and nodes are computed ONCE and pinned (every round
+    * re-reads them — the multiply-consumed-frame rule); the rank frame
+    * itself is consumed once per round, so it stays lazy and the whole
+    * k-round recursion is one DAG. At real scale this is exactly
+    * GraphX/Pregel's data layout: partition edges by src, ship ranks to
+    * edges, aggregate messages by dst.
     */
   private def pageRankBsp(nodes0: DataFrame, pairs0: DataFrame,
       iters: Int): DataFrame = {
@@ -3901,9 +3866,12 @@ object TextOps {
     val edges = pairs.select($"a".as("src"), $"b".as("dst"))
       .unionByName(pairs.select($"b".as("src"), $"a".as("dst")))
       .pin(true) // re-joined every round (2 narrow columns)
-    // degree folded into the |V|-row node/rank frame, not onto every
-    // out-edge — same move as [[pageRank]] (r17): narrower per-round edge
-    // exchange, |V|-sized setup join instead of |E|-sized
+    // fold the out-degree INTO the |V|-row node/rank frame: the degree
+    // divides the SOURCE's rank, so it rides the rank frame through each
+    // round's join instead of being duplicated onto every out-edge — the
+    // per-round edge exchange drops a column of |E| longs and the setup
+    // pays a |V|-row join instead of re-joining the |E|-row edge frame
+    // (guide §2.3: shuffle keys and small metadata, not per-edge copies)
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("d"))
     val nodes = nodes0
       .join(deg.withColumnRenamed("src", "v"), Seq("v"), "left")
@@ -3929,6 +3897,22 @@ object TextOps {
     pageRankBsp(nodes0, pairs0, iters)
       .orderBy(col("rank").desc, col("v")).limit(20)
 
+  /** Personalized PageRank (Haveliwala, WWW'02; the push/seed-restart
+    * form every "find documents related to THIS set" expansion uses —
+    * seed-set expansion over the near-dup graph is how a curation
+    * pipeline grows a topic slice from a few exemplars). Identical BSP
+    * loop, fixed-point arithmetic, and edge layout as [[pageRank]]; the
+    * ONE change is the teleport vector: mass restarts only at the seed
+    * set (here the deterministic ~1% slice doc_id ≡ 0 mod 97), so rank
+    * measures proximity to the seeds instead of global centrality —
+    * non-seed docs hold rank 0 until contribution mass reaches them,
+    * and anything outside the seeds' components stays exactly 0 (the
+    * locality that makes PPR the scalable choice: mass touches only
+    * the seeds' neighborhoods, however big the graph).
+    *
+    * Output: the top-20 ranked docs (rank desc, doc_id) with their seed
+    * flag — the expansion list, seeds naturally at the top.
+    */
   def pprRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
     import s.implicits._
     pprLoop(
@@ -4237,25 +4221,6 @@ object TextOps {
     * [[triangles]] and [[clusteringCoeff]]. Returns (deg(v, d),
     * triCnt(group_id, tri_cnt)); triCnt covers only nodes in ≥1 triangle.
     */
-  /** Oriented out-degree frame (src, od) of the contracted graph — the
-    * quantity whose square-sum is the wedge volume; the diagnostic read
-    * before choosing the exact vs degree-capped close
-    * (`PlanDump --wedge-stats`).
-    */
-  def orientedOutDegrees(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = groupPairsOf(s, dir).pin(true)
-    val nodes = pairs.select($"a".as("v")).unionByName(pairs.select($"b".as("v")))
-    val deg = nodes.groupBy($"v").agg(count(lit(1)).as("d"))
-    pairs
-      .join(deg.select($"v".as("a"), $"d".as("da")), "a")
-      .join(deg.select($"v".as("b"), $"d".as("db")), "b")
-      .select(
-        when($"da" < $"db" || ($"da" === $"db" && $"a" < $"b"), $"a")
-          .otherwise($"b").as("src"))
-      .groupBy($"src").agg(count(lit(1)).as("od"))
-  }
-
   /** Triangle tuples (v, u, w) of an undirected a<b edge list via the
     * degree-oriented MPS wedge close — the tri frame is pinned (three
     * member-explode consumers in the node close; three edge-explode

@@ -27,8 +27,7 @@ class KsDriftSpec extends SparkSpec {
     (n1, n2, best, bestV)
   }
 
-  test("KS statistic recounts exactly from a serial ECDF sweep") {
-    val dir = sf("sf0.001")
+  private def recount(dir: String): Unit = {
     val (n1, n2, ksNum, vAt) = serial(dir)
     val got = Relational.statKsDrift(spark, dir).collect()
     assert(got.length == 1)
@@ -37,6 +36,16 @@ class KsDriftSpec extends SparkSpec {
     assert(r.getLong(2) == ksNum, "ks_num")
     assert(r.getLong(3) == vAt, "v_at_max_cents")
     assert(r.getLong(4) == 1000L * ksNum / (n1 * n2), "ks_pm")
+  }
+
+  test("KS statistic recounts exactly from a serial ECDF sweep") {
+    recount(sf("sf0.001"))
+  }
+
+  test("ks_pm stays exact when n1·n2 exceeds the INT range (sf0.1)") {
+    // n1·n2 ≈ 5.6e9 at sf0.1: the cohort counts must enter the SQL as
+    // longs, or their product overflows under ANSI mode
+    recount(sf("sf0.1"))
   }
 
   test("statistic is within its theoretical bounds") {

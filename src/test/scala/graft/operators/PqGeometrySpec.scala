@@ -21,6 +21,26 @@ class PqGeometrySpec extends SparkSpec {
     assert(explicit == gate)
   }
 
+  // the codebook is ONE Lloyd fit keyed by subspace; the key must make
+  // the subspaces fully independent — each key group's centroids equal an
+  // unkeyed fit (the IVF quantizer, same seeds vec_id < k) over that
+  // subspace's slices alone
+  for ((m, k) <- Seq((4, 8), (2, 4))) {
+    test(s"keyed fit == $m unkeyed per-subspace fits at k=$k") {
+      import spark.implicits._
+      val sub = Similarity.pqSub(Similarity.qEmb(spark, dir), m)
+        .localCheckpoint(true)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, Seq[Long])].collect().sortBy(_._1).toSeq
+      val keyed = Similarity.pqCodebook(sub, k)
+      for (mi <- 0 until m) {
+        val slice = sub.filter($"m" === mi).select($"vec_id", $"q", $"n2")
+        assert(rows(keyed.filter($"m" === mi).select($"cid", $"cq")) ===
+          rows(Similarity.ivfCentroids(spark, slice, k)), s"subspace $mi")
+      }
+    }
+  }
+
   for ((m, k) <- Seq((2, 4), (8, 8), (4, 16))) {
     test(s"structural PQ laws hold at M=$m, k=$k") {
       import spark.implicits._
