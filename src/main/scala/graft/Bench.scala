@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line, per-query wall seconds.
   * Queries run in sorted name order (a HashMap's iteration order would
@@ -22,21 +21,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner frees finished broadcasts/shuffles only after a GC;
-      // the default periodic-GC interval (30min) never fires within one
-      // bench run, so ~75 queries × 3 iters of broadcast blocks pile up in
-      // block-manager memory and late queries pay the GC pressure.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     try SparkEntry.entry(spark).count()
     catch { case _: Throwable => () }
     // Per-query clean floors (VERDICT r15 #1): FLOORS.json holds each

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: the formatted physical plans of the headline queries,
   * as auditable evidence of the scale-design claims (broadcast vs shuffle
   * joins, parquet pushdown, partial aggregation, the two-phase GroupedTopK,
@@ -328,14 +326,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans of the headline queries\n\n"
     sb ++= s"Generated by `graft.Plans` at `$sfDir` (plan SHAPE is what matters;\n"

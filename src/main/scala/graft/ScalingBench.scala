@@ -250,17 +250,9 @@ object ScalingBench {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = if (args.length > 1) args(1).toInt else 10
     val out = s"tmp/sfx$mult"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCores
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
     buildCorpus(spark, base, out, mult)
 
     // measurement protocol: SMALL-OUTPUT points first, the two big pair
@@ -719,13 +711,13 @@ object ScalingBench {
         // per-doc rank OOMs); partitions ∝ corpus keeps each task's
         // working set constant while AQE re-coalesces the small stages
         val parts =
-          if (tag == "1x") cpus.toInt else cpus.toInt * math.max(1, mult / 10)
+          if (tag == "1x") cpus else cpus * math.max(1, mult / 10)
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         // finally-restore (ADVICE r13): a throwing probe must not leak the
         // ×100 partition count into every later probe block of the run
         val (secs, rows) =
           try time(iters)(SparkEntry.queries(q)(spark, dir))
-          finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+          finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
         val line = s"""{"query":"$q","scale":"$tag",""" +
           s""""sec":${f3(secs)},"rows":$rows}"""
         println(line)
@@ -749,12 +741,12 @@ object ScalingBench {
         // 64-long arrays each — 32 concurrent task buffers OOM'd the
         // heap (measured r15); per-task working set must stay constant
         val parts =
-          if (tag == "1x") cpus.toInt else cpus.toInt * math.max(1, mult / 10)
+          if (tag == "1x") cpus else cpus * math.max(1, mult / 10)
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         val (secs, rows) =
           try time(iters)(
             graft.operators.Similarity.dbscanIvfClusters(spark, dir, k))
-          finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+          finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
         val line = s"""{"query":"sim_dbscan_ivf","scale":"$tag",""" +
           s""""sec":${f3(secs)},"rows":$rows,"ncells":$k}"""
         println(line)

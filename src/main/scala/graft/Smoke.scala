@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke harness mirroring the driver's t1 check: `entry` must return
   * rows > 0 on sf0.001.
   *  - `runMain graft.Smoke <queryName> <sfDir>` — one query: rows, show,
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     args match {
       case Array("sql", stmt) =>
         spark.sql(stmt).show(50, truncate = false)

@@ -1504,7 +1504,9 @@ object TextOps {
 
   /** Shingle codes of an arbitrary document frame — lets callers shingle a
     * pre-filtered subset (e.g. just the eval split) instead of paying a
-    * full-corpus shingling pass and filtering after.
+    * full-corpus shingling pass and filtering after. Precondition:
+    * `doc_id` is unique per row (ShinglePerRowSpec checks the corpus);
+    * the distinct below is per row.
     */
   private[operators] def shingleCodesOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession

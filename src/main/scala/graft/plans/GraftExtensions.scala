@@ -10,10 +10,9 @@ import graft.functions.{KMinValues, LongArrayDot, LongArrayNorm2}
   * kernels as SQL functions so `spark.sql("... graft_dot(a, b) ...")` works
   * anywhere the library is on the classpath.
   *
-  * Activate with either
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` (the config
-  * route works on a cluster where the session is built by spark-submit).
+  * Every session built by [[graft.GraftSession]] installs them; on a
+  * cluster, where spark-submit builds the session, pass
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * Besides the function surface (codegen'd vector kernels plus the
   * [[graft.functions.KMinValues]] KMV sketch UDAF), one optimizer rule +

@@ -15,11 +15,7 @@ object AriaCheckSpec extends Properties("AriaEngine") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(6)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.GraftSession(4)
 
   private val keys = (1L to 25L).toSeq // keys 26..30 missing -> O14 skip path
 

@@ -64,4 +64,16 @@ class ShinglePerRowSpec extends SparkSpec {
       .flatMap(r => refCodes(r.getLong(0), r.getString(1))).toSet
     assert(got == want)
   }
+
+  test("precondition: documents has unique doc_id, so codes are (doc_id, code)-distinct") {
+    // array_distinct is per ROW; it equals the global (doc_id, code)
+    // DISTINCT only while no doc_id spans two rows
+    for (scale <- Seq("sf0.01", "sf0.1")) {
+      val docs = graft.sources.Tables.documents(spark, sf(scale))
+      assert(docs.groupBy("doc_id").count().filter($"count" > 1).isEmpty,
+        s"duplicate doc_id at $scale")
+      val codes = TextOps.shingleCodesOf(docs)
+      assert(codes.count() == codes.distinct().count(), scale)
+    }
+  }
 }

@@ -1,28 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** The SQL extension surface: graft functions must be callable from
-  * spark.sql once the extensions are installed.
+  * spark.sql on the shared session, which installs the extensions.
   */
-class GraftExtensionsSpec extends AnyFunSuite {
-
-  // separate session: extensions are builder-time configuration, and
-  // getOrCreate would silently reuse another suite's session (ignoring
-  // withExtensions) — clear first so a fresh extended session is built
-  // (the underlying SparkContext is still shared)
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class GraftExtensionsSpec extends SparkSpec {
 
   test("graft_dot and graft_norm2 are callable from SQL") {
     val r = spark.sql(

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{Inspect, SparkEntry, SparkSpec}
 
 /** Plan-quality regression guard over the ENTIRE query surface: no query
   * may plan a BroadcastNestedLoopJoin or CartesianProduct unless it is on
@@ -259,7 +259,8 @@ class PlanGuardSpec extends SparkSpec {
     * the per-merge-round 1-row winner/total crosses of the BPE chain,
     * and the per-segment re-appearance of the already-justified 1-row
     * summary-frame crosses. Calibrated by
-    * `sbt "runMain graft.PlanDump --full-sweep"` (tmp/full_sweep_r12b).
+    * `sbt "runMain graft.Inspect sweep"` (the same [[graft.Inspect.audit]]
+    * counts on the same extended session; columns wTotal, cTotal).
     * The window sweep needs NO separate full-plan whitelist: the audited
     * totals match [[boundedGlobalWindows]] exactly — no unpartitioned
     * window was hiding behind a checkpoint.
@@ -355,77 +356,49 @@ class PlanGuardSpec extends SparkSpec {
     // segment — the sim_dbscan_ivf full-plan shape
     "sim_silhouette" -> 4)
 
-  private case class Audit(wFinal: Int, cFinal: Int, wTotal: Int,
-      cTotal: Int, err: Option[String])
-
-  /** ONE audited build per query, shared by all three sweeps: the final
-    * frame's counts (the pre-round-12 sweeps) plus the totals across
-    * every checkpoint-hidden segment. `Pin.audited` keeps the
-    * checkpoints (an un-pinned rebuild recreates the plan-doubling
-    * anti-patterns the pins prevent and breaks checkpoint-dependent
-    * self-joins) — each segment is swept exactly where it was built.
+  /** ONE audited build per query, shared by all three sweeps and counted
+    * by the same [[graft.Inspect.audit]] that `Inspect sweep` prints:
+    * the final frame's counts plus the totals across every
+    * checkpoint-hidden segment. `Pin.audited` keeps the checkpoints (an
+    * un-pinned rebuild recreates the plan-doubling anti-patterns the pins
+    * prevent and breaks checkpoint-dependent self-joins) — each segment
+    * is swept exactly where it was built.
     */
-  private lazy val audits: Map[String, Audit] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    def wCount(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect {
-        case w: LWindow if w.partitionSpec.isEmpty => w
-      }.length
-    def cCount(df: org.apache.spark.sql.DataFrame): Int =
-      "BroadcastNestedLoopJoin|CartesianProduct".r
-        .findAllMatchIn(df.queryExecution.executedPlan.toString).length
+  private lazy val audits: Map[String, Either[String, Inspect.Audit]] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      var wSeg = 0
-      var cSeg = 0
-      try {
-        val df = graft.Pin.audited { seg =>
-          wSeg += wCount(seg); cSeg += cCount(seg)
-        } { fn(spark, sf("sf0.001")) }
-        val (wf, cf) = (wCount(df), cCount(df))
-        name -> Audit(wf, cf, wf + wSeg, cf + cSeg, None)
-      } catch {
-        case e: Throwable => name -> Audit(-1, -1, -1, -1,
-          Some(s"${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(200)))
-      }
+      name -> (try Right(Inspect.audit(fn(spark, sf("sf0.001"))))
+      catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: " +
+        String.valueOf(e.getMessage).take(200)) })
     }.toMap
-  }
+
+  /** Queries whose count (picked by `f`) exceeds their budget. */
+  private def over(f: Inspect.Audit => Int)(budget: String => Int)
+      : Seq[String] =
+    audits.toSeq.sortBy(_._1).collect {
+      case (name, Right(a)) if f(a) > budget(name) => s"$name=${f(a)}"
+    }
 
   test("every query builds under the audited sweep") {
-    val failed = audits.collect { case (n, a) if a.err.isDefined =>
-      s"$n: ${a.err.get}" }
+    val failed = audits.collect { case (n, Left(err)) => s"$n: $err" }
     assert(failed.isEmpty, failed.mkString("\n"))
   }
 
   test("no query plans a Window over an unpartitioned unbounded frame") {
-    val offenders = audits.toSeq.sortBy(_._1).collect {
-      case (name, a)
-          if a.wFinal > boundedGlobalWindows.getOrElse(name, 0) =>
-        s"$name=${a.wFinal}"
-    }
+    val offenders =
+      over(_.last.windows)(boundedGlobalWindows.getOrElse(_, 0))
     assert(offenders.isEmpty,
       "unpartitioned windows: " + offenders.mkString(", "))
   }
 
   test("no query plans an accidental nested-loop or cartesian join") {
-    val offenders = audits.toSeq.sortBy(_._1).collect {
-      case (name, a) if a.cFinal > intentionalCross.getOrElse(name, 0) =>
-        s"$name=${a.cFinal}"
-    }
+    val offenders = over(_.last.crosses)(intentionalCross.getOrElse(_, 0))
     assert(offenders.isEmpty, "cross-joins: " + offenders.mkString(", "))
   }
 
   test("the sweeps hold over checkpoint-hidden segments too (audited pins)") {
-    val wOff = audits.toSeq.sortBy(_._1).collect {
-      case (name, a)
-          if a.wTotal > boundedGlobalWindows.getOrElse(name, 0) =>
-        s"$name=${a.wTotal}"
-    }
-    val cOff = audits.toSeq.sortBy(_._1).collect {
-      case (name, a) if a.cTotal > fullPlanCross
-            .getOrElse(name, intentionalCross.getOrElse(name, 0)) =>
-        s"$name=${a.cTotal}"
-    }
+    val wOff = over(_.total.windows)(boundedGlobalWindows.getOrElse(_, 0))
+    val cOff = over(_.total.crosses)(name =>
+      fullPlanCross.getOrElse(name, intentionalCross.getOrElse(name, 0)))
     assert(wOff.isEmpty && cOff.isEmpty,
       s"full-plan windows: ${wOff.mkString(", ")}; " +
         s"full-plan crosses: ${cOff.mkString(", ")}")

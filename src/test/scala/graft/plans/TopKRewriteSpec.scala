@@ -1,28 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Window
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** GroupedTopKRewrite: the `row_number() <= k` SQL idiom must plan as the
   * bounded-heap GroupedTopKExec (no Window, no sort) when the extensions
   * are installed — and must NOT fire where the Window is still needed.
   */
-class TopKRewriteSpec extends AnyFunSuite {
-
-  // separate session: extensions are builder-time configuration (see
-  // GraftExtensionsSpec for the clear-then-build pattern)
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-topk-rewrite-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class TopKRewriteSpec extends SparkSpec {
 
   private def fixture(): Unit = {
     val s = spark
