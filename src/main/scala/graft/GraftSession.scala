@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** `$SPARK_GRAFT_CPUS`, or 4 when unset. */
-  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+  private def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
 
   /** `getOrCreate`: a JVM's sessions are all this one. */
   def apply(cores: Int = envCores): SparkSession = {

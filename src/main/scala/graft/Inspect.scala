@@ -47,9 +47,11 @@ object Inspect {
     crossJoin.findAllMatchIn(df.queryExecution.executedPlan.toString).length)
 
   /** Counts of the final frame, and totals over it plus every segment a
-    * pin truncates away.
+    * pin truncates away; `crossLines` are the final frame's nested-loop
+    * and cartesian plan lines.
     */
-  final case class Audit(last: PlanCounts, total: PlanCounts, pins: Int)
+  final case class Audit(last: PlanCounts, total: PlanCounts, pins: Int,
+      crossLines: Seq[String])
 
   /** Builds a query under [[Pin.audited]]: the pins still checkpoint, so
     * each segment is counted exactly where it was built.
@@ -60,7 +62,9 @@ object Inspect {
     val df = Pin.audited { seg =>
       pins += 1; segments += planCounts(seg) }(build)
     val last = planCounts(df)
-    Audit(last, last + segments, pins)
+    Audit(last, last + segments, pins,
+      df.queryExecution.executedPlan.toString.split("\n")
+        .filter(crossJoin.findFirstIn(_).nonEmpty).toSeq)
   }
 
   /** The session settings a result must not depend on. */
@@ -126,17 +130,12 @@ object Inspect {
         opt.getOrElse("out", sys.error(usage)), opt.getOrElse("suffix", ""))
         true
       case "sweep" =>
-        for (name <- names) {
-          println(s"SWEEP,$name," + (try {
-            val a = audit(queries(name)(spark, dir))
-            Seq(a.last.windows, a.last.crosses, a.total.windows,
-              a.total.crosses, a.pins).mkString(",")
-          } catch { case e: Throwable => error(e) }))
-          if (named.nonEmpty)
-            queries(name)(spark, dir).queryExecution.executedPlan.toString
-              .split("\n").filter(crossJoin.findFirstIn(_).nonEmpty)
-              .foreach(println)
-        }
+        for (name <- names) println(s"SWEEP,$name," + (try {
+          val a = audit(queries(name)(spark, dir))
+          (Seq(a.last.windows, a.last.crosses, a.total.windows,
+            a.total.crosses, a.pins).mkString(",") +:
+            (if (named.isEmpty) Nil else a.crossLines)).mkString("\n")
+        } catch { case e: Throwable => error(e) }))
         true
       case "invariance" =>
         names.map { name =>

@@ -250,9 +250,9 @@ object ScalingBench {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = if (args.length > 1) args(1).toInt else 10
     val out = s"tmp/sfx$mult"
-    val cpus = GraftSession.envCores
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    val spark = GraftSession(cpus)
+    val spark = GraftSession()
+    val cpus = spark.sparkContext.defaultParallelism
     buildCorpus(spark, base, out, mult)
 
     // measurement protocol: SMALL-OUTPUT points first, the two big pair

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -10,7 +12,23 @@ import graft.SparkSpec
   */
 class GroupedTopKSpec extends SparkSpec {
 
-  private def windowTopK(df: org.apache.spark.sql.DataFrame,
+  /** Reads a window reference with [[GroupedTopKRewrite]] excluded, so it
+    * runs as the Window it is written as and never as the operator under
+    * test; the setting is restored afterwards.
+    */
+  private def asWindow[T](build: => DataFrame)(read: DataFrame => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, GroupedTopKRewrite.ruleName)
+    try {
+      val df = build
+      assert(df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Window]),
+        "the reference no longer plans a Window")
+      read(df)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def windowTopK(df: DataFrame,
       group: Seq[String], order: Seq[String], k: Int) = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(group.map(col): _*)
@@ -19,7 +37,7 @@ class GroupedTopKSpec extends SparkSpec {
       .filter(col("__rn") <= k).drop("__rn")
   }
 
-  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+  private def sortedRows(df: DataFrame) =
     df.collect().map(_.toSeq.toString).sorted.toSeq
 
   test("matches window row_number across partitionings and k values") {
@@ -31,7 +49,8 @@ class GroupedTopKSpec extends SparkSpec {
     for (parts <- Seq(1, 5); k <- Seq(1, 3, 200)) {
       val df = data.repartition(parts)
       val got = sortedRows(GroupedTopK(df, Seq("g"), Seq("v", "id"), k))
-      val want = sortedRows(windowTopK(df, Seq("g"), Seq("v", "id"), k))
+      val want = asWindow(windowTopK(df, Seq("g"), Seq("v", "id"), k))(
+        sortedRows)
       assert(got == want, s"parts=$parts k=$k")
     }
   }
@@ -63,7 +82,7 @@ class GroupedTopKSpec extends SparkSpec {
 
   test("withTies matches a window rank() filter on seeded random data with heavy ties") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.expressions.{Window => W}
     val rng = new scala.util.Random(7)
     // values drawn from a tiny domain so boundary ties are everywhere;
     // ordering on v alone (NOT unique) is exactly the with-ties case
@@ -74,11 +93,11 @@ class GroupedTopKSpec extends SparkSpec {
       val got = GroupedTopK.withTies(df, Seq("g"), Seq("v"), k)
         .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
         .sorted.toSeq
-      val want = df.withColumn("rk", rank().over(
-          Window.partitionBy($"g").orderBy($"v".desc)))
-        .filter($"rk" <= k).drop("rk")
-        .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
-        .sorted.toSeq
+      val want = asWindow(df.withColumn("rk", rank().over(
+          W.partitionBy($"g").orderBy($"v".desc)))
+        .filter($"rk" <= k).drop("rk"))(
+        _.collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
+          .sorted.toSeq)
       assert(got == want, s"parts=$parts k=$k: got ${got.size}, want ${want.size}")
     }
   }
