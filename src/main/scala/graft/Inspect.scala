@@ -149,35 +149,45 @@ object Inspect {
     if (!ok) sys.exit(1)
   }
 
-  /** Counts the jobs and stages of each query's own job group; the
-    * listener bus is drained before each window opens and closes.
+  /** Runs `body` under the job group `group` and returns its result
+    * with the number of jobs and stages that group started. The
+    * listener bus is drained before the window opens and after it
+    * closes, so the counts are the body's own, not its neighbours'.
     */
-  private def jobs(spark: SparkSession, dir: String, names: Seq[String])
-      : Unit = {
+  def jobCount[T](spark: SparkSession, group: String)(body: => T)
+      : (T, Int, Int) = {
     val sc = spark.sparkContext
-    @volatile var group = ""
     val (jobs, stages) = (new AtomicInteger, new AtomicInteger)
     def count(props: java.util.Properties, n: AtomicInteger): Unit =
       if (props != null && props.getProperty("spark.jobGroup.id") == group)
         n.incrementAndGet()
-    sc.addSparkListener(new SparkListener {
+    val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         count(e.properties, jobs)
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         count(e.properties, stages)
-    })
-    for (q <- names) {
-      BusAccess.waitUntilEmpty(sc)
-      group = q; jobs.set(0); stages.set(0)
-      sc.setJobGroup(q, q)
-      val t0 = System.nanoTime()
-      val n = try SparkEntry.queries(q)(spark, dir).count()
-        finally sc.clearJobGroup()
-      val secs = (System.nanoTime() - t0) / 1e9
-      BusAccess.waitUntilEmpty(sc)
-      println(f"""{"query":"$q","rows":$n,"jobs":${jobs.get},"stages":${stages.get},"sec":$secs%.3f}""")
     }
+    BusAccess.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      BusAccess.waitUntilEmpty(sc)
+      (out, jobs.get, stages.get)
+    } finally sc.removeSparkListener(listener)
   }
+
+  /** Prints the [[jobCount]] of each query's `count()`. */
+  private def jobs(spark: SparkSession, dir: String, names: Seq[String])
+      : Unit =
+    for (q <- names) {
+      val ((n, secs), jobs, stages) = jobCount(spark, q) {
+        val t0 = System.nanoTime()
+        val n = SparkEntry.queries(q)(spark, dir).count()
+        (n, (System.nanoTime() - t0) / 1e9)
+      }
+      println(f"""{"query":"$q","rows":$n,"jobs":$jobs,"stages":$stages,"sec":$secs%.3f}""")
+    }
 
   private def snap(spark: SparkSession, dir: String, names: Seq[String],
       out: String, suffix: String): Unit = {

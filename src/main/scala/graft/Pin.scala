@@ -2,7 +2,8 @@ package graft
 
 import scala.util.DynamicVariable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Central eager-checkpoint ("pin") helper.
   *
@@ -65,5 +66,18 @@ object Pin {
       case Audit(sink) => sink(df); df.localCheckpoint(eager)
       case Normal => df.localCheckpoint(eager)
     }
+
+    /** Eager [[pin]] plus the frame's row count, counted by an
+      * `Observation` in the checkpoint's own job instead of a second
+      * action. Under [[withoutPins]] nothing runs the frame, so the count
+      * is a plain `count()` there (the observation would never fire).
+      */
+    def pinCounted(): (DataFrame, Long) =
+      if (disabled) (df, df.count())
+      else {
+        val obs = Observation()
+        val pinned = df.observe(obs, count(lit(1)).as("n")).pin(true)
+        (pinned, obs.get("n").asInstanceOf[Long])
+      }
   }
 }

@@ -254,15 +254,16 @@ object AriaEngine {
     *
     * ONE driver action per epoch: the only data-dependent output an epoch
     * produces is its abort verdict, and `decisions` is already one row per
-    * txn — so the loop checkpoints just the tiny aborted-tid frame. The
-    * history count is then a job over that materialized handful of rows
-    * (microseconds), the next epoch's batch is a broadcast semi-join
-    * against it (lazy — no batch-sized materialization), and the same
-    * frame is each epoch's exact committed-complement for the merged
-    * install: committed(e) = tids(ops_e) ∖ aborted(e). The previous shape
-    * (eager ops checkpoint + a separate distinct().count()) paid TWO
-    * batch-sized driver actions per epoch and was the measured latency
-    * floor of the flagship scenario query.
+    * txn — so the loop checkpoints just the tiny aborted-tid frame and
+    * counts it in that same job (`pinCounted`), and the next epoch's batch
+    * is a broadcast semi-join against it (lazy — no batch-sized
+    * materialization).
+    *
+    * ONE install branch: the epoch abort frames also give every txn's
+    * commit epoch, 1 + the number of frames holding it (abort sets only
+    * shrink), so the merged install reads `live` once, joins it to that
+    * per-tid count and keeps per key the writer of the highest commit
+    * epoch.
     *
     * DETERMINISM CONTRACT: `table0`/`ops0` are NOT checkpointed here and
     * are each read more than once (table: the live filter + the final
@@ -307,8 +308,8 @@ object AriaEngine {
     var ops = live
     var epoch = 1
     val history = Seq.newBuilder[(Int, Long, Long)]
-    // (epoch, that epoch's live ops, that epoch's aborted-tid frame)
-    val opsByEpoch = Seq.newBuilder[(Int, DataFrame, DataFrame)]
+    // each epoch's aborted-tid frame, in epoch order
+    val abortedByEpoch = Seq.newBuilder[DataFrame]
     var remaining = nTids
     val flag = if (reorder) "committed_reorder" else "committed_noreorder"
     while (remaining > 0 && epoch <= maxEpochs) {
@@ -316,12 +317,12 @@ object AriaEngine {
       // pass instead of a second batch scan + key join per epoch
       val decided = decisionsFused(ops, keyCols)
       // the epoch's ONE action: materialize the per-txn abort verdicts
-      // (decided is groupBy(tid), so this is one row per aborted txn)
-      val aborted = decided.filter(!col(flag)).select("tid")
-        .pin(true)
-      val nAborted = aborted.count() // over the tiny materialized frame
+      // (decided is groupBy(tid), so this is one row per aborted txn),
+      // counted in the same job
+      val (aborted, nAborted) = decided.filter(!col(flag)).select("tid")
+        .pinCounted()
       history += ((epoch, remaining - nAborted, nAborted))
-      opsByEpoch += ((epoch, ops, aborted))
+      abortedByEpoch += aborted
       // CONSTANT-DEPTH retry derivation: abort sets only shrink
       // (aborted_e ⊆ tids(ops_e) = aborted_{e-1}-filtered live), so the
       // epoch-e batch is the ORIGINAL live frame semi-joined against just
@@ -333,27 +334,28 @@ object AriaEngine {
       remaining = nAborted
       epoch += 1
     }
-    // merged install: per epoch, winners among its committed writers; per
-    // key, the highest-epoch winner lands. Each epoch's aborted frame is
-    // its exact committed-complement — including the last one (empty when
-    // drained; the still-live survivors if maxEpochs was hit).
-    val winnersAll = opsByEpoch.result().map { case (e, opsE, abortedE) =>
-      opsE // already live-filtered
-        .filter(col("isUpdate"))
-        .join(broadcast(abortedE), Seq("tid"), "left_anti")
-        .groupBy(keyCols.map(col): _*)
-        .agg(min(col("tid")).as("writer_tid"))
-        .withColumn("win_epoch", lit(e))
-    }.reduceOption(_ unionByName _)
-    val finalTable = winnersAll match {
+    // merged install, one branch: since abort sets only shrink, a txn
+    // aborted in n of the E epochs run commits in epoch n + 1, and did
+    // commit iff n < E (the last frame holds the survivors of a cut-off
+    // run). Per key, the committed writer of the highest epoch lands;
+    // reservation leaves at most one committed writer per key and epoch,
+    // the smallest tid is the defensive tie-break.
+    val aborts = abortedByEpoch.result()
+    val finalTable = aborts.reduceOption(_ unionByName _) match {
       case None => table
-      case Some(w) =>
-        val lastWin = w.groupBy(keyCols.map(col): _*)
-          .agg(max_by(struct(col("writer_tid"), col("win_epoch")),
-            col("win_epoch")).as("lw"))
+      case Some(all) =>
+        val nAborts = all.groupBy(col("tid")).agg(count(lit(1)).as("n"))
+        val lastWin = live.filter(col("isUpdate"))
+          .join(broadcast(nAborts), Seq("tid"), "left")
+          .withColumn("win_epoch",
+            (coalesce(col("n"), lit(0L)) + 1).cast("int"))
+          .filter(col("win_epoch") <= aborts.size)
+          .groupBy(keyCols.map(col): _*)
+          .agg(min(struct((-col("win_epoch")).as("e"), col("tid")))
+            .as("lw"))
           .select(keyCols.map(col) ++ Seq(
-            col("lw.writer_tid").as("writer_tid"),
-            col("lw.win_epoch").as("win_epoch")): _*)
+            col("lw.tid").as("writer_tid"),
+            (-col("lw.e")).as("win_epoch")): _*)
         install(table, lastWin, valueCols, newValue, keyCols)
     }
     (finalTable, history.result())

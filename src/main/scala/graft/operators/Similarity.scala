@@ -1291,7 +1291,10 @@ object Similarity {
       .select($"cid", $"pos", $"c_ch".as("c_a"))
     val bex = cex.filter($"child" === 1L)
       .select($"cid", $"pos", $"c_ch".as("c_b"))
-    val mv = pex.join(aex, Seq("cid", "pos")).join(bex, Seq("cid", "pos"))
+    // both children exploded: ≤ 2·nCells·dim rows of the pinned fit,
+    // broadcast so the plan does not hinge on AQE re-planning these joins
+    val mv = pex.join(broadcast(aex), Seq("cid", "pos"))
+      .join(broadcast(bex), Seq("cid", "pos"))
       .groupBy($"cid")
       .agg(sum(($"c_a" - $"c_par") * ($"c_a" - $"c_par"))
           .as("move_a_l2sq"),
@@ -2116,8 +2119,10 @@ object Similarity {
     val assign = ivfAssignOf(emb, ivfCentroids(s, emb)).pin(true)
     val (codes, lut) = pqCodesAndLut(s, dir)
     val cellCodes = codes.join(assign, Seq("vec_id"))
-    val cellLut = lut.join(
-      assign.select($"vec_id".as("qid"), $"centroid".as("qc")), Seq("qid"))
+    // the probe queries' cells, 10 rows: broadcast, so AQE never races
+    // this pinned side's shuffle against the lut side's broadcast
+    val cellLut = lut.join(broadcast(assign.filter($"vec_id" < 10)
+      .select($"vec_id".as("qid"), $"centroid".as("qc"))), Seq("qid"))
     cellCodes.join(broadcast(cellLut), Seq("m", "cid"))
       .filter($"centroid" === $"qc" && $"vec_id" =!= $"qid")
       .groupBy($"qid", $"vec_id")

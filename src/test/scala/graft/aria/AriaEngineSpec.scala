@@ -1,6 +1,6 @@
 package graft.aria
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -177,5 +177,68 @@ class AriaEngineSpec extends SparkSpec {
     val (_, h2) = AriaEngine.run(spark, baseDf(keys),
       opsDf(ops).repartition(7), reorder = true, Seq("f0"), newValue)
     assert(h1 == h2)
+  }
+
+  // ---- merged install == installing after every epoch ----
+
+  /** `run`'s shape without the deferred install: `runEpoch` per epoch,
+    * its next table installed before the next epoch, aborted txns
+    * retried; at most `maxEpochs` epochs. Returns the final table.
+    */
+  private def installEveryEpoch(table0: DataFrame, ops0: DataFrame,
+      reorder: Boolean, maxEpochs: Int, keyCols: Seq[String]): DataFrame = {
+    var (table, ops, epoch) = (table0, ops0, 1)
+    while (epoch <= maxEpochs && !ops.isEmpty) {
+      val (next, _, aborted) = AriaEngine.runEpoch(table, ops, reorder,
+        Seq("f0"), newValue, epoch, keyCols)
+      table = next.localCheckpoint(true)
+      val retry = aborted.collect().map(_.getLong(0)).toSeq
+      ops = ops.filter(col("tid").isin(retry: _*)).localCheckpoint(true)
+      epoch += 1
+    }
+    table
+  }
+
+  /** For maxEpochs 1, 2 and 100 under both policies: `run`'s merged
+    * install equals [[installEveryEpoch]]. The batch needs more than two
+    * epochs, so the cut-off runs leave txns that never commit.
+    */
+  private def checkMergedInstall(table: DataFrame, ops: DataFrame,
+      keyCols: Seq[String]): Unit = {
+    def rows(df: DataFrame): Seq[Row] =
+      df.orderBy(keyCols.map(col): _*).collect().toSeq
+    for (reorder <- Seq(true, false); maxEpochs <- Seq(1, 2, 100)) {
+      val (fin, history) = AriaEngine.run(spark, table, ops, reorder,
+        Seq("f0"), newValue, maxEpochs, keyCols)
+      if (maxEpochs == 100) assert(history.size > 2, s"reorder=$reorder")
+      else assert(history.size == maxEpochs && history.last._3 > 0,
+        s"reorder=$reorder maxEpochs=$maxEpochs: not a cut-off run")
+      assert(rows(fin) ==
+        rows(installEveryEpoch(table, ops, reorder, maxEpochs, keyCols)),
+        s"reorder=$reorder maxEpochs=$maxEpochs")
+    }
+  }
+
+  test("merged install equals installing after every epoch, cut-off runs included") {
+    val rng = new scala.util.Random(5)
+    // 40 txns on 30 keys (35 drawn, so some ops miss): several epochs
+    val ops = (1L to 40L).flatMap { tid =>
+      (0 until 1 + rng.nextInt(5)).map(i =>
+        Op(tid, i, 1L + rng.nextInt(35), rng.nextDouble() < 0.5))
+    }
+    checkMergedInstall(baseDf(1L to 30L), opsDf(ops), Seq("k"))
+  }
+
+  test("merged install equals installing after every epoch on registry keys") {
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    // two tables sharing numeric keys 1..15; ops draw keys 1..18
+    val ops = (1L to 40L).flatMap { tid =>
+      (0 until 1 + rng.nextInt(5)).map(i => (tid, i, rng.nextInt(2).toLong,
+        1L + rng.nextInt(18), rng.nextDouble() < 0.5))
+    }.toDF("tid", "opIdx", "table_id", "k", "isUpdate")
+    val reg = (for (t <- 0L to 1L; k <- 1L to 15L)
+      yield (t, k, s"orig${t}_$k")).toDF("table_id", "k", "f0")
+    checkMergedInstall(reg, ops, Seq("table_id", "k"))
   }
 }

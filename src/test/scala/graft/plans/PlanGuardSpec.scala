@@ -34,7 +34,7 @@ class PlanGuardSpec extends SparkSpec {
     // fixed broadcast probe set (vector channel) + the 1-row broadcast
     // ndocs frame feeding the lexical df-prune threshold (r13)
     "sim_hybrid_rrf" -> 2,
-    "sim_lsh_recall" -> 2, // composes cosine_topk + lsh_topk, inherits theirs
+    "sim_lsh_recall" -> 1, // composes cosine_topk + lsh_topk: the cosine probe
     "kv_scan_count" -> 2, // single-row aggregate frames joined for summary
     // 40-row broadcast quarter calendar, interval-containment join
     "q25_range_join" -> 1,
@@ -46,9 +46,9 @@ class PlanGuardSpec extends SparkSpec {
     "text_dsir_weights" -> 1,
     // 1-row broadcast corpus-total frame (same LM as text_surprisal)
     "text_ppl_buckets" -> 1,
-    // |langs|-row broadcast candidate set (the NB scoring expansion) +
-    // the 1-row vocab frame crossed into the |langs|-row totals
-    "text_lang_nb" -> 2,
+    // one of its two bounded broadcast crosses (the |langs|-row NB
+    // candidate set, the 1-row vocab frame); the other sits behind a pin
+    "text_lang_nb" -> 1,
     // exact-L2 baseline side: fixed 10-row broadcast query-vector set
     "sim_pq_recall" -> 1,
     // fixed 10-row broadcast query-vector set (exact MIPS baseline)
@@ -78,8 +78,6 @@ class PlanGuardSpec extends SparkSpec {
     "text_cooccur_lift" -> 2,
     // 1-row broadcast regression frame (the Zipf slope constants)
     "text_zipf_curve" -> 1,
-    // fixed 5-row broadcast query-vector set (the candidate fetch)
-    "sim_mmr_rerank" -> 1,
     // fixed 10-row broadcast probe set (radius search scan)
     "sim_range_search" -> 1,
     // 1-row broadcast corpus-totals frame (budget + source count)
@@ -87,11 +85,11 @@ class PlanGuardSpec extends SparkSpec {
     // three bounded 1-row summary frames composed into the card row
     // (+ the |langs|-row HHI's 1-row total)
     "text_corpus_profile" -> 3,
-    // composes cosine_topk + lsh_topk, inherits their broadcast probes
-    "sim_recall_curve" -> 2,
-    // same nbScores subtree as text_lang_nb, inherits its two bounded
-    // broadcast frames (|langs| candidates + the 1-row vocab)
-    "text_langid_margin" -> 2,
+    // composes cosine_topk + lsh_topk: the cosine side's broadcast probe
+    "sim_recall_curve" -> 1,
+    // same nbScores subtree as text_lang_nb, inherits its final-frame
+    // cross
+    "text_langid_margin" -> 1,
     // 1-row broadcast trigram-total frame (the share normalizer)
     "ev_top_paths" -> 1,
     // the two bounded 1-row audit aggregates (found/missed) crossed into
@@ -137,9 +135,6 @@ class PlanGuardSpec extends SparkSpec {
     // exact-cosine + SQ8-code scans, each against the 10-row broadcast
     // probe set
     "sim_sq_spearman" -> 2,
-    // 8-row broadcast centroid table crossed in the assignment pass
-    // (the sim_ivf_assign shape; the split itself is all cid-keyed)
-    "sim_ivf_split" -> 1,
     // five 1-row broadcast cohort-totals frames (one per drifted column)
     // folded over the value histograms
     "dq_category_drift" -> 5,
@@ -156,8 +151,9 @@ class PlanGuardSpec extends SparkSpec {
     "ev_markov_stationary" -> 1,
     // r16: the 1-row pooled-moment frame crossed into the 1-row arm frame
     "ev_cuped" -> 1,
-    // r16: one 1-row max-divisor rescale cross per BT MM round
-    "eval_bradley_terry" -> 3,
+    // the final readout's 1-row max-divisor rescale; the per-round
+    // rescales sit behind the round pins (fullPlanCross)
+    "eval_bradley_terry" -> 1,
     // r16: the 1-row observed frame crossed into the 200-row permutation
     // fold, + the 1-row count crossed into the report row
     "stat_perm_test" -> 2,
@@ -266,7 +262,7 @@ class PlanGuardSpec extends SparkSpec {
     * window was hiding behind a checkpoint.
     */
   private val fullPlanCross = Map(
-    "dedup_semantic" -> 4,
+    "dedup_semantic" -> 3,
     "dq_category_drift" -> 5,
     "dq_numeric_drift" -> 3,
     "dq_chi_square" -> 1, // the 1-row N frame (r13 session 2)
@@ -301,14 +297,14 @@ class PlanGuardSpec extends SparkSpec {
     "sim_hybrid_rrf" -> 2, // + the 1-row ndocs df-prune frame (r13)
     "sim_diversity_sample" -> 9,
     "sim_hard_negatives" -> 1,
-    "sim_ivf_assign" -> 4,
-    "sim_ivf_balance" -> 4,
-    "sim_ivf_forget" -> 4,
-    "sim_ivf_recall" -> 6,
-    "sim_ivf_refresh" -> 5,
-    "sim_ivf_split" -> 4,
-    "sim_ivf_topk" -> 5,
-    "sim_ivfpq_topk" -> 4,
+    "sim_ivf_assign" -> 3,
+    "sim_ivf_balance" -> 3,
+    "sim_ivf_forget" -> 3,
+    "sim_ivf_recall" -> 5,
+    "sim_ivf_refresh" -> 4,
+    "sim_ivf_split" -> 3,
+    "sim_ivf_topk" -> 4,
+    "sim_ivfpq_topk" -> 3,
     "sim_lsh_recall" -> 1,
     "sim_matryoshka_recall" -> 2,
     "sim_mips_topk" -> 1,
@@ -338,7 +334,7 @@ class PlanGuardSpec extends SparkSpec {
     "eval_mcnemar" -> 2,
     // r14: the k-means fit's per-iteration 8-row centroid cross behind
     // the fit pins — the sim_ivf_assign full-plan shape
-    "sim_dbscan_ivf" -> 4,
+    "sim_dbscan_ivf" -> 3,
     // r14: the 1-row ndocs idf frame + a 1-row rescale divisor per
     // ping-pong half-round (8), all behind the round pins — the
     // emb_pca_power full-plan shape
@@ -354,7 +350,7 @@ class PlanGuardSpec extends SparkSpec {
     // r15: the k-means fit's per-iteration 8-row centroid cross behind
     // the fit pins + the 8-row centroid distance fan in the dall
     // segment — the sim_dbscan_ivf full-plan shape
-    "sim_silhouette" -> 4)
+    "sim_silhouette" -> 3)
 
   /** ONE audited build per query, shared by all three sweeps and counted
     * by the same [[graft.Inspect.audit]] that `Inspect sweep` prints:
