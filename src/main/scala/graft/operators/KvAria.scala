@@ -263,17 +263,20 @@ object KvAria {
     * BOTH install policies. Output: (mode, epoch, committed, aborted) —
     * seed-stable, so the driver's rows-only hash doubles as a determinism
     * check across rounds. (Not SQL-expressible: seeded generator +
-    * fixpoint loop.)
+    * fixpoint loop.) ScalingBench scales keys, txns and `keys_max` ×k;
+    * the query is k = 1.
     */
-  def ariaReferenceScenario(s: SparkSession, dir: String): DataFrame = {
+  def ariaReferenceScenario(s: SparkSession, dir: String,
+      k: Int = 1): DataFrame = {
     import s.implicits._
     // materialize once: both install-policy runs re-checkpoint their
     // inputs, and without this each would regenerate all 200k seeded
     // payloads from scratch
-    val table = graft.aria.TxnGen.bulkLoad(s, 200000)
+    val table = graft.aria.TxnGen.bulkLoad(s, 200000L * k)
       .select($"k", $"fields"(0).as("f0"))
       .pin(true)
-    val ops = graft.aria.TxnGen.ops(s, 150).pin(true)
+    val ops = graft.aria.TxnGen.ops(s, 150L * k,
+      graft.aria.TxnGen.Config(keysMax = 20000L * k)).pin(true)
     val newValue = (tid: org.apache.spark.sql.Column,
         ep: org.apache.spark.sql.Column) =>
       concat(lit("v"), tid.cast("string"), lit("e"), ep.cast("string"))
@@ -778,7 +781,7 @@ object KvAria {
     "aria_insert_missing" -> ariaInsertMissing _,
     "aria_key_op_chain" -> ariaKeyOpChain _,
     "aria_epochs" -> ariaEpochs _,
-    "aria_reference_scenario" -> ariaReferenceScenario _,
+    "aria_reference_scenario" -> (ariaReferenceScenario(_: SparkSession, _: String)),
     "aria_two_tables" -> ariaTwoTables _,
     "aria_two_tables_install" -> ariaTwoTablesInstall _,
     "aria_two_tables_epochs" -> ariaTwoTablesEpochs _,

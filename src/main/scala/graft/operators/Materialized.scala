@@ -152,10 +152,13 @@ object Materialized {
 
   // ---- the gate scenario over `orders` ----
 
-  private def parts(s: SparkSession, dir: String)
+  /** The gate scenario's CDC day over `orders`: (base, inserts, deletes)
+    * of (key, rid, x); ScalingBench splits its scaled orders with it. */
+  private[graft] def cdcDay(orders: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
+    val s = orders.sparkSession
     import s.implicits._
-    val all = Tables.orders(s, dir).select(
+    val all = orders.select(
       $"o_custkey".as("key"), $"o_orderkey".as("rid"), $"o_orderstatus",
       $"o_orderdate", round($"o_totalprice" * 100).cast("long").as("x"))
     val base = all.filter($"o_orderdate" < lit(split).cast("timestamp"))
@@ -176,7 +179,7 @@ object Materialized {
     */
   def incrementalAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (base, inserts, deletes) = parts(s, dir)
+    val (base, inserts, deletes) = cdcDay(Tables.orders(s, dir))
     val viewBase = base.groupBy($"key")
       .agg(count(lit(1)).as("n"), sum($"x").as("s"))
       .pin(true)
@@ -199,7 +202,7 @@ object Materialized {
     */
   def incrementalMax(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (base, inserts, deletes) = parts(s, dir)
+    val (base, inserts, deletes) = cdcDay(Tables.orders(s, dir))
     val viewBase = base.groupBy($"key")
       .agg(max($"x").as("m"))
       .pin(true)

@@ -3262,7 +3262,8 @@ object Similarity {
     * whose retained terms contribute ≥ 10⁶/(ndocs/10) each; a doc sharing
     * only stop-words with the probe was never a lexical match. Measured
     * under Zipf-honest (verbatim-replication) scaling in ScalingBench
-    * (`sim_hybrid_rrf` vs the uncapped [[hybridRrfUncapped]]).
+    * (its `hybrid_lex` probe times [[hybridRrfLex]]; the uncapped
+    * control's numbers are recorded in PLANS.md).
     * The fuse is a full-outer join of two ≤20-row-per-query frames. Both
     * channels end in qid-keyed windows.
     */
@@ -3283,30 +3284,7 @@ object Similarity {
         row_number().over(byQ.orderBy($"cos".desc, $"vec_id")))
       .filter($"rv" <= 20)
       .select($"qid", $"vec_id".as("doc_id"), $"rv")
-    val words = Tables.documents(s, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("w")).distinct()
-    val ndocs = Tables.documents(s, dir)
-      .agg(countDistinct($"doc_id").as("ndocs"))
-    // corpus-relative df prune: drop the Zipf head (df > max(16, N/10))
-    // BEFORE any posting access — the kept vocabulary is what a search
-    // engine's stop-list leaves behind
-    val dfreq = words.groupBy($"w").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(ndocs))
-      .filter($"df" * 10L <= $"ndocs" || $"df" <= 16L)
-      .select($"w", $"df")
-    // probe vocab ∩ kept terms is tiny (10 docs' tail vocabulary):
-    // broadcast it against the posting scan — no shuffle on the term key
-    val probeTerms = words.filter($"doc_id" < 10)
-      .select($"doc_id".as("qid"), $"w")
-      .join(dfreq, Seq("w"))
-    val lrank = words.join(broadcast(probeTerms), Seq("w"))
-      .filter($"doc_id" =!= $"qid")
-      .groupBy($"qid", $"doc_id")
-      .agg(sum(expr("1000000 div df")).as("lex"))
-      .withColumn("rl",
-        row_number().over(byQ.orderBy($"lex".desc, $"doc_id")))
-      .filter($"rl" <= 20)
-      .select($"qid", $"doc_id", $"rl")
+    val lrank = hybridRrfLex(s, dir)
     vrank.join(lrank, Seq("qid", "doc_id"), "full_outer")
       .withColumn("rrf_score",
         coalesce(expr("1000000 div (60 + rv)"), lit(0L))
@@ -3320,39 +3298,9 @@ object Similarity {
       .orderBy($"qid", $"rank")
   }
 
-  /** The PRE-r13 lexical channel of [[hybridRrf]], kept as a measurement
-    * control only (NOT in the gate): no df prune, and the probe terms are
-    * joined against the postings on the raw term key — the Zipf-skewed
-    * shuffle VERDICT r12 #1 flagged. ScalingBench times this against the
-    * capped form on the Zipf-honest (verbatim-replication) corpus, where
-    * document frequency grows ×mult with the corpus, to put the uncapped
-    * blowup and the capped flatness on record side by side.
-    */
-  def hybridRrfLexUncapped(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val byQ = Window.partitionBy($"qid")
-    val words = Tables.documents(s, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("w")).distinct()
-    val dfreq = words.groupBy($"w").agg(count(lit(1)).as("df"))
-    words.filter($"doc_id" < 10)
-      .select($"doc_id".as("qid"), $"w")
-      .join(words, Seq("w"))
-      .filter($"doc_id" =!= $"qid")
-      .join(dfreq, Seq("w"))
-      .groupBy($"qid", $"doc_id")
-      .agg(sum(expr("1000000 div df")).as("lex"))
-      .withColumn("rl",
-        row_number().over(byQ.orderBy($"lex".desc, $"doc_id")))
-      .filter($"rl" <= 20)
-      .select($"qid", $"doc_id", $"rl")
-  }
-
-  /** The capped lexical channel of [[hybridRrf]] alone (same code path as
-    * the gate query's `lrank`), for like-for-like ScalingBench timing
-    * against [[hybridRrfLexUncapped]].
-    */
-  def hybridRrfLexCapped(s: SparkSession, dir: String): DataFrame = {
+  /** The lexical channel of [[hybridRrf]] as (qid, doc_id, rl): top-20 by
+    * idf-weighted overlap over the df-pruned probe vocabulary. */
+  def hybridRrfLex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val byQ = Window.partitionBy($"qid")
@@ -3360,10 +3308,15 @@ object Similarity {
       .select($"doc_id", explode(split($"text", " ")).as("w")).distinct()
     val ndocs = Tables.documents(s, dir)
       .agg(countDistinct($"doc_id").as("ndocs"))
+    // corpus-relative df prune: drop the Zipf head (df > max(16, N/10))
+    // BEFORE any posting access — the kept vocabulary is what a search
+    // engine's stop-list leaves behind
     val dfreq = words.groupBy($"w").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(ndocs))
       .filter($"df" * 10L <= $"ndocs" || $"df" <= 16L)
       .select($"w", $"df")
+    // probe vocab ∩ kept terms is tiny (10 docs' tail vocabulary):
+    // broadcast it against the posting scan — no shuffle on the term key
     val probeTerms = words.filter($"doc_id" < 10)
       .select($"doc_id".as("qid"), $"w")
       .join(dfreq, Seq("w"))

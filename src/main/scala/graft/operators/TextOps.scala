@@ -4218,24 +4218,16 @@ object TextOps {
         |SELECT size, count(*)::BIGINT AS n_components
         |FROM sz GROUP BY size ORDER BY size""".stripMargin
 
-  /** Degree frame + per-node triangle membership over a checkpointed
-    * (a, b) edge frame — the MPS degree-oriented machinery shared by
-    * [[triangles]] and [[clusteringCoeff]]. Returns (deg(v, d),
-    * triCnt(group_id, tri_cnt)); triCnt covers only nodes in ≥1 triangle.
-    */
-  /** Triangle tuples (v, u, w) of an undirected a<b edge list via the
-    * degree-oriented MPS wedge close — the tri frame is pinned (three
-    * member-explode consumers in the node close; three edge-explode
-    * consumers in the truss support).
-    */
-  private def triTuples(pairs: DataFrame): (DataFrame, DataFrame) = {
+  /** deg(v, d) of an undirected a<b edge list, and each edge oriented
+    * low-(deg,id) → high-(deg,id) as (src, dst, dd), carrying the dst's
+    * degree so wedge ordering and the closing join need no further lookup
+    * — the MPS orientation, unpinned. */
+  private[graft] def orientEdges(pairs: DataFrame): (DataFrame, DataFrame) = {
     val s = pairs.sparkSession
     import s.implicits._
     val nodes = pairs.select($"a".as("v")).unionByName(pairs.select($"b".as("v")))
     val deg = nodes.groupBy($"v").agg(count(lit(1)).as("d"))
-    // orient each edge low-(deg,id) → high-(deg,id), carrying the dst's
-    // degree so wedge ordering and the closing join need no further lookup
-    val oriented = pairs
+    val edges = pairs
       .join(deg.select($"v".as("a"), $"d".as("da")), "a")
       .join(deg.select($"v".as("b"), $"d".as("db")), "b")
       .select(
@@ -4244,7 +4236,19 @@ object TextOps {
           .otherwise(struct($"b".as("src"), $"a".as("dst"), $"da".as("dd")))
           .as("e"))
       .select($"e.src", $"e.dst", $"e.dd")
-      .pin(true) // consumed three times: both wedge sides + close
+    (deg, edges)
+  }
+
+  /** Triangle tuples (v, u, w) of an undirected a<b edge list via the
+    * degree-oriented MPS wedge close — the tri frame is pinned (three
+    * member-explode consumers in the node close; three edge-explode
+    * consumers in the truss support).
+    */
+  private def triTuples(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    val (deg, edges) = orientEdges(pairs)
+    val oriented = edges.pin(true) // consumed three times: both wedge sides + close
     val wedges = oriented.as("x")
       .join(oriented.as("y"), $"x.src" === $"y.src" &&
         ($"x.dd" < $"y.dd" || ($"x.dd" === $"y.dd" && $"x.dst" < $"y.dst")))
@@ -4256,6 +4260,11 @@ object TextOps {
     (deg, tri)
   }
 
+  /** Degree frame + per-node triangle membership over a checkpointed
+    * (a, b) edge frame — the MPS degree-oriented machinery shared by
+    * [[triangles]] and [[clusteringCoeff]]. Returns (deg(v, d),
+    * triCnt(group_id, tri_cnt)); triCnt covers only nodes in ≥1 triangle.
+    */
   private def degAndTriCounts(pairs: DataFrame): (DataFrame, DataFrame) = {
     val s = pairs.sparkSession
     import s.implicits._
