@@ -50,21 +50,21 @@ object Pin {
   /** True while the current thread is inside [[withoutPins]]. */
   def disabled: Boolean = mode.value == Off
 
-  /** Run `body` with `.pin(...)` as the identity on THIS thread. */
+  /** Run `body` with `.pin` as the identity on THIS thread. */
   def withoutPins[T](body: => T): T = mode.withValue(Off)(body)
 
-  /** Run `body` with every `.pin(...)` on THIS thread reporting its
+  /** Run `body` with every `.pin` on THIS thread reporting its
     * pre-truncation frame to `sink` before checkpointing as usual.
     */
   def audited[T](sink: DataFrame => Unit)(body: => T): T =
     mode.withValue(Audit(sink))(body)
 
   implicit final class PinOps(private val df: DataFrame) extends AnyVal {
-    /** `localCheckpoint(eager)`, subject to the thread's inspection mode. */
-    def pin(eager: Boolean = true): DataFrame = mode.value match {
+    /** Eager `localCheckpoint`, subject to the thread's inspection mode. */
+    def pin: DataFrame = mode.value match {
       case Off => df
-      case Audit(sink) => sink(df); df.localCheckpoint(eager)
-      case Normal => df.localCheckpoint(eager)
+      case Audit(sink) => sink(df); df.localCheckpoint()
+      case Normal => df.localCheckpoint()
     }
 
     /** Eager [[pin]] plus the frame's row count, counted by an
@@ -76,7 +76,7 @@ object Pin {
       if (disabled) (df, df.count())
       else {
         val obs = Observation()
-        val pinned = df.observe(obs, count(lit(1)).as("n")).pin(true)
+        val pinned = df.observe(obs, count(lit(1)).as("n")).pin
         (pinned, obs.get("n").asInstanceOf[Long])
       }
   }

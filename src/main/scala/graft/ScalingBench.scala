@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{KvAria, Materialized, Similarity, TextOps}
+import graft.operators.{Graph, KvAria, Materialized, Similarity, TextOps}
 import graft.sources.{Layout, Tables, VersionedTable}
 
 /** Scaling-slope harness: times the most expensive queries at the
@@ -350,7 +350,12 @@ object ScalingBench {
     // (and its file count) grows ×mult — the claim LayoutSpec proves at
     // sf0.01, measured here at 10×. File count scales with data, ×8 per
     // 1×; the O(√F) law gains most from an extra decade of scale.
-    Probe("scan_pruned_zorder", Default, None, e =>
+    Probe("scan_pruned_zorder", Default, None, e => {
+      // the base corpus's median doc_id: every scale holds it (shard 0
+      // keeps the base ids), so each point times a probe that finds a row
+      lazy val probeId = e.spark.read.parquet(s"${e.base}/documents.parquet")
+        .agg(percentile_approx(col("doc_id"), lit(0.5), lit(10000)))
+        .head().getLong(0)
       scales(e, _.sharded).map { case (m, dir) =>
         // absolute path: the COW commit's atomic rename resolves relative
         // paths inconsistently between the Hadoop FS and the parquet writer.
@@ -361,7 +366,6 @@ object ScalingBench {
           s"${e.sharded}/zorder_${corpusGen}_${zorderGen}_${m}x/t").getAbsolutePath
         if (VersionedTable.latestVersion(e.spark, path).isEmpty)
           zorderTable(e.spark, dir, path, 8 * m)
-        val probeId = 4321L
         val (kId, tId) = VersionedTable.prunedFiles(e.spark, path, "doc_id",
           probeId, probeId)
         // the z-order claim: the NON-leading dimension prunes too
@@ -372,7 +376,8 @@ object ScalingBench {
             probeId),
           post = (_, _) => Seq("files_opened_id" -> kId, "files_total" -> tId,
             "files_opened_nchars" -> kNc, "files_total_nchars" -> tNc))
-      }),
+      }
+    }),
 
     // BPE trainer scaling: the replace-form chain is O(rounds × corpus) by
     // construction; the pair-cache incremental form pays one up-front
@@ -579,8 +584,8 @@ object ScalingBench {
         val edges = heavyEdges(e.spark, 12000L * m)
         val stats = wedgeStats(edges)
         Seq[(String, () => DataFrame)](
-          "exact" -> (() => TextOps.ccExactOnEdges(edges)),
-          "cap32" -> (() => TextOps.ccCappedOnEdges(edges, 32)))
+          "exact" -> (() => Graph.ccOnEdges(edges)),
+          "cap32" -> (() => Graph.ccOnEdges(edges, Some(32))))
           .map { case (form, run) =>
             Point(s"wedge_decade_$form", s"${m}x", m, run,
               post = (_, _) => stats)
@@ -594,7 +599,7 @@ object ScalingBench {
     own("graph_clustering_capped")(e =>
       for ((m, dir) <- scales(e, _.sharded); cap <- Iterator(32, 128))
       yield Point("graph_clustering_capped", s"${m}x", m,
-        () => TextOps.clusteringCoeffCapped(e.spark, dir, cap),
+        () => Graph.clusteringCoeffCapped(e.spark, dir, cap),
         pre = Seq("cap" -> cap)))
   ) ++ Seq("dedup_clusters", "sim_ivf_topk",
       "dedup_cdc_chunks",
@@ -796,13 +801,13 @@ object ScalingBench {
         greatest(col("x"), col("y")).as("b"))
       .distinct()
       .repartition(32)
-      .pin(true)
+      .pin
   }
 
-  /** Oriented wedge stats ([[TextOps.orientEdges]]): is this point in
+  /** Oriented wedge stats ([[Graph.orientEdges]]): is this point in
     * the volume/m >= 100 regime? */
   private def wedgeStats(edges: DataFrame): Seq[(String, Any)] = {
-    val od = TextOps.orientEdges(edges)._2
+    val od = Graph.orientEdges(edges)._2
       .groupBy("src").agg(count(lit(1)).as("od"))
     val st = od.agg(sum(col("od")).as("m"), max(col("od")).as("max_od"),
         sum((col("od") * (col("od") - 1) / 2).cast("long")).as("volume"),

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-import graft.operators.{Affinity, Events, KvAria, LayoutOps, Materialized, Multimodal, Quality, Relational, Similarity, Skew, Sketches, Skyline, TemporalJoins, TextOps}
+import graft.operators.{Affinity, Events, Graph, KvAria, LayoutOps, Materialized, Multimodal, Quality, Relational, Similarity, Skew, Sketches, Skyline, TemporalJoins, TextOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -19,7 +19,7 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ KvAria.queries ++ Events.queries ++
+    Relational.queries ++ KvAria.queries ++ Events.queries ++ Graph.queries ++
       TextOps.queries ++ Similarity.queries ++ Multimodal.queries ++
       Skew.queries ++ TemporalJoins.queries ++ Skyline.queries ++
       Sketches.queries ++ Materialized.queries ++ Quality.queries ++
@@ -28,7 +28,7 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    Relational.oracles ++ KvAria.oracles ++ Events.oracles ++
+    Relational.oracles ++ KvAria.oracles ++ Events.oracles ++ Graph.oracles ++
       TextOps.oracles ++ Similarity.oracles ++ Multimodal.oracles ++
       Skew.oracles ++ TemporalJoins.oracles ++ Skyline.oracles ++
       Sketches.oracles ++ Materialized.oracles ++ Quality.oracles ++

@@ -285,7 +285,7 @@ object AriaEngine {
     // still counts txns from the RAW batch: a txn whose ops all miss
     // commits trivially in epoch 1 (it can never conflict or abort).
     runLive(spark, table0,
-      liveOps(ops0, table0, keyCols).pin(true),
+      liveOps(ops0, table0, keyCols).pin,
       ops0.select("tid").distinct().count(), reorder, valueCols, newValue,
       maxEpochs, keyCols)
 

@@ -151,7 +151,7 @@ object Events {
       .select(explode(sequence($"lo", $"hi", expr("interval 1 day"))).as("d"))
     val daily = cal.join(observed, Seq("d"), "left")
       .select($"d", coalesce($"cnt", lit(0L)).as("cnt"))
-      .pin(true) // bounded |days| frame; windows + the seasonal join
+      .pin // bounded |days| frame; windows + the seasonal join
     val w = Window.orderBy($"d").rowsBetween(-3, 3)
     val trended = daily
       .withColumn("trend7", sum($"cnt").over(w))
@@ -160,7 +160,7 @@ object Events {
       .withColumn("detr7", lit(7L) * $"cnt" - $"trend7")
       .withColumn("dow",
         datediff($"d", lit("1970-01-01").cast("timestamp")) % 7)
-      .pin(true) // seasonal agg + the join back
+      .pin // seasonal agg + the join back
     val seas = trended.groupBy($"dow")
       .agg(floor(sum($"detr7").cast("double") / count(lit(1)))
         .cast("long").as("seasonal7"))
@@ -265,8 +265,8 @@ object Events {
     // v feeds its own count branch AND the c join (likewise c): checkpoint
     // the tiny per-user stage frames so the events scan + agg run once per
     // stage, not once per downstream consumer
-    val v = stage("view", None).pin()
-    val c = stage("click", Some(v)).pin()
+    val v = stage("view", None).pin
+    val c = stage("click", Some(v)).pin
     val p = stage("purchase", Some(c))
     Seq(("1_view", v), ("2_click", c), ("3_purchase", p))
       .map { case (nm, df) =>
@@ -601,11 +601,11 @@ object Events {
       .withColumn("f", lag($"event_type", 1).over(w))
       .filter($"f".isNotNull)
       .groupBy($"f", $"event_type".as("t")).agg(count(lit(1)).as("n"))
-      .pin(true)
+      .pin
     val outMass = counts.groupBy($"f").agg(sum($"n").as("rn"))
     val skel = counts.join(outMass, Seq("f"))
       .filter($"n" * 1000L >= $"rn" * 200L)
-      .select($"f", $"t").pin(true)
+      .select($"f", $"t").pin
     val nodes = Tables.events(s, dir).select($"event_type".as("v")).distinct()
     // state-count contract (ADVICE r13): 3 squaring rounds close paths of
     // length 2³ = 8, i.e. any skeleton on ≤ 9 states; enforce in-plan via
@@ -618,7 +618,7 @@ object Events {
         "squaring rounds only close diameter 8; add a round")).as("_g"))
     var r = nodes.select($"v".as("x"), $"v".as("y"))
       .unionByName(skel.select($"f".as("x"), $"t".as("y")))
-      .distinct().pin(true)
+      .distinct().pin
     // the reachability relation is ≤ 9²-row bounded (the guard enforces
     // ≤ 9 states), but reaches Catalyst as unestimated checkpoint
     // lineage — broadcast the build sides so the squaring/mutual joins
@@ -627,12 +627,12 @@ object Events {
       r = r.unionByName(
           r.as("p").join(broadcast(r.as("q")), $"p.y" === $"q.x")
             .select($"p.x".as("x"), $"q.y".as("y")))
-        .distinct().pin(true)
+        .distinct().pin
     }
     val mutual = r.as("a")
       .join(broadcast(r.as("b")), $"a.x" === $"b.y" && $"a.y" === $"b.x")
       .select($"a.x".as("v"), $"a.y".as("m"))
-    val cls = mutual.groupBy($"v").agg(min($"m").as("class_id")).pin(true)
+    val cls = mutual.groupBy($"v").agg(min($"m").as("class_id")).pin
     val leak = skel
       .join(broadcast(cls.select($"v".as("f"), $"class_id")), Seq("f"))
       .join(broadcast(cls.select($"v".as("t"), $"class_id".as("c2"))),
@@ -827,9 +827,9 @@ object Events {
       .groupBy($"from_type", $"event_type".as("to_type"))
       .agg(count(lit(1)).as("n"))
     val m = tr.groupBy($"from_type").agg(sum($"n").as("row_n"))
-    val cm = tr.join(m, Seq("from_type")).pin(true) // re-read per round
+    val cm = tr.join(m, Seq("from_type")).pin // re-read per round
     val states = Tables.events(s, dir)
-      .select($"event_type".as("state")).distinct().pin(true)
+      .select($"event_type".as("state")).distinct().pin
     var pi = states.select($"state", lit(1000000L).as("pi"))
     var prev = pi
     for (_ <- 1 to iters) {
@@ -847,7 +847,7 @@ object Events {
       prev = pi
       pi = states.join(broadcast(contrib), Seq("state"), "left")
         .select($"state", coalesce($"s", lit(0L)).as("pi"))
-        .pin(true)
+        .pin
     }
     val tot = pi.agg(sum($"pi").as("tot"))
     prev.select($"state", $"pi".as("pi_prev"))
@@ -1859,7 +1859,7 @@ object Events {
       .agg(sum(when(!$"post", $"v").otherwise(0L)).as("x"),
         sum(when($"post", $"v").otherwise(0L)).as("y"))
       .select(($"user_id" % 2L === 0L).as("treat"), $"x", $"y")
-      .pin(true) // pooled moments + per-arm sums both read it
+      .pin // pooled moments + per-arm sums both read it
     val mom = users.agg(count(lit(1)).as("n"),
       sum($"x").as("sx"), sum($"y").as("sy"),
       sum($"x" * $"y").as("sxy"), sum($"x" * $"x").as("sxx"),
@@ -2022,7 +2022,7 @@ object Events {
     val users = Tables.events(s, dir)
       .select($"user_id", round($"value" * 100).cast("long").as("v"))
       .groupBy($"user_id").agg(sum($"v").as("y"))
-      .pin(true) // observed fold + the K-explode both read it
+      .pin // observed fold + the K-explode both read it
     val obs = users
       .select(($"user_id" % 2L === 0L).as("t"), $"y")
       .agg(count(lit(1)).as("n_users"),

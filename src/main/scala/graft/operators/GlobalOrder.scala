@@ -61,7 +61,7 @@ object GlobalOrder {
       .repartitionByRange(parts, order: _*)
       .withColumn(PID, spark_partition_id())
       .withColumn(VAL, value.cast("long"))
-      .pin(true)
+      .pin
     val w = Window.partitionBy(col(PID)).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = ranged.withColumn(LOC, sum(col(VAL)).over(w))

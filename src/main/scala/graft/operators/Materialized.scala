@@ -93,7 +93,7 @@ object Materialized {
   def refreshMax(view: DataFrame, base: DataFrame, ins: DataFrame,
       del: DataFrame, key: String): DataFrame = {
     val dirty = base.join(del, Seq("rid"), "left_semi")
-      .select(col(key)).distinct().pin(true)
+      .select(col(key)).distinct().pin
     val effectiveDirty = base.join(del, Seq("rid"), "left_anti")
       .unionByName(ins)
       .join(broadcast(dirty), Seq(key), "left_semi")
@@ -127,7 +127,7 @@ object Materialized {
   def refreshDistinct(view: DataFrame, aux: DataFrame, ins: DataFrame,
       del: DataFrame, key: String): DataFrame = {
     val touched = ins.select(col(key), col("v"))
-      .unionByName(del.select(col(key), col("v"))).distinct().pin(true)
+      .unionByName(del.select(col(key), col("v"))).distinct().pin
     val old = aux.join(broadcast(touched), Seq(key, "v"), "left_semi")
     val newN = old.select(col(key), col("v"), col("n"))
       .unionByName(ins.select(col(key), col("v"), lit(1L).as("n")))
@@ -182,7 +182,7 @@ object Materialized {
     val (base, inserts, deletes) = cdcDay(Tables.orders(s, dir))
     val viewBase = base.groupBy($"key")
       .agg(count(lit(1)).as("n"), sum($"x").as("s"))
-      .pin(true)
+      .pin
     refreshCountSum(viewBase, inserts, deletes, "key")
       .select($"key".as("o_custkey"), $"n".as("n_orders"),
         $"s".as("sum_cents"))
@@ -205,7 +205,7 @@ object Materialized {
     val (base, inserts, deletes) = cdcDay(Tables.orders(s, dir))
     val viewBase = base.groupBy($"key")
       .agg(max($"x").as("m"))
-      .pin(true)
+      .pin
     refreshMax(viewBase, base, inserts, deletes.select($"rid"), "key")
       .select($"key".as("o_custkey"), $"m".as("max_cents"))
       .orderBy($"o_custkey")
@@ -234,9 +234,9 @@ object Materialized {
         && $"o_orderstatus" === "F" && $"rid" % 7 === 0)
       .select($"key", $"v")
     val aux = base.groupBy($"key", $"v")
-      .agg(count(lit(1)).as("n")).pin(true)
+      .agg(count(lit(1)).as("n")).pin
     val view = aux.groupBy($"key")
-      .agg(count(lit(1)).as("c")).pin(true)
+      .agg(count(lit(1)).as("c")).pin
     refreshDistinct(view, aux, ins, del, "key")
       .select($"key".as("o_custkey"), $"c".as("distinct_priorities"))
       .orderBy($"o_custkey")

@@ -302,7 +302,7 @@ object Multimodal {
             stubPHash(r.getAs[Array[Byte]]("payload")))
         }
       }(enc)
-      .pin()
+      .pin
   }
 
   /** Media near-duplicate grouping by perceptual hash: each media's phash
@@ -515,7 +515,7 @@ object Multimodal {
     * per visual family survives. Candidate hash pairs come from
     * pigeonhole banding (3 bands of 6+5+5 bits: Hamming ≤ 2 ⇒ some band
     * identical — [[mediaPHashPairs]]'s argument at 16 bits), labels from
-    * [[TextOps.starContraction]] (O(log n) rounds); the oracle replays
+    * [[Graph.starContraction]] (O(log n) rounds); the oracle replays
     * exact all-pairs reachability as a recursive CTE, so the banding and
     * the contraction are both proven lossless.
     *
@@ -535,7 +535,7 @@ object Multimodal {
             stubPHash16(r.getAs[Array[Byte]]("payload")))
         }
       }(enc)
-      .pin()
+      .pin
     val distinctH = ph.select(col("phash")).distinct()
     val banded = distinctH.select(col("phash"), explode(array(
         struct(lit(0).as("band"), (col("phash") % 64).as("key")),
@@ -548,7 +548,7 @@ object Multimodal {
         Seq("band", "key"))
       .filter(col("a") < col("b")).select(col("a"), col("b")).distinct()
       .filter(bit_count(col("a").bitwiseXOR(col("b"))) <= 2)
-    val (labels, _) = TextOps.starContraction(
+    val (labels, _) = Graph.starContraction(
       distinctH.select(col("phash")), pairs)
     ph.join(broadcast(labels), Seq("phash"))
       .groupBy(col("label").as("cluster"))
@@ -579,10 +579,7 @@ object Multimodal {
       |  SELECT x.phash AS a, y.phash AS b
       |  FROM dh x JOIN dh y ON x.phash <> y.phash
       |  WHERE bit_count(xor(x.phash, y.phash)) BETWEEN 1 AND 2),
-      |reach(node, m) AS (
-      |  SELECT phash, phash FROM dh
-      |  UNION
-      |  SELECT e.a, r.m FROM hedges e JOIN reach r ON e.b = r.node),
+      |${Graph.reachCte("hedges", "phash, phash FROM dh")},
       |lab AS (SELECT node AS phash, min(m)::BIGINT AS label
       |        FROM reach GROUP BY node)
       |SELECT lab.label AS cluster, count(*)::BIGINT AS n_media,

@@ -531,7 +531,7 @@ object Quality {
     val cells = o.join(c, o("o_custkey") === c("c_custkey"))
       .groupBy(col("g"), col("p")).agg(count(lit(1)).as("o"))
     import graft.Pin.PinOps
-    val pinned = cells.pin(true) // margins + final join read it thrice
+    val pinned = cells.pin // margins + final join read it thrice
     val rm = pinned.groupBy(col("g")).agg(sum(col("o")).as("r"))
     val cm = pinned.groupBy(col("p")).agg(sum(col("o")).as("c"))
     val nn = pinned.agg(sum(col("o")).as("n"))

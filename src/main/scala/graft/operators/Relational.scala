@@ -1812,7 +1812,7 @@ object Relational {
     // side — materialize once instead of paying a third fact-scan
     val l1 = lines.filter($"late")
       .select($"l_orderkey", $"l_suppkey").distinct()
-      .pin(true)
+      .pin
     val others = lines.select($"l_orderkey".as("o2"), $"l_suppkey".as("s2"))
       .distinct()
     val lateOthers = l1.select($"l_orderkey".as("o3"), $"l_suppkey".as("s3"))
@@ -1920,7 +1920,7 @@ object Relational {
         round($"o_totalprice" * 100).cast("long").as("v"), $"o_orderkey")
     val (ranked, n) = graft.operators.GlobalOrder.rank(
       vals, Seq($"v", $"o_orderkey"), "rnk")
-    val pinned = ranked.pin(true) // two 1-row probes + the group pass
+    val pinned = ranked.pin // two 1-row probes + the group pass
     def at(permille: Long): Long = pinned
       .filter($"rnk" === math.max(1L, (permille * n + 999L) / 1000L))
       .select($"v").head().getLong(0)
@@ -2227,7 +2227,7 @@ object Relational {
       .join(Tables.customer(s, dir)
         .select($"c_custkey".as("o_custkey"),
           round($"c_acctbal").cast("long").as("y")), Seq("o_custkey"))
-      .select($"x", $"y").pin(true)
+      .select($"x", $"y").pin
     def ranks2(c: String, out: String): DataFrame = {
       val hist = base.groupBy(col(c)).agg(count(lit(1)).as("cnt"))
       val (cum, _) = GlobalOrder.cumsum(hist, Seq(col(c)), col("cnt"),
@@ -2357,7 +2357,7 @@ object Relational {
     val vals = Tables.orders(s, dir)
       .select($"o_orderpriority".as("g"),
         round($"o_totalprice").cast("long").as("v"))
-      .pin(true) // the rank window + the z-scan both read it
+      .pin // the rank window + the z-scan both read it
     val cnt = vals.groupBy($"g").agg(count(lit(1)).as("n"))
     val ranked = vals.withColumn("rn",
       row_number().over(Window.partitionBy($"g").orderBy($"v")))
@@ -2547,7 +2547,7 @@ object Relational {
     val cells = Tables.orders(s, dir)
       .select($"o_orderpriority".as("g"), $"o_orderstatus".as("h"))
       .groupBy($"g", $"h").agg(count(lit(1)).as("o"))
-      .pin(true) // margins, total, and the grid join all read it
+      .pin // margins, total, and the grid join all read it
     val rws = cells.groupBy($"g").agg(sum($"o").as("r"))
     val cls = cells.groupBy($"h").agg(sum($"o").as("c"))
     val tot = cells.agg(sum($"o").as("t"))
@@ -2628,7 +2628,7 @@ object Relational {
       .withColumn("t",
         floor($"s".cast("double") * $"s" / $"n" * 100d)
           .cast("decimal(38,0)"))
-      .pin(true) // MSW fold + both sides of the pair join
+      .pin // MSW fold + both sides of the pair join
     val msw = g.agg(count(lit(1)).as("k"), sum($"n").as("nt"),
         sum($"q").as("qs"), sum($"t").as("ts"))
       .select((($"qs".cast("double") - $"ts".cast("double") / 100d)
@@ -2690,8 +2690,8 @@ object Relational {
     val base = Tables.orders(s, dir)
       .select($"o_orderpriority".as("g"),
         round($"o_totalprice").cast("long").as("v"))
-      .pin(true) // histogram + the rank join-back
-    val hist = base.groupBy($"v").agg(count(lit(1)).as("cnt")).pin(true)
+      .pin // histogram + the rank join-back
+    val hist = base.groupBy($"v").agg(count(lit(1)).as("cnt")).pin
     val (cum, _) = GlobalOrder.cumsum(hist, Seq(col("v")), col("cnt"),
       "upto")
     val ranks2 = cum.select($"v",
@@ -3023,101 +3023,8 @@ object Relational {
       |  (num // den * 1000 + (num % den) * 1000 // den)::BIGINT AS gini_pm
       |FROM f""".stripMargin
 
-  /** HITS (Kleinberg, JACM 1999) on the bipartite customer→part purchase
-    * graph: hubs are customers, authorities are parts, h(c) ← Σ a(p) over
-    * parts c bought, a(p) ← Σ h(c) over c buying p — mutual reinforcement
-    * instead of PageRank's random surfer (a part is authoritative because
-    * big buyers buy it; a buyer is a hub because it buys authoritative
-    * parts). The missing member of the spectral-graph battery: PageRank/
-    * PPR/Katz (TextOps) walk ONE vector on a homogeneous graph; HITS
-    * ping-pongs TWO vectors across a bipartite one — exactly the
-    * [[graft.operators.TextOps.lsaPower]] u←Av/v←Aᵀu shape with A the
-    * 0/1 purchase matrix, and the same integer per-half-round rescale
-    * (max div 2²⁰ + 1) keeps 3 rounds exact in int64 at any corpus size
-    * (post-rescale scores ≤ ~2²¹, a half-round sum ≤ n·2²¹ ≪ 2⁶³).
-    * Output: top-15 authorities and top-15 hubs, one frame.
-    *
-    * Scale: edges = distinct (custkey, partkey) — one lineitem⋈orders
-    * join, checkpointed once, re-joined per half-round; each half-round
-    * is one keyed join + one keyed sum over the edge frame (work ∝ |E|),
-    * the sparse-matrix BSP layout — the dense A never exists.
-    */
-  /** Round count shared by [[graphHits]] and [[graphHitsSql]]: the SQL
-    * oracle is generated from the SAME constant as the Scala loop, so a
-    * caller can never run a different number of rounds than the
-    * registered oracle replays (the kmeansIters pattern; r15 ADVICE).
-    */
-  val HitsIters = 3
-
-  def graphHits(s: SparkSession, dir: String, iters: Int = HitsIters): DataFrame = {
-    import s.implicits._
-    val edges = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), $"l_orderkey" === $"o_orderkey")
-      .select($"o_custkey".as("c"), $"l_partkey".as("p")).distinct()
-      .pin(true) // re-joined every half-round
-    var h = edges.select($"c").distinct()
-      .select($"c", lit(1048576L).as("h"))
-    var a = edges.limit(0).select($"p", lit(0L).as("a")) // replaced below
-    for (_ <- 1 to iters) {
-      // pin the PRE-rescale half-round aggregate (a0/h0): the max-divisor
-      // agg and the rescale projection both read it, so pinning the
-      // POST-rescale frame (the r16 shape) recomputed the |E|-sized
-      // edges⋈vector join+agg TWICE per half-round — once under the
-      // divisor's broadcast subtree, once on the main stream (guide §2.4).
-      // The rescaled a/h stay lazy: two cheap scans of the pinned bounded
-      // aggregate replace a second edge-frame join.
-      val a0 = edges.join(h, Seq("c")).groupBy($"p").agg(sum($"h").as("a"))
-        .pin(true) // max-divisor agg + rescale both read it
-      val da = a0.agg((expr("max(a) div 1048576") + 1L).as("d"))
-      a = a0.crossJoin(broadcast(da))
-        .select($"p", expr("a div d").as("a"))
-      val h0 = edges.join(a, Seq("p")).groupBy($"c").agg(sum($"a").as("s"))
-        .pin(true) // max-divisor agg + rescale both read it
-      val dh = h0.agg((expr("max(s) div 1048576") + 1L).as("d"))
-      h = h0.crossJoin(broadcast(dh))
-        .select($"c", expr("s div d").as("h"))
-    }
-    a.orderBy($"a".desc, $"p").limit(15)
-      .select(lit("authority").as("side"), $"p".as("id"), $"a".as("score"))
-      .unionByName(h.orderBy($"h".desc, $"c").limit(15)
-        .select(lit("hub").as("side"), $"c".as("id"), $"h".as("score")))
-      .orderBy($"side", $"score".desc, $"id")
-  }
-
-  lazy val graphHitsSql: String = {
-    def round(k: Int): String =
-      s""",
-         |a$k AS MATERIALIZED (
-         |  SELECT p, sum(h)::BIGINT AS a
-         |  FROM edges JOIN h${k - 1} USING (c) GROUP BY p),
-         |da$k AS (SELECT (max(a) // 1048576 + 1)::BIGINT AS d FROM a$k),
-         |as$k AS MATERIALIZED (
-         |  SELECT p, (a // d)::BIGINT AS a FROM a$k CROSS JOIN da$k),
-         |hh$k AS MATERIALIZED (
-         |  SELECT c, sum(a)::BIGINT AS s
-         |  FROM edges JOIN as$k USING (p) GROUP BY c),
-         |dh$k AS (SELECT (max(s) // 1048576 + 1)::BIGINT AS d FROM hh$k),
-         |h$k AS MATERIALIZED (
-         |  SELECT c, (s // d)::BIGINT AS h FROM hh$k CROSS JOIN dh$k)"""
-        .stripMargin
-    """WITH edges AS MATERIALIZED (
-      |  SELECT DISTINCT o_custkey AS c, l_partkey AS p
-      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      |h0 AS (SELECT DISTINCT c, 1048576::BIGINT AS h FROM edges)"""
-      .stripMargin +
-      (1 to HitsIters).map(round).mkString +
-      s"""
-        |SELECT * FROM (
-        |  (SELECT 'authority' AS side, p AS id, a AS score FROM as$HitsIters
-        |   ORDER BY score DESC, id LIMIT 15)
-        |  UNION ALL
-        |  (SELECT 'hub', c, h FROM h$HitsIters ORDER BY h DESC, c LIMIT 15))
-        |ORDER BY side, score DESC, id""".stripMargin
-  }
-
   /** All relational queries + oracles, consumed by SparkEntry. */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_hits" -> ((s: SparkSession, d: String) => graphHits(s, d)),
     "stat_levene" -> statLevene _,
     "stat_mann_whitney" -> statMannWhitney _,
     "stat_gini" -> statGini _,
@@ -3194,7 +3101,6 @@ object Relational {
   )
 
   val oracles: Map[String, String] = Map(
-    "graph_hits" -> graphHitsSql,
     "stat_mann_whitney" -> statMannWhitneySql,
     "stat_levene" -> statLeveneSql,
     "q51_revenue_change" -> q51Sql,

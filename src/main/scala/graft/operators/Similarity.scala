@@ -241,7 +241,7 @@ object Similarity {
   def semanticClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val nodes = Tables.embeddings(s, dir).select($"vec_id")
-    val (labels, _) = TextOps.starContraction(nodes,
+    val (labels, _) = Graph.starContraction(nodes,
       nearDupPairsOf(qEmb(s, dir), 0.45, 32).select($"a", $"b"))
     labels.select($"vec_id", $"label".as("cluster"),
         ($"vec_id" === $"label").cast("int").as("is_canonical"))
@@ -250,7 +250,7 @@ object Similarity {
 
   val semanticClustersSql: String =
     qvecCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      """, dots AS (
+      s""", dots AS (
         |  SELECT a, b, sum(x * y) AS d FROM (
         |    SELECT a.vec_id AS a, b.vec_id AS b,
         |           unnest(a.q) AS x, unnest(b.q) AS y
@@ -260,11 +260,8 @@ object Similarity {
         |  SELECT a, b FROM dots
         |  JOIN nrm na ON a = na.vec_id JOIN nrm nb ON b = nb.vec_id
         |  WHERE round(d / (sqrt(na.n2) * sqrt(nb.n2)), 4) >= 0.45),
-        |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-        |reach(node, m) AS (
-        |  SELECT vec_id, vec_id FROM embeddings
-        |  UNION
-        |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node)
+        |${Graph.undirectedCte("edges", "pairs")},
+        |${Graph.reachCte("edges", "vec_id, vec_id FROM embeddings")}
         |SELECT node AS vec_id, min(m)::BIGINT AS cluster,
         |  CASE WHEN node = min(m) THEN 1 ELSE 0 END AS is_canonical
         |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin
@@ -308,7 +305,7 @@ object Similarity {
       edges0: DataFrame): DataFrame = {
     import s.implicits._
     // the ε-pair frame feeds degrees, core edges, and border assignment
-    val edges = edges0.pin(true)
+    val edges = edges0.pin
     val sym = edges.unionByName(edges.select($"b".as("a"), $"a".as("b")))
     val core = sym.groupBy($"a").agg(count(lit(1)).as("deg"))
       .filter($"deg" >= 3L).select($"a".as("vec_id"))
@@ -316,7 +313,7 @@ object Similarity {
       .join(core.select($"vec_id".as("a")), Seq("a"))
       .join(core.select($"vec_id".as("b")), Seq("b"))
       .select($"a", $"b")
-    val (labels, _) = TextOps.starContraction(core, coreEdges)
+    val (labels, _) = Graph.starContraction(core, coreEdges)
     // labels cover exactly the core set, so joining sym against them both
     // restricts to core neighbors and fetches their cluster in one go
     val nearCore = sym
@@ -333,7 +330,7 @@ object Similarity {
   }
 
   val dbscanClustersSql: String =
-    """WITH RECURSIVE qv AS MATERIALIZED (
+    s"""WITH RECURSIVE qv AS MATERIALIZED (
       |  SELECT vec_id,
       |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
       |  FROM embeddings),
@@ -357,11 +354,8 @@ object Similarity {
       |ce AS MATERIALIZED (
       |  SELECT e.a, e.b FROM eps e
       |  JOIN core ca ON e.a = ca.v JOIN core cb ON e.b = cb.v),
-      |cedges AS (SELECT a, b FROM ce UNION ALL SELECT b, a FROM ce),
-      |reach(node, m) AS (
-      |  SELECT v, v FROM core
-      |  UNION
-      |  SELECT e.a, r.m FROM cedges e JOIN reach r ON e.b = r.node),
+      |${Graph.undirectedCte("cedges", "ce")},
+      |${Graph.reachCte("cedges", "v, v FROM core")},
       |cl AS MATERIALIZED (
       |  SELECT node, min(m)::BIGINT AS cluster FROM reach GROUP BY node),
       |nearcore AS (
@@ -410,7 +404,7 @@ object Similarity {
       nCells: Int = 8): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val emb = qEmb(s, dir).pin(true) // fit + membership scoring
+    val emb = qEmb(s, dir).pin // fit + membership scoring
     val n = lit(nCells.toLong)
     // nprobe=2 membership: the (d2, cid) pack makes the per-vector top-2
     // deterministic; the window is nCells rows per vector, never
@@ -426,7 +420,7 @@ object Similarity {
         Window.partitionBy($"vec_id").orderBy($"key")))
       .filter($"rn" <= 2)
       .select($"vec_id", ($"key" % n).as("cell"), $"q", $"n2")
-      .pin(true) // both sides of the co-membership join; 2 rows/vec
+      .pin // both sides of the co-membership join; 2 rows/vec
     val l = memb.select($"cell", $"vec_id".as("a"), $"q".as("qa"),
       $"n2".as("na"))
     val r = memb.select($"cell", $"vec_id".as("b"), $"q".as("qb"),
@@ -481,11 +475,8 @@ object Similarity {
          |ce AS MATERIALIZED (
          |  SELECT e.a, e.b FROM eps e
          |  JOIN core ca ON e.a = ca.v JOIN core cb ON e.b = cb.v),
-         |cedges AS (SELECT a, b FROM ce UNION ALL SELECT b, a FROM ce),
-         |reach(node, m) AS (
-         |  SELECT v, v FROM core
-         |  UNION
-         |  SELECT e.a, r.m FROM cedges e JOIN reach r ON e.b = r.node),
+         |${Graph.undirectedCte("cedges", "ce")},
+         |${Graph.reachCte("cedges", "v, v FROM core")},
          |cl AS MATERIALIZED (
          |  SELECT node, min(m)::BIGINT AS cluster FROM reach GROUP BY node),
          |nearcore AS (
@@ -672,11 +663,11 @@ object Similarity {
       // the points ~2^iters times. Each round now scans them exactly once.
       cents = cents.join(next, keys :+ "cid", "left")
         .select(ck :+ coalesce($"cq2", $"cq").as("cq"): _*)
-        .pin(true)
+        .pin
     }
     // the last pin IS the materialized table downstream queries probe
     // from several plan branches (guarded for a zero-round fit)
-    if (iters <= 0) cents.pin(true) else cents
+    if (iters <= 0) cents.pin else cents
   }
 
   /** IVF coarse quantizer: the [[lloyd]] fit over the whole corpus, no
@@ -798,16 +789,16 @@ object Similarity {
   def simSilhouette(s: SparkSession, dir: String,
       nCells: Int = 8): DataFrame = {
     import s.implicits._
-    val emb = qEmb(s, dir).pin(true) // fit + the distance fan
+    val emb = qEmb(s, dir).pin // fit + the distance fan
     val n = lit(nCells.toLong)
     val dall = centroidD2(emb, ivfCentroids(s, emb, nCells))
       .select($"vec_id", $"cid", $"d2")
-      .pin(true) // own-argmin agg + the other-cell min
+      .pin // own-argmin agg + the other-cell min
     val own = dall.groupBy($"vec_id")
       .agg(min($"d2" * n + $"cid").as("pack"))
       .select($"vec_id", ($"pack" % n).as("cid"),
         expr(s"pack div $nCells").as("a2"))
-      .pin(true) // the alt join + the final readout
+      .pin // the alt join + the final readout
     val alt = dall.join(own.select($"vec_id", $"cid".as("own")), "vec_id")
       .filter($"cid" =!= $"own")
       .groupBy($"vec_id").agg(min($"d2").as("b2"))
@@ -855,7 +846,7 @@ object Similarity {
        |FROM a$kmeansIters ORDER BY vec_id""".stripMargin
 
   /** IVF cell-balance diagnostic — the pre-flight an ANN deployment reads
-    * before setting nprobe/nCells (the [[graft.operators.TextOps.degreeHist]]
+    * before setting nprobe/nCells (the [[graft.operators.Graph.degreeHist]]
     * of the index world): per-cell population and permille share of the
     * corpus. A hot cell means probes touching it pay a near-linear scan
     * and the k-means fit should re-run with more cells or better init;
@@ -1045,7 +1036,7 @@ object Similarity {
     val all = qEmb(s, dir)
     val cents = ivfCentroids(s, all)
     val assign = ivfAssignOf(all, cents)
-      .pin(true) // feeds the mass agg AND the delete sums
+      .pin // feeds the mass agg AND the delete sums
     val mOld = assign.groupBy($"centroid".as("cid"))
       .agg(count(lit(1)).as("m_old"))
     val delSums = assign.filter($"vec_id" % 10 === 7)
@@ -1173,7 +1164,7 @@ object Similarity {
     val mOld = assign.groupBy($"centroid".as("cid"))
       .agg(count(lit(1)).as("m_old"))
     val cells = ivfRefreshCells(cents, mOld, appends, nCells)
-      .pin(true) // cells × dims rows; feeds two commits
+      .pin // cells × dims rows; feeds two commits
     val newCents = cells.groupBy($"cid")
       .agg(transform(array_sort(collect_list(struct($"pos", $"c_new"))),
         x => x.getField("c_new")).as("cq"))
@@ -1233,20 +1224,20 @@ object Similarity {
       cents: DataFrame, iters: Int = splitIters)
       : (DataFrame, DataFrame) = {
     import members.sparkSession.implicits._
-    val mem = members.pin(true) // re-read every round
+    val mem = members.pin // re-read every round
     val ca = farthestFrom(mem, cents.select($"cid", $"cq".as("aq")), "aq")
-      .pin(true) // seeds child A and anchors child B
+      .pin // seeds child A and anchors child B
     val cb = farthestFrom(mem, ca, "bq")
     val pts = mem.select($"cid".as("cell"), $"vec_id", $"q", $"n2")
     val seeds = ca
       .select($"cid".as("cell"), lit(0L).as("cid"), $"aq".as("cq"))
       .unionByName(
         cb.select($"cid".as("cell"), lit(1L).as("cid"), $"bq".as("cq")))
-      .pin(true) // round 1 reads it twice (broadcast side + carry join)
+      .pin // round 1 reads it twice (broadcast side + carry join)
     val fit = lloyd(pts, seeds, Seq("cell"), 2, iters)
     val membership = nearestCentroid(pts, fit, Seq("cell"), 2)
       .select($"cell".as("cid"), $"vec_id", $"cid".as("child"))
-      .pin(true) // masses here + re-pointing in the commit
+      .pin // masses here + re-pointing in the commit
     val masses = membership.groupBy($"cid", $"child")
       .agg(count(lit(1)).as("m"))
     val cells = fit
@@ -1270,13 +1261,13 @@ object Similarity {
     val all = qEmb(s, dir)
     val cents = ivfCentroids(s, all)
     val assign = ivfAssignOf(all, cents)
-      .pin(true) // masses + the member fetch
+      .pin // masses + the member fetch
     val hot = assign.groupBy($"centroid".as("cid"))
       .agg(count(lit(1)).as("m_before"))
       .withColumn("nv", sum($"m_before").over(Window.partitionBy()))
       .filter($"m_before" * 8L > $"nv")
       .select($"cid", $"m_before")
-      .pin(true) // ≤ nCells rows; member filter + report
+      .pin // ≤ nCells rows; member filter + report
     val mem = assign.join(broadcast(hot.select($"cid")),
         $"centroid" === $"cid")
       .join(all, Seq("vec_id"))
@@ -1460,17 +1451,17 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     import graft.sources.VersionedTable
     val cents = VersionedTable.read(s, s"$path/centroids")
-      .pin(true)
+      .pin
     val assign = VersionedTable.read(s, s"$path/assign")
-      .pin(true)
+      .pin
     val masses = assign.groupBy($"centroid".as("cid"))
       .agg(count(lit(1)).as("m"))
-      .pin(true) // ≤ |cells| rows; hot filter + retire filter
+      .pin // ≤ |cells| rows; hot filter + retire filter
     val nCells = cents.count()
     val hot = masses
       .withColumn("nv", sum($"m").over(Window.partitionBy()))
       .filter($"m" * lit(nCells) > $"nv")
-      .select($"cid").pin(true)
+      .select($"cid").pin
     val mem = assign.join(broadcast(hot), $"centroid" === $"cid")
       .join(emb, Seq("vec_id"))
       .select($"cid", $"vec_id", $"q", $"n2")
@@ -1481,7 +1472,7 @@ object Similarity {
     val newIds = hot
       .withColumn("bcid", lit(maxCid) + row_number().over(
         Window.orderBy($"cid")))
-      .pin(true)
+      .pin
     val childCents = cells.join(broadcast(newIds), Seq("cid"))
       .select(when($"child" === 0L, $"cid").otherwise($"bcid").as("cid"),
         $"ccq".as("cq"))
@@ -1629,7 +1620,7 @@ object Similarity {
     val approx = lshTopK(s, dir)
       // one pass: the approx subtree feeds both the hits join and the
       // returned-count aggregate below
-      .pin()
+      .pin
       .select($"qid".as("aqid"), $"vec_id".as("avid"))
     val hits = exact.join(approx,
         $"qid" === $"aqid" && $"vec_id" === $"avid", "left")
@@ -1678,7 +1669,7 @@ object Similarity {
     // corpus side: one assignment pass, materialized — both nprobe probes
     // (and nothing else) read it
     val withCell = emb.join(ivfAssignOf(emb, cents), Seq("vec_id"))
-      .pin(true)
+      .pin
     // per query: ALL centroids ranked by exact integer distance; each
     // nprobe setting keeps a prefix of the same ranking
     val qcells = centroidD2(withCell.filter($"vec_id" < 10), cents)
@@ -1686,9 +1677,9 @@ object Similarity {
         Window.partitionBy($"vec_id").orderBy($"d2", $"cid")))
       .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"),
         $"cid".as("qc"), $"cell_rank")
-      .pin(true)
+      .pin
     val exact = cosineTopK(s, dir).filter($"rn" <= 3)
-      .select($"qid", $"vec_id").pin(true)
+      .select($"qid", $"vec_id").pin
     val perNprobe = Seq(1, 2).map { np =>
       val approx = withCell.join(
           broadcast(qcells.filter($"cell_rank" <= np)),
@@ -1701,7 +1692,7 @@ object Similarity {
         .filter($"rn" <= 3)
         // one pass: feeds both the hits join and the returned-count agg
         .select($"qid".as("aqid"), $"vec_id".as("avid"))
-        .pin()
+        .pin
       val hits = exact.join(approx,
           $"qid" === $"aqid" && $"vec_id" === $"avid", "left")
         .groupBy($"qid")
@@ -1911,7 +1902,7 @@ object Similarity {
   private[graft] def pqCodesAndLut(s: SparkSession, dir: String,
       mSub: Int = pqM, kCents: Int = pqK): (DataFrame, DataFrame) = {
     import s.implicits._
-    val sub = pqSub(qEmb(s, dir), mSub).pin(true)
+    val sub = pqSub(qEmb(s, dir), mSub).pin
     val book = pqCodebook(sub, kCents)
     val codes = nearestCentroid(sub, book, Seq("m"), kCents)
     val lut = centroidD2(sub.filter($"vec_id" < 10), book, Seq("m"))
@@ -1938,7 +1929,7 @@ object Similarity {
     */
   def pqDistortion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sub = pqSub(qEmb(s, dir)).pin(true)
+    val sub = pqSub(qEmb(s, dir)).pin
     centroidD2(sub, pqCodebook(sub), Seq("m"))
       .groupBy($"vec_id", $"m").agg(min($"d2").as("d2"))
       .groupBy($"m")
@@ -2116,7 +2107,7 @@ object Similarity {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val emb = qEmb(s, dir)
-    val assign = ivfAssignOf(emb, ivfCentroids(s, emb)).pin(true)
+    val assign = ivfAssignOf(emb, ivfCentroids(s, emb)).pin
     val (codes, lut) = pqCodesAndLut(s, dir)
     val cellCodes = codes.join(assign, Seq("vec_id"))
     // the probe queries' cells, 10 rows: broadcast, so AQE never races
@@ -2193,7 +2184,7 @@ object Similarity {
     // centroid cross join per plan branch
     val withCell = emb
       .join(ivfAssignOf(emb, cents, nCells), Seq("vec_id"))
-      .pin(true)
+      .pin
     // distance to the OWN cell centroid — the keep-rule score
     val selfD2 = centroidD2(withCell.withColumnRenamed("centroid", "cid"),
         cents, Seq("cid"))
@@ -2207,7 +2198,7 @@ object Similarity {
         / (sqrt($"na".cast("double")) * sqrt($"nb".cast("double"))), 4))
       .filter($"cos" >= 0.45)
       .select($"a", $"b")
-    val (labels, _) = TextOps.starContraction(emb.select($"vec_id"), pairs)
+    val (labels, _) = Graph.starContraction(emb.select($"vec_id"), pairs)
     labels.select($"vec_id", $"label".as("grp"))
       .join(withCell.select($"vec_id", $"centroid"), Seq("vec_id"))
       .join(selfD2, Seq("vec_id"))
@@ -2249,11 +2240,8 @@ object Similarity {
          |  SELECT a, b FROM pd
          |  JOIN nrm na ON a = na.vec_id JOIN nrm nb ON b = nb.vec_id
          |  WHERE round(d / (sqrt(na.n2) * sqrt(nb.n2)), 4) >= 0.45),
-         |edges AS (SELECT a, b FROM cpairs UNION ALL SELECT b, a FROM cpairs),
-         |reach(node, m) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
+         |${Graph.undirectedCte("edges", "cpairs")},
+         |${Graph.reachCte("edges", "vec_id, vec_id FROM embeddings")},
          |grp AS (SELECT node AS vec_id, min(m)::BIGINT AS grp
          |        FROM reach GROUP BY node)
          |SELECT g.vec_id, s.cid AS cell, g.grp,
@@ -2394,11 +2382,11 @@ object Similarity {
   def labelProp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val edges = knnGraph(s, dir).select($"vec_id", $"nbr").pin(true)
+    val edges = knnGraph(s, dir).select($"vec_id", $"nbr").pin
     var lab = Tables.embeddings(s, dir)
       .select($"vec_id", $"label".cast("long").as("true_label"),
         when($"vec_id" >= 100, $"label".cast("long")).as("cur"))
-      .pin(true)
+      .pin
     for (_ <- 1 to 3) {
       val maj = edges
         .join(lab.select($"vec_id".as("nbr"), $"cur".as("nl")), Seq("nbr"))
@@ -2412,7 +2400,7 @@ object Similarity {
         .select($"vec_id", $"true_label",
           when($"vec_id" >= 100, $"cur")
             .otherwise(coalesce($"nl", $"cur")).as("cur"))
-        .pin(true)
+        .pin
     }
     lab.filter($"vec_id" < 100)
       .groupBy($"true_label", coalesce($"cur", lit(-1L)).as("pred_label"))
@@ -2485,7 +2473,7 @@ object Similarity {
         .filter($"rn" <= 3)
         .select($"qid", $"vec_id")
     }
-    val emb = qEmb(s, dir).pin(true) // full + prefix passes
+    val emb = qEmb(s, dir).pin // full + prefix passes
     val full = top3(emb)
     val prefix = top3(emb.select($"vec_id", slice($"q", 1, 16).as("q"))
       .withColumn("n2", norm2($"q")))
@@ -2576,11 +2564,11 @@ object Similarity {
   private[operators] def diversitySampleOf(embQ: DataFrame, k: Int): DataFrame = {
     val s = embQ.sparkSession
     import s.implicits._
-    val emb = embQ.pin(true) // re-scanned every round
+    val emb = embQ.pin // re-scanned every round
     var chosen = emb.filter($"vec_id" === 0)
       .select($"vec_id".as("cid"), $"q".as("cq"), $"n2".as("cn2"),
         lit(0).as("sel_order"), lit(0L).as("sel_d2"))
-      .pin(true)
+      .pin
     for (i <- 1 until k) {
       // already-chosen ids leave the candidate frame (broadcast ≤k-row
       // anti-join): without this, once the covering radius hits 0 (every
@@ -2603,7 +2591,7 @@ object Similarity {
         .join(emb, Seq("vec_id"))
         .select($"vec_id".as("cid"), $"q".as("cq"), $"n2".as("cn2"),
           lit(i).as("sel_order"), $"md2".as("sel_d2"))
-      chosen = chosen.unionByName(winner).pin(true)
+      chosen = chosen.unionByName(winner).pin
     }
     chosen.select($"sel_order", $"cid".as("vec_id"), $"sel_d2")
       .orderBy($"sel_order")
@@ -2822,19 +2810,19 @@ object Similarity {
         Window.partitionBy($"qid").orderBy($"dq".desc, $"vec_id")))
       .filter($"rn" <= 8)
       .select($"qid", $"vec_id".as("cid"), $"q", $"dq")
-      .pin(true) // pairwise dots + every greedy round
+      .pin // pairwise dots + every greedy round
     val ccd = pool.select($"qid", $"cid".as("c1"), $"q".as("q1"))
       .join(pool.select($"qid", $"cid".as("c2"), $"q".as("q2")), Seq("qid"))
       .filter($"c1" =!= $"c2")
       .select($"qid", $"c1", $"c2", dot($"q1", $"q2").as("d"))
-      .pin(true) // re-joined every round
+      .pin // re-joined every round
     var sel = pool
       .withColumn("rn", row_number().over(
         Window.partitionBy($"qid").orderBy($"dq".desc, $"cid")))
       .filter($"rn" === 1)
       .select($"qid", $"cid", lit(1).as("sel_order"),
         (lit(7L) * $"dq").as("mmr_score"))
-      .pin(true)
+      .pin
     for (i <- 2 to 4) {
       val win = pool
         .join(sel.select($"qid", $"cid"), Seq("qid", "cid"), "left_anti")
@@ -2848,7 +2836,7 @@ object Similarity {
         .filter($"rn" === 1)
         .select($"qid", $"cid", lit(i).as("sel_order"),
           $"score".as("mmr_score"))
-      sel = sel.unionByName(win).pin(true)
+      sel = sel.unionByName(win).pin
     }
     sel.select($"qid", $"sel_order", $"cid".as("vec_id"), $"mmr_score")
       .orderBy($"qid", $"sel_order")
@@ -3691,7 +3679,7 @@ object Similarity {
     val full = cn.select($"i", $"j", $"cov_num")
       .unionByName(cn.where($"i" =!= $"j")
         .select($"j".as("i"), $"i".as("j"), $"cov_num"))
-      .pin(true) // the shift fold + every round re-read it
+      .pin // the shift fold + every round re-read it
     val sh = full.agg(max(abs($"cov_num")).as("mc"))
       .select(greatest(lit(0L),
         (length(bin($"mc")) - 36).cast("long")).as("sh"))
@@ -3700,7 +3688,7 @@ object Similarity {
         expr("""(CASE WHEN cov_num < 0 THEN -1 ELSE 1 END) *
                (abs(cov_num) div shiftleft(CAST(1 AS BIGINT),
                                            CAST(sh AS INT)))""").as("c"))
-      .pin(true) // re-joined every round
+      .pin // re-joined every round
     var v = s.range(64).select($"id".cast("long").as("i"),
       lit(1048576L).as("v"))
     var prev = v
@@ -3727,7 +3715,7 @@ object Similarity {
         .select($"i",
           expr("""(CASE WHEN u < 0 THEN -1 ELSE 1 END) *
                  (abs(u) div dv)""").as("v"))
-        .pin(true) // referenced twice next round (product + max)
+        .pin // referenced twice next round (product + max)
     }
     prev.select($"i", $"v".as("v_prev"))
       .join(v.select($"i", $"v".as("v_top")), Seq("i"))

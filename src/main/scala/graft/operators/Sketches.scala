@@ -289,7 +289,7 @@ object Sketches {
       .groupBy($"o_orderpriority".as("priority"))
       .agg(count(lit(1)).as("exact_n"))
       .withColumn("key", ascii(substring($"priority", 1, 1)).cast("long"))
-      .pin(true)
+      .pin
     val probes = rows.map { case (j, a, b) =>
       keys.withColumn("j", lit(j))
         .withColumn("bucket", h($"key", a, b) % w)
@@ -962,13 +962,13 @@ object Sketches {
     val kept = graft.plans.GroupedTopK(hashes,
         groupCols = Seq("grp"), orderCols = Seq("hneg", "hv"), k = 64)
       .select($"grp", $"hv")
-      .pin(true) // ≤ 64·|flags| rows; five consumers below
+      .pin // ≤ 64·|flags| rows; five consumers below
     // unordered flag pairs — a |flags|² cross product of two ≤3-row
     // frames, checkpointed so the tiny nested loop never re-plans
     val pairs = kept.select($"grp".as("g1")).distinct()
       .crossJoin(kept.select($"grp".as("g2")).distinct())
       .filter($"g1" < $"g2")
-      .pin(true)
+      .pin
     val u = pairs.join(kept.select($"grp".as("g1"), $"hv"), Seq("g1"))
       .select($"g1", $"g2", $"hv")
       .unionByName(pairs.join(kept.select($"grp".as("g2"), $"hv"), Seq("g2"))
@@ -977,7 +977,7 @@ object Sketches {
     val topu = u.withColumn("rn", row_number().over(
         Window.partitionBy($"g1", $"g2").orderBy($"hv")))
       .filter($"rn" <= 64)
-      .pin(true) // consumed by the merged agg AND the ρ join
+      .pin // consumed by the merged agg AND the ρ join
     val merged = topu.groupBy($"g1", $"g2")
       .agg(max($"hv").as("kth_hash"), count(lit(1)).as("n_kept"))
     val both = kept.select($"grp".as("g1"), $"hv")
@@ -988,7 +988,7 @@ object Sketches {
     // exact error surface: per-flag distinct sizes + pairwise overlap
     val fp = Tables.lineitem(s, dir)
       .select($"l_returnflag".as("g"), $"l_partkey".as("pk")).distinct()
-      .pin(true)
+      .pin
     val cnt = fp.groupBy($"g").agg(count(lit(1)).as("c"))
     val xInter = fp.select($"g".as("g1"), $"pk")
       .join(fp.select($"g".as("g2"), $"pk"), Seq("pk"))
@@ -1478,7 +1478,7 @@ object Sketches {
     val hv = Tables.events(s, dir)
       .select($"user_id").distinct()
       .select($"user_id", hllHash($"user_id").as("hv"))
-      .pin(true) // register fan-out + the exact count
+      .pin // register fan-out + the exact count
     val exact = hv.agg(count(lit(1)).as("exact_distinct"))
     val ms = Seq(16, 64, 256)
     val regs = hv.select(explode(array(ms.map(m =>
@@ -1629,13 +1629,13 @@ object Sketches {
         explode(split($"text", " ")).as("w"))
       .select($"sidea", (TextOps.tokenCode($"w") * 48271L % 2147483647L)
         .as("h"))
-      .distinct().pin(true) // both side filters read it
+      .distinct().pin // both side filters read it
     val skA = h.filter($"sidea").select($"h").orderBy($"h").limit(k)
-      .pin(true) // union + the common join
+      .pin // union + the common join
     val skB = h.filter(!$"sidea").select($"h").orderBy($"h").limit(k)
-      .pin(true)
+      .pin
     val uni = skA.unionByName(skB).distinct().orderBy($"h").limit(k)
-      .pin(true) // theta agg + the support restriction
+      .pin // theta agg + the support restriction
     val theta = uni.agg(max($"h").as("theta"), count(lit(1)).as("ku"))
     val cAgg = skA.join(skB, Seq("h")).join(uni, Seq("h"))
       .agg(count(lit(1)).as("c"))
@@ -1692,7 +1692,7 @@ object Sketches {
       .groupBy(expr(s"cents div $width").as("b"))
       .agg(count(lit(1)).as("cnt"))
     val w = org.apache.spark.sql.expressions.Window.orderBy($"b")
-    val cum = histo.select($"b", sum($"cnt").over(w).as("cum")).pin(true)
+    val cum = histo.select($"b", sum($"cnt").over(w).as("cum")).pin
     val n = cum.agg(max($"cum").as("n"))
     val pms = Seq(250L, 500L, 750L, 900L, 990L).toDF("pm")
     cum.crossJoin(broadcast(n)).crossJoin(broadcast(pms))

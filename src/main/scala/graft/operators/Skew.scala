@@ -76,7 +76,7 @@ object Skew {
     val salts = 16
     val tok = Tables.documents(s, dir)
       .select($"doc_id", explode(split($"text", " ")).as("w"))
-      .pin(true) // big side + the dim derivation
+      .pin // big side + the dim derivation
     val dim = tok.groupBy($"w")
       .agg(count_distinct($"doc_id").as("df"))
     val saltedBig = tok.select($"w", $"doc_id",

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.Pin.PinOps
+import Graph.{degrees, groupFrame, groupGraphCte, groupPairsOf, jaccardEdges,
+  jaccardEdgesCte, pageRankBsp, pageRankCtes, reachCte, starContraction,
+  undirectedCte}
 
 /** Text-analysis + deduplication operators over `documents` — the
   * LLM-training-data-pipeline surface (builder prompt; SURVEY.md §7.2 M5).
@@ -23,13 +26,13 @@ import graft.Pin.PinOps
 object TextOps {
 
   private val P = 2147483647L // 2^31 - 1 (Mersenne prime)
-  private val A = Seq(1103L, 12289L, 52361L, 84631L, 11213L, 91099L, 30011L, 70607L)
-  private val B = Seq(12007L, 24001L, 33023L, 47093L, 59063L, 71411L, 83477L, 95789L)
+  private[operators] val A = Seq(1103L, 12289L, 52361L, 84631L, 11213L, 91099L, 30011L, 70607L)
+  private[operators] val B = Seq(12007L, 24001L, 33023L, 47093L, 59063L, 71411L, 83477L, 95789L)
 
   /** Whitespace token stream: (doc_id, w), distinct per doc.
     * Docs are single-space separated (verified on the corpus).
     */
-  private def tokens(s: SparkSession, dir: String): DataFrame = {
+  private[operators] def tokens(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
       .select($"doc_id", explode(split($"text", " ")).as("w"))
@@ -61,7 +64,7 @@ object TextOps {
       | + ascii(substr(w,length(w),1))::BIGINT)""".stripMargin
       .replace("\n", " ")
 
-  private val tokCte =
+  private[operators] val tokCte =
     s"""WITH tok AS (
        |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w
        |  FROM documents),
@@ -167,13 +170,13 @@ object TextOps {
     val toks = Tables.documents(s, dir)
       .select($"doc_id", explode(split($"text", " ")).as("w"))
     val tf = toks.groupBy($"doc_id", $"w").agg(count(lit(1)).as("tf"))
-      .pin(true) // df agg + the weight join
+      .pin // df agg + the weight join
     val nDocs = Tables.documents(s, dir).agg(count(lit(1)).as("n"))
     val dfq = tf.groupBy($"w").agg(count(lit(1)).as("df"))
     val triples = tf.join(dfq, Seq("w")).crossJoin(broadcast(nDocs))
       .select($"w", $"doc_id",
         ($"tf" * length(bin(expr("n div df")))).as("wt"))
-      .pin(true) // re-joined every half-round
+      .pin // re-joined every half-round
     var v = Tables.documents(s, dir)
       .select($"doc_id", lit(1048576L).as("v"))
     var u = triples.limit(0).select($"w", lit(0L).as("u")) // replaced below
@@ -188,13 +191,13 @@ object TextOps {
       // join.
       val u0 = triples.join(v, Seq("doc_id"))
         .groupBy($"w").agg(sum($"wt" * $"v").as("u"))
-        .pin(true) // max-divisor agg + rescale both read it
+        .pin // max-divisor agg + rescale both read it
       val du = u0.agg((expr("max(abs(u)) div 1048576") + 1L).as("d"))
       u = u0.crossJoin(broadcast(du))
         .select($"w", expr("u div d").as("u"))
       val v0 = triples.join(u, Seq("w"))
         .groupBy($"doc_id").agg(sum($"wt" * $"u").as("s"))
-        .pin(true) // max-divisor agg + rescale both read it
+        .pin // max-divisor agg + rescale both read it
       val dv = v0.agg((expr("max(abs(s)) div 1048576") + 1L).as("d"))
       v = v0.crossJoin(broadcast(dv))
         .select($"doc_id", expr("s div d").as("v"))
@@ -238,61 +241,6 @@ object TextOps {
       "ORDER BY loading DESC, term LIMIT 10"
   }
 
-  /** Katz centrality (1953) on the contracted near-dup graph — the
-    * path-counting complement of [[pageRankGroups]]: each node scores
-    * Σ_k β^k · (walks of length k into it) with attenuation β = 1/2,
-    * computed as 3 pinned rounds of r ← 10⁶ + (Σ_in r) div 2 in exact
-    * integer arithmetic (the fixed-round doctrine; β as an integer div
-    * keeps both engines bit-identical). Where PageRank normalizes by
-    * out-degree (a random surfer), Katz counts raw walks — a family
-    * adjacent to two hubs outscores one adjacent to two leaves even at
-    * equal degree, the "connected to important things" signal.
-    *
-    * Headroom: r_k ≤ 10⁶·(d_max/2)^k — int64-safe at the pinned 3 rounds
-    * while 10⁶·(d_max/2)³ < 2⁶³−1, i.e. d_max ≤ ~41.9k (2·(2⁶³/10⁶)^⅓);
-    * the contracted graph's degrees sit orders below.
-    *
-    * Scale: per round one edge⋈rank join + one dst-keyed sum over the
-    * group-contracted edge frame — the [[pageRankBsp]] shape without the
-    * degree join.
-    */
-  def katzGroups(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    import s.implicits._
-    val nodes = groupFrame(s, dir).select($"gid")
-    val pairs = groupPairsOf(s, dir).pin(true) // union reads it twice
-    val edges = pairs.select($"a".as("src"), $"b".as("dst"))
-      .unionByName(pairs.select($"b".as("src"), $"a".as("dst")))
-      .pin(true) // re-joined every round
-    var r = nodes.select($"gid", lit(1000000L).as("r"))
-    for (_ <- 1 to iters) {
-      val in = edges.join(r.withColumnRenamed("gid", "src"), "src")
-        .groupBy($"dst".as("gid")).agg(sum($"r").as("s"))
-      r = nodes.join(in, Seq("gid"), "left")
-        .select($"gid",
-          (lit(1000000L) + expr("coalesce(s, 0) div 2")).as("r"))
-    }
-    r.select($"gid", $"r".as("katz")).orderBy($"gid")
-  }
-
-  lazy val katzGroupsSql: String = {
-    def iterCte(k: Int): String =
-      s""",
-         |k$k AS (
-         |  SELECT n.gid,
-         |    (1000000 + COALESCE(c.s, 0) // 2)::BIGINT AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS gid, sum(r.r)::BIGINT AS s
-         |    FROM edges e JOIN k${k - 1} r ON e.src = r.gid
-         |    GROUP BY e.dst) c ON n.gid = c.gid)""".stripMargin
-    groupGraphCte +
-      """, nodes AS (SELECT gid FROM g),
-        |edges AS (SELECT a AS src, b AS dst FROM gp
-        |          UNION ALL SELECT b, a FROM gp),
-        |k0 AS (SELECT gid, 1000000::BIGINT AS r FROM nodes)""".stripMargin +
-      (1 to 3).map(iterCte).mkString +
-      "\nSELECT gid, r AS katz FROM k3 ORDER BY gid"
-  }
-
   /** Cohen's kappa (1960) between the marker-heuristic language
     * prediction and the labeled language — the CHANCE-CORRECTED
     * agreement statistic [[langIdConfusion]]'s raw diagonal can't give
@@ -308,7 +256,7 @@ object TextOps {
   def cohensKappa(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cm = langPreds(s, dir).groupBy($"lang", $"pred_lang")
-      .agg(count(lit(1)).as("n")).pin(true) // bounded |langs|² frame
+      .agg(count(lit(1)).as("n")).pin // bounded |langs|² frame
     val rows = cm.groupBy($"lang").agg(sum($"n").as("r"))
     val cols = cm.groupBy($"pred_lang".as("lang")).agg(sum($"n").as("c"))
     val agree = cm.filter($"lang" === $"pred_lang")
@@ -365,7 +313,7 @@ object TextOps {
   def evalMacroF1(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cm = langPreds(s, dir).groupBy($"lang", $"pred_lang")
-      .agg(count(lit(1)).as("n")).pin(true) // bounded |langs|² frame
+      .agg(count(lit(1)).as("n")).pin // bounded |langs|² frame
     val rows = cm.groupBy($"lang").agg(sum($"n").as("r"))
     val cols = cm.groupBy($"pred_lang".as("lang")).agg(sum($"n").as("c"))
     val diag = cm.filter($"lang" === $"pred_lang")
@@ -378,7 +326,7 @@ object TextOps {
         (coalesce($"r", lit(0L)) - coalesce($"tp", lit(0L))).as("fn"))
       .select($"class", $"tp", $"fp", $"fn",
         expr("2000 * tp div greatest(2 * tp + fp + fn, 1)").as("f1_pm"))
-      .pin(true) // the macro fold reads it too
+      .pin // the macro fold reads it too
     val macroRow = per.agg(count(lit(1)).as("k"), sum($"f1_pm").as("s"))
       .select(lit("~macro").as("class"), lit(0L).as("tp"),
         lit(0L).as("fp"), lit(0L).as("fn"),
@@ -401,7 +349,7 @@ object TextOps {
     * count (lower doc_id on ties — fully deterministic); production
     * swaps in real model ids and judge verdicts, identical plan.
     *
-    * MM update, all-integer ([[graphHits]]' rescale discipline): scores
+    * MM update, all-integer ([[Graph.graphHits]]' rescale discipline): scores
     * start at S = 2²⁰; per round inv_i = Σ_j n_ij·S div (s_i + s_j),
     * raw_i = W_i·S div inv_i, then a 1-row max-divisor rescale keeps
     * magnitudes at S (floor(s_i) ≥ 1 so a winless system never zeroes a
@@ -430,14 +378,14 @@ object TextOps {
       .select(when($"nd1" > $"nd0", $"l1").otherwise($"l0").as("winner"),
         when($"nd1" > $"nd0", $"l0").otherwise($"l1").as("loser"))
     val wl = matches.groupBy($"winner", $"loser")
-      .agg(count(lit(1)).as("w")).pin(true) // games + wins + langs read it
+      .agg(count(lit(1)).as("w")).pin // games + wins + langs read it
     val games = wl.select($"winner".as("i"), $"loser".as("j"), $"w")
       .unionByName(wl.select($"loser".as("i"), $"winner".as("j"), $"w"))
-      .groupBy($"i", $"j").agg(sum($"w").as("n")).pin(true)
+      .groupBy($"i", $"j").agg(sum($"w").as("n")).pin
     val wins = games.select($"i".as("lang")).distinct()
       .join(wl.groupBy($"winner".as("lang")).agg(sum($"w").as("wins")),
         Seq("lang"), "left")
-      .select($"lang", coalesce($"wins", lit(0L)).as("wins")).pin(true)
+      .select($"lang", coalesce($"wins", lit(0L)).as("wins")).pin
     var sc = wins.select($"lang", lit(S).as("s"))
     for (_ <- 1 to BtIters) {
       // the score frame is ≤|systems| rows at ANY corpus size — broadcast
@@ -456,7 +404,7 @@ object TextOps {
       // cannot duplicate upstream rounds exponentially
       val raw = wins.join(inv, Seq("lang"))
         .select($"lang", expr(s"wins * $S div greatest(inv, 1)").as("raw"))
-        .pin(true)
+        .pin
       val d = raw.agg((expr(s"max(raw) div $S") + 1L).as("d"))
       sc = raw.crossJoin(broadcast(d))
         .select($"lang", greatest(expr("raw div d"), lit(1L)).as("s"))
@@ -549,7 +497,7 @@ object TextOps {
     val paired = base.groupBy($"pair")
       .agg(countDistinct($"side").as("ns")).filter($"ns" === 2L)
       .select($"pair")
-    val docs = base.join(paired, Seq("pair"), "left_semi").pin(true)
+    val docs = base.join(paired, Seq("pair"), "left_semi").pin
     val uni = docs.select($"pair", $"side", lit(1L).as("n"),
       explode($"l").as("g"))
     val bi = docs.select($"pair", $"side", lit(2L).as("n"),
@@ -560,7 +508,7 @@ object TextOps {
         concat_ws(" ", $"p.a", $"p.b").as("g"))
     val cnt = uni.unionByName(bi)
       .groupBy($"pair", $"n", $"g", $"side")
-      .agg(count(lit(1)).as("c")).pin(true) // matched + totals read it
+      .agg(count(lit(1)).as("c")).pin // matched + totals read it
     val matched = cnt.filter($"side" === 0L)
       .select($"pair", $"n", $"g", $"c".as("c0"))
       .join(cnt.filter($"side" === 1L)
@@ -729,11 +677,11 @@ object TextOps {
     // 4.7 s → well under 2 s at sf0.1)
     val grams = charTrigrams(s, dir)
     val lm = grams.groupBy($"lang", $"gram").agg(count(lit(1)).as("cnt"))
-      .pin(true) // totals, vocab, and the scoring join
+      .pin // totals, vocab, and the scoring join
     val vocabF = lm.select($"gram").distinct().agg(count(lit(1)).as("v"))
     val totals = lm.groupBy($"lang").agg(sum($"cnt").as("nl"))
       .crossJoin(broadcast(vocabF))
-      .pin(true) // |langs| rows; feeds lgs + lmBits
+      .pin // |langs| rows; feeds lgs + lmBits
     val langs = totals.select($"lang".as("cand"),
       length(bin($"nl" + $"v")).cast("long").as("bits0"))
     // score_l(doc) = n_grams·bits0_l + Σ_{(l,g) seen} (bits_l(g) − bits0_l):
@@ -1142,7 +1090,7 @@ object TextOps {
   /** Unsorted signature frame shared by [[minhash]] and [[minhashPairs]]
     * (the public query adds the presentation sort).
     */
-  private def minhashOf(s: SparkSession, dir: String): DataFrame = {
+  private[operators] def minhashOf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val codes = tokens(s, dir).select($"doc_id", tokenCode($"w").as("code"))
     val aggs = A.indices.map(j =>
@@ -1167,9 +1115,9 @@ object TextOps {
     * with heavy near-duplication — p50 token-Jaccard 0.63 — so large
     * candidate sets are the correct output, not a config artifact.)
     */
-  private val M = 68719476731L // prime ≈ 2^36
+  private[operators] val M = 68719476731L // prime ≈ 2^36
 
-  private def bandSig(cols: Seq[Column]): Column =
+  private[operators] def bandSig(cols: Seq[Column]): Column =
     cols.reduce((acc, c) => (acc % M * 131071L + c) % M)
 
   def minhashPairs(s: SparkSession, dir: String): DataFrame = {
@@ -1179,10 +1127,10 @@ object TextOps {
 
   /** The unsorted minhash-LSH candidate pair set (a < b, each pair once —
     * first-matching-band). Shared by [[minhashPairs]] (which adds the
-    * presentation sort) and graph consumers ([[pageRank]]) that re-shuffle
+    * presentation sort) and graph consumers ([[Graph.pageRank]]) that re-shuffle
     * immediately and must not pay a wasted global exchange.
     */
-  private def minhashCandidates(s: SparkSession, dir: String): DataFrame = {
+  private[operators] def minhashCandidates(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // checkpoint the per-doc signatures: the band union references the
     // frame twice and the self-join doubles each side again, so without a
@@ -1197,7 +1145,7 @@ object TextOps {
     // set needs NO distinct — at 10× scale that distinct was a 48M-row
     // exchange+dedup and the emitters' dominant cost; the filter rides
     // the join itself.
-    val sig = minhashOf(s, dir).pin(true)
+    val sig = minhashOf(s, dir).pin
     val bands = bandedOf(sig)
     val l = bands.select($"doc_id".as("a"), $"sig0".as("s0a"), $"band", $"sig")
     val r = bands.select($"doc_id".as("b"), $"sig0".as("s0b"), $"band", $"sig")
@@ -1280,7 +1228,7 @@ object TextOps {
     */
   def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sig = minhashOf(s, dir).pin(true)
+    val sig = minhashOf(s, dir).pin
     val isNew = $"doc_id" % 5 === 4
     incrementalPairsOf(sig.filter(!isNew), sig.filter(isNew))
       .orderBy($"new_id", $"match_id")
@@ -1311,7 +1259,7 @@ object TextOps {
     * set as a reusable prefix (pairs ≡ the Spark first-matching-band
     * emission, which is distinct by construction).
     */
-  private val minhashPairsCte: String = tokCte + {
+  private[operators] val minhashPairsCte: String = tokCte + {
     val cols = A.indices.map(j =>
       s"min((${A(j)} * code + ${B(j)}) % 2147483647) AS mh$j").mkString(", ")
     def sig(i: Int) =
@@ -1373,11 +1321,11 @@ object TextOps {
     val docs = Tables.documents(s, dir)
     val words = docs
       .select($"doc_id", explode(split($"text", " ")).as("w")).distinct()
-      .pin(true) // verification joins (both sides)
+      .pin // verification joins (both sides)
     val perDoc = words.groupBy($"doc_id")
       .agg(sort_array(collect_set($"w")).as("arr"),
         count(lit(1)).as("n"))
-      .pin(true)
+      .pin
     def pass(key: Column): DataFrame = {
       val keyed = docs.select($"doc_id", key.as("bkey"))
       val (ranked, _) = GlobalOrder.rank(keyed,
@@ -1452,11 +1400,11 @@ object TextOps {
     // re-runs per reference (the defect the minhash/shingle paths had)
     val tok = tokens(s, dir)
       .select($"doc_id", $"w", ((lit(A(0)) * tokenCode($"w") + B(0)) % P).as("hw"))
-      .pin(true)
+      .pin
     val perDoc = tok.groupBy($"doc_id")
       .agg(sort_array(collect_list($"w")).as("arr"),
         count(lit(1)).as("n"), sum($"hw").as("h"))
-      .pin(true)
+      .pin
     val full = perDoc.select($"doc_id", $"h".as("sig"))
     val dels = tok.join(perDoc.select($"doc_id", $"h"), Seq("doc_id"))
       .select($"doc_id", ($"h" - $"hw").as("sig"))
@@ -1654,7 +1602,7 @@ object TextOps {
           .filter($"df" <= 32L),
         Seq("g1", "g2"))
       .select($"doc_id", $"g1", $"g2")
-      .pin(true)
+      .pin
     kept.select($"doc_id".as("a"), $"g1", $"g2")
       .join(kept.select($"doc_id".as("b"), $"g1", $"g2"), Seq("g1", "g2"))
       .filter($"a" < $"b")
@@ -1743,7 +1691,7 @@ object TextOps {
       .select($"doc_id", $"pos",
         gramFold(Seq($"c0", $"c1", $"c2", $"c3")).as("g1"),
         gramFold(Seq($"d0", $"d1", $"d2", $"d3")).as("g2"))
-      .pin(true) // owner agg + the join back
+      .pin // owner agg + the join back
     val owner = grams.groupBy($"g1", $"g2")
       .agg(min(struct($"doc_id", $"pos")).as("first"))
     grams.join(owner, Seq("g1", "g2"))
@@ -2072,7 +2020,7 @@ object TextOps {
     // union × self-join would otherwise re-run the shingling agg 4×;
     // first-matching-band emission (see minhashPairs) replaces the
     // pair distinct with a filter riding the join
-    val sig = shingleMinhashOf(codes).pin(true)
+    val sig = shingleMinhashOf(codes).pin
     val bands = sig.select($"doc_id",
         bandSig((0 until 4).map(i => col(s"mh$i"))).as("sig0"),
         bandSig((4 until 8).map(i => col(s"mh$i"))).as("sig1"))
@@ -2150,7 +2098,7 @@ object TextOps {
     */
   private def shingleInterCounts(codes: DataFrame): DataFrame = {
     import codes.sparkSession.implicits._
-    val pairs = shinglePairsOf(codes).pin(true)
+    val pairs = shinglePairsOf(codes).pin
     val inter = pairs
       .join(codes.select($"doc_id".as("a"), $"code"), Seq("a"))
       .join(codes.select($"doc_id".as("b"), $"code"), Seq("b", "code"))
@@ -2179,7 +2127,7 @@ object TextOps {
     import s.implicits._
     // one shingling pass, checkpointed: candidates, sizes, and the
     // intersection join all fan out from this frame
-    val codes = shingleCodes(s, dir).pin(true)
+    val codes = shingleCodes(s, dir).pin
     val sizes = shingleSizes(codes)
     shingleInterCounts(codes)
       .join(sizes.select($"doc_id".as("a"), $"n".as("na")), Seq("a"))
@@ -2213,7 +2161,7 @@ object TextOps {
     */
   def thresholdCurve(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val codes = shingleCodes(s, dir).pin(true)
+    val codes = shingleCodes(s, dir).pin
     val sizes = shingleSizes(codes)
     val jac = shingleInterCounts(codes)
       .join(sizes.select($"doc_id".as("a"), $"n".as("na")), Seq("a"))
@@ -2260,7 +2208,7 @@ object TextOps {
     */
   def bbitPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val codes = shingleCodes(s, dir).pin(true)
+    val codes = shingleCodes(s, dir).pin
     val sigs = shingleMinhashOf(codes)
     val sizes = shingleSizes(codes)
     def side(tag: String): DataFrame =
@@ -2456,13 +2404,13 @@ object TextOps {
     // intersection join (the dominant stage), and pin only bounded frames
     // (per-doc sizes, the verified pair table) — guide §2.4/§2.3.
     val codes = shingleCodes(s, dir)
-    val sizes = shingleSizes(codes).pin(true) // |docs| rows, bounded
+    val sizes = shingleSizes(codes).pin // |docs| rows, bounded
     val cand = shinglePairsOf(codes)
       .select($"a", $"b", lit(1L).as("lsh"), lit(0L).as("pre"))
       .unionByName(prefixCandOf(codes, sizes)
         .select($"a", $"b", lit(0L).as("lsh"), lit(1L).as("pre")))
       .groupBy($"a", $"b").agg(max($"lsh").as("lsh"), max($"pre").as("pre"))
-      .pin(true) // candidate-pair table; feeds the one intersection join
+      .pin // candidate-pair table; feeds the one intersection join
     // a candidate pair with zero shared shingles (band-fold collision)
     // drops out of the inner join — it could never pass the τ = 0.8
     // verification filter (c = 0 < (na+nb)·4/5 since na, nb ≥ 1)
@@ -2473,7 +2421,7 @@ object TextOps {
       .join(sizes.select($"doc_id".as("a"), $"n".as("na")), Seq("a"))
       .join(sizes.select($"doc_id".as("b"), $"n".as("nb")), Seq("b"))
       .filter($"c" * 5L >= ($"na" + $"nb" - $"c") * 4L)
-      .pin(true) // verified pairs; found, truth and missed all read it
+      .pin // verified pairs; found, truth and missed all read it
     val found = scored.filter($"lsh" === 1L).select($"a", $"b")
     val truth = scored.filter($"pre" === 1L).select($"a", $"b",
       (($"c" * 1000L) / ($"na" + $"nb" - $"c")).cast("long").as("jac_pm"))
@@ -2558,13 +2506,13 @@ object TextOps {
     // only on bounded frames — both stratum-restricted candidate streams
     // keep the predicate pushed into their joins' min-endpoint side
     val codes = shingleCodes(s, dir) // unpinned, the prefixPairs rule
-    val sizes = shingleSizes(codes).pin(true) // |docs| rows, bounded
+    val sizes = shingleSizes(codes).pin // |docs| rows, bounded
     val cand = shinglePairsOf(codes, Some(strat))
       .select($"a", $"b", lit(1L).as("lsh"), lit(0L).as("pre"))
       .unionByName(prefixCandOf(codes, sizes, Some(strat))
         .select($"a", $"b", lit(0L).as("lsh"), lit(1L).as("pre")))
       .groupBy($"a", $"b").agg(max($"lsh").as("lsh"), max($"pre").as("pre"))
-      .pin(true)
+      .pin
     val scored = cand
       .join(codes.select($"doc_id".as("a"), $"code"), Seq("a"))
       .join(codes.select($"doc_id".as("b"), $"code"), Seq("b", "code"))
@@ -2572,7 +2520,7 @@ object TextOps {
       .join(sizes.select($"doc_id".as("a"), $"n".as("na")), Seq("a"))
       .join(sizes.select($"doc_id".as("b"), $"n".as("nb")), Seq("b"))
       .filter($"c" * 5L >= ($"na" + $"nb" - $"c") * 4L)
-      .pin(true)
+      .pin
     val found = scored.filter($"lsh" === 1L).select($"a", $"b")
     val truth = scored.filter($"pre" === 1L).select($"a", $"b",
       (($"c" * 1000L) / ($"na" + $"nb" - $"c")).cast("long").as("jac_pm"))
@@ -2592,9 +2540,9 @@ object TextOps {
       // only the G = 1 degenerate case, whose CI is forced to 0 below
       .select(floor(($"f" - $"fg") * 1000L / greatest($"t" - $"tg", lit(1L)))
         .cast("long").as("rpm"))
-      .pin(true) // ≤8 rows; the mean agg + the deviation agg both read it
+      .pin // ≤8 rows; the mean agg + the deviation agg both read it
     val jstat = rpm.agg(count(lit(1)).as("gn"), sum($"rpm").as("s1"))
-      .pin(true) // 1 row; read by the deviation agg and the final fold
+      .pin // 1 row; read by the deviation agg and the final fold
     // aggregate-on-possibly-empty keeps the 1-row shape (a corpus with no
     // truth pairs must still emit the audit row, with CI 0)
     val dev = rpm.crossJoin(broadcast(jstat))
@@ -2701,8 +2649,8 @@ object TextOps {
     */
   def lshTuning(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val codes = shingleCodes(s, dir).pin(true)
-    val sigs = shingleMinhashOf(codes).pin(true)
+    val codes = shingleCodes(s, dir).pin
+    val sigs = shingleMinhashOf(codes).pin
     val sizes = shingleSizes(codes)
     val frames = Seq((2, 4), (4, 2), (8, 1)).map { case (b, r) =>
       val bands = (0 until b).map(i =>
@@ -2714,7 +2662,7 @@ object TextOps {
         .join(bands.select($"band", $"sig", $"doc_id".as("b")),
           Seq("band", "sig"))
         .filter($"a" < $"b").select($"a", $"b").distinct()
-        .pin(true) // candidate count + the intersection join
+        .pin // candidate count + the intersection join
       val inter = cand
         .join(codes.select($"doc_id".as("a"), $"code"), Seq("a"))
         .join(codes.select($"doc_id".as("b"), $"code"), Seq("b", "code"))
@@ -2844,105 +2792,31 @@ object TextOps {
       |    FROM perdoc GROUP BY lang) sh)
       |SELECT * FROM base CROSS JOIN vocab CROSS JOIN hhi""".stripMargin
 
-  /** Connected components by alternating large-star / small-star edge
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14): each round relinks every node toward the minimum
-    * id in its neighborhood, which contracts path-shaped components
-    * exponentially — O(log n) rounds regardless of graph diameter, where
-    * plain min-label propagation needs O(diameter) rounds (a 10M-node
-    * chain would take 10M Spark jobs; this takes ~25).
-    *
-    * Invariant: `edges` is always oriented (hi, lo) with hi > lo and no
-    * self-loops, so the fixed point is a star forest where every non-root
-    * carries one edge to its component's minimum node.
-    *  - large-star(u): for every neighbor v > u, emit (v, m) where m =
-    *    min(neighborhood(u) ∪ u) — preserves connectivity, strictly
-    *    shrinks big endpoints toward the min;
-    *  - small-star(u): for the smaller-side neighbors, emit (v, m) and
-    *    (u, m) — re-centers each local star on its minimum.
-    * Each half-round is one shuffle (groupBy min + join); convergence is
-    * an exact set comparison of consecutive checkpointed edge frames.
-    *
-    * Returns the per-node assignment (doc_id, label) — label = component
-    * minimum, isolated nodes label themselves — plus the round count the
-    * caller can assert O(log n) bounds on.
-    */
-  def starContraction(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 50): (DataFrame, Int) = {
-    val s = nodes.sparkSession
-    import s.implicits._
-    var edges = pairs.filter($"a" =!= $"b")
-      .select(greatest($"a", $"b").as("hi"), least($"a", $"b").as("lo"))
-      .distinct().pin(true)
-    var round = 0
-    var converged = edges.isEmpty
-    while (!converged && round < maxRounds) {
-      // large-star over the symmetric adjacency
-      val sym = edges.select($"hi".as("u"), $"lo".as("v"))
-        .unionByName(edges.select($"lo".as("u"), $"hi".as("v")))
-      val mins = sym.groupBy($"u")
-        .agg(min($"v").as("mn"))
-        .select($"u", least($"mn", $"u").as("m"))
-      // NO distinct on the large-star emission (r17): small-star's min is
-      // duplicate-insensitive and `next` ends in its own distinct, so the
-      // across-u duplicate (v, m) pairs are harmless — the dedup cost a
-      // full (hi, lo) exchange + aggregate per round, after which both
-      // consumers re-exchanged by hi anyway; now the single hi exchange
-      // is built once and reused by the groupBy and the join (guide §2.4)
-      val large = sym.filter($"v" > $"u")
-        .join(mins, Seq("u"))
-        .select($"v".as("hi"), $"m".as("lo"))
-      // small-star on the (hi, lo) orientation large-star guarantees
-      val smins = large.groupBy($"hi").agg(min($"lo").as("m"))
-      val next = large.join(smins, Seq("hi"))
-        .select($"lo".as("hi"), $"m".as("lo"))
-        .filter($"hi" =!= $"lo")
-        .unionByName(smins.select($"hi", $"m".as("lo")))
-        .distinct().pin(true)
-      // Fixpoint test (r16): the alternating rounds reach their fixed
-      // point exactly when the edge frame is a STAR FOREST — no node is
-      // both a child (hi) and a parent (lo). (⇐: on a star forest both
-      // half-rounds re-emit the same edges, shown by direct computation;
-      // ⇒: a depth-2 chain h2 > x > l1 makes large-star re-point h2 at
-      // min(N(x) ∪ x) < x, so the frame changes.) One early-exit
-      // semi-join probe on the pinned frame replaces the old
-      // count()+exceptAll set-equality pair — and fires one round
-      // EARLIER: equality could only observe stability on the round
-      // AFTER the star forest formed, paying two full no-op shuffle
-      // half-rounds per call. This is the hot inner loop of every
-      // contraction query (components, clusters, single-linkage, MSF).
-      converged = next.select($"hi")
-        .join(next.select($"lo".as("hi")), Seq("hi"), "left_semi")
-        .isEmpty
-      edges = next
-      round += 1
-    }
-    // converging within the cap is a hard contract: a partially contracted
-    // forest would silently disagree with the exact reachability oracle
-    require(converged,
-      s"star contraction did not converge within $round rounds")
-    val labels = nodes.join(edges.select($"hi".as(nodes.columns.head),
-        $"lo".as("label")), Seq(nodes.columns.head), "left")
-      .select(col(nodes.columns.head),
-        coalesce($"label", col(nodes.columns.head)).as("label"))
-    (labels, round)
-  }
+  /** (doc_id, label) near-dup clusters: [[Graph.starContraction]] over
+    * the shingle-LSH pairs, label = the component's minimum doc_id. */
+  private def docClusters(s: SparkSession, dir: String): DataFrame =
+    // the unsorted pair frame: contraction re-shuffles immediately, so the
+    // public query's presentation sort would be a wasted global exchange
+    starContraction(Tables.documents(s, dir).select(col("doc_id")),
+      shinglePairsOf(shingleCodes(s, dir)))._1
+
+  /** `edges` + `reach` over the shingle-LSH `pairs` CTE: the oracle of
+    * [[docClusters]] ([[Graph.reachCte]]). */
+  private val docReach: String =
+    s"""${undirectedCte("edges", "pairs")},
+       |${reachCte("edges", "doc_id, doc_id FROM documents")}"""
+      .stripMargin
 
   /** Near-dup CLUSTERING: connected components over the shingle-LSH pair
     * graph — the step a dedup pipeline runs after pair generation to pick
     * one canonical document per duplicate cluster. Components via
-    * [[starContraction]] (O(log n) rounds, diameter-independent); the
+    * [[Graph.starContraction]] (O(log n) rounds, diameter-independent); the
     * oracle replays reachability as a DuckDB recursive CTE, so the labels
     * must be exactly the per-component minima.
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val nodes = Tables.documents(s, dir).select($"doc_id")
-    // the unsorted pair frame: contraction re-shuffles immediately, so the
-    // public query's presentation sort would be a wasted global exchange
-    val (labels, _) =
-      starContraction(nodes, shinglePairsOf(shingleCodes(s, dir)))
-    labels.select($"doc_id", $"label".as("cluster"),
+    docClusters(s, dir).select($"doc_id", $"label".as("cluster"),
         ($"doc_id" === $"label").cast("int").as("is_canonical"))
       .orderBy($"doc_id")
   }
@@ -2950,11 +2824,7 @@ object TextOps {
   val dedupClustersSql: String =
     shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
       s""",
-         |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-         |reach(node, m) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node)
+         |$docReach
          |SELECT node AS doc_id, min(m)::BIGINT AS cluster,
          |  CASE WHEN node = min(m) THEN 1 ELSE 0 END AS is_canonical
          |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
@@ -2973,16 +2843,13 @@ object TextOps {
     * fold comparability. Fold = cluster·Knuth mod 2³¹ mod 5 (headroom:
     * cluster ids < 2³¹ keep the product exact in int64).
     *
-    * Scale: rides [[starContraction]]'s cluster labels (O(log n) keyed
+    * Scale: rides [[Graph.starContraction]]'s cluster labels (O(log n) keyed
     * rounds); the assignment is a projection and the report one
     * fold-keyed aggregation. Nothing new shuffles beyond the clustering.
     */
   def groupKfold(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import s.implicits._
-    val nodes = Tables.documents(s, dir).select($"doc_id")
-    val (labels, _) =
-      starContraction(nodes, shinglePairsOf(shingleCodes(s, dir)))
-    val folds = labels.select($"doc_id", $"label",
+    val folds = docClusters(s, dir).select($"doc_id", $"label",
       ($"label" * 2654435761L % 2147483647L % k).as("fold"))
     val docs = Tables.documents(s, dir)
       .select($"doc_id", size(split($"text", " ")).cast("long").as("toks"))
@@ -2997,11 +2864,7 @@ object TextOps {
   val groupKfoldSql: String =
     shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
       s""",
-         |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-         |reach(node, m) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
+         |$docReach,
          |lab AS (SELECT node AS doc_id, min(m) AS label FROM reach
          |        GROUP BY node),
          |f AS (SELECT doc_id, label,
@@ -3024,16 +2887,13 @@ object TextOps {
     * member mass, and the member-weighted majority-label share in exact
     * permille.
     *
-    * Scale: rides the [[starContraction]] labels; purity is two
+    * Scale: rides the [[Graph.starContraction]] labels; purity is two
     * mergeable aggregations on the cluster-keyed shuffle; singletons are
     * excluded (trivially pure — they would only dilute the signal).
     */
   def clusterPurity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val nodes = Tables.documents(s, dir).select($"doc_id")
-    val (labels, _) =
-      starContraction(nodes, shinglePairsOf(shingleCodes(s, dir)))
-    val perCl = labels
+    val perCl = docClusters(s, dir)
       .join(Tables.documents(s, dir).select($"doc_id", $"lang"),
         Seq("doc_id"))
       .groupBy($"label", $"lang").agg(count(lit(1)).as("cnt"))
@@ -3051,11 +2911,7 @@ object TextOps {
   lazy val clusterPuritySql: String =
     shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
       s""",
-         |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-         |reach(node, m) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
+         |$docReach,
          |lab AS (SELECT node AS doc_id, min(m) AS label FROM reach
          |        GROUP BY node),
          |cl AS (
@@ -3086,7 +2942,7 @@ object TextOps {
     * asserts and the per-split cluster counts make auditable (they must
     * sum to the corpus total).
     *
-    * Scale: cluster labels via [[starContraction]] (O(log n) rounds);
+    * Scale: cluster labels via [[Graph.starContraction]] (O(log n) rounds);
     * the split decision is a pure expression on the label; one
     * doc_id-keyed join to attach labels and one 2-row agg. This is the
     * split recipe of the dedup-aware pipelines (e.g. the eval-
@@ -3095,10 +2951,7 @@ object TextOps {
     */
   def leakageSafeSplit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val nodes = Tables.documents(s, dir).select($"doc_id")
-    val (labels, _) =
-      starContraction(nodes, shinglePairsOf(shingleCodes(s, dir)))
-    val assigned = labels.select($"doc_id",
+    val assigned = docClusters(s, dir).select($"doc_id",
       when(($"label" * 52361L + 24001L) % M % 10L < 8L, "train")
         .otherwise("eval").as("split"), $"label")
     Tables.documents(s, dir)
@@ -3113,11 +2966,7 @@ object TextOps {
   lazy val leakageSafeSplitSql: String =
     shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
       s""",
-         |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-         |reach(node, m) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
+         |$docReach,
          |lab AS (SELECT node AS doc_id, min(m) AS label FROM reach
          |        GROUP BY node),
          |sp AS (
@@ -3150,13 +2999,10 @@ object TextOps {
   def keepBest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val nodes = Tables.documents(s, dir).select($"doc_id")
-    val (labels, _) =
-      starContraction(nodes, shinglePairsOf(shingleCodes(s, dir)))
     val nw = Tables.documents(s, dir).select($"doc_id",
       (length($"text") - length(regexp_replace($"text", lit(" "), lit(""))) + 1)
         .cast("long").as("n_words"))
-    labels.select($"doc_id", $"label".as("cluster"))
+    docClusters(s, dir).select($"doc_id", $"label".as("cluster"))
       .join(nw, Seq("doc_id"))
       .withColumn("rk", row_number().over(
         Window.partitionBy($"cluster").orderBy($"n_words".desc, $"doc_id")))
@@ -3170,12 +3016,8 @@ object TextOps {
 
   val keepBestSql: String =
     shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
-      """,
-        |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-        |reach(node, m) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
+      s""",
+        |$docReach,
         |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
         |        FROM reach GROUP BY node),
         |nw AS (SELECT doc_id,
@@ -3213,9 +3055,7 @@ object TextOps {
     */
   def softWeights(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val nodes = Tables.documents(s, dir).select($"doc_id")
-    val (labels, _) =
-      starContraction(nodes, shinglePairsOf(shingleCodes(s, dir)))
+    val labels = docClusters(s, dir)
     val sizes = labels.groupBy($"label".as("cluster"))
       .agg(count(lit(1)).as("n_members"))
     labels.select($"doc_id", $"label".as("cluster"))
@@ -3227,12 +3067,8 @@ object TextOps {
 
   val softWeightsSql: String =
     shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
-      """,
-        |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-        |reach(node, m) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
+      s""",
+        |$docReach,
         |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
         |        FROM reach GROUP BY node),
         |sz AS (SELECT cluster, count(*)::BIGINT AS n_members
@@ -3276,12 +3112,8 @@ object TextOps {
 
   val softTokensSql: String =
     shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
-      """,
-        |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-        |reach(node, m) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
+      s""",
+        |$docReach,
         |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
         |        FROM reach GROUP BY node),
         |sz AS (SELECT cluster, count(*)::BIGINT AS n_members
@@ -3324,12 +3156,10 @@ object TextOps {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
-    val (labels, _) =
-      starContraction(docs.select($"doc_id"), shinglePairsOf(shingleCodes(s, dir)))
     val nw = docs.select($"doc_id",
       (length($"text") - length(regexp_replace($"text", lit(" "), lit(""))) + 1)
         .cast("long").as("n_words"))
-    val keeper = labels.select($"doc_id", $"label".as("cluster"))
+    val keeper = docClusters(s, dir).select($"doc_id", $"label".as("cluster"))
       .join(nw, Seq("doc_id"))
       .withColumn("rk", row_number().over(
         Window.partitionBy($"cluster").orderBy($"n_words".desc, $"doc_id")))
@@ -3355,11 +3185,7 @@ object TextOps {
       val stopList = Seq("the", "be", "to", "of", "and", "that", "have", "with")
         .map(w => s"'$w'").mkString(", ")
       s""",
-         |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-         |reach(node, m) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
+         |$docReach,
          |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
          |        FROM reach GROUP BY node),
          |nw AS (SELECT doc_id,
@@ -3547,7 +3373,7 @@ object TextOps {
     var txt = Tables.documents(s, dir)
       .select($"doc_id",
         concat(bar, regexp_replace($"text", lit(" "), lit("||")), bar).as("t"))
-      .pin(true)
+      .pin
     var out: Option[DataFrame] = None
     for (r <- 1 to rounds) {
       val arr = split(expr("substring(t, 2, length(t) - 2)"), "\\|\\|")
@@ -3560,13 +3386,13 @@ object TextOps {
         .agg(count(lit(1)).as("freq"))
         .orderBy($"freq".desc, $"a", $"b")
         .limit(1)
-        .pin(true) // 1 row; reused by the merge AND the report
+        .pin // 1 row; reused by the merge AND the report
       txt = txt.crossJoin(broadcast(winner))
         .select($"doc_id",
           replace($"t",
             concat(bar, $"a", lit("||"), $"b", bar),
             concat(bar, $"a", lit("@"), $"b", bar)).as("t"))
-        .pin(true)
+        .pin
       val nTokens = txt.agg(
         (sum(length($"t") - length(replace($"t", bar, lit("")))) / 2L)
           .cast("long").as("n_tokens"))
@@ -3634,12 +3460,12 @@ object TextOps {
     // union+anti form stays flat at ~0.2 s/round on identical inputs.
     def pin(df: DataFrame, r: Int): DataFrame = {
       val _ = r
-      df.pin(true)
+      df.pin
     }
     val base = Tables.documents(s, dir)
       .select($"doc_id", split($"text", " ").as("toks"))
-      .pin(true)
-    var pc = pairCounts($"toks", 1L)(base).pin(true)
+      .pin
+    var pc = pairCounts($"toks", 1L)(base).pin
     var mods = base.limit(0) // (doc_id, toks) overlay, initially empty
     var nTokens = base.agg(sum(size($"toks"))).head().getLong(0)
     val report = Seq.newBuilder[(Long, String, String, Long, Long)]
@@ -3677,7 +3503,7 @@ object TextOps {
                 merge.as("fresh"))
             },
             acc => acc.getField("out")).as("ntoks"))
-          .pin(true)
+          .pin
         val tAff = System.nanoTime()
         val nRepl = aff.agg(sum(size($"toks") - size($"ntoks")))
           .head().getLong(0)
@@ -3798,132 +3624,6 @@ object TextOps {
         |  SELECT 3::BIGINT, a, b, freq, (SELECT n FROM s3) FROM w3)
         |ORDER BY round""".stripMargin
 
-  /** PageRank over the minhash near-dup graph — the Pregel-style iterative
-    * graph op (Page et al. 1999; used in practice as a document-quality /
-    * centrality feature over dedup and link graphs in pretraining
-    * pipelines). Nodes = all docs, edges = the LSH candidate pairs (both
-    * directions); k power-iteration rounds in FIXED-POINT integer
-    * arithmetic: rank scaled by 10^6, damping 85/100, every division an
-    * integer `div` — both engines compute bit-identical ranks (floor-div
-    * ≡ DuckDB `//` on the non-negative domain), so the oracle is an exact
-    * hash gate, not a tolerance compare. Dangling/singleton docs hold the
-    * teleport mass 150000 (= 0.15 × 10^6); mass lost to floors is the
-    * standard fixed-point tradeoff and identical cross-engine.
-    *
-    * Runs [[pageRankBsp]] with every document a seed (uniform init and
-    * uniform teleport).
-    */
-  def pageRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    import s.implicits._
-    pageRankBsp(
-      Tables.documents(s, dir).select($"doc_id".as("v"), lit(true).as("seed")),
-      minhashCandidates(s, dir), iters)
-      .select($"v".as("doc_id"), $"rank").orderBy($"doc_id")
-  }
-
-  val pageRankSql: String = {
-    def iterCte(k: Int): String =
-      s""",
-         |r$k AS (
-         |  SELECT n.doc_id,
-         |    (150000 + (85 * COALESCE(c.s, 0)) // 100)::BIGINT AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS doc_id, sum(r.r // deg.d)::BIGINT AS s
-         |    FROM edges e JOIN r${k - 1} r ON e.src = r.doc_id
-         |                 JOIN deg ON deg.src = e.src
-         |    GROUP BY e.dst) c ON n.doc_id = c.doc_id)""".stripMargin
-    minhashPairsCte +
-      """, nodes AS (SELECT doc_id FROM documents),
-        |edges AS (SELECT a AS src, b AS dst FROM pairs
-        |          UNION ALL SELECT b, a FROM pairs),
-        |deg AS (SELECT src, count(*)::BIGINT AS d FROM edges GROUP BY src),
-        |r0 AS (SELECT doc_id, 1000000::BIGINT AS r FROM nodes)""".stripMargin +
-      (1 to 3).map(iterCte).mkString +
-      "\nSELECT doc_id, r AS rank FROM r3 ORDER BY doc_id"
-  }
-
-  /** The one fixed-point BSP PageRank loop, shared by [[pageRank]],
-    * [[pprRank]], [[pprRankGroups]], [[pageRankGroups]] and
-    * [[textRankTerms]]: `nodes0` carries (v, seed), `pairs` the undirected
-    * edge list (a, b); returns the FULL (v, seed, rank) frame. With
-    * seed = true on every node this is exactly plain PageRank (uniform
-    * init 10^6, uniform teleport 150000); with a seed subset it is
-    * Haveliwala PPR. [[pprLoop]] layers the top-20 readout on top.
-    *
-    * Scale: the canonical BSP shape — per round one join of edges against
-    * the rank frame (both hash-partitioned on src), one map-side
-    * combinable contribution sum keyed by dst, one left join back to
-    * nodes. Edges and nodes are computed ONCE and pinned (every round
-    * re-reads them — the multiply-consumed-frame rule); the rank frame
-    * itself is consumed once per round, so it stays lazy and the whole
-    * k-round recursion is one DAG. At real scale this is exactly
-    * GraphX/Pregel's data layout: partition edges by src, ship ranks to
-    * edges, aggregate messages by dst.
-    */
-  private def pageRankBsp(nodes0: DataFrame, pairs0: DataFrame,
-      iters: Int): DataFrame = {
-    val s = nodes0.sparkSession
-    import s.implicits._
-    val pairs = pairs0.pin(true) // union reads it twice
-    val edges = pairs.select($"a".as("src"), $"b".as("dst"))
-      .unionByName(pairs.select($"b".as("src"), $"a".as("dst")))
-      .pin(true) // re-joined every round (2 narrow columns)
-    // fold the out-degree INTO the |V|-row node/rank frame: the degree
-    // divides the SOURCE's rank, so it rides the rank frame through each
-    // round's join instead of being duplicated onto every out-edge — the
-    // per-round edge exchange drops a column of |E| longs and the setup
-    // pays a |V|-row join instead of re-joining the |E|-row edge frame
-    // (guide §2.3: shuffle keys and small metadata, not per-edge copies)
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("d"))
-    val nodes = nodes0
-      .join(deg.withColumnRenamed("src", "v"), Seq("v"), "left")
-      .select($"v", $"seed", coalesce($"d", lit(1L)).as("d"))
-      .pin(true) // re-read every round (rank join base, degree inline)
-    var r = nodes.select($"v", $"d",
-      when($"seed", 1000000L).otherwise(0L).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = edges
-        .join(r.withColumnRenamed("v", "src"), "src")
-        .select($"dst".as("v"), expr("r div d").as("c"))
-        .groupBy($"v").agg(sum($"c").as("s"))
-      r = nodes.join(contrib, Seq("v"), "left")
-        .select($"v", $"seed", $"d",
-          (when($"seed", 150000L).otherwise(0L)
-            + expr("(85 * coalesce(s, 0)) div 100")).as("r"))
-    }
-    r.select($"v", $"seed", $"r".as("rank"))
-  }
-
-  private def pprLoop(nodes0: DataFrame, pairs0: DataFrame,
-      iters: Int): DataFrame =
-    pageRankBsp(nodes0, pairs0, iters)
-      .orderBy(col("rank").desc, col("v")).limit(20)
-
-  /** Personalized PageRank (Haveliwala, WWW'02; the push/seed-restart
-    * form every "find documents related to THIS set" expansion uses —
-    * seed-set expansion over the near-dup graph is how a curation
-    * pipeline grows a topic slice from a few exemplars). Identical BSP
-    * loop, fixed-point arithmetic, and edge layout as [[pageRank]]; the
-    * ONE change is the teleport vector: mass restarts only at the seed
-    * set (here the deterministic ~1% slice doc_id ≡ 0 mod 97), so rank
-    * measures proximity to the seeds instead of global centrality —
-    * non-seed docs hold rank 0 until contribution mass reaches them,
-    * and anything outside the seeds' components stays exactly 0 (the
-    * locality that makes PPR the scalable choice: mass touches only
-    * the seeds' neighborhoods, however big the graph).
-    *
-    * Output: the top-20 ranked docs (rank desc, doc_id) with their seed
-    * flag — the expansion list, seeds naturally at the top.
-    */
-  def pprRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    import s.implicits._
-    pprLoop(
-      Tables.documents(s, dir)
-        .select($"doc_id".as("v"), ($"doc_id" % 97L === 0L).as("seed")),
-      minhashCandidates(s, dir), iters)
-      .withColumnRenamed("v", "doc_id")
-  }
-
   /** TextRank keyword extraction (Mihalcea & Tarau, EMNLP'04): plain
     * PageRank over the word CO-OCCURRENCE graph — nodes are terms, edges
     * connect terms co-occurring within a 3-token window (the
@@ -3933,8 +3633,8 @@ object TextOps {
     * co-occurrence graph, not raw frequency (a frequent term with a
     * narrow context ranks below a moderately frequent hub — the property
     * that made TextRank the default non-learned keyword extractor).
-    * Same fixed-point integer BSP as [[pageRank]] via the shared
-    * [[pageRankBsp]] (seed = true everywhere ≡ uniform teleport), so the
+    * Same fixed-point integer BSP as [[Graph.pageRank]] via the shared
+    * [[Graph.pageRankBsp]] (seed = true everywhere ≡ uniform teleport), so the
     * oracle is an exact hash gate.
     *
     * Scale: one corpus window pass emits the pairs; the support-≥5
@@ -3960,25 +3660,14 @@ object TextOps {
       .groupBy($"a", $"b").agg(count(lit(1)).as("n_ab"))
       .filter($"n_ab" >= 5L)
       .select($"a", $"b")
-      .pin(true) // node derivation + both union branches of the BSP
-    val nodes = edges.select($"a".as("v"))
-      .unionByName(edges.select($"b".as("v"))).distinct()
-    pageRankBsp(nodes.select($"v", lit(true).as("seed")), edges, iters)
+      .pin // node derivation + both union branches of the BSP
+    pageRankBsp(degrees(edges).select($"v", lit(true).as("seed")),
+      edges, iters)
       .select($"v".as("term"), $"rank")
       .orderBy($"rank".desc, $"term").limit(20)
   }
 
-  val textRankTermsSql: String = {
-    def iterCte(k: Int): String =
-      s""",
-         |r$k AS (
-         |  SELECT n.v,
-         |    (150000 + (85 * COALESCE(c.s, 0)) // 100)::BIGINT AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS v, sum(r.r // deg.d)::BIGINT AS s
-         |    FROM edges e JOIN r${k - 1} r ON e.src = r.v
-         |                 JOIN deg ON deg.src = e.src
-         |    GROUP BY e.dst) c ON n.v = c.v)""".stripMargin
+  val textRankTermsSql: String =
     """WITH toks AS (
       |  SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos,
       |         unnest(string_split(text, ' ')) AS w
@@ -3991,635 +3680,11 @@ object TextOps {
       |  SELECT least(w, x) AS a, greatest(w, x) AS b FROM (
       |    SELECT w, unnest([w1, w2, w3]) AS x FROM ld) z
       |  WHERE x IS NOT NULL AND w <> x),
-      |e AS (SELECT a, b FROM prs GROUP BY a, b HAVING count(*) >= 5),
-      |nodes AS (SELECT a AS v FROM e UNION SELECT b FROM e),
-      |edges AS (SELECT a AS src, b AS dst FROM e
-      |          UNION ALL SELECT b, a FROM e),
-      |deg AS (SELECT src, count(*)::BIGINT AS d FROM edges GROUP BY src),
-      |r0 AS (SELECT v, 1000000::BIGINT AS r FROM nodes)""".stripMargin +
-      (1 to 3).map(iterCte).mkString +
-      "\nSELECT v AS term, r AS rank FROM r3 " +
-      "ORDER BY rank DESC, term LIMIT 20"
-  }
-
-  /** [[pprRank]] on the CONTRACTED group graph — the production form
-    * (the doc-level loop is the oracle-exact per-document surface, but
-    * ScalingBench measured both doc-level BSP loops at ×27–28 wall for
-    * ×10 docs: the clique-structured doc graph's ~87M-edge checkpointed
-    * adjacency saturates local unified memory, the same degeneracy that
-    * moved triangles/LPA/ANF/MST to groups). Nodes are signature groups
-    * (gid = min member doc_id), seeds the gid ≡ 0 mod 97 slice, and the
-    * expansion list reads "which duplicate FAMILIES are near the seed
-    * families" — the cluster-level answer a curation pipeline acts on.
-    */
-  def pprRankGroups(s: SparkSession, dir: String,
-      iters: Int = 3): DataFrame = {
-    import s.implicits._
-    pprLoop(
-      groupFrame(s, dir)
-        .select($"gid".as("v"), ($"gid" % 97L === 0L).as("seed")),
-      groupPairsOf(s, dir), iters)
-      .withColumnRenamed("v", "gid")
-  }
-
-  /** [[pageRank]] on the CONTRACTED group graph — the production plain
-    * PageRank (VERDICT r13 #1: the doc-level BSP measured ×28 wall at
-    * ×10 docs because the clique-structured near-dup doc graph's
-    * checkpointed adjacency grows ~quadratically in family width; its
-    * PPR twin's contracted sibling [[pprRankGroups]] measured FLAT).
-    * Same fixed-point arithmetic and per-round plan as [[pageRank]] via
-    * the shared [[pageRankBsp]] with every node a seed (uniform init +
-    * uniform teleport ≡ plain PageRank); nodes are signature groups
-    * (gid = min member doc_id), so rank reads "how central is this
-    * duplicate FAMILY in the near-dup graph" — the form a curation
-    * pipeline ranks clusters by. The doc-level [[pageRank]] stays as the
-    * oracle-exact per-document surface.
-    */
-  def pageRankGroups(s: SparkSession, dir: String,
-      iters: Int = 3): DataFrame = {
-    import s.implicits._
-    pageRankBsp(
-      groupFrame(s, dir).select($"gid".as("v"), lit(true).as("seed")),
-      groupPairsOf(s, dir), iters)
-      .select($"v".as("gid"), $"rank").orderBy($"gid")
-  }
-
-  // lazy: groupGraphCte is declared later in the object
-  lazy val pageRankGroupsSql: String = {
-    def iterCte(k: Int): String =
-      s""",
-         |r$k AS (
-         |  SELECT n.gid,
-         |    (150000 + (85 * COALESCE(c.s, 0)) // 100)::BIGINT AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS gid, sum(r.r // deg.d)::BIGINT AS s
-         |    FROM edges e JOIN r${k - 1} r ON e.src = r.gid
-         |                 JOIN deg ON deg.src = e.src
-         |    GROUP BY e.dst) c ON n.gid = c.gid)""".stripMargin
-    groupGraphCte +
-      """, nodes AS (SELECT gid FROM g),
-        |edges AS (SELECT a AS src, b AS dst FROM gp
-        |          UNION ALL SELECT b, a FROM gp),
-        |deg AS (SELECT src, count(*)::BIGINT AS d FROM edges GROUP BY src),
-        |r0 AS (SELECT gid, 1000000::BIGINT AS r FROM nodes)""".stripMargin +
-      (1 to 3).map(iterCte).mkString +
-      "\nSELECT gid, r AS rank FROM r3 ORDER BY gid"
-  }
-
-  // lazy: groupGraphCte is declared later in the object (initialization
-  // order), same reason sqSpearmanSql is lazy in Similarity
-  lazy val pprRankGroupsSql: String = {
-    def iterCte(k: Int): String =
-      s""",
-         |p$k AS (
-         |  SELECT n.gid, n.seed,
-         |    (CASE WHEN n.seed THEN 150000 ELSE 0 END
-         |     + (85 * COALESCE(c.s, 0)) // 100)::BIGINT AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS gid, sum(r.r // deg.d)::BIGINT AS s
-         |    FROM edges e JOIN p${k - 1} r ON e.src = r.gid
-         |                 JOIN deg ON deg.src = e.src
-         |    GROUP BY e.dst) c ON n.gid = c.gid)""".stripMargin
-    groupGraphCte +
-      """, nodes AS (SELECT gid, gid % 97 = 0 AS seed FROM g),
-        |edges AS (SELECT a AS src, b AS dst FROM gp
-        |          UNION ALL SELECT b, a FROM gp),
-        |deg AS (SELECT src, count(*)::BIGINT AS d FROM edges GROUP BY src),
-        |p0 AS (SELECT gid, seed,
-        |         (CASE WHEN seed THEN 1000000 ELSE 0 END)::BIGINT AS r
-        |       FROM nodes)""".stripMargin +
-      (1 to 3).map(iterCte).mkString +
-      "\nSELECT gid, seed, r AS rank FROM p3 " +
-      "ORDER BY rank DESC, gid LIMIT 20"
-  }
-
-  val pprRankSql: String = {
-    def iterCte(k: Int): String =
-      s""",
-         |p$k AS (
-         |  SELECT n.doc_id, n.seed,
-         |    (CASE WHEN n.seed THEN 150000 ELSE 0 END
-         |     + (85 * COALESCE(c.s, 0)) // 100)::BIGINT AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS doc_id, sum(r.r // deg.d)::BIGINT AS s
-         |    FROM edges e JOIN p${k - 1} r ON e.src = r.doc_id
-         |                 JOIN deg ON deg.src = e.src
-         |    GROUP BY e.dst) c ON n.doc_id = c.doc_id)""".stripMargin
-    minhashPairsCte +
-      """, nodes AS (SELECT doc_id, doc_id % 97 = 0 AS seed
-        |            FROM documents),
-        |edges AS (SELECT a AS src, b AS dst FROM pairs
-        |          UNION ALL SELECT b, a FROM pairs),
-        |deg AS (SELECT src, count(*)::BIGINT AS d FROM edges GROUP BY src),
-        |p0 AS (SELECT doc_id, seed,
-        |         (CASE WHEN seed THEN 1000000 ELSE 0 END)::BIGINT AS r
-        |       FROM nodes)""".stripMargin +
-      (1 to 3).map(iterCte).mkString +
-      "\nSELECT doc_id, seed, r AS rank FROM p3 " +
-      "ORDER BY rank DESC, doc_id LIMIT 20"
-  }
-
-  /** Triangle counting over the minhash near-dup graph (node-iterator++ /
-    * MPS degree orientation — Suri & Vassilvitskii 2011, the MapReduce
-    * formulation): per doc, the number of triangles it belongs to — the
-    * local-density signal that separates template/boilerplate families
-    * (clique-like, high count) from chance LSH collisions (count 0).
-    *
-    * The algorithm IS the scale story: every edge is oriented from its
-    * lower-(degree, id) endpoint to its higher one, wedges are built only
-    * between OUT-neighbors of the shared low-degree center, and one join
-    * against the oriented edge list closes them. Out-degree under this
-    * orientation is O(√m) even for a hub vertex, so wedge volume is
-    * O(m^1.5) worst-case instead of the Σd(v)² blow-up a star vertex
-    * causes under naive id-orientation — this is the standard distributed
-    * triangle algorithm at any scale. Because the closing edge {u,w} gets
-    * the SAME orientation rule, wedge order ((du,u) < (dw,w)) aligns with
-    * it and the close is a single equi-join, no per-row normalization.
-    * Pure integer compares; each triangle is found exactly once (from its
-    * unique lowest-(degree,id) vertex), so the oracle is an exact hash
-    * gate.
-    */
-  /** Group-contracted near-dup graph: edges (a, b), a < b, between
-    * identical-signature GROUPS, not documents. The doc-level near-dup
-    * graph is clique-structured by construction (every member of an
-    * identical-signature group pairs with every other) and graph
-    * algorithms over cliques are degenerate AND super-linear: measured at
-    * sf0.1 the doc-level wedge join emitted ~4·10⁹ rows, filled the disk
-    * and killed the SparkContext after 400 s. Groups collapse each clique
-    * to one node (sf0.1: 5000 docs → 1048 groups, 4.36M doc pairs → 12k
-    * group edges, max degree 83), leaving the informative structure at a
-    * size that scales with content diversity instead of duplication
-    * volume. Shared by [[triangles]] and [[commonNeighbors]].
-    */
-  /** Signature-group node frame (s0, s1, gid), checkpointed — the
-    * contracted graph's vertex set (one node per identical-signature
-    * group, gid = min member doc_id), shared by [[groupPairsOf]] and
-    * [[componentSizes]].
-    */
-  private[operators] def groupFrame(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bs = minhashOf(s, dir).select($"doc_id",
-      bandSig((0 until 4).map(i => col(s"mh$i"))).as("s0"),
-      bandSig((4 until 8).map(i => col(s"mh$i"))).as("s1"))
-    bs.groupBy($"s0", $"s1").agg(min($"doc_id").as("gid"))
-      .pin(true) // both sides of both band joins
-  }
-
-  /** Edges of the contracted graph from an already-built group frame. */
-  private def groupPairsFromG(g: DataFrame): DataFrame = {
-    val s = g.sparkSession
-    import s.implicits._
-    def bandEdges(c: String): DataFrame =
-      g.select(col(c).as("k"), $"gid".as("a"))
-        .join(g.select(col(c).as("k"), $"gid".as("b")), Seq("k"))
-        .filter($"a" < $"b").select($"a", $"b")
-    bandEdges("s0").unionByName(bandEdges("s1")).distinct()
-  }
-
-  private[operators] def groupPairsOf(s: SparkSession, dir: String): DataFrame =
-    groupPairsFromG(groupFrame(s, dir))
-
-  /** Component-size histogram of the contracted near-dup graph: how many
-    * connected components have exactly k signature groups — the
-    * macro-structure readout (is duplication a sea of small families or
-    * one giant percolated blob?) a pipeline checks BEFORE trusting
-    * cluster-level dedup actions; a giant component here is the signal
-    * that banding parameters percolated (the 16-bit simhash failure mode,
-    * measured in PLANS.md) and cluster-keeper logic would nuke unrelated
-    * content. Singleton groups (no edges) are size-1 components — the
-    * histogram conserves the vertex set.
-    *
-    * Scale: components via the same large-star/small-star contraction as
-    * [[dedupClusters]] (O(log n) rounds on the contracted graph), then
-    * two |nodes|-bounded aggs. Oracle: reachability as a recursive CTE.
-    */
-  def componentSizes(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val g = groupFrame(s, dir)
-    val (labels, _) = starContraction(
-      g.select($"gid"), groupPairsFromG(g))
-    labels.groupBy($"label").agg(count(lit(1)).as("size"))
-      .groupBy($"size").agg(count(lit(1)).as("n_components"))
-      .orderBy($"size")
-  }
-
-  // lazy: groupGraphCte is declared further down the object and plain-val
-  // initialization order would read it as null here
-  lazy val componentSizesSql: String =
-    groupGraphCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      """, edges AS (SELECT a, b FROM gp UNION ALL SELECT b, a FROM gp),
-        |reach(node, m) AS (
-        |  SELECT gid, gid FROM g
-        |  UNION
-        |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
-        |lab AS (SELECT node, min(m) AS label FROM reach GROUP BY node),
-        |sz AS (SELECT label, count(*)::BIGINT AS size FROM lab
-        |       GROUP BY label)
-        |SELECT size, count(*)::BIGINT AS n_components
-        |FROM sz GROUP BY size ORDER BY size""".stripMargin
-
-  /** deg(v, d) of an undirected a<b edge list, and each edge oriented
-    * low-(deg,id) → high-(deg,id) as (src, dst, dd), carrying the dst's
-    * degree so wedge ordering and the closing join need no further lookup
-    * — the MPS orientation, unpinned. */
-  private[graft] def orientEdges(pairs: DataFrame): (DataFrame, DataFrame) = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    val nodes = pairs.select($"a".as("v")).unionByName(pairs.select($"b".as("v")))
-    val deg = nodes.groupBy($"v").agg(count(lit(1)).as("d"))
-    val edges = pairs
-      .join(deg.select($"v".as("a"), $"d".as("da")), "a")
-      .join(deg.select($"v".as("b"), $"d".as("db")), "b")
-      .select(
-        when($"da" < $"db" || ($"da" === $"db" && $"a" < $"b"),
-          struct($"a".as("src"), $"b".as("dst"), $"db".as("dd")))
-          .otherwise(struct($"b".as("src"), $"a".as("dst"), $"da".as("dd")))
-          .as("e"))
-      .select($"e.src", $"e.dst", $"e.dd")
-    (deg, edges)
-  }
-
-  /** Triangle tuples (v, u, w) of an undirected a<b edge list via the
-    * degree-oriented MPS wedge close — the tri frame is pinned (three
-    * member-explode consumers in the node close; three edge-explode
-    * consumers in the truss support).
-    */
-  private def triTuples(pairs: DataFrame): (DataFrame, DataFrame) = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    val (deg, edges) = orientEdges(pairs)
-    val oriented = edges.pin(true) // consumed three times: both wedge sides + close
-    val wedges = oriented.as("x")
-      .join(oriented.as("y"), $"x.src" === $"y.src" &&
-        ($"x.dd" < $"y.dd" || ($"x.dd" === $"y.dd" && $"x.dst" < $"y.dst")))
-      .select($"x.src".as("v"), $"x.dst".as("u"), $"y.dst".as("w"))
-    val tri = wedges
-      .join(oriented.as("z"), $"u" === $"z.src" && $"w" === $"z.dst")
-      .select($"v", $"u", $"w")
-      .pin(true)
-    (deg, tri)
-  }
-
-  /** Degree frame + per-node triangle membership over a checkpointed
-    * (a, b) edge frame — the MPS degree-oriented machinery shared by
-    * [[triangles]] and [[clusteringCoeff]]. Returns (deg(v, d),
-    * triCnt(group_id, tri_cnt)); triCnt covers only nodes in ≥1 triangle.
-    */
-  private def degAndTriCounts(pairs: DataFrame): (DataFrame, DataFrame) = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    val (deg, tri) = triTuples(pairs)
-    val triCnt = tri.select($"v".as("group_id"))
-      .unionByName(tri.select($"u".as("group_id")))
-      .unionByName(tri.select($"w".as("group_id")))
-      .groupBy($"group_id").agg(count(lit(1)).as("tri_cnt"))
-    (deg, triCnt)
-  }
-
-  def triangles(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = groupPairsOf(s, dir)
-      .pin(true) // degree agg + both orientation joins
-    degAndTriCounts(pairs)._2.orderBy($"group_id")
-  }
-
-  /** Local clustering coefficient per node of the group-contracted
-    * near-dup graph: cc = 2·T(v) / (d(v)·(d(v)−1)) in exact integer
-    * permille — the template-family cohesion score (cc ≈ 1: the node's
-    * neighborhood is one template clique even after contraction; cc ≈ 0:
-    * a hub stitching unrelated families, usually an LSH-band artifact
-    * worth auditing). Complements [[kcore]] (which finds dense REGIONS)
-    * with a per-node density that needs no iteration.
-    *
-    * Scale: triangle membership via the same degree-oriented MPS wedge
-    * close as [[triangles]] (wedge volume O(m^1.5) on the contracted
-    * graph), one degree agg, one |nodes|-row left join — no new shuffle
-    * shape beyond what triangles already pays.
-    */
-  def clusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = groupPairsOf(s, dir)
-      .pin(true) // degree agg + both orientation joins
-    ccExactOnEdges(pairs)
-  }
-
-  /** The exact close of [[clusteringCoeff]] parameterized by an edge
-    * list (`a`,`b` undirected pairs, already pinned) — shared by the
-    * corpus-derived gate query and ScalingBench's synthetic heavy-tail
-    * decade measurement.
-    */
-  private[graft] def ccExactOnEdges(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    val (deg, triCnt) = degAndTriCounts(pairs)
-    deg.join(triCnt, $"v" === $"group_id", "left")
-      .select($"v".as("group_id"), $"d".as("deg"),
-        coalesce($"tri_cnt", lit(0L)).as("tri_cnt"))
-      .withColumn("cc_pm",
-        when($"deg" >= 2L,
-          floor(lit(2000L) * $"tri_cnt" / ($"deg" * ($"deg" - 1L)))
-            .cast("long"))
-          .otherwise(0L))
-      .orderBy($"group_id")
-  }
-
-  /** Degree-CAPPED variant of [[clusteringCoeff]] — the wedge-volume
-    * mitigation for the 100×+ regime. The exact MPS close's cost is the
-    * wedge volume Σ od(v)² over oriented out-degrees; it is the first
-    * corpus-volume term to surface in the graph battery (×12.7 wall at
-    * ×100, PLANS.md round 11) because a few high-out-degree sources
-    * dominate the sum. Here each source emits wedges only among its
-    * `cap` FIRST out-neighbors in the (dd, dst) wedge order — a
-    * deterministic prefix, not a sample — bounding wedge volume by
-    * cap·m while the closing join is unchanged.
-    *
-    * Exactness contract: every node whose oriented out-degree is ≤ cap
-    * emits ALL its wedges, so any triangle whose minimum-degree vertex
-    * is below the cap is counted exactly; triangles are only ever
-    * UNDER-counted (cc_pm is a lower bound), and with cap ≥ max
-    * out-degree the output is bit-identical to [[clusteringCoeff]]
-    * (CappedWedgeSpec). The per-source neighbor rank is a window
-    * PARTITIONED by src — never a global window.
-    *
-    * Not oracle-gated: the exact form remains the gate; this is the
-    * measured scale path (ScalingBench `graph_clustering_capped`).
-    */
-  def clusteringCoeffCapped(s: SparkSession, dir: String,
-      cap: Int): DataFrame = {
-    val pairs = groupPairsOf(s, dir)
-      .pin(true) // degree agg + both orientation joins
-    ccCappedOnEdges(pairs, cap)
-  }
-
-  /** The capped close of [[clusteringCoeffCapped]] parameterized by an
-    * edge list, for the same two callers as [[ccExactOnEdges]]. */
-  private[graft] def ccCappedOnEdges(pairs: DataFrame,
-      cap: Int): DataFrame = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val nodes = pairs.select($"a".as("v")).unionByName(pairs.select($"b".as("v")))
-    val deg = nodes.groupBy($"v").agg(count(lit(1)).as("d"))
-    val oriented = pairs
-      .join(deg.select($"v".as("a"), $"d".as("da")), "a")
-      .join(deg.select($"v".as("b"), $"d".as("db")), "b")
-      .select(
-        when($"da" < $"db" || ($"da" === $"db" && $"a" < $"b"),
-          struct($"a".as("src"), $"b".as("dst"), $"db".as("dd")))
-          .otherwise(struct($"b".as("src"), $"a".as("dst"), $"da".as("dd")))
-          .as("e"))
-      .select($"e.src", $"e.dst", $"e.dd")
-      .pin(true) // rank pass + wedge sides + close
-    // deterministic per-source prefix in the wedge order (dd, dst)
-    val ranked = oriented
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy($"dd", $"dst")))
-      .filter($"rn" <= cap)
-      .drop("rn")
-      .pin(true) // both wedge sides
-    val wedges = ranked.as("x")
-      .join(ranked.as("y"), $"x.src" === $"y.src" &&
-        ($"x.dd" < $"y.dd" || ($"x.dd" === $"y.dd" && $"x.dst" < $"y.dst")))
-      .select($"x.src".as("v"), $"x.dst".as("u"), $"y.dst".as("w"))
-    val tri = wedges
-      .join(oriented.as("z"), $"u" === $"z.src" && $"w" === $"z.dst")
-      .select($"v", $"u", $"w")
-      .pin(true)
-    val triCnt = tri.select($"v".as("group_id"))
-      .unionByName(tri.select($"u".as("group_id")))
-      .unionByName(tri.select($"w".as("group_id")))
-      .groupBy($"group_id").agg(count(lit(1)).as("tri_cnt"))
-    deg.join(triCnt, $"v" === $"group_id", "left")
-      .select($"v".as("group_id"), $"d".as("deg"),
-        coalesce($"tri_cnt", lit(0L)).as("tri_cnt"))
-      .withColumn("cc_pm",
-        when($"deg" >= 2L,
-          floor(lit(2000L) * $"tri_cnt" / ($"deg" * ($"deg" - 1L)))
-            .cast("long"))
-          .otherwise(0L))
-      .orderBy($"group_id")
-  }
-
-  /** Degree HISTOGRAM of the near-dup candidate graph in log2 buckets
-    * (bucket = bitlength(degree), isolated docs in bucket 0): the
-    * graph-shape diagnostic a pipeline reads BEFORE running contraction /
-    * PageRank at scale — a heavy tail here predicts skewed shuffles and
-    * says whether the salting/AQE-skew machinery will be needed.
-    * Bit-length bucketing keeps the histogram integer-exact (no float
-    * log); counting every document (left join) makes the histogram
-    * conserve the corpus.
-    */
-  def degreeHist(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = minhashCandidates(s, dir)
-    val ends = pairs.select($"a".as("v"))
-      .unionByName(pairs.select($"b".as("v")))
-    val deg = Tables.documents(s, dir).select($"doc_id".as("v"))
-      .join(ends.groupBy($"v").agg(count(lit(1)).as("d")), Seq("v"), "left")
-      .select($"v", coalesce($"d", lit(0L)).as("d"))
-    deg.withColumn("bucket",
-        when($"d" === 0, 0L).otherwise(length(bin($"d")).cast("long")))
-      .groupBy($"bucket")
-      .agg(count(lit(1)).as("n_nodes"), min($"d").as("min_deg"),
-        max($"d").as("max_deg"))
-      .orderBy($"bucket")
-  }
-
-  val degreeHistSql: String = minhashPairsCte +
-    """,
-      |nd AS (SELECT a AS v FROM pairs UNION ALL SELECT b FROM pairs),
-      |dg AS (SELECT v, count(*)::BIGINT AS d FROM nd GROUP BY v),
-      |alldeg AS (
-      |  SELECT doc.doc_id AS v, coalesce(dg.d, 0)::BIGINT AS deg
-      |  FROM documents doc LEFT JOIN dg ON doc.doc_id = dg.v)
-      |SELECT (CASE WHEN deg = 0 THEN 0
-      |             ELSE length(bin(deg)) END)::BIGINT AS bucket,
-      |  count(*)::BIGINT AS n_nodes, min(deg)::BIGINT AS min_deg,
-      |  max(deg)::BIGINT AS max_deg
-      |FROM alldeg GROUP BY 1 ORDER BY bucket""".stripMargin
-
-  /** CTE prefix ending in `gp(a, b)` — the group-contracted graph, shared
-    * by the triangles and common-neighbors oracles.
-    */
-  private val groupGraphCte: String = tokCte + {
-    val cols = A.indices.map(j =>
-      s"min((${A(j)} * code + ${B(j)}) % 2147483647) AS mh$j").mkString(", ")
-    def sig(i: Int) =
-      (1 until 4).foldLeft(s"mh${i}")((acc, j) =>
-        s"(($acc) % $M * 131071 + mh${i + j}) % $M")
-    s""", sigs AS (SELECT doc_id, $cols FROM codes GROUP BY doc_id),
-       |bsig AS (SELECT doc_id, ${sig(0)} AS s0, ${sig(4)} AS s1 FROM sigs),
-       |g AS (SELECT s0, s1, min(doc_id) AS gid FROM bsig GROUP BY s0, s1),
-       |gp AS (
-       |  SELECT DISTINCT l.gid AS a, r.gid AS b
-       |  FROM g l JOIN g r ON (l.s0 = r.s0 OR l.s1 = r.s1)
-       |    AND l.gid < r.gid)
-       |""".stripMargin
-  }
-
-  /** k-TRUSS of the contracted near-dup graph (Cohen 2008; the Graph
-    * Challenge kernel), k = 4: the maximal subgraph in which every
-    * surviving edge sits in ≥ k−2 = 2 triangles OF THE SUBGRAPH — the
-    * edge-level density filter one notch stricter than triangle counting
-    * (an edge in 2 triangles of the full graph can still die when its
-    * supporting edges are peeled). Where [[kcore]] keeps dense NODES and
-    * [[triangles]] scores them, the truss keeps certified-dense EDGES —
-    * the subgraph a cluster-keeper can act on without the bridge-edge
-    * false merges plain CC inherits.
-    *
-    * Shape: iterative peel — each round one degree-oriented MPS wedge
-    * close ([[triTuples]], wedge volume O(m^1.5)) restricted to the
-    * surviving edges, one 3-way edge explode + keyed count, one filter.
-    * ROUNDS ARE PINNED at 5 in BOTH engines (peeling is idempotent at
-    * the fixpoint, so extra rounds are no-ops) and the Spark side
-    * REQUIRES convergence by round 5 — the same fixed-round doctrine as
-    * the MST/PCA oracles, without a data-dependent round count leaking
-    * into the oracle string.
-    */
-  def truss(s: SparkSession, dir: String, k: Int = 4): DataFrame = {
-    import s.implicits._
-    def support(edges: DataFrame): DataFrame = {
-      val (_, tri) = triTuples(edges)
-      val mem = tri.select(least($"v", $"u").as("a"),
-          greatest($"v", $"u").as("b"))
-        .unionByName(tri.select(least($"v", $"w").as("a"),
-          greatest($"v", $"w").as("b")))
-        .unionByName(tri.select(least($"u", $"w").as("a"),
-          greatest($"u", $"w").as("b")))
-      mem.groupBy($"a", $"b").agg(count(lit(1)).as("support"))
-    }
-    var edges = groupPairsOf(s, dir).pin(true)
-    var lastCount = -1L
-    for (_ <- 1 to 5) {
-      lastCount = edges.count()
-      edges = support(edges).filter($"support" >= k - 2L)
-        .select($"a", $"b").pin(true)
-    }
-    require(edges.count() == lastCount,
-      "truss peeling did not converge within the 5 pinned rounds")
-    support(edges).filter($"support" >= k - 2L)
-      .orderBy($"a", $"b")
-  }
-
-  val trussSql: String = groupGraphCte + {
-    val rounds = (1 to 6).map { r =>
-      s""",
-         |tr$r AS MATERIALIZED (
-         |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |  FROM e${r - 1} e1
-         |  JOIN e${r - 1} e2 ON e2.a = e1.a AND e2.b > e1.b
-         |  JOIN e${r - 1} e3 ON e3.a = e1.b AND e3.b = e2.b),
-         |sup$r AS MATERIALIZED (
-         |  SELECT a, b, count(*)::BIGINT AS support FROM (
-         |    SELECT x AS a, y AS b FROM tr$r
-         |    UNION ALL SELECT x, z FROM tr$r
-         |    UNION ALL SELECT y, z FROM tr$r) m GROUP BY 1, 2),
-         |e$r AS MATERIALIZED (
-         |  SELECT s.a, s.b FROM sup$r s WHERE s.support >= 2)""".stripMargin
-    }.mkString
-    s""", e0 AS MATERIALIZED (SELECT a, b FROM gp)$rounds
-       |SELECT a, b, support FROM sup6
-       |WHERE support >= 2 ORDER BY a, b""".stripMargin
-  }
-
-  val trianglesSql: String = groupGraphCte + {
-    s""", nd AS (SELECT a AS v FROM gp UNION ALL SELECT b FROM gp),
-       |dg AS (SELECT v, count(*)::BIGINT AS d FROM nd GROUP BY v),
-       |o AS (SELECT
-       |    CASE WHEN da.d < db.d OR (da.d = db.d AND p.a < p.b)
-       |         THEN p.a ELSE p.b END AS src,
-       |    CASE WHEN da.d < db.d OR (da.d = db.d AND p.a < p.b)
-       |         THEN p.b ELSE p.a END AS dst
-       |  FROM gp p JOIN dg da ON p.a = da.v JOIN dg db ON p.b = db.v),
-       |od AS (SELECT o.src, o.dst, dg.d AS dd FROM o JOIN dg ON o.dst = dg.v),
-       |tri AS (
-       |  SELECT x.src AS v, x.dst AS u, y.dst AS ww
-       |  FROM od x JOIN od y ON x.src = y.src
-       |    AND (x.dd < y.dd OR (x.dd = y.dd AND x.dst < y.dst))
-       |  WHERE EXISTS (SELECT 1 FROM od z
-       |                WHERE z.src = x.dst AND z.dst = y.dst)),
-       |mem AS (SELECT v AS gid FROM tri
-       |        UNION ALL SELECT u FROM tri
-       |        UNION ALL SELECT ww FROM tri)
-       |SELECT gid AS group_id, count(*)::BIGINT AS tri_cnt
-       |FROM mem GROUP BY gid ORDER BY group_id""".stripMargin
-  }
-
-  val clusteringCoeffSql: String = groupGraphCte + {
-    s""", nd AS (SELECT a AS v FROM gp UNION ALL SELECT b FROM gp),
-       |dg AS (SELECT v, count(*)::BIGINT AS d FROM nd GROUP BY v),
-       |o AS (SELECT
-       |    CASE WHEN da.d < db.d OR (da.d = db.d AND p.a < p.b)
-       |         THEN p.a ELSE p.b END AS src,
-       |    CASE WHEN da.d < db.d OR (da.d = db.d AND p.a < p.b)
-       |         THEN p.b ELSE p.a END AS dst
-       |  FROM gp p JOIN dg da ON p.a = da.v JOIN dg db ON p.b = db.v),
-       |od AS (SELECT o.src, o.dst, dg.d AS dd FROM o JOIN dg ON o.dst = dg.v),
-       |tri AS (
-       |  SELECT x.src AS v, x.dst AS u, y.dst AS ww
-       |  FROM od x JOIN od y ON x.src = y.src
-       |    AND (x.dd < y.dd OR (x.dd = y.dd AND x.dst < y.dst))
-       |  WHERE EXISTS (SELECT 1 FROM od z
-       |                WHERE z.src = x.dst AND z.dst = y.dst)),
-       |mem AS (SELECT v AS gid FROM tri
-       |        UNION ALL SELECT u FROM tri
-       |        UNION ALL SELECT ww FROM tri),
-       |tc AS (SELECT gid, count(*)::BIGINT AS tri_cnt FROM mem GROUP BY gid)
-       |SELECT dg.v AS group_id, dg.d AS deg,
-       |  coalesce(tc.tri_cnt, 0)::BIGINT AS tri_cnt,
-       |  (CASE WHEN dg.d >= 2
-       |        THEN (2000 * coalesce(tc.tri_cnt, 0)) // (dg.d * (dg.d - 1))
-       |        ELSE 0 END)::BIGINT AS cc_pm
-       |FROM dg LEFT JOIN tc ON dg.v = tc.gid ORDER BY group_id""".stripMargin
-  }
-
-  /** Link prediction over the group-contracted near-dup graph: the top-20
-    * NON-adjacent group pairs by common-neighbor count — the classic
-    * triadic-closure predictor ("these two template families share many
-    * near-dup neighbors but never collided in a band; check them") that a
-    * dedup pipeline uses to audit LSH recall: a high-common-neighbor
-    * non-edge is exactly where banding most likely missed a true pair.
-    *
-    * Scale: wedges enumerate each center's neighbor pairs (Σ C(d,2) —
-    * bounded on the CONTRACTED graph, whose max degree scales with
-    * content diversity, not duplication volume; [[degreeHist]] is the
-    * pre-flight check), count per candidate pair with one mergeable agg,
-    * anti-join the existing edges out, then TakeOrdered for the top-20.
-    * No all-pairs step anywhere.
-    */
-  def commonNeighbors(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val pairs = groupPairsOf(s, dir)
-      .pin(true) // symmetrization + the non-edge anti-join
-    val sym = pairs.select($"a".as("c"), $"b".as("x"))
-      .unionByName(pairs.select($"b".as("c"), $"a".as("x")))
-      .pin(true) // both wedge sides
-    val cand = sym.as("l")
-      .join(sym.as("r"), $"l.c" === $"r.c" && $"l.x" < $"r.x")
-      .select($"l.x".as("a"), $"r.x".as("b"))
-      .groupBy($"a", $"b").agg(count(lit(1)).as("common"))
-    val top = cand.join(pairs, Seq("a", "b"), "left_anti")
-      .orderBy($"common".desc, $"a", $"b").limit(20)
-    top.withColumn("rnk", row_number().over(
-        Window.orderBy($"common".desc, $"a", $"b"))) // 20-row frame
-      .orderBy($"rnk")
-  }
-
-  val commonNeighborsSql: String = groupGraphCte +
-    """, sym AS (SELECT a AS c, b AS x FROM gp
-      |         UNION ALL SELECT b, a FROM gp),
-      |cand AS (
-      |  SELECT l.x AS a, r.x AS b, count(*)::BIGINT AS common
-      |  FROM sym l JOIN sym r ON l.c = r.c AND l.x < r.x
-      |  GROUP BY 1, 2),
-      |ne AS (SELECT c.a, c.b, c.common FROM cand c
-      |       LEFT JOIN gp ON gp.a = c.a AND gp.b = c.b
-      |       WHERE gp.a IS NULL),
-      |top AS (SELECT * FROM ne ORDER BY common DESC, a, b LIMIT 20)
-      |SELECT a, b, common,
-      |  row_number() OVER (ORDER BY common DESC, a, b) AS rnk
-      |FROM top ORDER BY rnk""".stripMargin
+      |e AS (SELECT a, b FROM prs GROUP BY a, b HAVING count(*) >= 5)"""
+      .stripMargin +
+      pageRankCtes("e", "SELECT a AS v FROM e UNION SELECT b FROM e", "v",
+        personalized = false) +
+      "\nSELECT v AS term, r AS rank FROM r3 ORDER BY rank DESC, term LIMIT 20"
 
   /** WINNOWING document fingerprints (Schleimer, Wilkerson & Aiken,
     * SIGMOD'03 — the MOSS algorithm): per doc, 4-token-gram rolling
@@ -4660,7 +3725,7 @@ object TextOps {
       .withColumn("full", lead($"h", 3).over(dw))
       .filter($"full".isNotNull) // complete windows only
       .select($"doc_id", $"m".as("fp")).distinct()
-      .pin(true) // df prune + both sides of the match join
+      .pin // df prune + both sides of the match join
     val keep = wmin.groupBy($"fp").agg(count(lit(1)).as("df"))
       .filter($"df" <= 10L && $"df" >= 2L).select($"fp")
     val pruned = wmin.join(keep, Seq("fp"))
@@ -4712,359 +3777,24 @@ object TextOps {
        |  row_number() OVER (ORDER BY n_shared DESC, a, b) AS rnk
        |FROM top ORDER BY rnk""".stripMargin
 
-  /** Resource-Allocation link-prediction index (Zhou, Lü & Zhang, Eur.
-    * Phys. J. B 2009) over the contracted near-dup graph: for each
-    * NON-adjacent group pair, Σ over common neighbors z of 1/deg(z) —
-    * [[commonNeighbors]] re-weighted so a promiscuous hub certifies
-    * nothing while a low-degree bridge certifies a lot (RA beats
-    * Adamic–Adar's 1/log deg on most link-prediction benchmarks, and its
-    * reciprocal is integer-exact where 1/log is not: each term is
-    * floor(10⁹/deg z), so the cross-engine sum needs no float fold). The
-    * pipeline reading: "which duplicate families are ABOUT to merge" —
-    * the pairs a slightly looser banding would connect next.
-    *
-    * Scale: the same one-wedge-join shape as [[commonNeighbors]] /
-    * triangles (volume Σ deg z², the measured family); the per-z term
-    * rides the wedge join's left leg, so scoring adds no extra pass.
-    */
-  def resourceAlloc(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val pairs = groupPairsOf(s, dir)
-      .pin(true) // symmetrization + the non-edge anti-join
-    val sym = pairs.select($"a".as("c"), $"b".as("x"))
-      .unionByName(pairs.select($"b".as("c"), $"a".as("x")))
-      .pin(true) // degree agg + both wedge sides
-    val deg = sym.groupBy($"c").agg(count(lit(1)).as("d"))
-    val wz = sym.join(deg, Seq("c"))
-      .withColumn("t", expr("1000000000 div d"))
-      .select($"c", $"x", $"t")
-    val cand = wz.as("l")
-      .join(wz.as("r"), $"l.c" === $"r.c" && $"l.x" < $"r.x")
-      .select($"l.x".as("a"), $"r.x".as("b"), $"l.t".as("t"))
-      .groupBy($"a", $"b").agg(sum($"t").as("ra"))
-    val top = cand.join(pairs, Seq("a", "b"), "left_anti")
-      .orderBy($"ra".desc, $"a", $"b").limit(20)
-    top.withColumn("rnk", row_number().over(
-        Window.orderBy($"ra".desc, $"a", $"b"))) // 20-row frame
-      .orderBy($"rnk")
-  }
-
-  val resourceAllocSql: String = groupGraphCte +
-    """, sym AS (SELECT a AS c, b AS x FROM gp
-      |         UNION ALL SELECT b, a FROM gp),
-      |dg AS (SELECT c, count(*)::BIGINT AS d FROM sym GROUP BY c),
-      |wz AS (SELECT s.c, s.x, (1000000000 // d.d)::BIGINT AS t
-      |       FROM sym s JOIN dg d ON s.c = d.c),
-      |cand AS (
-      |  SELECT l.x AS a, r.x AS b, sum(l.t)::BIGINT AS ra
-      |  FROM wz l JOIN wz r ON l.c = r.c AND l.x < r.x
-      |  GROUP BY 1, 2),
-      |ne AS (SELECT c.a, c.b, c.ra FROM cand c
-      |       LEFT JOIN gp ON gp.a = c.a AND gp.b = c.b
-      |       WHERE gp.a IS NULL),
-      |top AS (SELECT * FROM ne ORDER BY ra DESC, a, b LIMIT 20)
-      |SELECT a, b, ra,
-      |  row_number() OVER (ORDER BY ra DESC, a, b) AS rnk
-      |FROM top ORDER BY rnk""".stripMargin
-
-  /** Label-propagation communities (Raghavan et al. 2007, synchronous
-    * variant, 3 fixed rounds) over the group-contracted near-dup graph,
-    * scored by Newman modularity (Newman & Girvan 2004) in EXACT
-    * integers — the community-structure readout between
-    * [[componentSizes]]' too-coarse components and [[triangles]]' too-
-    * local clique signal: which template FAMILIES exist inside the giant
-    * component, and is the partition better than chance? Each node
-    * adopts the plurality label of its neighbors (ties → smallest
-    * label, so the fixed-point is deterministic without per-node
-    * randomness); after 3 rounds each community c reports its size,
-    * internal edge count e_c, degree mass d_c, and the modularity cell
-    * 4m·e_c − d_c² — Q·4m² = Σ_c cells, so the float-free cells ARE the
-    * score (headroom: d_c < 3·10⁹ keeps d_c² in int64).
-    *
-    * Scale: per round ONE edge⋈label join + a (node,label)-keyed count +
-    * a per-node struct-max argmax — all mergeable keyed aggs, linear in
-    * |E| per round, never per-source or all-pairs; the label frame is
-    * checkpointed so 3-round lineage stays flat. Modularity is two keyed
-    * aggs over the final labels plus an m-sized literal.
-    */
-  def lpaModularity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = groupPairsOf(s, dir)
-      .pin(true) // symmetrization, e_in count, and m
-    val m = pairs.count()
-    val sym = pairs.select($"a".as("v"), $"b".as("u"))
-      .unionByName(pairs.select($"b".as("v"), $"a".as("u")))
-      .pin(true) // re-joined every round
-    val deg = sym.groupBy($"v").agg(count(lit(1)).as("d"))
-      .pin(true) // initial labels + the degree-mass agg
-    var lbl = deg.select($"v", $"v".as("lbl"))
-    for (_ <- 1 to 3) {
-      lbl = sym
-        .join(lbl.select($"v".as("u"), $"lbl"), "u")
-        .groupBy($"v", $"lbl").agg(count(lit(1)).as("cnt"))
-        .groupBy($"v")
-        .agg(max(struct($"cnt", (-$"lbl").as("neg"))).as("w"))
-        .select($"v", (-$"w.neg").as("lbl"))
-        .pin(true) // flatten the per-round lineage
-    }
-    val dsum = lbl.join(deg, "v")
-      .groupBy($"lbl")
-      .agg(count(lit(1)).as("size"), sum($"d").as("d_sum"))
-    val ein = pairs
-      .join(lbl.select($"v".as("a"), $"lbl".as("la")), "a")
-      .join(lbl.select($"v".as("b"), $"lbl".as("lb")), "b")
-      .filter($"la" === $"lb")
-      .groupBy($"la".as("lbl")).agg(count(lit(1)).as("e_in"))
-    dsum.join(ein, Seq("lbl"), "left")
-      .select($"lbl".as("label"), $"size", $"d_sum",
-        coalesce($"e_in", lit(0L)).as("e_in"),
-        (lit(4L * m) * coalesce($"e_in", lit(0L)) - $"d_sum" * $"d_sum")
-          .as("q_cell"))
-      .orderBy($"label")
-  }
-
-  /** One synchronous LPA round as SQL: plurality neighbor label with
-    * smallest-label tie-break, argmax encoded scalar (cnt·2⁴⁰ − (lbl+1):
-    * max score ⇔ max cnt then min lbl; decoded exactly) — semantics, not
-    * implementation, mirrored from the Spark struct-max.
-    */
-  val lpaModularitySql: String = {
-    val S = 1099511627776L // 2^40 > any gid+1 at gate scale
-    def round(k: Int): String =
-      s""",
-         |v$k AS (SELECT s.v, l.lbl, count(*)::BIGINT AS cnt
-         |        FROM sym s JOIN l${k - 1} l ON s.u = l.v
-         |        GROUP BY s.v, l.lbl),
-         |l$k AS (SELECT v,
-         |    ((max(cnt * $S - (lbl + 1)) // $S + 1) * $S
-         |     - max(cnt * $S - (lbl + 1)) - 1)::BIGINT AS lbl
-         |  FROM v$k GROUP BY v)""".stripMargin
-    groupGraphCte +
-      """, nd AS (SELECT a AS v FROM gp UNION ALL SELECT b FROM gp),
-        |dg AS (SELECT v, count(*)::BIGINT AS d FROM nd GROUP BY v),
-        |sym AS (SELECT a AS v, b AS u FROM gp
-        |        UNION ALL SELECT b, a FROM gp),
-        |mm AS (SELECT count(*)::BIGINT AS m FROM gp),
-        |l0 AS (SELECT v, v AS lbl FROM dg)""".stripMargin +
-      (1 to 3).map(round).mkString +
-      """,
-        |dsum AS (SELECT l.lbl, count(*)::BIGINT AS size,
-        |           sum(dg.d)::BIGINT AS d_sum
-        |         FROM l3 l JOIN dg ON l.v = dg.v GROUP BY l.lbl),
-        |ein AS (SELECT la.lbl, count(*)::BIGINT AS e_in
-        |        FROM gp JOIN l3 la ON gp.a = la.v
-        |                JOIN l3 lb ON gp.b = lb.v
-        |        WHERE la.lbl = lb.lbl GROUP BY la.lbl)
-        |SELECT d.lbl AS label, d.size, d.d_sum,
-        |  coalesce(e.e_in, 0)::BIGINT AS e_in,
-        |  (4 * mm.m * coalesce(e.e_in, 0) - d.d_sum * d.d_sum)::BIGINT
-        |    AS q_cell
-        |FROM dsum d LEFT JOIN ein e ON d.lbl = e.lbl CROSS JOIN mm
-        |ORDER BY label""".stripMargin
-  }
-
-  /** Minimum spanning forest of the contracted near-dup graph under
-    * exact Jaccard DISTANCE (Borůvka 1926 — the parallel MST algorithm;
-    * distributed form as in Karloff–Suri–Vassilvitskii MRC) — the
-    * single-linkage hierarchy backbone (HDBSCAN's first stage): the MSF
-    * orders near-dup families by merge distance, so cutting it at any
-    * threshold yields exactly the single-linkage clustering at that
-    * radius without re-running anything. Edge weight = 1000 − exact
-    * distinct-token Jaccard permille between the groups' representative
-    * docs, totally ordered by (w, a, b) so the forest is UNIQUE and
-    * both engines converge to the same edge set.
-    *
-    * Scale: Borůvka is the MST algorithm that parallelizes — per round
-    * every component picks its lightest outgoing edge (one keyed
-    * struct-min agg), selected edges contract via [[starContraction]]
-    * (O(log n) keyed rounds), and the component count at least HALVES
-    * per round, so rounds ≤ log₂(largest component). Every step is a
-    * keyed join/agg over the edge frame — no sequential union-find, no
-    * driver-side edges. The oracle mirrors the rounds exactly (7 ≥
-    * ⌈log₂ 77⌉, the gate's largest component), each contraction a
-    * recursive reachability CTE.
-    */
-  def mstForest(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val edges = jaccardEdges(s, dir).pin(true)
-    // ACTIVE frame (r16): the edge frame carries its endpoints' CURRENT
-    // component labels inline (ca, cb) and is re-labeled in place each
-    // round — the r15 form kept a separate |V|-row (v → c) vertex map,
-    // re-tagged the FULL edge frame against it every round (2 joins over
-    // a non-shrinking input), and paid one more pinned job per round to
-    // maintain the map. The active frame only ever SHRINKS (cross-edges
-    // that become internal are filtered out for good), relabeling joins
-    // the ≤#components-row label frame, and the vertex map is gone —
-    // one fewer pinned action per round and monotonically less shuffle
-    // volume, which is what round-latency-bound Borůvka actually pays.
-    var act = edges.select($"a", $"b", $"w", $"a".as("ca"), $"b".as("cb"))
-      .pin(true)
-    val sel = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // round cap = ⌈log₂ |V|⌉ (VERDICT r14 #2): Borůvka at least halves
-    // every component per round, so ⌈log₂(largest component)⌉ ≤
-    // ⌈log₂ |V|⌉ rounds always suffice — the generic 32 was a fuse sized
-    // for no particular input, and each surplus probe round costs a full
-    // tag+min-agg action after convergence. (Gate: |V| = 1291 → cap 11;
-    // the data-driven mr.isEmpty termination usually fires far earlier —
-    // the cap only bounds the adversarial worst case at ANY scale, where
-    // a fixed 7 would silently truncate the forest on a bigger corpus.)
-    val nVertices = edges.select($"a".as("v"))
-      .unionByName(edges.select($"b".as("v"))).distinct().count()
-    val cap = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
-      math.max(1L, nVertices - 1)))
-    var done = false
-    var rounds = 0
-    while (!done && rounds < cap) {
-      val e = struct($"w", $"a", $"b", $"ca", $"cb").as("e")
-      val mr = act.select($"ca".as("cc"), e)
-        .unionByName(act.select($"cb".as("cc"), e))
-        .groupBy($"cc").agg(min($"e").as("e"))
-        .select($"e.w", $"e.a", $"e.b", $"e.ca", $"e.cb")
-        .distinct() // the two endpoints of a mutual-min edge pick it twice
-        .pin(true)
-      // termination fused into the min-edge agg (VERDICT r13 #8): mr is
-      // empty iff act is (every component with a cross edge picks one),
-      // and mr is pinned anyway
-      if (mr.isEmpty) done = true
-      else {
-        sel += mr.select($"a", $"b", $"w")
-        // contraction = components of the selected-edge graph, via the
-        // shared starContraction (O(log) keyed rounds). A pointer-
-        // doubling contraction (the textbook Borůvka step) was tried
-        // and reverted: with pins per doubling it pays MORE fixed job
-        // latency than starContraction, and without them the self-join
-        // chain doubles the plan per step and froze the optimizer —
-        // gate wall here is round-latency-bound, not volume-bound, and
-        // starContraction is the proven form.
-        // Every ACTIVE component is an endpoint of some selected edge
-        // (it picked one), so the selected-edge node set covers every
-        // label the relabel below can meet — no separate vertex frame.
-        val (labels, _) = starContraction(
-          mr.select($"ca".as("c")).unionByName(mr.select($"cb".as("c")))
-            .distinct(),
-          mr.select($"ca".as("a"), $"cb".as("b")))
-        // broadcast: the label frame is ≤#components rows (halving each
-        // round) but reaches Catalyst as an unestimated join lineage —
-        // without the hint it can fall to a sort-merge join that
-        // shuffles the whole active frame twice per round
-        val lab = labels.select($"c", $"label")
-        act = act
-          .join(broadcast(lab.select($"c".as("ca"), $"label".as("la"))),
-            Seq("ca"))
-          .join(broadcast(lab.select($"c".as("cb"), $"label".as("lb"))),
-            Seq("cb"))
-          .filter($"la" =!= $"lb")
-          .select($"a", $"b", $"w", $"la".as("ca"), $"lb".as("cb"))
-          .pin(true)
-        rounds += 1
-      }
-    }
-    if (sel.isEmpty) edges.select($"a", $"b", $"w").limit(0)
-    else sel.reduce(_.unionByName(_)).orderBy($"a", $"b")
-  }
-
-  /** Borůvka mirrored round-by-round in SQL: per round the component-
-    * tagged active edges, a row_number()=1 lightest-outgoing pick per
-    * component (the struct-min), and a recursive-reachability
-    * contraction of the selected edges; 7 rounds ≥ ⌈log₂(largest gate
-    * component)⌉, later rounds no-op once converged.
-    */
-  lazy val mstForestSql: String = {
-    // every multiply-referenced CTE is AS MATERIALIZED: DuckDB inlines
-    // plain CTEs per reference, and with each round reading the previous
-    // round's labels twice the 7-round chain would inline the whole
-    // band-join pipeline 2^7 times (measured: file-handle exhaustion)
-    def round(r: Int): String =
-      s""",
-         |t$r AS MATERIALIZED (
-         |        SELECT e.a, e.b, e.w, x.c AS ca, y.c AS cb
-         |        FROM ew e JOIN c${r - 1} x ON e.a = x.v
-         |                  JOIN c${r - 1} y ON e.b = y.v
-         |        WHERE x.c <> y.c),
-         |s$r AS (SELECT w, a, b, ca, cb FROM (
-         |          SELECT cc, w, a, b, ca, cb,
-         |            row_number() OVER (PARTITION BY cc ORDER BY w, a, b)
-         |              AS rn
-         |          FROM (SELECT ca AS cc, w, a, b, ca, cb FROM t$r
-         |                UNION ALL SELECT cb, w, a, b, ca, cb FROM t$r))
-         |        WHERE rn = 1),
-         |m$r AS MATERIALIZED (SELECT DISTINCT w, a, b, ca, cb FROM s$r),
-         |y$r AS MATERIALIZED (SELECT ca AS x, cb AS y FROM m$r
-         |        UNION ALL SELECT cb, ca FROM m$r),
-         |r$r(n, m) AS (SELECT x, x FROM y$r
-         |        UNION SELECT y$r.x, r$r.m FROM y$r JOIN r$r ON y$r.y = r$r.n),
-         |l$r AS MATERIALIZED (SELECT n, min(m) AS lbl FROM r$r GROUP BY n),
-         |c$r AS MATERIALIZED (
-         |        SELECT p.v, coalesce(l$r.lbl, p.c) AS c
-         |        FROM c${r - 1} p LEFT JOIN l$r ON p.c = l$r.n)""".stripMargin
-    groupGraphCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      """, sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-        |it AS (SELECT p.a, p.b, count(*) AS c
-        |       FROM gp p JOIN tok x ON x.doc_id = p.a
-        |                 JOIN tok y ON y.doc_id = p.b AND y.w = x.w
-        |       GROUP BY 1, 2),
-        |ew AS MATERIALIZED (
-        |       SELECT p.a, p.b,
-        |         (1000 - (1000 * coalesce(it.c, 0))
-        |          // (sa.n + sb.n - coalesce(it.c, 0)))::BIGINT AS w
-        |       FROM gp p LEFT JOIN it ON p.a = it.a AND p.b = it.b
-        |       JOIN sz sa ON sa.doc_id = p.a
-        |       JOIN sz sb ON sb.doc_id = p.b),
-        |vn AS (SELECT DISTINCT v FROM
-        |        (SELECT a AS v FROM ew UNION ALL SELECT b FROM ew)),
-        |c0 AS MATERIALIZED (SELECT v, v AS c FROM vn)""".stripMargin +
-      (1 to 7).map(round).mkString +
-      """
-        |SELECT a, b, w FROM (
-        |  SELECT w, a, b FROM m1 UNION ALL SELECT w, a, b FROM m2
-        |  UNION ALL SELECT w, a, b FROM m3 UNION ALL SELECT w, a, b FROM m4
-        |  UNION ALL SELECT w, a, b FROM m5 UNION ALL SELECT w, a, b FROM m6
-        |  UNION ALL SELECT w, a, b FROM m7)
-        |ORDER BY a, b""".stripMargin
-  }
-
-  /** Shared weighted edge frame of the contracted near-dup graph —
-    * (a, b, w) with w = 1000 − exact distinct-token Jaccard permille of
-    * the group representatives; the input of [[mstForest]] and
-    * [[singleLinkage]].
-    */
-  private def jaccardEdges(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = groupPairsOf(s, dir).pin(true)
-    val tok = tokens(s, dir).pin(true) // intersection join + size agg
-    val sz = tok.groupBy($"doc_id").agg(count(lit(1)).as("n")).pin(true)
-    val it = pairs
-      .join(tok.select($"doc_id".as("a"), $"w"), "a")
-      .join(tok.select($"doc_id".as("b"), $"w"), Seq("b", "w"))
-      .groupBy($"a", $"b").agg(count(lit(1)).as("c"))
-    pairs
-      .join(it, Seq("a", "b"), "left")
-      .join(sz.select($"doc_id".as("a"), $"n".as("na")), "a")
-      .join(sz.select($"doc_id".as("b"), $"n".as("nb")), "b")
-      .select($"a", $"b",
-        (lit(1000L) - expr(
-          "(1000 * coalesce(c, 0)) div (na + nb - coalesce(c, 0))")).as("w"))
-  }
-
   /** Single-linkage clusters at radius τ=100 (Jaccard ≥ 0.9): the
     * dendrogram CUT the MSF encodes — connected components of the
     * τ-thresholded weighted graph, which equal the components of the
     * MSF's ≤τ edges (the single-linkage/MST duality; SingleLinkageSpec
-    * asserts the equivalence against [[mstForest]] directly). Output is
+    * asserts the equivalence against [[Graph.mstForest]] directly). Output is
     * the cluster-size histogram plus the within-radius edge count — the
     * "how much does the corpus clump at this similarity?" readout a
     * dedup policy sweeps before picking its merge radius.
     *
     * Scale: the threshold filter prunes BEFORE contraction, so the CC
-    * runs on the sparse ≤τ subgraph ([[starContraction]], O(log n)
+    * runs on the sparse ≤τ subgraph ([[Graph.starContraction]], O(log n)
     * keyed rounds); the histogram is two bounded aggs. Cheaper than
     * cutting a materialized MSF — same answer by the duality.
     */
   def singleLinkage(s: SparkSession, dir: String, tau: Long = 100L)
       : DataFrame = {
     import s.implicits._
-    val edges = jaccardEdges(s, dir).filter($"w" <= tau).pin(true)
+    val edges = jaccardEdges(s, dir).filter($"w" <= tau).pin
     val nodes = groupFrame(s, dir).select($"gid")
     val (labels, _) = starContraction(nodes, edges.select($"a", $"b"))
     labels.groupBy($"label").agg(count(lit(1)).as("size"))
@@ -5073,321 +3803,16 @@ object TextOps {
   }
 
   lazy val singleLinkageSql: String =
-    groupGraphCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      """, sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-        |it AS (SELECT p.a, p.b, count(*) AS c
-        |       FROM gp p JOIN tok x ON x.doc_id = p.a
-        |                 JOIN tok y ON y.doc_id = p.b AND y.w = x.w
-        |       GROUP BY 1, 2),
-        |ew AS MATERIALIZED (
-        |       SELECT p.a, p.b,
-        |         (1000 - (1000 * coalesce(it.c, 0))
-        |          // (sa.n + sb.n - coalesce(it.c, 0)))::BIGINT AS w
-        |       FROM gp p LEFT JOIN it ON p.a = it.a AND p.b = it.b
-        |       JOIN sz sa ON sa.doc_id = p.a
-        |       JOIN sz sb ON sb.doc_id = p.b),
+    jaccardEdgesCte +
+      s""",
         |kept AS (SELECT a, b FROM ew WHERE w <= 100),
-        |sym AS (SELECT a, b FROM kept UNION ALL SELECT b, a FROM kept),
-        |reach(node, m) AS (
-        |  SELECT gid, gid FROM g
-        |  UNION
-        |  SELECT s.a, r.m FROM sym s JOIN reach r ON s.b = r.node),
+        |${undirectedCte("sym", "kept")},
+        |${reachCte("sym", "gid, gid FROM g", "s")},
         |lab AS (SELECT node, min(m) AS label FROM reach GROUP BY node),
         |csz AS (SELECT label, count(*)::BIGINT AS size FROM lab
         |        GROUP BY label)
         |SELECT size, count(*)::BIGINT AS n_clusters
         |FROM csz GROUP BY size ORDER BY size""".stripMargin
-
-  /** Multi-source BFS over the group-contracted near-dup graph: minimum
-    * hop distance (≤ 3) from the seed set (every 17th group id) — the
-    * "contamination blast radius" question: if these seed documents are
-    * tainted (benchmark leakage, spam cluster, licensing), which template
-    * families are within k near-dup hops and should be quarantined too?
-    *
-    * Scale: the canonical BSP frontier shape (same layout as
-    * [[pageRank]]): per round ONE join of the current distance frame
-    * against the symmetrized edge list and ONE min-agg, checkpointed so
-    * the 3-round lineage stays flat. d_{i+1} = min(d_i ∪ expand(d_i)) —
-    * re-expanding the full reached set instead of the delta frontier costs
-    * one extra scan of an already-small frame and keeps the operator a
-    * pure dataflow (no driver-side frontier bookkeeping); a cluster run
-    * with large k switches to delta frontiers, same DAG per round.
-    */
-  def bfsReach(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = groupPairsOf(s, dir)
-      .pin(true) // node set + both edge orientations
-    val sym = pairs.select($"a".as("u"), $"b".as("v"))
-      .unionByName(pairs.select($"b".as("u"), $"a".as("v")))
-      .pin(true) // re-joined every round
-    var dist = sym.select($"u".as("v")).distinct()
-      .filter($"v" % 17 === 0)
-      .select($"v", lit(0L).as("dist"))
-      .pin(true)
-    for (h <- 1 to 3) {
-      // explicit subquery aliases on BOTH join sides: dist derives from
-      // sym, so without them the rebuilt (un-pinned) plan resolves
-      // sym("v") against two candidate attributes and throws
-      // AnalysisException — the pinned build only worked because the
-      // checkpoint minted fresh attribute ids (VERDICT r12 #3)
-      dist = dist.unionByName(
-          dist.as("d").join(sym.as("s"), $"d.v" === $"s.u")
-            .select($"s.v".as("v"), lit(h.toLong).as("dist")))
-        .groupBy($"v").agg(min($"dist").as("dist"))
-        .pin(true)
-    }
-    dist.select($"v".as("group_id"), $"dist").orderBy($"group_id")
-  }
-
-  val bfsReachSql: String = groupGraphCte + {
-    val rounds = (1 to 3).map { i =>
-      s"""d$i AS MATERIALIZED (
-         |  SELECT v, min(dist)::BIGINT AS dist FROM (
-         |    SELECT v, dist FROM d${i - 1}
-         |    UNION ALL
-         |    SELECT s.v, d.dist + 1
-         |    FROM d${i - 1} d JOIN sym s ON d.v = s.u) z
-         |  GROUP BY v)""".stripMargin
-    }.mkString(",\n")
-    s""", sym AS (SELECT a AS u, b AS v FROM gp
-       |         UNION ALL SELECT b, a FROM gp),
-       |d0 AS MATERIALIZED (
-       |  SELECT DISTINCT u AS v, 0::BIGINT AS dist FROM sym
-       |  WHERE u % 17 = 0),
-       |$rounds
-       |SELECT v AS group_id, dist FROM d3 ORDER BY group_id""".stripMargin
-  }
-
-  /** Diameter probe by DOUBLE-SWEEP BFS (Magnien–Latapy–Habib): BFS from
-    * a fixed start node, jump to the farthest node found, BFS again — the
-    * second eccentricity is the standard tight lower bound on the
-    * component's diameter (exact on trees, near-exact on real graphs),
-    * at the cost of exactly two BFS runs instead of all-pairs. The number
-    * a pipeline reads to budget iterative algorithms: PageRank mixing,
-    * label-prop rounds, and contraction depth all scale with it.
-    *
-    * Rounds are PINNED at 6 per sweep (the oracle replays the identical
-    * prefix; the gate graph's components are far shallower), so the
-    * result is a lower bound twice over — by sweep count and by round
-    * cap — which is exactly how the probe is used at scale. Start node =
-    * the smallest group id; ties on farthest break toward the smaller
-    * node, so the whole probe is deterministic.
-    *
-    * Scale: same per-round one-join + min-agg shape as [[bfsReach]],
-    * checkpointed per round; the argmax picks are 1-row TakeOrdereds.
-    */
-  def diameterProbe(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = groupPairsOf(s, dir)
-      .pin(true)
-    val sym = pairs.select($"a".as("u"), $"b".as("v"))
-      .unionByName(pairs.select($"b".as("u"), $"a".as("v")))
-      .pin(true)
-    def bfs(seed: DataFrame): DataFrame = {
-      var dist = seed.pin(true)
-      for (h <- 1 to 6) {
-        // same explicit-alias hygiene as [[bfsReach]]: survive an
-        // un-pinned rebuild without relying on checkpoint-fresh ids
-        dist = dist.unionByName(
-            dist.as("d").join(sym.as("s"), $"d.v" === $"s.u")
-              .select($"s.v".as("v"), lit(h.toLong).as("dist")))
-          .groupBy($"v").agg(min($"dist").as("dist"))
-          .pin(true)
-      }
-      dist
-    }
-    def far(dist: DataFrame): DataFrame =
-      dist.orderBy($"dist".desc, $"v").limit(1)
-    val start = sym.select($"u".as("v")).agg(min($"v").as("v"))
-      .select($"v", lit(0L).as("dist"))
-    val f1 = far(bfs(start)).pin(true)
-    val f2 = far(bfs(f1.select($"v", lit(0L).as("dist"))))
-    f1.select($"v".as("sweep1_far"), $"dist".as("sweep1_ecc"))
-      .crossJoin(f2.select($"v".as("sweep2_far"),
-        $"dist".as("diameter_lb")))
-  }
-
-  val diameterProbeSql: String = groupGraphCte + {
-    def sweep(tag: String, seedSql: String): String = {
-      val rounds = (1 to 6).map { i =>
-        s"""$tag$i AS MATERIALIZED (
-           |  SELECT v, min(dist)::BIGINT AS dist FROM (
-           |    SELECT v, dist FROM $tag${i - 1}
-           |    UNION ALL
-           |    SELECT s.v, d.dist + 1
-           |    FROM $tag${i - 1} d JOIN sym s ON d.v = s.u) z
-           |  GROUP BY v)""".stripMargin
-      }.mkString(",\n")
-      s"""${tag}0 AS MATERIALIZED ($seedSql),
-         |$rounds""".stripMargin
-    }
-    s""", sym AS (SELECT a AS u, b AS v FROM gp
-       |         UNION ALL SELECT b, a FROM gp),
-       |${sweep("x", "SELECT min(u) AS v, 0::BIGINT AS dist FROM sym")},
-       |p1 AS (SELECT v, dist FROM x6 ORDER BY dist DESC, v LIMIT 1),
-       |${sweep("y", "SELECT v, 0::BIGINT AS dist FROM p1")},
-       |p2 AS (SELECT v, dist FROM y6 ORDER BY dist DESC, v LIMIT 1)
-       |SELECT p1.v AS sweep1_far, p1.dist AS sweep1_ecc,
-       |  p2.v AS sweep2_far, p2.dist AS diameter_lb
-       |FROM p1 CROSS JOIN p2""".stripMargin
-  }
-
-  /** Approximate Neighborhood Function via HyperBall (Palmer/Gibbons/
-    * Faloutsos ANF, KDD 2002; Boldi/Vigna "In-Core Computation of
-    * Geometric Centralities with HyperBall", 2013 — the algorithm behind
-    * the Facebook four-degrees measurement): per node of the contracted
-    * near-dup graph, the ESTIMATED size of its radius-t ball for
-    * t = 0..3, maintained as a 64-register HyperLogLog per node whose
-    * per-round update is register-wise max over neighbors —
-    * B_{t+1}(v) = B_t(v) ⊔ ⊔_{u~v} B_t(u). The per-node ball-growth
-    * profile is the blast-radius/centrality read the exact per-source
-    * BFS cannot deliver at scale (all-sources BFS is |V|·BFS; HyperBall
-    * is |V|·64 longs per round whatever |V| is).
-    *
-    * Determinism & parity: registers use the [[Sketches.avalanche]]d
-    * 31-bit hash and the exact dyadic estimator of
-    * [[Sketches.hllDistinct]] (no linear-counting ln()), so register
-    * contents — and the estimates — hash-match DuckDB bit-for-bit. The
-    * raw estimator's small-n bias (visible at t=0, where every true ball
-    * is 1) ships as part of the result surface, exactly as in
-    * `sketch_hll_distinct`; `n_zero` accompanies each estimate for
-    * callers that apply their own correction.
-    *
-    * Scale: per round ONE edge join + one (v, register)-keyed mergeable
-    * max — the BSP register-merge shape, linear in |E| with constant 64;
-    * the estimate read-off is a nodes×64 fold. Nothing is per-source.
-    */
-  def anfHyperball(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = groupPairsOf(s, dir)
-      .pin(true)
-    val sym = pairs.select($"a".as("u"), $"b".as("v"))
-      .unionByName(pairs.select($"b".as("u"), $"a".as("v")))
-      .pin(true)
-    val nodes = sym.select($"u".as("v")).distinct().pin(true)
-    val hv = Sketches.avalanche(
-      Sketches.h($"v", 2654435761L, 12007L), 1779033703L, 514229L)
-    var regs = nodes
-      .select($"v", (hv % 64L).as("j"), floor(hv / 64L).cast("long").as("w"))
-      .withColumn("mx",
-        when($"w" === 0L, lit(26)).otherwise(lit(26) - length(bin($"w"))))
-      .select($"v", $"j", $"mx")
-      .pin(true)
-    val perRound = (0 to 3).map { t =>
-      if (t > 0) {
-        regs = regs.unionByName(
-            regs.as("r").join(sym.as("s"), $"r.v" === $"s.u")
-              .select($"s.v".as("v"), $"r.j".as("j"), $"r.mx".as("mx")))
-          .groupBy($"v", $"j").agg(max($"mx").as("mx"))
-          .pin(true)
-      }
-      // readout WITHOUT the 64-way explode + left join the r16 shape
-      // paid per t (4 × a |V|·64-row join): a PRESENT register always
-      // has mx ≥ 1 (w = 0 maps to 26, w ≥ 1 to 26 − bitlength ≥ 1), so
-      // n_zero = 64 − #present and each absent register contributes
-      // exactly 2⁻⁰ = 1.0 to the sum. Every node has ≥ 1 register from
-      // round 0, so the groupBy covers all nodes. Exactness: 2⁻ᵐˣ terms
-      // are multiples of 2⁻²⁶ with total < 2⁶, so every partial sum is
-      // exact in double — summation order cannot change est_ball.
-      regs.groupBy($"v")
-        .agg(count(lit(1)).as("cnt"), sum(pow(lit(2.0), -$"mx")).as("sp"))
-        .select($"v".as("group_id"), lit(t.toLong).as("t"),
-          (lit(64L) - $"cnt").as("n_zero"),
-          floor(lit(0.709) * lit(4096.0)
-            / ($"sp" + (lit(64L) - $"cnt").cast("double"))).cast("long")
-            .as("est_ball"))
-    }
-    perRound.reduce(_ unionByName _).orderBy($"group_id", $"t")
-  }
-
-  val anfHyperballSql: String = groupGraphCte + {
-    val rounds = (1 to 3).map { i =>
-      s"""r$i AS MATERIALIZED (
-         |  SELECT v, j, max(mx) AS mx FROM (
-         |    SELECT v, j, mx FROM r${i - 1}
-         |    UNION ALL
-         |    SELECT s.v, r.j, r.mx FROM r${i - 1} r JOIN sym s ON r.v = s.u) z
-         |  GROUP BY v, j)""".stripMargin
-    }.mkString(",\n")
-    val ests = (0 to 3).map { t =>
-      s"""SELECT f.v AS group_id, $t::BIGINT AS t,
-         |  sum(CASE WHEN f.mx = 0 THEN 1 ELSE 0 END)::BIGINT AS n_zero,
-         |  floor(0.709::DOUBLE * 4096::DOUBLE
-         |        / sum(pow(2.0::DOUBLE, -f.mx)))::BIGINT AS est_ball
-         |FROM (SELECT nodes.v, u.j, coalesce(r$t.mx, 0) AS mx
-         |      FROM nodes CROSS JOIN (SELECT unnest(range(0, 64)) AS j) u
-         |      LEFT JOIN r$t ON r$t.v = nodes.v AND r$t.j = u.j) f
-         |GROUP BY f.v""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s""", sym AS (SELECT a AS u, b AS v FROM gp
-       |         UNION ALL SELECT b, a FROM gp),
-       |nodes AS (SELECT DISTINCT u AS v FROM sym),
-       |h1 AS (SELECT v,
-       |  xor((2654435761 * v + 12007) % 2147483647,
-       |      ((2654435761 * v + 12007) % 2147483647) >> 15) AS y1
-       |  FROM nodes),
-       |hs AS (SELECT v,
-       |  xor((1779033703 * y1 + 514229) % 2147483647,
-       |      ((1779033703 * y1 + 514229) % 2147483647) >> 13) AS hv
-       |  FROM h1),
-       |r0 AS MATERIALIZED (
-       |  SELECT v, hv % 64 AS j,
-       |    CASE WHEN hv // 64 = 0 THEN 26
-       |         ELSE 26 - length(bin(hv // 64)) END AS mx
-       |  FROM hs),
-       |$rounds
-       |SELECT group_id, t, n_zero, est_ball FROM (
-       |$ests
-       |) ORDER BY group_id, t""".stripMargin
-  }
-
-  /** Harmonic centrality (lower bound, radius ≤ 3) from the HyperBall
-    * register rounds — the read HyperBall was BUILT for (Boldi & Vigna
-    * 2013 compute exactly this on web-scale graphs): H(v) =
-    * Σ_{t≥1} (|B_t(v)| − |B_{t−1}(v)|)/t, i.e. each newly reached node
-    * weighted by 1/distance, with ball sizes from [[anfHyperball]]'s
-    * estimates. Kept exact-integer as Σ ⌊1000/t⌋·(est_t − est_{t−1})
-    * (weights 1000/500/333) so the ranking is bit-deterministic; the
-    * truncation at t=3 makes it a lower bound, which is how the
-    * centrality is consumed on graphs whose diameter exceeds the budget.
-    * Estimator noise can make est_t locally dip; deltas clamp at 0
-    * (a ball never shrinks — the clamp applies the known monotonicity).
-    *
-    * Scale: [[anfHyperball]]'s register rounds (one edge join + keyed
-    * max per round) plus a per-node 4-row pivot — nothing new shuffles.
-    */
-  def harmonicCentrality(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val anf = anfHyperball(s, dir)
-    anf.groupBy($"group_id")
-      .agg(
-        sum(when($"t" === 0L, $"est_ball").otherwise(0L)).as("e0"),
-        sum(when($"t" === 1L, $"est_ball").otherwise(0L)).as("e1"),
-        sum(when($"t" === 2L, $"est_ball").otherwise(0L)).as("e2"),
-        sum(when($"t" === 3L, $"est_ball").otherwise(0L)).as("e3"))
-      .select($"group_id",
-        (lit(1000L) * greatest($"e1" - $"e0", lit(0L))
-          + lit(500L) * greatest($"e2" - $"e1", lit(0L))
-          + lit(333L) * greatest($"e3" - $"e2", lit(0L)))
-          .as("harmonic_x1000"))
-      .orderBy($"harmonic_x1000".desc, $"group_id")
-  }
-
-  val harmonicCentralitySql: String = {
-    val inner = anfHyperballSql
-    s"""WITH anf AS ($inner)
-       |SELECT group_id,
-       |  (1000 * greatest(e1 - e0, 0) + 500 * greatest(e2 - e1, 0)
-       |    + 333 * greatest(e3 - e2, 0))::BIGINT AS harmonic_x1000
-       |FROM (
-       |  SELECT group_id,
-       |    sum(CASE WHEN t = 0 THEN est_ball ELSE 0 END) AS e0,
-       |    sum(CASE WHEN t = 1 THEN est_ball ELSE 0 END) AS e1,
-       |    sum(CASE WHEN t = 2 THEN est_ball ELSE 0 END) AS e2,
-       |    sum(CASE WHEN t = 3 THEN est_ball ELSE 0 END) AS e3
-       |  FROM anf GROUP BY group_id)
-       |ORDER BY harmonic_x1000 DESC, group_id""".stripMargin
-  }
 
   /** Poisson(1) CDF thresholds scaled to the 31-bit hash range
     * (⌊P(X≤k)·(2³¹−1)⌋ for k = 0..7): a hash-uniform u lands in bucket
@@ -5465,113 +3890,6 @@ object TextOps {
        |FROM wt GROUP BY rep ORDER BY replica""".stripMargin
   }
 
-  /** Degree ASSORTATIVITY (Newman's r) of the contracted near-dup graph:
-    * the Pearson correlation of endpoint degrees over the directed edge
-    * list. Because the edge list is symmetrized, the two marginals are
-    * identical and r = (m·Σxy − (Σx)²) / (m·Σx² − (Σx)²) EXACTLY — no
-    * square root, so the permille result is pure integer arithmetic.
-    * Disassortative (r < 0) is the organic-web signature; strongly
-    * assortative near-dup graphs indicate template families linking to
-    * each other — another banding-health probe next to
-    * [[componentSizes]] and [[clusteringCoeff]].
-    *
-    * Scale: two degree joins + one mergeable 4-sum aggregation over the
-    * edge list; int64 headroom holds while m·maxdeg² < 2^63 (≈10¹²
-    * edges at hub degree 10³ — beyond any contracted graph here; beyond
-    * it, the sums move to DECIMAL(38)).
-    */
-  def assortativity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = groupPairsOf(s, dir)
-      .pin(true)
-    val sym = pairs.select($"a".as("u"), $"b".as("v"))
-      .unionByName(pairs.select($"b".as("u"), $"a".as("v")))
-    val deg = sym.groupBy($"u").agg(count(lit(1)).as("d"))
-      .pin(true) // joined at both endpoints
-    val st = sym
-      .join(deg.select($"u", $"d".as("x")), Seq("u"))
-      .join(deg.select($"u".as("v"), $"d".as("y")), Seq("v"))
-      .agg(count(lit(1)).as("m"), sum($"x").as("sx"),
-        sum($"x" * $"x").as("sxx"), sum($"x" * $"y").as("sxy"))
-    st.select($"m".as("m_edges"),
-        ($"m" * $"sxy" - $"sx" * $"sx").as("num"),
-        ($"m" * $"sxx" - $"sx" * $"sx").as("den"))
-      .withColumn("r_pm",
-        floor(lit(1000L) * $"num" / $"den").cast("long"))
-  }
-
-  val assortativitySql: String = groupGraphCte +
-    """, sym AS (SELECT a AS u, b AS v FROM gp
-      |         UNION ALL SELECT b, a FROM gp),
-      |dg AS (SELECT u, count(*)::BIGINT AS d FROM sym GROUP BY u),
-      |st AS (
-      |  SELECT count(*)::BIGINT AS m, sum(dx.d)::BIGINT AS sx,
-      |    sum(dx.d * dx.d)::BIGINT AS sxx,
-      |    sum(dx.d * dy.d)::BIGINT AS sxy
-      |  FROM sym JOIN dg dx ON sym.u = dx.u JOIN dg dy ON sym.v = dy.u)
-      |SELECT m AS m_edges, (m * sxy - sx * sx)::BIGINT AS num,
-      |  (m * sxx - sx * sx)::BIGINT AS den,
-      |  floor(1000.0 * (m * sxy - sx * sx)
-      |        / (m * sxx - sx * sx))::BIGINT AS r_pm
-      |FROM st""".stripMargin
-
-  /** k-core decomposition (k=3, 4 peel rounds) of the group-contracted
-    * near-dup graph: iteratively strip nodes with degree < k until a
-    * fixpoint; what survives is the dense template-family core — the spam
-    * / boilerplate-farm detector of a curation pipeline (a node that
-    * keeps ≥3 near-dup neighbors even after its low-degree fringe is peeled
-    * sits inside a heavily templated region, exactly where aggressive
-    * dedup/downweighting pays off; the sparse fringe is organic text).
-    *
-    * Output: the 3-core membership with each survivor's degree in the
-    * final peeled edge set.
-    *
-    * Scale: each peel round is ONE mergeable degree count plus two
-    * node-keyed semi-joins of the edge list — the same per-round
-    * join+agg bound as [[pageRank]]/[[bfsReach]], checkpointed per round
-    * so the 4-round lineage stays flat. The round count is pinned (4) so
-    * the oracle replays the identical prefix; peeling monotonically
-    * shrinks the edge set, so a fixpoint reached early makes the
-    * remaining rounds no-ops over the final set (same answer, wasted
-    * passes only — a cluster run loops with a convergence counter the
-    * way [[starContraction]] does).
-    */
-  def kcore(s: SparkSession, dir: String, k: Int = 3,
-      rounds: Int = 4): DataFrame = {
-    import s.implicits._
-    var edges = groupPairsOf(s, dir).pin(true)
-    for (_ <- 1 to rounds) {
-      val deg = edges.select($"a".as("v"))
-        .unionByName(edges.select($"b".as("v")))
-        .groupBy($"v").agg(count(lit(1)).as("d"))
-      val keep = deg.filter($"d" >= k).select($"v")
-      edges = edges
-        .join(keep.select($"v".as("a")), Seq("a"), "left_semi")
-        .join(keep.select($"v".as("b")), Seq("b"), "left_semi")
-        .select($"a", $"b").pin(true)
-    }
-    edges.select($"a".as("v")).unionByName(edges.select($"b".as("v")))
-      .groupBy($"v").agg(count(lit(1)).as("core_deg"))
-      .select($"v".as("group_id"), $"core_deg")
-      .orderBy($"group_id")
-  }
-
-  val kcoreSql: String = groupGraphCte + {
-    val rounds = (1 to 4).map { r =>
-      s""", nd$r AS (SELECT a AS v FROM e${r - 1} UNION ALL
-         |           SELECT b FROM e${r - 1}),
-         |dg$r AS (SELECT v, count(*)::BIGINT AS d FROM nd$r GROUP BY v),
-         |kp$r AS (SELECT v FROM dg$r WHERE d >= 3),
-         |e$r AS MATERIALIZED (
-         |  SELECT e.a, e.b FROM e${r - 1} e
-         |  JOIN kp$r ka ON e.a = ka.v JOIN kp$r kb ON e.b = kb.v)""".stripMargin
-    }.mkString
-    s""", e0 AS MATERIALIZED (SELECT a, b FROM gp)$rounds,
-       |ndf AS (SELECT a AS v FROM e4 UNION ALL SELECT b FROM e4)
-       |SELECT v AS group_id, count(*)::BIGINT AS core_deg
-       |FROM ndf GROUP BY v ORDER BY group_id""".stripMargin
-  }
-
   /** Collocation mining: token pairs co-occurring within a forward window
     * of 3 positions, ranked by LIFT = P(ab)/(P(a)·P(b)) — the
     * phrase/multi-word-expression detector a tokenizer-training or
@@ -5597,7 +3915,7 @@ object TextOps {
     val dw = Window.partitionBy($"doc_id").orderBy($"pos")
     val toks = Tables.documents(s, dir)
       .select($"doc_id", posexplode(split($"text", " ")).as(Seq("pos", "w")))
-      .pin(true) // pair emit + unigram counts + total
+      .pin // pair emit + unigram counts + total
     val prs = toks
       .withColumn("w1", lead($"w", 1).over(dw))
       .withColumn("w2", lead($"w", 2).over(dw))
@@ -5605,7 +3923,7 @@ object TextOps {
       .select($"w", explode(array($"w1", $"w2", $"w3")).as("x"))
       .filter($"x".isNotNull)
       .select(least($"w", $"x").as("a"), greatest($"w", $"x").as("b"))
-      .pin(true) // pair counts + total
+      .pin // pair counts + total
     val nab = prs.groupBy($"a", $"b").agg(count(lit(1)).as("n_ab"))
       .filter($"n_ab" >= 5)
     val uni = toks.groupBy($"w").agg(count(lit(1)).as("n_w"))
@@ -5769,7 +4087,7 @@ object TextOps {
     // as extra columns: the signatures are already carried for the
     // Hamming check, and widening the shuffled rows was measured to cost
     // more than the distinct it replaced on the wide variant.
-    val banded = simhashRaw(s, dir).pin(true)
+    val banded = simhashRaw(s, dir).pin
       .select($"doc_id", $"simhash", explode(array(
         struct(lit(0).as("band"), ($"simhash" % 256L).as("key")),
         struct(lit(1).as("band"), shiftright($"simhash", 8).as("key"))))
@@ -5851,7 +4169,7 @@ object TextOps {
     // longs per banded row was measured to cost MORE at 10× (14.8s) than
     // the distinct it replaced (8.9s); deriving them from the already-
     // carried signatures keeps the shuffled rows at their original width.
-    val banded = simhashWideRaw(s, dir).pin(true)
+    val banded = simhashWideRaw(s, dir).pin
       .select($"doc_id", $"simhash", explode(array(
           struct(lit(0).as("band"),
             $"simhash".bitwiseAND(65535L).as("key")),
@@ -5968,7 +4286,7 @@ object TextOps {
     // tf feeds BOTH the df aggregate and the ranking join — materialize it
     // so the corpus explode+agg runs once, not once per reference
     val tf = terms.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      .pin(true)
+      .pin
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy($"doc_id")
       .orderBy($"tf".desc, $"df".asc, $"term".asc)
@@ -6254,7 +4572,7 @@ object TextOps {
         slice(arr, lit(1), size(arr) - 1).as("a"),
         slice(arr, lit(2), size(arr) - 1).as("b"))).as("p"))
       .select($"doc_id", tokenCode($"p.a").as("c1"), tokenCode($"p.b").as("c2"))
-      .pin(true)
+      .pin
     val lm2 = bg.groupBy($"c1", $"c2").agg(count(lit(1)).as("cnt2"))
     val lm1 = bg.groupBy($"c1").agg(count(lit(1)).as("cnt1"))
     val scored = bg.join(lm2, Seq("c1", "c2")).join(lm1, Seq("c1"))
@@ -6390,14 +4708,14 @@ object TextOps {
     val stream = Tables.documents(s, dir)
       .select($"doc_id", $"lang", explode(split($"text", " ")).as("w"))
       .select($"doc_id", $"lang", tokenCode($"w").as("code"))
-      .pin(true) // three consumers: raw LM, target LM, scoring
+      .pin // three consumers: raw LM, target LM, scoring
     val rawLm = stream.groupBy($"code").agg(count(lit(1)).as("cnt_r"))
     val tgtLm = stream.filter($"lang" === "en")
       .groupBy($"code").agg(count(lit(1)).as("cnt_t"))
     val lm = rawLm.join(tgtLm, Seq("code"), "left")
       .select($"code", $"cnt_r",
         (coalesce($"cnt_t", lit(0L)) + 1L).as("cnt_t1"))
-      .pin(true) // consumed by the normalizer agg + the scoring join
+      .pin // consumed by the normalizer agg + the scoring join
     val tot = lm.agg(sum($"cnt_r").as("n_r"), sum($"cnt_t1").as("n_t1"))
     stream.join(lm, Seq("code")).crossJoin(broadcast(tot))
       .withColumn("wbits",
@@ -6475,7 +4793,7 @@ object TextOps {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir).select($"doc_id", $"text")
-      .pin(true) // read by positions, the sentinel union, and chunk assembly
+      .pin // read by positions, the sentinel union, and chunk assembly
     val codes = docs
       .select($"doc_id", posexplode(split($"text", "")))
       .select($"doc_id", ($"pos" + 1).as("i"), ascii($"col").cast("long").as("c"))
@@ -6499,7 +4817,7 @@ object TextOps {
 
   def cdcChunks(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val chunks = cdcChunkFrame(s, dir).pin(true)
+    val chunks = cdcChunkFrame(s, dir).pin
     val occ = chunks.groupBy($"chunk")
       .agg(countDistinct($"doc_id").as("ndocs"))
     chunks.join(occ, "chunk")
@@ -6565,7 +4883,7 @@ object TextOps {
     */
   def chunkPrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val chunks = cdcChunkFrame(s, dir).pin(true)
+    val chunks = cdcChunkFrame(s, dir).pin
     val first = chunks.groupBy($"chunk")
       .agg(min($"doc_id" * 1048576L + $"st").as("f"))
     chunks.join(first, Seq("chunk"))
@@ -6626,7 +4944,7 @@ object TextOps {
         countDistinct($"w").as("n_distinct"))
       .withColumn("ttr",
         floor($"n_distinct" * 1000L / $"n_tokens").cast("long"))
-      .pin(true) // read by budget agg, bucket agg, final probe
+      .pin // read by budget agg, bucket agg, final probe
     val bud = sc.agg(floor(sum($"n_tokens") / 10L).cast("long").as("budget"))
     val cm = sc.groupBy($"ttr").agg(sum($"n_tokens").as("btok"))
       // bounded frame: ≤ 1001 permille buckets regardless of corpus size
@@ -6674,9 +4992,7 @@ object TextOps {
   def softBudget(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val nodes = Tables.documents(s, dir).select($"doc_id")
-    val (labels, _) =
-      starContraction(nodes, shinglePairsOf(shingleCodes(s, dir)))
+    val labels = docClusters(s, dir)
     val weights = labels.groupBy($"label").agg(count(lit(1)).as("nm"))
       .join(labels, Seq("label"))
       .select($"doc_id", floor(lit(1000L) / $"nm").cast("long").as("wpm"))
@@ -6689,7 +5005,7 @@ object TextOps {
         floor($"n_distinct" * 1000L / $"n_tokens").cast("long"))
       .join(weights, Seq("doc_id"))
       .withColumn("eff_mtok", $"n_tokens" * $"wpm")
-      .pin(true) // budget agg, bucket agg, final probe
+      .pin // budget agg, bucket agg, final probe
     val bud = sc.agg(floor(sum($"eff_mtok") / 10L).cast("long").as("budget"))
     val cm = sc.groupBy($"ttr").agg(sum($"eff_mtok").as("btok"))
       .withColumn("cum", sum($"btok").over(Window.orderBy($"ttr".desc)))
@@ -6704,12 +5020,8 @@ object TextOps {
 
   lazy val softBudgetSql: String =
     shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
-      """,
-        |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-        |reach(node, m) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.a, r.m FROM edges e JOIN reach r ON e.b = r.node),
+      s""",
+        |$docReach,
         |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
         |        FROM reach GROUP BY node),
         |szc AS (SELECT cluster, count(*)::BIGINT AS nm FROM lab
@@ -6820,7 +5132,7 @@ object TextOps {
     val terms = Seq("spark", "query", "window")
     val stream = Tables.documents(s, dir)
       .select($"doc_id", explode(split($"text", " ")).as("w"))
-      .pin(true) // read by dl, totals, and the tf filter
+      .pin // read by dl, totals, and the tf filter
     val dl = stream.groupBy($"doc_id").agg(count(lit(1)).as("dl"))
     val nt = stream.agg(countDistinct($"doc_id").as("n_docs"),
       count(lit(1)).as("t_tokens"))
@@ -6873,7 +5185,7 @@ object TextOps {
   /** Zipf rank-frequency audit: the vocabulary ranked by corpus frequency
     * (freq desc, token tie-break), log₂-bucketed by rank (bucket =
     * bitlength(rank) — the same integer-log idiom as [[pplBuckets]] /
-    * [[degreeHist]]), with per-bucket token counts and frequency ranges,
+    * [[Graph.degreeHist]]), with per-bucket token counts and frequency ranges,
     * plus the least-squares slope of bitlength(freq) on bitlength(rank)
     * over ALL vocabulary points as constant columns. Natural text obeys
     * slope ≈ −1 (Zipf's law); a corpus whose slope is far off is
@@ -6954,7 +5266,7 @@ object TextOps {
     val ranked = rankedRaw
       .withColumn("x", length(bin($"rnk")).cast("long"))
       .withColumn("y", length(bin($"f")).cast("long"))
-      .pin(true) // bucket agg + regression agg
+      .pin // bucket agg + regression agg
     val slope = ranked.agg(
         count(lit(1)).as("n"), sum($"x").as("sx"), sum($"y").as("sy"),
         sum($"x" * $"y").as("sxy"), sum($"x" * $"x").as("sxx"))
@@ -7020,7 +5332,7 @@ object TextOps {
       .withColumn("seg", sum($"is_delim").over(dw))
       .filter($"is_delim" === 0)
       .select($"doc_id", $"seg", $"pos", $"w")
-      .pin(true) // word stats + phrase lengths + assembly
+      .pin // word stats + phrase lengths + assembly
     val plen = pw.groupBy($"doc_id", $"seg").agg(count(lit(1)).as("plen"))
     val wstat = pw.join(plen, Seq("doc_id", "seg"))
       .groupBy($"w")
@@ -7082,7 +5394,7 @@ object TextOps {
 
   /** Edit-distance VERIFICATION of near-dup candidates: exact Levenshtein
     * over the leading 120 characters of each GROUP-representative
-    * candidate pair ([[groupPairsOf]]), keeping pairs within distance 78
+    * candidate pair ([[Graph.groupPairsOf]]), keeping pairs within distance 78
     * — the "character-level rerank" a dedup pipeline runs after banding
     * when token-set similarity is not enough (templated spam with word
     * substitutions passes Jaccard but fails edit distance; OCR variants
@@ -7606,11 +5918,8 @@ object TextOps {
     "text_langid_confusion" -> langIdConfusion _,
     "eval_cohens_kappa" -> cohensKappa _,
     "eval_mcnemar" -> mcnemar _,
-    "graph_katz" -> ((s: SparkSession, dir: String) => katzGroups(s, dir)),
     "text_lsa_power" -> ((s: SparkSession, dir: String) => lsaPower(s, dir)),
     "text_lang_nb" -> langNb _,
-    "graph_degree_hist" -> degreeHist _,
-    "graph_kcore" -> ((s: SparkSession, dir: String) => kcore(s, dir)),
     "text_zipf_curve" -> zipfCurve _,
     "text_burstiness" -> burstiness _,
     "eval_macro_f1" -> evalMacroF1 _,
@@ -7636,23 +5945,10 @@ object TextOps {
     "text_bpe_train_incremental" ->
       ((s: SparkSession, dir: String) => bpeTrainIncremental(s, dir)),
     "text_bpe_encode" -> bpeEncode _,
-    "graph_pagerank" -> ((s: SparkSession, dir: String) => pageRank(s, dir)),
-    "graph_pagerank_groups" ->
-      ((s: SparkSession, dir: String) => pageRankGroups(s, dir)),
     "text_textrank_terms" ->
       ((s: SparkSession, dir: String) => textRankTerms(s, dir)),
-    "graph_resource_alloc" -> resourceAlloc _,
     "text_winnowing" -> winnowingMatches _,
-    "graph_ppr" -> ((s: SparkSession, dir: String) => pprRank(s, dir)),
-    "graph_ppr_groups" ->
-      ((s: SparkSession, dir: String) => pprRankGroups(s, dir)),
     "text_inverted_index" -> invertedIndex _,
-    "graph_triangles" -> triangles _,
-    "graph_truss" -> ((s: SparkSession, dir: String) => truss(s, dir)),
-    "graph_clustering_coeff" -> clusteringCoeff _,
-    "graph_component_sizes" -> componentSizes _,
-    "graph_diameter_probe" -> diameterProbe _,
-    "graph_assortativity" -> assortativity _,
     "sample_leakage_split" -> leakageSafeSplit _,
     "sample_group_kfold" -> ((s: SparkSession, dir: String) => groupKfold(s, dir)),
     "dedup_lsh_tuning" -> lshTuning _,
@@ -7690,12 +5986,6 @@ object TextOps {
     "text_bm25_topk" -> bm25TopK _,
     "text_chunk_stride" -> chunkStride _,
     "text_cooccur_lift" -> cooccurLift _,
-    "graph_common_neighbors" -> commonNeighbors _,
-    "graph_anf" -> anfHyperball _,
-    "graph_harmonic" -> harmonicCentrality _,
-    "graph_lpa_modularity" -> lpaModularity _,
-    "graph_mst" -> mstForest _,
-    "graph_bfs_reach" -> bfsReach _,
     "dedup_containment_pairs" -> containmentPairs _,
     "dedup_threshold_curve" -> thresholdCurve _,
     "dedup_incremental" -> incrementalDedup _,
@@ -7718,11 +6008,8 @@ object TextOps {
     "text_langid_confusion" -> langIdConfusionSql,
     "eval_cohens_kappa" -> cohensKappaSql,
     "eval_mcnemar" -> mcnemarSql,
-    "graph_katz" -> katzGroupsSql,
     "text_lsa_power" -> lsaPowerSql,
     "text_lang_nb" -> langNbSql,
-    "graph_degree_hist" -> degreeHistSql,
-    "graph_kcore" -> kcoreSql,
     "text_zipf_curve" -> zipfCurveSql,
     "text_burstiness" -> burstinessSql,
     "eval_macro_f1" -> evalMacroF1Sql,
@@ -7745,20 +6032,9 @@ object TextOps {
     "text_bpe_train" -> bpeTrainSql,
     "text_bpe_train_incremental" -> bpeTrainSql,
     "text_bpe_encode" -> bpeEncodeSql,
-    "graph_pagerank" -> pageRankSql,
-    "graph_pagerank_groups" -> pageRankGroupsSql,
     "text_textrank_terms" -> textRankTermsSql,
-    "graph_resource_alloc" -> resourceAllocSql,
     "text_winnowing" -> winnowingMatchesSql,
-    "graph_ppr" -> pprRankSql,
-    "graph_ppr_groups" -> pprRankGroupsSql,
     "text_inverted_index" -> invertedIndexSql,
-    "graph_triangles" -> trianglesSql,
-    "graph_truss" -> trussSql,
-    "graph_clustering_coeff" -> clusteringCoeffSql,
-    "graph_component_sizes" -> componentSizesSql,
-    "graph_diameter_probe" -> diameterProbeSql,
-    "graph_assortativity" -> assortativitySql,
     "sample_leakage_split" -> leakageSafeSplitSql,
     "sample_group_kfold" -> groupKfoldSql,
     "dedup_lsh_tuning" -> lshTuningSql,
@@ -7796,12 +6072,6 @@ object TextOps {
     "text_bm25_topk" -> bm25TopKSql,
     "text_chunk_stride" -> chunkStrideSql,
     "text_cooccur_lift" -> cooccurLiftSql,
-    "graph_common_neighbors" -> commonNeighborsSql,
-    "graph_anf" -> anfHyperballSql,
-    "graph_harmonic" -> harmonicCentralitySql,
-    "graph_lpa_modularity" -> lpaModularitySql,
-    "graph_mst" -> mstForestSql,
-    "graph_bfs_reach" -> bfsReachSql,
     "dedup_containment_pairs" -> containmentPairsSql,
     "dedup_threshold_curve" -> thresholdCurveSql,
     "dedup_incremental" -> incrementalDedupSql,

@@ -140,9 +140,14 @@ object VersionedTable {
 
   private def resolveVersion(spark: SparkSession, path: String,
       version: Int): Int =
-    if (version >= 0) version
-    else latestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path"))
+    if (version >= 0) version else latestOrThrow(spark, path, "")
+
+  /** The newest committed version at `path`; throws when there is none,
+    * with `hint` appended to the message (writers say "init first"). */
+  private def latestOrThrow(spark: SparkSession, path: String,
+      hint: String = " — init first"): Int =
+    latestVersion(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"no versions at $path$hint"))
 
   /** (relative file, min node, max node) triples for `c` from the stats
     * sidecar — Jackson nodes so numeric vs string comparison semantics
@@ -369,11 +374,7 @@ object VersionedTable {
     * partitioned layouts read back with exact column types and order.
     */
   def read(spark: SparkSession, path: String, version: Int = -1): DataFrame = {
-    val v =
-      if (version >= 0) version
-      else latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no versions at $path"))
-    val dir = versionDir(path, v)
+    val dir = versionDir(path, resolveVersion(spark, path, version))
     readSidecar(spark, dir, SchemaFile) match {
       case Some(json) =>
         val schema = org.apache.spark.sql.types.DataType.fromJson(json)
@@ -391,8 +392,7 @@ object VersionedTable {
   def merge(spark: SparkSession, path: String, updates: DataFrame,
       keyCol: String, tag: Option[String] = None,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Int = {
-    val current = latestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path — init first"))
+    val current = latestOrThrow(spark, path)
     val next = current + 1
     commitVersion(
       KvOps.upsert(read(spark, path, current), updates, keyCol), path, next,
@@ -475,9 +475,7 @@ object VersionedTable {
       maxRetries: Int = 10): Int = {
     var attempt = 0
     while (attempt <= maxRetries) {
-      val base = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no versions at $path — init first"))
+      val base = latestOrThrow(spark, path)
       try {
         return tryMergeAt(spark, path, updates, keyCol, base, tag,
           partitionBy, statsCols)
@@ -574,8 +572,7 @@ object VersionedTable {
       "compact takes sortBy (range-cluster) OR partitionBy (hive layout), " +
         "not both: a hive re-split of range-clustered output would destroy " +
         "the clustering")
-    val current = latestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path — init first"))
+    val current = latestOrThrow(spark, path)
     val dir = new org.apache.hadoop.fs.Path(versionDir(path, current))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(dir).getLength
@@ -626,8 +623,7 @@ object VersionedTable {
   def replace(spark: SparkSession, path: String, df: DataFrame,
       tag: Option[String] = None, partitionBy: Seq[String] = Nil,
       statsCols: Seq[String] = Nil): Int = {
-    val current = latestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path — init first"))
+    val current = latestOrThrow(spark, path)
     val next = current + 1
     commitVersion(df, path, next, tag, partitionBy, statsCols)
     next
@@ -641,8 +637,7 @@ object VersionedTable {
   def delete(spark: SparkSession, path: String, keys: DataFrame,
       keyCol: String, partitionBy: Seq[String] = Nil,
       statsCols: Seq[String] = Nil): Int = {
-    val current = latestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $path — init first"))
+    val current = latestOrThrow(spark, path)
     val next = current + 1
     commitVersion(
       KvOps.delete(read(spark, path, current), keys, keyCol), path, next, None,

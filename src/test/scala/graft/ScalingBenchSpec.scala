@@ -38,6 +38,26 @@ class ScalingBenchSpec extends SparkSpec {
     assert(a.contains("sf0.01"))
   }
 
+  test("scan_pruned_zorder probes a doc_id that exists at every scale") {
+    val root = Files.createTempDirectory("zorder").toString
+    try {
+      val env = new ScalingBench.Env(spark, sf("sf0.001"), 2, root)
+      val probe = ScalingBench.probes.find(_.name == "scan_pruned_zorder").get
+      for (pt <- probe.points(env)) {
+        val rows = pt.frame().count()
+        val opened = pt.post(0.0, rows).toMap.apply("files_opened_id")
+        assert(rows >= 1 && opened.asInstanceOf[Int] >= 1,
+          s"${pt.scale}: rows $rows, files_opened_id $opened")
+      }
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rm))
+        f.delete()
+      }
+      rm(new java.io.File(root))
+    }
+  }
+
   test("relational replication x3: rows x3, keys unique, edges resolve") {
     val base = sf("sf0.001")
     val root = Files.createTempDirectory("relcorpus").toString

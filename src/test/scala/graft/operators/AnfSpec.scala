@@ -36,14 +36,14 @@ class AnfSpec extends SparkSpec {
 
   test("register merge equals per-node exact-ball simulation, all t") {
     val dir = sf("sf0.001")
-    val pairs = TextOps.groupPairsOf(spark, dir).collect()
+    val pairs = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val adj = (pairs ++ pairs.map(p => (p._2, p._1)))
       .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
     val nodes = adj.keySet
     def ball(v: Long, t: Int): Set[Long] =
       (0 until t).foldLeft(Set(v))((b, _) => b ++ b.flatMap(adj(_)))
-    val got = TextOps.anfHyperball(spark, dir).collect()
+    val got = Graph.anfHyperball(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3)))).toMap
     assert(got.size == nodes.size * 4)
@@ -55,13 +55,13 @@ class AnfSpec extends SparkSpec {
 
   test("harmonic centrality recounts from the simulated exact-ball estimates") {
     val dir = sf("sf0.001")
-    val pairs = TextOps.groupPairsOf(spark, dir).collect()
+    val pairs = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val adj = (pairs ++ pairs.map(p => (p._2, p._1)))
       .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
     def ball(v: Long, t: Int): Set[Long] =
       (0 until t).foldLeft(Set(v))((b, _) => b ++ b.flatMap(adj(_)))
-    val got = TextOps.harmonicCentrality(spark, dir).collect()
+    val got = Graph.harmonicCentrality(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == adj.size)
     adj.keys.foreach { v =>
@@ -74,7 +74,7 @@ class AnfSpec extends SparkSpec {
   }
 
   test("estimates are monotone in t; n_zero is antitone; t=0 is one register") {
-    val rows = TextOps.anfHyperball(spark, sf("sf0.001")).collect()
+    val rows = Graph.anfHyperball(spark, sf("sf0.001")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     rows.groupBy(_._1).foreach { case (v, rs) =>
       val byT = rs.sortBy(_._2)

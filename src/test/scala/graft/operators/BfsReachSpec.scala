@@ -15,12 +15,12 @@ class BfsReachSpec extends SparkSpec {
 
   test("bfsReach distances obey seed/parent/edge-gap laws") {
     import spark.implicits._
-    val d = TextOps.bfsReach(spark, dir).localCheckpoint(true)
+    val d = Graph.bfsReach(spark, dir).localCheckpoint(true)
     assert(d.filter($"dist" < 0 || $"dist" > 3).count() == 0)
     // dist 0 ⟺ seed (group_id ≡ 0 mod 17)
     assert(d.filter(($"dist" === 0L) =!= ($"group_id" % 17 === 0)).count() == 0)
 
-    val pairs = TextOps.groupPairsOf(spark, dir).localCheckpoint(true)
+    val pairs = Graph.groupPairsOf(spark, dir).localCheckpoint(true)
     val sym = pairs.select($"a".as("u"), $"b".as("v"))
       .unionByName(pairs.select($"b".as("u"), $"a".as("v")))
     val du = d.select($"group_id".as("u"), $"dist".as("du"))

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 
 /** Laws for the degree-capped wedge close (the Σod² mitigation of
-  * [[TextOps.clusteringCoeffCapped]]): an uncapped run is bit-identical
+  * [[Graph.clusteringCoeffCapped]]): an uncapped run is bit-identical
   * to the exact close, and a capped run only ever UNDER-counts — the
   * documented lower-bound contract.
   */
@@ -17,15 +17,15 @@ class CappedWedgeSpec extends SparkSpec {
       r.getLong(3))).toSeq
 
   test("cap >= max out-degree reproduces the exact close bit-for-bit") {
-    val exact = rows(TextOps.clusteringCoeff(spark, dir))
-    val capped = rows(TextOps.clusteringCoeffCapped(spark, dir, 1 << 20))
+    val exact = rows(Graph.clusteringCoeff(spark, dir))
+    val capped = rows(Graph.clusteringCoeffCapped(spark, dir, 1 << 20))
     assert(capped === exact)
   }
 
   test("a small cap only under-counts, never over-counts, and keeps degrees") {
-    val exact = rows(TextOps.clusteringCoeff(spark, dir))
+    val exact = rows(Graph.clusteringCoeff(spark, dir))
       .map(r => r._1 -> (r._2, r._3)).toMap
-    val capped = rows(TextOps.clusteringCoeffCapped(spark, dir, 2))
+    val capped = rows(Graph.clusteringCoeffCapped(spark, dir, 2))
     assert(capped.map(_._1) === exact.keys.toSeq.sorted, "same node set")
     capped.foreach { case (v, d, tri, _) =>
       val (de, te) = exact(v)

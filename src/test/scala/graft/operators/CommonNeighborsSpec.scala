@@ -15,7 +15,7 @@ class CommonNeighborsSpec extends SparkSpec {
 
   test("commonNeighbors ranks non-edges by exact wedge counts") {
     import spark.implicits._
-    val top = TextOps.commonNeighbors(spark, dir).localCheckpoint(true)
+    val top = Graph.commonNeighbors(spark, dir).localCheckpoint(true)
     assert(top.count() <= 20)
     assert(top.select($"a", $"b").distinct().count() == top.count())
     // a < b canonical orientation, ranks contiguous from 1

@@ -12,9 +12,9 @@ class ComponentSizesSpec extends SparkSpec {
 
   test("componentSizes matches a union-find recount and conserves the " +
       "vertex set") {
-    val pairs = TextOps.groupPairsOf(spark, dir).collect()
+    val pairs = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val nodes = TextOps.groupFrame(spark, dir).collect()
+    val nodes = Graph.groupFrame(spark, dir).collect()
       .map(_.getAs[Long]("gid")).toSet
     val parent = scala.collection.mutable.Map(nodes.map(n => n -> n).toSeq: _*)
     def find(x: Long): Long =
@@ -28,7 +28,7 @@ class ComponentSizesSpec extends SparkSpec {
     val expect = sizes.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
       .map { case (k, v) => k.toLong -> v }
-    val got = TextOps.componentSizes(spark, dir).collect()
+    val got = Graph.componentSizes(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expect)
     // histogram conserves the vertex set

@@ -11,7 +11,7 @@ class DiameterProbeSpec extends SparkSpec {
 
   test("double-sweep agrees with an in-memory BFS and the second sweep " +
       "dominates") {
-    val pairs = TextOps.groupPairsOf(spark, dir).collect()
+    val pairs = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val adj = (pairs ++ pairs.map(p => (p._2, p._1)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -30,7 +30,7 @@ class DiameterProbeSpec extends SparkSpec {
     val start = adj.keys.min
     val (f1, e1) = far(bfs(start))
     val (f2, e2) = far(bfs(f1))
-    val r = TextOps.diameterProbe(spark, dir).collect().head
+    val r = Graph.diameterProbe(spark, dir).collect().head
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
       ((f1, e1, f2, e2)))
     // restarting from the farthest node can only reach at least as far

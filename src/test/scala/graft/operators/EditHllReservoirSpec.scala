@@ -17,7 +17,7 @@ class EditHllReservoirSpec extends SparkSpec {
     import spark.implicits._
     val got = TextOps.editPairs(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val cand = TextOps.groupPairsOf(spark, dir).collect()
+    val cand = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val prefixes = Tables.documents(spark, dir)
       .select($"doc_id", substring($"text", 1, 120)).collect()

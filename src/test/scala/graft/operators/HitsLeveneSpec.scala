@@ -12,7 +12,7 @@ class HitsLeveneSpec extends SparkSpec {
   test("graph_hits matches a serial recount of the bipartite ping-pong") {
     val dir = sf("sf0.001")
     import spark.implicits._
-    val edges = Relational.graphHits(spark, dir) // warm nothing — build edges below
+    val edges = Graph.graphHits(spark, dir) // warm nothing — build edges below
     val ep = {
       val li = spark.read.parquet(s"$dir/lineitem.parquet")
         .selectExpr("l_orderkey", "l_partkey")

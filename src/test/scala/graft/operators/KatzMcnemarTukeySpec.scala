@@ -9,9 +9,9 @@ class KatzMcnemarTukeySpec extends SparkSpec {
 
   test("katz recounts from a serial walk-sum; isolated groups score 1e6") {
     val dir = sf("sf0.001")
-    val gids = TextOps.groupFrame(spark, dir)
+    val gids = Graph.groupFrame(spark, dir)
       .selectExpr("gid").collect().map(_.getLong(0))
-    val pairs = TextOps.groupPairsOf(spark, dir)
+    val pairs = Graph.groupPairsOf(spark, dir)
       .selectExpr("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val edges = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
@@ -23,7 +23,7 @@ class KatzMcnemarTukeySpec extends SparkSpec {
       }
       rank = gids.map(v => v -> (1000000L + in.getOrElse(v, 0L) / 2L)).toMap
     }
-    val got = TextOps.katzGroups(spark, dir).collect()
+    val got = Graph.katzGroups(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(got.toMap == rank)
     val touched = edges.map(_._2).toSet

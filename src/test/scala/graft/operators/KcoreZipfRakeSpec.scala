@@ -14,13 +14,13 @@ class KcoreZipfRakeSpec extends SparkSpec {
 
   test("3-core members all keep degree >= 3 and the core closes over " +
       "its own edges") {
-    val core = TextOps.kcore(spark, dir).collect()
+    val core = Graph.kcore(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // peeling's defining invariant: every survivor has >= k neighbors
     // INSIDE the surviving set (core_deg counts exactly those)
     assert(core.values.forall(_ >= 3))
     // 4 rounds suffice at this scale: a 5th peel is a no-op (fixpoint)
-    val core5 = TextOps.kcore(spark, dir, rounds = 5).collect()
+    val core5 = Graph.kcore(spark, dir, rounds = 5).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core5 == core)
   }

@@ -61,7 +61,7 @@ class LangNbSpec extends SparkSpec {
 
   test("degree histogram matches a recount and conserves the corpus") {
     import spark.implicits._
-    val got = TextOps.degreeHist(spark, dir).collect()
+    val got = Graph.degreeHist(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     val pairs = TextOps.minhashPairs(spark, dir).collect()

@@ -10,7 +10,7 @@ import graft.SparkSpec
 class LpaModularitySpec extends SparkSpec {
 
   private def edges(dir: String): Array[(Long, Long)] =
-    TextOps.groupPairsOf(spark, dir).collect()
+    Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
 
   private def serial(pairs: Array[(Long, Long)])
@@ -43,7 +43,7 @@ class LpaModularitySpec extends SparkSpec {
   test("distributed LPA + modularity equals the serial simulation") {
     val dir = sf("sf0.001")
     val truth = serial(edges(dir))
-    val got = TextOps.lpaModularity(spark, dir).collect()
+    val got = Graph.lpaModularity(spark, dir).collect()
     assert(got.length == truth.size, "community count")
     got.foreach { r =>
       val c = r.getLong(0)
@@ -60,7 +60,7 @@ class LpaModularitySpec extends SparkSpec {
     val pairs = edges(dir)
     val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct.length.toLong
     val m = pairs.length.toLong
-    val got = TextOps.lpaModularity(spark, dir).collect()
+    val got = Graph.lpaModularity(spark, dir).collect()
     assert(got.map(_.getLong(1)).sum == nodes, "sizes sum to |V|")
     assert(got.map(_.getLong(2)).sum == 2L * m, "degree mass = 2m")
     val eIn = got.map(_.getLong(3)).sum

@@ -11,7 +11,7 @@ import graft.SparkSpec
 class MstSpec extends SparkSpec {
 
   private def weightedEdges(dir: String): Array[(Long, Long, Long)] = {
-    val pairs = TextOps.groupPairsOf(spark, dir).collect()
+    val pairs = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val toks = spark.read.parquet(dir + "/documents.parquet")
       .selectExpr("doc_id", "explode(split(text, ' ')) AS w").distinct()
@@ -45,7 +45,7 @@ class MstSpec extends SparkSpec {
     val dir = sf("sf0.001")
     val edges = weightedEdges(dir)
     val truth = kruskal(edges)
-    val got = TextOps.mstForest(spark, dir).collect()
+    val got = Graph.mstForest(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == truth,
       s"forest mismatch: extra=${got -- truth}, missing=${truth -- got}")
@@ -65,7 +65,7 @@ class MstSpec extends SparkSpec {
       val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra) = rb
     }
     val nComp = nodes.map(find).distinct.length
-    val got = TextOps.mstForest(spark, dir).collect()
+    val got = Graph.mstForest(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.length == nodes.length - nComp, "|MSF| = |V| - |components|")
     // spanning: the forest connects exactly the same components

@@ -42,12 +42,12 @@ class NoveltyCoeffEpochSpec extends SparkSpec {
   test("clusteringCoeff is consistent with the triangles query and the " +
       "pair-graph degrees") {
     import spark.implicits._
-    val cc = TextOps.clusteringCoeff(spark, dir).collect()
+    val cc = Graph.clusteringCoeff(spark, dir).collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val tri = TextOps.triangles(spark, dir).collect()
+    val tri = Graph.triangles(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val pairs = TextOps.groupPairsOf(spark, dir).collect()
+    val pairs = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val deg = (pairs.map(_._1) ++ pairs.map(_._2)).groupBy(identity)
       .view.mapValues(_.length.toLong).toMap

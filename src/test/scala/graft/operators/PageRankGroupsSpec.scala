@@ -14,9 +14,9 @@ class PageRankGroupsSpec extends SparkSpec {
 
   test("group ranks match a serial power iteration exactly") {
     val dir = sf("sf0.001")
-    val gids = TextOps.groupFrame(spark, dir)
+    val gids = Graph.groupFrame(spark, dir)
       .selectExpr("gid").collect().map(_.getLong(0))
-    val pairs = TextOps.groupPairsOf(spark, dir)
+    val pairs = Graph.groupPairsOf(spark, dir)
       .selectExpr("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val edges = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
@@ -32,7 +32,7 @@ class PageRankGroupsSpec extends SparkSpec {
         v -> (150000L + 85L * contrib.getOrElse(v, 0L) / 100L)).toMap
     }
 
-    val got = TextOps.pageRankGroups(spark, dir).collect()
+    val got = Graph.pageRankGroups(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     // output is the FULL group ranking sorted by gid
     assert(got.map(_._1).toSeq == gids.sorted.toSeq)

@@ -14,7 +14,7 @@ class PageRankSpec extends SparkSpec {
 
   test("integer power iteration matches an in-memory recompute exactly") {
     import spark.implicits._
-    val got = TextOps.pageRank(spark, dir).collect()
+    val got = Graph.pageRank(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     val nodes = Tables.documents(spark, dir)

@@ -10,9 +10,9 @@ class PprGroupsSpec extends SparkSpec {
 
   test("top-20 recounts from a serial simulation on the group graph") {
     val dir = sf("sf0.001")
-    val gids = TextOps.groupFrame(spark, dir)
+    val gids = Graph.groupFrame(spark, dir)
       .selectExpr("gid").collect().map(_.getLong(0))
-    val pairs = TextOps.groupPairsOf(spark, dir)
+    val pairs = Graph.groupPairsOf(spark, dir)
       .selectExpr("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val edges = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
@@ -30,7 +30,7 @@ class PprGroupsSpec extends SparkSpec {
     }
     val want = r.toSeq.map { case (v, rk) => (v, seed(v), rk) }
       .sortBy(t => (-t._3, t._1)).take(20)
-    val got = TextOps.pprRankGroups(spark, dir).collect()
+    val got = Graph.pprRankGroups(spark, dir).collect()
       .map(row => (row.getLong(0), row.getBoolean(1), row.getLong(2)))
     assert(got.toSeq == want)
     got.foreach { case (_, isSeed, rank) =>

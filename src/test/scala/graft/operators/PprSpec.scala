@@ -32,14 +32,14 @@ class PprSpec extends SparkSpec {
     }
     val want = r.toSeq.map { case (v, rk) => (v, seed(v), rk) }
       .sortBy(t => (-t._3, t._1)).take(20)
-    val got = TextOps.pprRank(spark, dir).collect()
+    val got = Graph.pprRank(spark, dir).collect()
       .map(row => (row.getLong(0), row.getBoolean(1), row.getLong(2)))
     assert(got.toSeq == want)
   }
 
   test("locality: zero mass outside seed reach, teleport floor on seeds") {
     val dir = sf("sf0.001")
-    val got = TextOps.pprRank(spark, dir).collect()
+    val got = Graph.pprRank(spark, dir).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       if (r.getBoolean(1)) assert(r.getLong(2) >= 150000L, s"seed floor: $r")

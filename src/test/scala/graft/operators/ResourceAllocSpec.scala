@@ -11,7 +11,7 @@ class ResourceAllocSpec extends SparkSpec {
 
   test("top-20 matches a serial recount; scored pairs are non-edges") {
     val dir = sf("sf0.001")
-    val pairs = TextOps.groupPairsOf(spark, dir)
+    val pairs = Graph.groupPairsOf(spark, dir)
       .select("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val sym = pairs.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
@@ -26,7 +26,7 @@ class ResourceAllocSpec extends SparkSpec {
       .map { case ((u, v), ra) => (u, v, ra) }
       .sortBy { case (u, v, ra) => (-ra, u, v) }.take(20)
       .zipWithIndex.map { case ((u, v, ra), i) => (u, v, ra, i + 1L) }
-    val got = TextOps.resourceAlloc(spark, dir).collect()
+    val got = Graph.resourceAlloc(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3).toLong))
       .toSeq
     assert(got == want)

@@ -24,9 +24,9 @@ class SingleLinkageSpec extends SparkSpec {
 
   test("threshold-CC clusters equal MST-cut clusters at tau=100") {
     val dir = sf("sf0.001")
-    val nodes = TextOps.groupPairsOf(spark, dir).collect()
+    val nodes = Graph.groupPairsOf(spark, dir).collect()
       .flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct.toSeq
-    val msf = TextOps.mstForest(spark, dir).collect()
+    val msf = Graph.mstForest(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val cutEdges = msf.filter(_._3 <= 100L).map(e => (e._1, e._2))
     val viaMst = components(nodes, cutEdges.toIndexedSeq)
@@ -36,7 +36,7 @@ class SingleLinkageSpec extends SparkSpec {
     // counts from the full contracted vertex frame
     val mstHist = viaMst.groupBy(_._2).map(_._2.size)
       .groupBy(identity).map { case (s, g) => (s.toLong, g.size.toLong) }
-    val allGroups = TextOps.groupFrame(spark, dir).collect().length.toLong
+    val allGroups = Graph.groupFrame(spark, dir).collect().length.toLong
     val isolated = allGroups - nodes.length.toLong
     val expected = (mstHist.toSeq ++ (if (isolated > 0)
       Seq((1L, isolated)) else Seq.empty))
@@ -49,7 +49,7 @@ class SingleLinkageSpec extends SparkSpec {
 
   test("histogram conserves the contracted vertex set") {
     val dir = sf("sf0.001")
-    val allGroups = TextOps.groupFrame(spark, dir).collect().length.toLong
+    val allGroups = Graph.groupFrame(spark, dir).collect().length.toLong
     val got = TextOps.singleLinkage(spark, dir).collect()
     assert(got.map(r => r.getLong(0) * r.getLong(1)).sum == allGroups,
       "sum(size * n_clusters) = |V|")

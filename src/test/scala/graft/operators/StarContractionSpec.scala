@@ -20,7 +20,7 @@ class StarContractionSpec extends SparkSpec {
     es.toDF("a", "b")
   }
   private def labelMap(ids: Seq[Long], es: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
-    val (labels, rounds) = TextOps.starContraction(nodesDf(ids), edgesDf(es))
+    val (labels, rounds) = Graph.starContraction(nodesDf(ids), edgesDf(es))
     (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
   }
 

@@ -57,7 +57,7 @@ class SweepLtvAssortSpec extends SparkSpec {
   }
 
   test("assortativity matches an exact integer recount") {
-    val pairs = TextOps.groupPairsOf(spark, dir).collect()
+    val pairs = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val sym = pairs ++ pairs.map(p => (p._2, p._1))
     val deg = sym.groupBy(_._1).view.mapValues(_.length.toLong).toMap
@@ -67,7 +67,7 @@ class SweepLtvAssortSpec extends SparkSpec {
     val sxy = sym.map(e => deg(e._1) * deg(e._2)).sum
     val num = m * sxy - sx * sx
     val den = m * sxx - sx * sx
-    val r = TextOps.assortativity(spark, dir).collect().head
+    val r = Graph.assortativity(spark, dir).collect().head
     assert(r.getLong(0) == m)
     assert(r.getLong(1) == num)
     assert(r.getLong(2) == den)

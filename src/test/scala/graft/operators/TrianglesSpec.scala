@@ -13,7 +13,7 @@ class TrianglesSpec extends SparkSpec {
   private val M = 68719476731L
 
   test("per-group triangle counts match a brute-force enumeration") {
-    val got = TextOps.triangles(spark, dir).collect()
+    val got = Graph.triangles(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     // rebuild the group graph from the signature frame

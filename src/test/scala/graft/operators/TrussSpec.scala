@@ -33,12 +33,12 @@ class TrussSpec extends SparkSpec {
 
   test("pinned 5-round peel equals the serial fixpoint") {
     val dir = sf("sf0.001")
-    val edges0 = TextOps.groupPairsOf(spark, dir).collect()
+    val edges0 = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = serialTruss(edges0).toSeq.map { case ((a, b), s) =>
       (a, b, s)
     }.sortBy(r => (r._1, r._2))
-    val got = TextOps.truss(spark, dir).collect()
+    val got = Graph.truss(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(want.nonEmpty, "degenerate corpus: empty truss")
     assert(got == want)
@@ -46,9 +46,9 @@ class TrussSpec extends SparkSpec {
 
   test("truss laws: subset of the graph, support floor, peeling strictness") {
     val dir = sf("sf0.001")
-    val edges0 = TextOps.groupPairsOf(spark, dir).collect()
+    val edges0 = Graph.groupPairsOf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = TextOps.truss(spark, dir).collect()
+    val got = Graph.truss(spark, dir).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
     got.foreach { case (e, s) =>
       assert(edges0(e), s"truss edge $e not in the graph")
