@@ -22,7 +22,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *    weather-independent cost of round-latency-bound loops.
   *  - `snap --out DIR [--suffix S]`: writes each query's
   *    `explain("formatted")`, for the final frame and every pinned
-  *    segment's pre-checkpoint plan, to `DIR/<query><S>.txt`.
+  *    segment's pre-checkpoint plan, to `DIR/<query><S>.txt`, made
+  *    [[stablePlan]] so snaps from different sessions diff cleanly.
   *  - `sweep`: prints `SWEEP,query,wFinal,cFinal,wTotal,cTotal,pins` from
   *    [[audit]], the numbers PlanGuardSpec gates; named queries also get
   *    their nested-loop/cartesian plan lines.
@@ -189,8 +190,23 @@ object Inspect {
       println(f"""{"query":"$q","rows":$n,"jobs":$jobs,"stages":$stages,"sec":$secs%.3f}""")
     }
 
-  private def snap(spark: SparkSession, dir: String, names: Seq[String],
-      out: String, suffix: String): Unit = {
+  /** `text` with what differs between sessions that build the same plan
+    * made stable: expression ids (`#n`), exchange ids (`plan_id=n`), RDD
+    * ids (`RDD[n]`) and lambda variable ids (`lambda x_n`) renumbered in
+    * order of first appearance, and the line number dropped from
+    * `Pin.scala:n` and the JVM's name and address from a Scala lambda
+    * (`$Lambda$n/0x..@..`).
+    */
+  private def stablePlan(text: String): String =
+    Seq("#", "plan_id=", "RDD\\[", "lambda \\w{1,20}_").foldLeft(text) {
+      (t, key) =>
+        val ids = scala.collection.mutable.Map.empty[String, Int]
+        s"(?<=$key)\\d+".r.replaceAllIn(t,
+          m => ids.getOrElseUpdate(m.matched, ids.size).toString)
+    }.replaceAll("(?<=Pin\\.scala):\\d+|(?<=\\$Lambda)\\$[^,\\s]*", "")
+
+  private[graft] def snap(spark: SparkSession, dir: String,
+      names: Seq[String], out: String, suffix: String): Unit = {
     Files.createDirectories(Paths.get(out))
     val mode = ExplainMode.fromString("formatted")
     for (q <- names) {
@@ -203,7 +219,8 @@ object Inspect {
       } { SparkEntry.queries(q)(spark, dir) }
       val text = s"=== $q: final frame ===\n" +
         df.queryExecution.explainString(mode) + sb.toString
-      Files.write(Paths.get(out, s"$q$suffix.txt"), text.getBytes("UTF-8"))
+      Files.write(Paths.get(out, s"$q$suffix.txt"),
+        stablePlan(text).getBytes("UTF-8"))
       println(s"[inspect] wrote $out/$q$suffix.txt ($seg pinned segments)")
     }
   }

@@ -1992,6 +1992,9 @@ object Events {
        |FROM t ORDER BY task""".stripMargin
   }
 
+  /** Permutation count K shared by [[permTest]] and its SQL oracle. */
+  val PermK = 200
+
   /** Exact permutation test (Fisher 1935; the Monte-Carlo form of Dwass
     * 1957) on the arm difference in per-user spend — the inference
     * member of the experimentation trio ([[didEstimate]] estimates,
@@ -2017,7 +2020,7 @@ object Events {
     * 200 rows and a broadcast compare. At 100 TB the permutation stage
     * costs |users|·K rows however large the event log is.
     */
-  def permTest(s: SparkSession, dir: String, k: Int = 200): DataFrame = {
+  def permTest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val users = Tables.events(s, dir)
       .select($"user_id", round($"value" * 100).cast("long").as("v"))
@@ -2037,7 +2040,7 @@ object Events {
         ($"n1" * $"n0").as("b_obs"))
     val perms = users
       .select($"user_id", $"y",
-        explode(sequence(lit(1), lit(k))).as("k"))
+        explode(sequence(lit(1), lit(PermK))).as("k"))
       .select($"k", $"y",
         ((($"user_id" * 2654435761L + $"k" * 40503L) % 1000000007L)
           % 2L === 1L).as("t"))
@@ -2054,12 +2057,12 @@ object Events {
       .agg(count(lit(1)).as("cnt_ge"))
     obs.crossJoin(broadcast(cnt))
       .select($"n_users", $"n1", $"n0", $"obs_diff",
-        lit(k.toLong).as("k_perms"), $"cnt_ge",
-        expr(s"1000 * (cnt_ge + 1) div (${k.toLong} + 1)").as("p_pm"))
+        lit(PermK.toLong).as("k_perms"), $"cnt_ge",
+        expr(s"1000 * (cnt_ge + 1) div (${PermK.toLong} + 1)").as("p_pm"))
   }
 
   val permTestSql: String =
-    """WITH u AS (
+    s"""WITH u AS (
       |  SELECT user_id, sum(round(value * 100)::BIGINT)::BIGINT AS y
       |  FROM events GROUP BY user_id),
       |obs AS (
@@ -2075,7 +2078,7 @@ object Events {
       |    abs(y1 * n0 - y0 * n1)::BIGINT AS a_obs,
       |    (n1 * n0)::BIGINT AS b_obs
       |  FROM obs),
-      |ks AS (SELECT unnest(range(1, 201)) AS k),
+      |ks AS (SELECT unnest(range(1, ${PermK + 1})) AS k),
       |pl AS (
       |  SELECT k,
       |    ((user_id * 2654435761 + k * 40503) % 1000000007) % 2 = 1 AS t,
@@ -2093,8 +2096,8 @@ object Events {
       |  FROM pa CROSS JOIN ob2
       |  WHERE abs(pa.y1 * pa.n0 - pa.y0 * pa.n1)::DECIMAL(38,0) * b_obs
       |    >= a_obs::DECIMAL(38,0) * (pa.n1 * pa.n0))
-      |SELECT n_users, n1, n0, obs_diff, 200::BIGINT AS k_perms, cnt_ge,
-      |  (1000 * (cnt_ge + 1) // 201)::BIGINT AS p_pm
+      |SELECT n_users, n1, n0, obs_diff, $PermK::BIGINT AS k_perms, cnt_ge,
+      |  (1000 * (cnt_ge + 1) // ${PermK + 1})::BIGINT AS p_pm
       |FROM ob2 CROSS JOIN pc""".stripMargin
 
   val didEstimateSql: String =
@@ -2126,7 +2129,7 @@ object Events {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ev_did" -> didEstimate _,
     "ev_cuped" -> cupedEstimate _,
-    "stat_perm_test" -> ((s: SparkSession, dir: String) => permTest(s, dir)),
+    "stat_perm_test" -> permTest _,
     "eval_pass_at_k" -> passAtK _,
     "ev_survival_table" -> survivalTable _,
     "ev_acf" -> acf _,

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.Pin.PinOps
-import TextOps.{A, B, M, bandSig, minhashCandidates, minhashOf,
-  minhashPairsCte, tokCte, tokens}
+import Fingerprint.{bandSql, fold, minhashOf, sigsCte, tokCte, tokenCodes,
+  tokens}
+import TextOps.{minhashCandidates, minhashPairsCte}
 
 /** Graph analytics: the `graph_*` queries and the kernels they share.
   *
@@ -24,6 +25,11 @@ import TextOps.{A, B, M, bandSig, minhashCandidates, minhashOf,
   * all arithmetic is integer, so each oracle is an exact hash gate.
   */
 object Graph {
+  /** Round count of every PageRank loop ([[pageRankBsp]]) and of its
+    * oracle ([[pageRankCtes]]).
+    */
+  val PrIters = 3
+
   /** Both orientations (`x`, `y`) of an undirected (a, b) edge list. */
   private def undirected(pairs: DataFrame, x: String,
       y: String): DataFrame =
@@ -42,9 +48,9 @@ object Graph {
     */
   private[operators] def groupFrame(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val bs = minhashOf(s, dir).select($"doc_id",
-      bandSig((0 until 4).map(i => col(s"mh$i"))).as("s0"),
-      bandSig((4 until 8).map(i => col(s"mh$i"))).as("s1"))
+    val bs = minhashOf(tokenCodes(s, dir)).select($"doc_id",
+      fold((0 until 4).map(i => col(s"mh$i"))).as("s0"),
+      fold((4 until 8).map(i => col(s"mh$i"))).as("s1"))
     bs.groupBy($"s0", $"s1").agg(min($"doc_id").as("gid"))
       .pin // both sides of both band joins
   }
@@ -80,21 +86,16 @@ object Graph {
     * by the group-level oracles. Lazy: `TextOps.singleLinkageSql` can read
     * it while this object is still initializing.
     */
-  private[operators] lazy val groupGraphCte: String = tokCte + {
-    val cols = A.indices.map(j =>
-      s"min((${A(j)} * code + ${B(j)}) % 2147483647) AS mh$j").mkString(", ")
-    def sig(i: Int) =
-      (1 until 4).foldLeft(s"mh${i}")((acc, j) =>
-        s"(($acc) % $M * 131071 + mh${i + j}) % $M")
-    s""", sigs AS (SELECT doc_id, $cols FROM codes GROUP BY doc_id),
-       |bsig AS (SELECT doc_id, ${sig(0)} AS s0, ${sig(4)} AS s1 FROM sigs),
+  private[operators] lazy val groupGraphCte: String = tokCte + sigsCte +
+    s""",
+       |bsig AS (SELECT doc_id, ${bandSql(0, 4)} AS s0, ${bandSql(1, 4)} AS s1
+       |  FROM sigs),
        |g AS (SELECT s0, s1, min(doc_id) AS gid FROM bsig GROUP BY s0, s1),
        |gp AS (
        |  SELECT DISTINCT l.gid AS a, r.gid AS b
        |  FROM g l JOIN g r ON (l.s0 = r.s0 OR l.s1 = r.s1)
        |    AND l.gid < r.gid)
        |""".stripMargin
-  }
 
   /** Connected components by alternating large-star / small-star edge
     * contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -199,6 +200,9 @@ object Graph {
       cols: String = "a, b"): String =
     s"$name AS (SELECT $cols FROM $pairs UNION ALL SELECT b, a FROM $pairs)"
 
+  /** Round count shared by [[katzGroups]] and its SQL oracle. */
+  val KatzIters = 3
+
   /** Katz centrality (1953) on the contracted near-dup graph — the
     * path-counting complement of [[pageRankGroups]]: each node scores
     * Σ_k β^k · (walks of length k into it) with attenuation β = 1/2,
@@ -217,14 +221,14 @@ object Graph {
     * group-contracted edge frame — the [[pageRankBsp]] shape without the
     * degree join.
     */
-  def katzGroups(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
+  def katzGroups(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val nodes = groupFrame(s, dir).select($"gid")
     val pairs = groupPairsOf(s, dir).pin // union reads it twice
     val edges = undirected(pairs, "src", "dst")
       .pin // re-joined every round
     var r = nodes.select($"gid", lit(1000000L).as("r"))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to KatzIters) {
       val in = edges.join(r.withColumnRenamed("gid", "src"), "src")
         .groupBy($"dst".as("gid")).agg(sum($"r").as("s"))
       r = nodes.join(in, Seq("gid"), "left")
@@ -248,8 +252,8 @@ object Graph {
       s""", nodes AS (SELECT gid FROM g),
         |${undirectedCte("edges", "gp", "a AS src, b AS dst")},
         |k0 AS (SELECT gid, 1000000::BIGINT AS r FROM nodes)""".stripMargin +
-      (1 to 3).map(iterCte).mkString +
-      "\nSELECT gid, r AS katz FROM k3 ORDER BY gid"
+      (1 to KatzIters).map(iterCte).mkString +
+      s"\nSELECT gid, r AS katz FROM k$KatzIters ORDER BY gid"
   }
 
   /** PageRank over the minhash near-dup graph — the Pregel-style iterative
@@ -267,18 +271,18 @@ object Graph {
     * Runs [[pageRankBsp]] with every document a seed (uniform init and
     * uniform teleport).
     */
-  def pageRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
+  def pageRank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     pageRankBsp(
       Tables.documents(s, dir).select($"doc_id".as("v"), lit(true).as("seed")),
-      minhashCandidates(s, dir), iters)
+      minhashCandidates(s, dir))
       .select($"v".as("doc_id"), $"rank").orderBy($"doc_id")
   }
 
   val pageRankSql: String = minhashPairsCte +
     pageRankCtes("pairs", "SELECT doc_id FROM documents", "doc_id",
       personalized = false) +
-    "\nSELECT doc_id, r AS rank FROM r3 ORDER BY doc_id"
+    s"\nSELECT doc_id, r AS rank FROM r$PrIters ORDER BY doc_id"
 
   /** The one fixed-point BSP PageRank loop, shared by [[pageRank]],
     * [[pprRank]], [[pprRankGroups]], [[pageRankGroups]] and
@@ -298,8 +302,8 @@ object Graph {
     * GraphX/Pregel's data layout: partition edges by src, ship ranks to
     * edges, aggregate messages by dst.
     */
-  private[operators] def pageRankBsp(nodes0: DataFrame, pairs0: DataFrame,
-      iters: Int): DataFrame = {
+  private[operators] def pageRankBsp(nodes0: DataFrame,
+      pairs0: DataFrame): DataFrame = {
     val s = nodes0.sparkSession
     import s.implicits._
     val pairs = pairs0.pin // union reads it twice
@@ -318,7 +322,7 @@ object Graph {
       .pin // re-read every round (rank join base, degree inline)
     var r = nodes.select($"v", $"d",
       when($"seed", 1000000L).otherwise(0L).as("r"))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to PrIters) {
       val contrib = edges
         .join(r.withColumnRenamed("v", "src"), "src")
         .select($"dst".as("v"), expr("r div d").as("c"))
@@ -331,11 +335,12 @@ object Graph {
     r.select($"v", $"seed", $"r".as("rank"))
   }
 
-  /** The oracle twin of [[pageRankBsp]] at 3 rounds, appended to the
-    * caller's CTEs: `nodes` from `nodesSql` (column `id`, plus `seed` when
+  /** The oracle twin of [[pageRankBsp]], appended to the caller's CTEs:
+    * `nodes` from `nodesSql` (column `id`, plus `seed` when
     * `personalized`), `edges(src, dst)` both ways over the (a, b) CTE
-    * `pairs`, the out-degree `deg`, and the rank rounds r0..r3 (p0..p3
-    * when personalized) of (id, [seed,] r). The caller reads round 3.
+    * `pairs`, the out-degree `deg`, and the rank rounds r0..r[[PrIters]]
+    * (p0.. when personalized) of (id, [seed,] r). The caller reads the
+    * last round.
     */
   private[operators] def pageRankCtes(pairs: String, nodesSql: String,
       id: String, personalized: Boolean): String = {
@@ -358,12 +363,11 @@ object Graph {
        |${undirectedCte("edges", pairs, "a AS src, b AS dst")},
        |deg AS (SELECT src, count(*)::BIGINT AS d FROM edges GROUP BY src),
        |${k}0 AS (SELECT $id, $seed$init AS r FROM nodes)""".stripMargin +
-      (1 to 3).map(round).mkString
+      (1 to PrIters).map(round).mkString
   }
 
-  private def pprLoop(nodes0: DataFrame, pairs0: DataFrame,
-      iters: Int): DataFrame =
-    pageRankBsp(nodes0, pairs0, iters)
+  private def pprLoop(nodes0: DataFrame, pairs0: DataFrame): DataFrame =
+    pageRankBsp(nodes0, pairs0)
       .orderBy(col("rank").desc, col("v")).limit(20)
 
   /** Personalized PageRank (Haveliwala, WWW'02; the push/seed-restart
@@ -382,12 +386,12 @@ object Graph {
     * Output: the top-20 ranked docs (rank desc, doc_id) with their seed
     * flag — the expansion list, seeds naturally at the top.
     */
-  def pprRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
+  def pprRank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     pprLoop(
       Tables.documents(s, dir)
         .select($"doc_id".as("v"), ($"doc_id" % 97L === 0L).as("seed")),
-      minhashCandidates(s, dir), iters)
+      minhashCandidates(s, dir))
       .withColumnRenamed("v", "doc_id")
   }
 
@@ -401,13 +405,12 @@ object Graph {
     * expansion list reads "which duplicate FAMILIES are near the seed
     * families" — the cluster-level answer a curation pipeline acts on.
     */
-  def pprRankGroups(s: SparkSession, dir: String,
-      iters: Int = 3): DataFrame = {
+  def pprRankGroups(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     pprLoop(
       groupFrame(s, dir)
         .select($"gid".as("v"), ($"gid" % 97L === 0L).as("seed")),
-      groupPairsOf(s, dir), iters)
+      groupPairsOf(s, dir))
       .withColumnRenamed("v", "gid")
   }
 
@@ -424,28 +427,28 @@ object Graph {
     * pipeline ranks clusters by. The doc-level [[pageRank]] stays as the
     * oracle-exact per-document surface.
     */
-  def pageRankGroups(s: SparkSession, dir: String,
-      iters: Int = 3): DataFrame = {
+  def pageRankGroups(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     pageRankBsp(
       groupFrame(s, dir).select($"gid".as("v"), lit(true).as("seed")),
-      groupPairsOf(s, dir), iters)
+      groupPairsOf(s, dir))
       .select($"v".as("gid"), $"rank").orderBy($"gid")
   }
 
   val pageRankGroupsSql: String = groupGraphCte +
     pageRankCtes("gp", "SELECT gid FROM g", "gid", personalized = false) +
-    "\nSELECT gid, r AS rank FROM r3 ORDER BY gid"
+    s"\nSELECT gid, r AS rank FROM r$PrIters ORDER BY gid"
 
   val pprRankGroupsSql: String = groupGraphCte +
     pageRankCtes("gp", "SELECT gid, gid % 97 = 0 AS seed FROM g", "gid",
       personalized = true) +
-    "\nSELECT gid, seed, r AS rank FROM p3 ORDER BY rank DESC, gid LIMIT 20"
+    s"\nSELECT gid, seed, r AS rank FROM p$PrIters " +
+    "ORDER BY rank DESC, gid LIMIT 20"
 
   val pprRankSql: String = minhashPairsCte +
     pageRankCtes("pairs", "SELECT doc_id, doc_id % 97 = 0 AS seed FROM documents",
       "doc_id", personalized = true) +
-    "\nSELECT doc_id, seed, r AS rank FROM p3 " +
+    s"\nSELECT doc_id, seed, r AS rank FROM p$PrIters " +
     "ORDER BY rank DESC, doc_id LIMIT 20"
 
   /** Component-size histogram of the contracted near-dup graph: how many
@@ -682,6 +685,9 @@ object Graph {
       |  max(deg)::BIGINT AS max_deg
       |FROM alldeg GROUP BY 1 ORDER BY bucket""".stripMargin
 
+  /** The k of [[truss]], shared with its SQL oracle. */
+  val TrussK = 4
+
   /** k-TRUSS of the contracted near-dup graph (Cohen 2008; the Graph
     * Challenge kernel), k = 4: the maximal subgraph in which every
     * surviving edge sits in ≥ k−2 = 2 triangles OF THE SUBGRAPH — the
@@ -701,7 +707,7 @@ object Graph {
     * the MST/PCA oracles, without a data-dependent round count leaking
     * into the oracle string.
     */
-  def truss(s: SparkSession, dir: String, k: Int = 4): DataFrame = {
+  def truss(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     def support(edges: DataFrame): DataFrame = {
       val (_, tri) = triTuples(edges)
@@ -717,12 +723,12 @@ object Graph {
     var lastCount = -1L
     for (_ <- 1 to 5) {
       lastCount = edges.count()
-      edges = support(edges).filter($"support" >= k - 2L)
+      edges = support(edges).filter($"support" >= TrussK - 2L)
         .select($"a", $"b").pin
     }
     require(edges.count() == lastCount,
       "truss peeling did not converge within the 5 pinned rounds")
-    support(edges).filter($"support" >= k - 2L)
+    support(edges).filter($"support" >= TrussK - 2L)
       .orderBy($"a", $"b")
   }
 
@@ -740,11 +746,12 @@ object Graph {
          |    UNION ALL SELECT x, z FROM tr$r
          |    UNION ALL SELECT y, z FROM tr$r) m GROUP BY 1, 2),
          |e$r AS MATERIALIZED (
-         |  SELECT s.a, s.b FROM sup$r s WHERE s.support >= 2)""".stripMargin
+         |  SELECT s.a, s.b FROM sup$r s
+         |  WHERE s.support >= ${TrussK - 2})""".stripMargin
     }.mkString
     s""", e0 AS MATERIALIZED (SELECT a, b FROM gp)$rounds
        |SELECT a, b, support FROM sup6
-       |WHERE support >= 2 ORDER BY a, b""".stripMargin
+       |WHERE support >= ${TrussK - 2} ORDER BY a, b""".stripMargin
   }
 
   /** The oracle twin of [[degAndTriCounts]]: the group-graph CTEs through
@@ -1569,7 +1576,7 @@ object Graph {
     * is one keyed join + one keyed sum over the edge frame (work ∝ |E|),
     * the sparse-matrix BSP layout — the dense A never exists.
     */
-  def graphHits(s: SparkSession, dir: String, iters: Int = HitsIters): DataFrame = {
+  def graphHits(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val edges = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir), $"l_orderkey" === $"o_orderkey")
@@ -1578,7 +1585,7 @@ object Graph {
     var h = edges.select($"c").distinct()
       .select($"c", lit(1048576L).as("h"))
     var a = edges.limit(0).select($"p", lit(0L).as("a")) // replaced below
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to HitsIters) {
       // pin the PRE-rescale half-round aggregate (a0/h0): the max-divisor
       // agg and the rescale projection both read it, so pinning the
       // POST-rescale frame (the r16 shape) recomputed the |E|-sized
@@ -1636,18 +1643,16 @@ object Graph {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_katz" -> ((s: SparkSession, dir: String) => katzGroups(s, dir)),
+    "graph_katz" -> katzGroups _,
     "graph_degree_hist" -> degreeHist _,
     "graph_kcore" -> ((s: SparkSession, dir: String) => kcore(s, dir)),
-    "graph_pagerank" -> ((s: SparkSession, dir: String) => pageRank(s, dir)),
-    "graph_pagerank_groups" ->
-      ((s: SparkSession, dir: String) => pageRankGroups(s, dir)),
+    "graph_pagerank" -> pageRank _,
+    "graph_pagerank_groups" -> pageRankGroups _,
     "graph_resource_alloc" -> resourceAlloc _,
-    "graph_ppr" -> ((s: SparkSession, dir: String) => pprRank(s, dir)),
-    "graph_ppr_groups" ->
-      ((s: SparkSession, dir: String) => pprRankGroups(s, dir)),
+    "graph_ppr" -> pprRank _,
+    "graph_ppr_groups" -> pprRankGroups _,
     "graph_triangles" -> triangles _,
-    "graph_truss" -> ((s: SparkSession, dir: String) => truss(s, dir)),
+    "graph_truss" -> truss _,
     "graph_clustering_coeff" -> clusteringCoeff _,
     "graph_component_sizes" -> componentSizes _,
     "graph_diameter_probe" -> diameterProbe _,
@@ -1658,7 +1663,7 @@ object Graph {
     "graph_lpa_modularity" -> lpaModularity _,
     "graph_mst" -> mstForest _,
     "graph_bfs_reach" -> bfsReach _,
-    "graph_hits" -> ((s: SparkSession, dir: String) => graphHits(s, dir)),
+    "graph_hits" -> graphHits _,
   )
 
   val oracles: Map[String, String] = Map(

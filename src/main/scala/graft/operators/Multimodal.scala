@@ -608,7 +608,7 @@ object Multimodal {
     val ph = phFrame(s, dir)
     // unsorted pair frame: the phash joins re-shuffle immediately, so
     // shinglePairs' presentation sort would be a wasted global exchange
-    TextOps.shinglePairsOf(TextOps.shingleCodes(s, dir))
+    TextOps.shinglePairsOf(Fingerprint.shingleCodes(s, dir))
       .join(ph.select(col("media_id").as("a"), col("phash").as("pa")),
         Seq("a"))
       .join(ph.select(col("media_id").as("b"), col("phash").as("pb")),

@@ -521,23 +521,28 @@ object Similarity {
     lshBucketsRaw(s, dir).orderBy($"vec_id")
   }
 
-  val lshBucketsSql: String =
-    """WITH qv AS (
-      |  SELECT vec_id,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
-      |comp AS (
+  /** `comp`, `hp`, `hdots`, `buckets(vec_id, bucket)` and
+    * `qb(vec_id, q, bucket)` after the `qv` CTE: the SQL twin of
+    * [[lshBucketsRaw]] at its 8 planes.
+    */
+  private val bucketsCte: String =
+    """, comp AS (
       |  SELECT vec_id, unnest(q) AS e, generate_subscripts(q, 1) - 1 AS i
       |  FROM qv),
       |hp AS (
       |  SELECT j, i, ((1 + (j * 64 + i) * 2654435761) % 1999) - 999 AS h
       |  FROM range(8) t(j), range(64) s(i)),
-      |dots AS (
+      |hdots AS (
       |  SELECT vec_id, j, sum(e * h) AS d
-      |  FROM comp JOIN hp USING (i) GROUP BY 1, 2)
-      |SELECT vec_id,
-      |  sum(CASE WHEN d >= 0 THEN (2^j)::BIGINT ELSE 0 END)::BIGINT AS bucket
-      |FROM dots GROUP BY vec_id ORDER BY vec_id""".stripMargin
+      |  FROM comp JOIN hp USING (i) GROUP BY 1, 2),
+      |buckets AS (
+      |  SELECT vec_id, sum(CASE WHEN d >= 0 THEN (2^j)::BIGINT ELSE 0 END) AS bucket
+      |  FROM hdots GROUP BY vec_id),
+      |qb AS (SELECT qv.vec_id, qv.q, b.bucket FROM qv
+      |       JOIN buckets b ON qv.vec_id = b.vec_id)""".stripMargin
+
+  val lshBucketsSql: String = qvecCte + bucketsCte +
+    "\nSELECT vec_id, bucket::BIGINT AS bucket FROM buckets ORDER BY vec_id"
 
   /** Bucketed ANN top-3: brute-force cosine, but only within the query's
     * LSH bucket — the sub-linear scale path (candidates ∝ bucket size).
@@ -565,28 +570,14 @@ object Similarity {
       .orderBy($"qid", $"rn")
   }
 
-  val lshTopKSql: String = qvecCte +
-    """, comp AS (
-      |  SELECT vec_id, unnest(q) AS e, generate_subscripts(q, 1) - 1 AS i
-      |  FROM qv),
-      |hp AS (
-      |  SELECT j, i, ((1 + (j * 64 + i) * 2654435761) % 1999) - 999 AS h
-      |  FROM range(8) t(j), range(64) s(i)),
-      |hdots AS (
-      |  SELECT vec_id, j, sum(e * h) AS d
-      |  FROM comp JOIN hp USING (i) GROUP BY 1, 2),
-      |buckets AS (
-      |  SELECT vec_id, sum(CASE WHEN d >= 0 THEN (2^j)::BIGINT ELSE 0 END) AS bucket
-      |  FROM hdots GROUP BY vec_id),
+  val lshTopKSql: String = qvecCte + bucketsCte +
+    """,
       |dots AS (
       |  SELECT qid, vec_id, sum(x * y) AS d FROM (
       |    SELECT q.vec_id AS qid, e.vec_id,
       |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT qv.vec_id, qv.q, b.bucket FROM qv
-      |          JOIN buckets b ON qv.vec_id = b.vec_id WHERE qv.vec_id < 10) q
-      |    JOIN (SELECT qv.vec_id, qv.q, b.bucket FROM qv
-      |          JOIN buckets b ON qv.vec_id = b.vec_id) e
-      |      ON q.bucket = e.bucket AND e.vec_id <> q.vec_id) z
+      |    FROM (SELECT * FROM qb WHERE vec_id < 10) q
+      |    JOIN qb e ON q.bucket = e.bucket AND e.vec_id <> q.vec_id) z
       |  GROUP BY 1, 2),
       |scored AS (
       |  SELECT qid, d.vec_id,
@@ -2328,27 +2319,13 @@ object Similarity {
       .orderBy($"vec_id", $"rn")
   }
 
-  val knnGraphSql: String = qvecCte +
-    """, comp AS (
-      |  SELECT vec_id, unnest(q) AS e, generate_subscripts(q, 1) - 1 AS i
-      |  FROM qv),
-      |hp AS (
-      |  SELECT j, i, ((1 + (j * 64 + i) * 2654435761) % 1999) - 999 AS h
-      |  FROM range(8) t(j), range(64) s(i)),
-      |hdots AS (
-      |  SELECT vec_id, j, sum(e * h) AS d
-      |  FROM comp JOIN hp USING (i) GROUP BY 1, 2),
-      |buckets AS (
-      |  SELECT vec_id, sum(CASE WHEN d >= 0 THEN (2^j)::BIGINT ELSE 0 END) AS bucket
-      |  FROM hdots GROUP BY vec_id),
+  val knnGraphSql: String = qvecCte + bucketsCte +
+    """,
       |dots AS (
       |  SELECT vid, nbr, sum(x * y) AS d FROM (
       |    SELECT l.vec_id AS vid, e.vec_id AS nbr,
       |           unnest(l.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT qv.vec_id, qv.q, b.bucket FROM qv
-      |          JOIN buckets b ON qv.vec_id = b.vec_id) l
-      |    JOIN (SELECT qv.vec_id, qv.q, b.bucket FROM qv
-      |          JOIN buckets b ON qv.vec_id = b.vec_id) e
+      |    FROM qb l JOIN qb e
       |      ON l.bucket = e.bucket AND e.vec_id <> l.vec_id) z
       |  GROUP BY 1, 2),
       |scored AS (
@@ -2532,6 +2509,9 @@ object Similarity {
       |LEFT JOIN hits h ON q.qid = h.qid
       |ORDER BY q.qid""".stripMargin
 
+  /** Selection size k shared by [[diversitySample]] and its SQL oracle. */
+  val DiversityK = 10
+
   /** Diversity (coreset) selection: k-center greedy / farthest-point
     * traversal (Gonzalez 1985, the 2-approximation to the k-center
     * problem) — start from vec 0, then repeatedly pick the vector
@@ -2550,8 +2530,8 @@ object Similarity {
     * that grows with data. For large k at 100 TB the standard move is
     * k-means++-style sampled initialization on top of the same kernel.
     */
-  def diversitySample(s: SparkSession, dir: String, k: Int = 10): DataFrame =
-    diversitySampleOf(qEmb(s, dir), k)
+  def diversitySample(s: SparkSession, dir: String): DataFrame =
+    diversitySampleOf(qEmb(s, dir), DiversityK)
 
   /** Kernel over an arbitrary (vec_id, q, n2) frame — split out so the
     * duplicate-corpus degenerate case (covering radius 0) is testable
@@ -2608,7 +2588,7 @@ object Similarity {
     sb ++= """, ch0 AS MATERIALIZED (
              |  SELECT vec_id, q, 0 AS sel_order, 0::BIGINT AS sel_d2
              |  FROM qv WHERE vec_id = 0)""".stripMargin
-    for (i <- 1 until 10) {
+    for (i <- 1 until DiversityK) {
       val prev = s"ch${i - 1}"
       sb ++=
         s""",
@@ -2633,7 +2613,8 @@ object Similarity {
            |  SELECT p.vec_id, qv.q, $i, p.md2
            |  FROM p$i p JOIN qv ON p.vec_id = qv.vec_id)""".stripMargin
     }
-    sb ++= "\nSELECT sel_order, vec_id, sel_d2 FROM ch9 ORDER BY sel_order"
+    sb ++= s"\nSELECT sel_order, vec_id, sel_d2 FROM ch${DiversityK - 1} " +
+      "ORDER BY sel_order"
     sb.toString
   }
 
@@ -3645,6 +3626,9 @@ object Similarity {
         ($"n" * $"sxy" - $"sx_i" * $"sx_j").as("cov_num"))
   }
 
+  /** Round count shared by [[pcaPower]] and its SQL oracle. */
+  val PcaIters = 8
+
   /** Top principal component of the embedding corpus by fixed-point
     * power iteration — PCA's workhorse step (von Mises–Pollaczek 1929;
     * Halko et al. 2011 §4 for why matrix-free products are THE scale
@@ -3673,7 +3657,7 @@ object Similarity {
     * why this keeps the r16 post-rescale pin while lsa/hits moved to the
     * pre-rescale pin.
     */
-  def pcaPower(s: SparkSession, dir: String, iters: Int = 8): DataFrame = {
+  def pcaPower(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cn = covNumFrame(s, dir)
     val full = cn.select($"i", $"j", $"cov_num")
@@ -3704,7 +3688,7 @@ object Similarity {
     // stages that (a) overlaps, and (c)'s per-round broadcast build
     // blocks both join copies. The pre-rescale pin stays the right move
     // for lsa/hits/BT where the recomputed subtree is corpus/|E|-sized.
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to PcaIters) {
       val u = cs.join(v.select($"i".as("j"), $"v"), Seq("j"))
         .select($"i", ($"c" * $"v").as("t"))
         .groupBy($"i").agg(sum($"t").as("u"))
@@ -3759,10 +3743,10 @@ object Similarity {
       |  FROM fm CROSS JOIN sh),
       |v0 AS (SELECT unnest(range(0, 64))::BIGINT AS i,
       |         1048576::BIGINT AS v)""".stripMargin +
-      (1 to 8).map(round).mkString +
-      """
-        |SELECT v7.i, v7.v AS v_prev, v8.v AS v_top
-        |FROM v7 JOIN v8 USING (i) ORDER BY i""".stripMargin
+      (1 to PcaIters).map(round).mkString +
+      s"""
+        |SELECT i, p.v AS v_prev, t.v AS v_top
+        |FROM v${PcaIters - 1} p JOIN v$PcaIters t USING (i) ORDER BY i""".stripMargin
   }
 
   val covarianceMatrixSql: String =
@@ -3781,7 +3765,7 @@ object Similarity {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "emb_covariance" -> covarianceMatrix _,
-    "emb_pca_power" -> ((s: SparkSession, dir: String) => pcaPower(s, dir)),
+    "emb_pca_power" -> pcaPower _,
     "sim_sq_spearman" -> sqSpearman _,
     "sim_recall_curve" -> recallCurve _,
     "sim_pq_distortion" -> pqDistortion _,
@@ -3825,8 +3809,7 @@ object Similarity {
     "sim_knn_graph" -> ((s: SparkSession, d: String) => knnGraph(s, d)),
     "sim_mips_topk" -> mipsTopK _,
     "sim_matryoshka_recall" -> matryoshkaRecall _,
-    "sim_diversity_sample" -> ((s: SparkSession, dir: String) =>
-      diversitySample(s, dir)),
+    "sim_diversity_sample" -> diversitySample _,
   )
 
   val oracles: Map[String, String] = Map(

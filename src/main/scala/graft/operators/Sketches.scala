@@ -890,6 +890,9 @@ object Sketches {
        |           ELSE 0 END)::BIGINT AS ht_est_w
        |FROM d GROUP BY lang ORDER BY lang""".stripMargin
 
+  /** Tick count k shared by [[ppsSystematic]] and its SQL oracle. */
+  val PpsK = 100
+
   /** SYSTEMATIC πps sample (Madow 1949; the fixed-size complement of the
     * Poisson πps [[weightedSample]]): k = 100 evenly-spaced ticks on the
     * cumulative-weight axis, weight = n_chars; the doc whose weight
@@ -909,7 +912,7 @@ object Sketches {
     * Scale: one GlobalOrder cumulative sum (range-partitioned offset
     * pass, never a single-reducer window) + one filter; output is k rows.
     */
-  def ppsSystematic(s: SparkSession, dir: String, k: Int = 100): DataFrame = {
+  def ppsSystematic(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
       .select($"doc_id", $"n_chars".cast("long").as("w"))
@@ -918,21 +921,21 @@ object Sketches {
     val tot = cum.agg(max($"cum").as("wt"))
     // integer floor-div via expr: Spark's `/` on longs is DOUBLE division
     cum.crossJoin(broadcast(tot))
-      .filter(expr(s"cum * $k div wt > (cum - w) * $k div wt"))
-      .select(expr(s"cum * $k div wt").as("pick"), $"doc_id", $"w")
+      .filter(expr(s"cum * $PpsK div wt > (cum - w) * $PpsK div wt"))
+      .select(expr(s"cum * $PpsK div wt").as("pick"), $"doc_id", $"w")
       .orderBy($"pick", $"doc_id")
   }
 
   val ppsSystematicSql: String =
-    """WITH c AS (
-      |  SELECT doc_id, n_chars::BIGINT AS w,
-      |    sum(n_chars::BIGINT) OVER (ORDER BY doc_id) AS cum
-      |  FROM documents),
-      |tt AS (SELECT max(cum)::BIGINT AS wt FROM c)
-      |SELECT (cum * 100 // wt)::BIGINT AS pick, doc_id, w
-      |FROM c CROSS JOIN tt
-      |WHERE cum * 100 // wt > (cum - w) * 100 // wt
-      |ORDER BY pick, doc_id""".stripMargin
+    s"""WITH c AS (
+       |  SELECT doc_id, n_chars::BIGINT AS w,
+       |    sum(n_chars::BIGINT) OVER (ORDER BY doc_id) AS cum
+       |  FROM documents),
+       |tt AS (SELECT max(cum)::BIGINT AS wt FROM c)
+       |SELECT (cum * $PpsK // wt)::BIGINT AS pick, doc_id, w
+       |FROM c CROSS JOIN tt
+       |WHERE cum * $PpsK // wt > (cum - w) * $PpsK // wt
+       |ORDER BY pick, doc_id""".stripMargin
 
   /** KMV multiset algebra (Beyer et al., "On Synopses for Distinct-Value
     * Estimation Under Multiset Operations", SIGMOD 2007): distinct-count
@@ -1600,6 +1603,9 @@ object Sketches {
       |HAVING count(*) * 65 > n
       |ORDER BY cnt DESC, w""".stripMargin
 
+  /** Sketch size k shared by [[kmvIntersect]] and its SQL oracle. */
+  val KmvK = 256
+
   /** KMV / theta-sketch INTERSECTION estimate (Bar-Yossef et al. 2002's
     * k-minimum-values cardinality sketch; Beyer et al. SIGMOD'07 for the
     * multi-set estimators; the Apache DataSketches theta form): the set-
@@ -1622,19 +1628,19 @@ object Sketches {
     * sketches are mergeable by construction (union-of-sketches re-min'd)
     * — the property that lets every shard sketch independently at 100 TB.
     */
-  def kmvIntersect(s: SparkSession, dir: String, k: Int = 256): DataFrame = {
+  def kmvIntersect(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val h = Tables.documents(s, dir)
       .select(($"doc_id" % 2L === 0L).as("sidea"),
         explode(split($"text", " ")).as("w"))
-      .select($"sidea", (TextOps.tokenCode($"w") * 48271L % 2147483647L)
+      .select($"sidea", (Fingerprint.tokenCode($"w") * 48271L % 2147483647L)
         .as("h"))
       .distinct().pin // both side filters read it
-    val skA = h.filter($"sidea").select($"h").orderBy($"h").limit(k)
+    val skA = h.filter($"sidea").select($"h").orderBy($"h").limit(KmvK)
       .pin // union + the common join
-    val skB = h.filter(!$"sidea").select($"h").orderBy($"h").limit(k)
+    val skB = h.filter(!$"sidea").select($"h").orderBy($"h").limit(KmvK)
       .pin
-    val uni = skA.unionByName(skB).distinct().orderBy($"h").limit(k)
+    val uni = skA.unionByName(skB).distinct().orderBy($"h").limit(KmvK)
       .pin // theta agg + the support restriction
     val theta = uni.agg(max($"h").as("theta"), count(lit(1)).as("ku"))
     val cAgg = skA.join(skB, Seq("h")).join(uni, Seq("h"))
@@ -1645,10 +1651,10 @@ object Sketches {
     // ADVICE). Saturated path unchanged.
     theta.crossJoin(broadcast(cAgg))
       .select($"ku".as("k"), $"theta",
-        when($"ku" < k, $"ku")
+        when($"ku" < KmvK, $"ku")
           .otherwise(expr("(ku - 1) * 2147483647 div theta"))
           .as("est_union"),
-        when($"ku" < k, $"c")
+        when($"ku" < KmvK, $"c")
           .otherwise(expr("c * 2147483647 div theta"))
           .as("est_inter"),
         $"c".as("common_in_sketch"))
@@ -1731,29 +1737,28 @@ object Sketches {
        |  FROM documents),
        |h AS (
        |  SELECT DISTINCT sidea,
-       |    (${graft.operators.TextOps.tokenCodeSql} * 48271 % 2147483647)
+       |    (${Fingerprint.tokenCodeSql} * 48271 % 2147483647)
        |      AS h
        |  FROM tok),
-       |ska AS (SELECT h FROM h WHERE sidea ORDER BY h LIMIT 256),
-       |skb AS (SELECT h FROM h WHERE NOT sidea ORDER BY h LIMIT 256),
+       |ska AS (SELECT h FROM h WHERE sidea ORDER BY h LIMIT $KmvK),
+       |skb AS (SELECT h FROM h WHERE NOT sidea ORDER BY h LIMIT $KmvK),
        |uni AS (SELECT DISTINCT h FROM (SELECT h FROM ska
-       |        UNION ALL SELECT h FROM skb) z ORDER BY h LIMIT 256),
+       |        UNION ALL SELECT h FROM skb) z ORDER BY h LIMIT $KmvK),
        |th AS (SELECT max(h)::BIGINT AS theta, count(*)::BIGINT AS ku
        |       FROM uni),
        |cm AS (SELECT count(*)::BIGINT AS c
        |       FROM ska JOIN skb USING (h) JOIN uni USING (h))
        |SELECT ku AS k, theta,
-       |  (CASE WHEN ku < 256 THEN ku
+       |  (CASE WHEN ku < $KmvK THEN ku
        |        ELSE (ku - 1) * 2147483647 // theta END)::BIGINT
        |    AS est_union,
-       |  (CASE WHEN ku < 256 THEN c
+       |  (CASE WHEN ku < $KmvK THEN c
        |        ELSE c * 2147483647 // theta END)::BIGINT AS est_inter,
        |  c AS common_in_sketch
        |FROM th, cm""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sketch_kmv_intersect" ->
-      ((s: SparkSession, dir: String) => kmvIntersect(s, dir)),
+    "sketch_kmv_intersect" -> kmvIntersect _,
     "sketch_quantile" ->
       ((s: SparkSession, dir: String) => quantileSketch(s, dir)),
     "freq_heavy_hitters" -> heavyHitters _,
@@ -1768,7 +1773,7 @@ object Sketches {
     "sample_stratified" -> stratifiedSample _,
     "sample_mixture" -> mixtureSample _,
     "sample_weighted" -> weightedSample _,
-    "sample_pps" -> ((s: SparkSession, dir: String) => ppsSystematic(s, dir)),
+    "sample_pps" -> ppsSystematic _,
     "sketch_bloom_filter" -> bloomFilter _,
     "sketch_bloom_join" -> bloomJoin _,
     "sample_neyman" -> neymanSample _,

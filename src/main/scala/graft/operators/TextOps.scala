@@ -5,17 +5,19 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.Pin.PinOps
-import Graph.{degrees, groupFrame, groupGraphCte, groupPairsOf, jaccardEdges,
-  jaccardEdgesCte, pageRankBsp, pageRankCtes, reachCte, starContraction,
-  undirectedCte}
+import Fingerprint._
+import Graph.{PrIters, degrees, groupFrame, groupGraphCte, groupPairsOf,
+  jaccardEdges, jaccardEdgesCte, pageRankBsp, pageRankCtes, reachCte,
+  starContraction, undirectedCte}
 
 /** Text-analysis + deduplication operators over `documents` — the
   * LLM-training-data-pipeline surface (builder prompt; SURVEY.md §7.2 M5).
   *
   * Everything here is built from codegen'd built-in expressions (no UDFs),
-  * and every hash/score is defined over *integer arithmetic* (token codes
-  * from `ascii`, polynomial folds mod a prime) so the DuckDB oracle computes
-  * bit-identical values — cross-engine float divergence is designed out.
+  * and every hash/score is defined over *integer arithmetic* (the
+  * [[Fingerprint]] kernels: token codes from `ascii`, polynomial folds mod
+  * a prime) so the DuckDB oracle computes bit-identical values —
+  * cross-engine float divergence is designed out.
   *
   * Scale notes: token explode → distinct → groupBy is the standard
   * inverted-index shape (shuffles on token then doc_id; both map-side
@@ -24,52 +26,6 @@ import Graph.{degrees, groupFrame, groupGraphCte, groupPairsOf, jaccardEdges,
   * all-pairs join (kept as the Jaccard verification baseline) is O(n²).
   */
 object TextOps {
-
-  private val P = 2147483647L // 2^31 - 1 (Mersenne prime)
-  private[operators] val A = Seq(1103L, 12289L, 52361L, 84631L, 11213L, 91099L, 30011L, 70607L)
-  private[operators] val B = Seq(12007L, 24001L, 33023L, 47093L, 59063L, 71411L, 83477L, 95789L)
-
-  /** Whitespace token stream: (doc_id, w), distinct per doc.
-    * Docs are single-space separated (verified on the corpus).
-    */
-  private[operators] def tokens(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("w"))
-      .distinct()
-  }
-
-  /** Integer token code: first 3 chars packed base-256 + length, then the
-    * LAST char appended in a further base-256 digit. The tail character
-    * matters: with only a prefix + length, any two tokens agreeing on
-    * their first 3 chars and length collide unconditionally ("running" /
-    * "runtime"), which collapses distinct vocabulary into one sketch
-    * input — measured on a 10× suffix-disambiguated corpus, that collapse
-    * (not bucket math) was what inflated LSH candidate pairs ~quadratically.
-    * Bound: < 2^26 · 256 = 2^34, so A_max·code + B < 2^51 stays exact in
-    * int64 AND float64 in both engines. `ascii('') = 0` in both engines
-    * covers words shorter than 3 chars.
-    */
-  private[operators] def tokenCode(w: Column): Column =
-    ((ascii(substring(w, 1, 1)).cast("long") * 65536L
-      + ascii(substring(w, 2, 1)).cast("long") * 256L
-      + ascii(substring(w, 3, 1)).cast("long")
-      + length(w).cast("long")) * 256L
-      + ascii(w.substr(length(w), lit(1))).cast("long"))
-
-  private[operators] val tokenCodeSql =
-    """((ascii(substr(w,1,1))::BIGINT * 65536
-      | + ascii(substr(w,2,1))::BIGINT * 256
-      | + ascii(substr(w,3,1))::BIGINT + length(w)::BIGINT) * 256
-      | + ascii(substr(w,length(w),1))::BIGINT)""".stripMargin
-      .replace("\n", " ")
-
-  private[operators] val tokCte =
-    s"""WITH tok AS (
-       |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w
-       |  FROM documents),
-       |codes AS (SELECT doc_id, $tokenCodeSql AS code FROM tok)
-       |""".stripMargin
 
   // ---- text statistics ----
 
@@ -149,6 +105,9 @@ object TextOps {
       .orderBy($"lang", $"pred_lang")
   }
 
+  /** Round count shared by [[lsaPower]] and its SQL oracle. */
+  val LsaIters = 4
+
   /** Top LATENT SEMANTIC direction (LSA — Deerwester et al. 1990) of the
     * tf·idf term–document matrix, by power iteration that NEVER FORMS
     * THE GRAM: u ← A·v (term side), v ← Aᵀ·u (doc side), 4 pinned
@@ -165,7 +124,7 @@ object TextOps {
     * nonnegative — no sign indeterminacy. Output: the top-10 terms by
     * loading — the corpus's dominant topic axis.
     */
-  def lsaPower(s: SparkSession, dir: String, iters: Int = 4): DataFrame = {
+  def lsaPower(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val toks = Tables.documents(s, dir)
       .select($"doc_id", explode(split($"text", " ")).as("w"))
@@ -180,7 +139,7 @@ object TextOps {
     var v = Tables.documents(s, dir)
       .select($"doc_id", lit(1048576L).as("v"))
     var u = triples.limit(0).select($"w", lit(0L).as("u")) // replaced below
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to LsaIters) {
       // pin the PRE-rescale half-round aggregate (u0/v0): the max-divisor
       // agg and the rescale projection both read it, so pinning the
       // POST-rescale frame (the r16 shape) recomputed the nnz-sized
@@ -236,8 +195,8 @@ object TextOps {
       |  FROM tf JOIN dfq USING (w) CROSS JOIN nn),
       |v0 AS (SELECT doc_id, 1048576::BIGINT AS v FROM documents)"""
       .stripMargin +
-      (1 to 4).map(round).mkString +
-      "\nSELECT w AS term, u AS loading FROM us4 " +
+      (1 to LsaIters).map(round).mkString +
+      s"\nSELECT w AS term, u AS loading FROM us$LsaIters " +
       "ORDER BY loading DESC, term LIMIT 10"
   }
 
@@ -619,31 +578,6 @@ object TextOps {
        |FROM documents ORDER BY doc_id""".stripMargin
   }
 
-  /** LEARNED language classifier: char-trigram multinomial Naive Bayes
-    * with add-one smoothing, trained on the corpus's own labels and
-    * applied back to every document — the data-driven replacement for the
-    * hand-picked marker heuristic ([[langId]]), in the Cavnar–Trenkle
-    * n-gram-profile tradition. Likelihoods are the same libm-free integer
-    * bits the LM scorers use: cost_l(g) = bitlength(⌊(N_l+V)/(cnt_l(g)+1)⌋)
-    * (≈ −log₂ p(g|l)), a document's score per language is the sum of its
-    * trigram costs (unseen trigrams pay the smoothed ceiling bits0_l =
-    * bitlength(N_l+V)), prediction is the argmin with a deterministic
-    * language tie-break — bit-identical cross-engine end to end.
-    *
-    * Scale shape: one (lang, gram) count aggregation (vocabulary-bounded)
-    * trains the model; scoring expands the doc-gram stream by |langs|
-    * broadcast rows and joins the LM on (lang, gram) — one shuffle keyed
-    * by gram, map-side-combinable score sums, no driver collect.
-    *
-    * Accuracy trade, stated plainly: 1-bit likelihood quantization keeps
-    * the classifier bit-reproducible cross-engine but coarsens the
-    * ranking (float log-probs would separate better); on the synthetic
-    * gate corpus, whose language signal is mostly the planted marker
-    * words, the NB sits slightly below the marker heuristic (184 vs
-    * 193 / 500 at sf0.001 — LangNbSpec). On natural text, where the
-    * signal is spread over the whole trigram distribution, the learned
-    * profile is the one that generalizes.
-    */
   /** Char-trigram stream `(doc_id, lang, gram)`, one row per position
     * 1..L−2 of each document with ≥3 chars. O(L) per doc: the text is
     * split into its char array ONCE per row and each trigram is three
@@ -716,6 +650,31 @@ object TextOps {
     scored
   }
 
+  /** LEARNED language classifier: char-trigram multinomial Naive Bayes
+    * with add-one smoothing, trained on the corpus's own labels and
+    * applied back to every document — the data-driven replacement for the
+    * hand-picked marker heuristic ([[langId]]), in the Cavnar–Trenkle
+    * n-gram-profile tradition. Likelihoods are the same libm-free integer
+    * bits the LM scorers use: cost_l(g) = bitlength(⌊(N_l+V)/(cnt_l(g)+1)⌋)
+    * (≈ −log₂ p(g|l)), a document's score per language is the sum of its
+    * trigram costs (unseen trigrams pay the smoothed ceiling bits0_l =
+    * bitlength(N_l+V)), prediction is the argmin with a deterministic
+    * language tie-break — bit-identical cross-engine end to end.
+    *
+    * Scale shape: one (lang, gram) count aggregation (vocabulary-bounded)
+    * trains the model; scoring expands the doc-gram stream by |langs|
+    * broadcast rows and joins the LM on (lang, gram) — one shuffle keyed
+    * by gram, map-side-combinable score sums, no driver collect.
+    *
+    * Accuracy trade, stated plainly: 1-bit likelihood quantization keeps
+    * the classifier bit-reproducible cross-engine but coarsens the
+    * ranking (float log-probs would separate better); on the synthetic
+    * gate corpus, whose language signal is mostly the planted marker
+    * words, the NB sits slightly below the marker heuristic (184 vs
+    * 193 / 500 at sf0.001 — LangNbSpec). On natural text, where the
+    * signal is spread over the whole trigram distribution, the learned
+    * profile is the one that generalizes.
+    */
   def langNb(s: SparkSession, dir: String): DataFrame =
     nbPreds(s, dir).orderBy(col("doc_id"))
 
@@ -854,26 +813,21 @@ object TextOps {
         |ORDER BY m1.doc_id""".stripMargin
   }
 
-  /** Document fingerprint: polynomial rolling hash over all chars,
-    * (acc*31 + ascii(c)) mod 1e9+7, init 7 — a real content fingerprint
-    * with exact integer parity (Spark `aggregate` ≡ DuckDB `list_reduce`).
+  /** Document fingerprint: the [[Fingerprint.charHash]] rolling hash over
+    * all chars, (acc*31 + ascii(c)) mod 1e9+7, init 7 — a real content
+    * fingerprint with exact integer parity.
     */
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
-      .select($"doc_id",
-        aggregate(split($"text", ""), lit(7L),
-          (acc, c) => (acc * 31L + ascii(c)) % 1000000007L).as("fp"))
+      .select($"doc_id", charHash($"text", 7L, 31L, 1000000007L).as("fp"))
       .orderBy($"doc_id")
   }
 
   val fingerprintSql: String =
-    """SELECT doc_id,
-      |  list_reduce(
-      |    list_prepend(7::BIGINT,
-      |      [ascii(c)::BIGINT FOR c IN string_split(text, '')]),
-      |    (a, b) -> (a * 31 + b) % 1000000007) AS fp
-      |FROM documents ORDER BY doc_id""".stripMargin
+    s"""SELECT doc_id,
+       |  ${charHashSql("text", 7L, 31L, 1000000007L)} AS fp
+       |FROM documents ORDER BY doc_id""".stripMargin
 
   /** Quality scoring: stopword ratio, mean word length, length band — the
     * standard cheap pre-filters of a training-data pipeline, all in exact
@@ -1078,48 +1032,24 @@ object TextOps {
     """SELECT min(doc_id) AS keep_id, count(*) AS n_copies, md5(text) AS h
       |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin
 
-  /** MinHash signatures: 8 permutations (a_j*code + b_j) mod P over the
-    * distinct token set. Signature equality ≈ Jaccard similarity — the
-    * sketch behind LSH dedup.
+  /** MinHash signatures ([[Fingerprint.minhashOf]]) over the distinct
+    * token set.
     */
   def minhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    minhashOf(s, dir).orderBy($"doc_id")
+    minhashOf(tokenCodes(s, dir)).orderBy($"doc_id")
   }
 
-  /** Unsorted signature frame shared by [[minhash]] and [[minhashPairs]]
-    * (the public query adds the presentation sort).
-    */
-  private[operators] def minhashOf(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val codes = tokens(s, dir).select($"doc_id", tokenCode($"w").as("code"))
-    val aggs = A.indices.map(j =>
-      min((lit(A(j)) * $"code" + B(j)) % P).as(s"mh$j"))
-    codes.groupBy($"doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  val minhashSql: String = tokCte + {
-    val cols = A.indices.map(j =>
-      s"min((${A(j)} * code + ${B(j)}) % 2147483647) AS mh$j").mkString(",\n  ")
-    s"""SELECT doc_id,
-       |  $cols
+  val minhashSql: String = tokCte +
+    s"""SELECT doc_id, $minhashColsSql
        |FROM codes GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
 
-  /** MinHash-LSH candidate pairs: 2 bands × 4 rows (S-curve threshold
-    * (1/b)^(1/r) ≈ 0.71); docs sharing any band signature are candidates.
-    * Band signatures fold the 4 minhashes with an overflow-safe modular
-    * polynomial (M ≈ 2^36 keeps every intermediate < 2^53). This is the
-    * scale path for near-dedup: the join key is (band, signature), so work
-    * is proportional to bucket sizes, never O(n²). (This corpus is built
-    * with heavy near-duplication — p50 token-Jaccard 0.63 — so large
-    * candidate sets are the correct output, not a config artifact.)
+  /** MinHash-LSH candidate pairs ([[Fingerprint.bandPairs]]); docs sharing
+    * any band signature are candidates. This is the scale path for
+    * near-dedup. (This corpus is built with heavy near-duplication — p50
+    * token-Jaccard 0.63 — so large candidate sets are the correct output,
+    * not a config artifact.)
     */
-  private[operators] val M = 68719476731L // prime ≈ 2^36
-
-  private[operators] def bandSig(cols: Seq[Column]): Column =
-    cols.reduce((acc, c) => (acc % M * 131071L + c) % M)
-
   def minhashPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     minhashCandidates(s, dir).orderBy($"a", $"b")
@@ -1130,66 +1060,14 @@ object TextOps {
     * presentation sort) and graph consumers ([[Graph.pageRank]]) that re-shuffle
     * immediately and must not pay a wasted global exchange.
     */
-  private[operators] def minhashCandidates(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  private[operators] def minhashCandidates(s: SparkSession, dir: String): DataFrame =
     // checkpoint the per-doc signatures: the band union references the
     // frame twice and the self-join doubles each side again, so without a
     // materialization the tokenize+explode+8-way-min pipeline over the
     // corpus runs FOUR times (measured: the whole-plan explain showed 4
     // parquet scans). The signature frame is n_docs × 9 longs — the cheap
     // thing to hold; the corpus pass is the expensive thing to repeat.
-    //
-    // FIRST-MATCHING-BAND emission: a pair agreeing in several bands is
-    // emitted only from its lowest matching band (later bands carry the
-    // band-0 signature and filter on its inequality), so the candidate
-    // set needs NO distinct — at 10× scale that distinct was a 48M-row
-    // exchange+dedup and the emitters' dominant cost; the filter rides
-    // the join itself.
-    val sig = minhashOf(s, dir).pin
-    val bands = bandedOf(sig)
-    val l = bands.select($"doc_id".as("a"), $"sig0".as("s0a"), $"band", $"sig")
-    val r = bands.select($"doc_id".as("b"), $"sig0".as("s0b"), $"band", $"sig")
-    l.join(r, Seq("band", "sig"))
-      .filter($"a" < $"b" && ($"band" === 0 || $"s0a" =!= $"s0b"))
-      .select($"a", $"b")
-  }
-
-  /** The 8 MinHash signature columns as pure PER-ROW array expressions
-    * over a `text` column: array_min over the permuted codes of the
-    * distinct token set. Bit-identical to the groupBy-min the batch
-    * operators use (same distinct set, same permutations — asserted in
-    * DedupStreamSpec), but STATELESS, which is what a streaming ingest
-    * path needs: an append-mode stream cannot emit groupBy aggregates
-    * without watermark expiry, while a map-only signature goes straight
-    * into a stream-static index join ([[graft.streaming.DedupStream]]).
-    */
-  private[graft] def minhashSigCols: Seq[Column] = {
-    val codes = transform(array_distinct(split(col("text"), " ")),
-      w => tokenCode(w))
-    A.indices.map(j =>
-      array_min(transform(codes, c => (lit(A(j)) * c + B(j)) % P))
-        .as(s"mh$j"))
-  }
-
-  /** (doc_id, sig0, band, sig) band-exploded view of an 8-column minhash
-    * signature frame — 2 bands × 4 rows folded by [[bandSig]]. sig0 rides
-    * along for first-matching-band dedup at the join. `carry` names extra
-    * input columns to thread through unchanged (the streaming self-join
-    * carries its event-time column this way).
-    */
-  private[graft] def bandedOf(sig: DataFrame,
-      carry: Seq[String] = Nil): DataFrame = {
-    val s = sig.sparkSession
-    import s.implicits._
-    val carried = carry.map(col)
-    sig.select(Seq($"doc_id",
-        bandSig((0 until 4).map(i => col(s"mh$i"))).as("sig0"),
-        bandSig((4 until 8).map(i => col(s"mh$i"))).as("sig1")) ++ carried: _*)
-      .select(Seq($"doc_id", $"sig0", explode(array(
-        struct(lit(0).as("band"), $"sig0".as("sig")),
-        struct(lit(1).as("band"), $"sig1".as("sig")))).as("e")) ++ carried: _*)
-      .select(Seq($"doc_id", $"sig0", $"e.band", $"e.sig") ++ carried: _*)
-  }
+    bandPairs(minhashOf(tokenCodes(s, dir)).pin, None)
 
   /** Incremental (delta-vs-corpus) near-dup candidates: every new-batch doc
     * paired with the indexed-corpus docs it collides with, plus collisions
@@ -1228,22 +1106,14 @@ object TextOps {
     */
   def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sig = minhashOf(s, dir).pin
+    val sig = minhashOf(tokenCodes(s, dir)).pin
     val isNew = $"doc_id" % 5 === 4
     incrementalPairsOf(sig.filter(!isNew), sig.filter(isNew))
       .orderBy($"new_id", $"match_id")
   }
 
-  val incrementalDedupSql: String = tokCte + {
-    val cols = A.indices.map(j =>
-      s"min((${A(j)} * code + ${B(j)}) % 2147483647) AS mh$j").mkString(", ")
-    def sig(i: Int) =
-      (1 until 4).foldLeft(s"mh${i}")((acc, j) =>
-        s"(($acc) % $M * 131071 + mh${i + j}) % $M")
-    s""", sigs AS (SELECT doc_id, $cols FROM codes GROUP BY doc_id),
-       |bands AS (
-       |  SELECT doc_id, 0 AS band, ${sig(0)} AS sig FROM sigs
-       |  UNION ALL SELECT doc_id, 1, ${sig(4)} FROM sigs),
+  val incrementalDedupSql: String = tokCte + sigsCte + s""",
+       |${bandsCte("bands", 2, 4)},
        |pairs AS (
        |  SELECT DISTINCT r.doc_id AS new_id, l.doc_id AS match_id
        |  FROM bands l JOIN bands r ON l.band = r.band AND l.sig = r.sig
@@ -1253,46 +1123,15 @@ object TextOps {
        |  CASE WHEN match_id % 5 = 4 THEN 'delta' ELSE 'corpus' END
        |    AS match_src
        |FROM pairs ORDER BY new_id, match_id""".stripMargin
-  }
 
-  /** tokCte + sigs/bands + a distinct `pairs` CTE — the minhash candidate
-    * set as a reusable prefix (pairs ≡ the Spark first-matching-band
-    * emission, which is distinct by construction).
+  /** tokCte + sigs/bands/pairs — the minhash candidate set as a reusable
+    * prefix.
     */
-  private[operators] val minhashPairsCte: String = tokCte + {
-    val cols = A.indices.map(j =>
-      s"min((${A(j)} * code + ${B(j)}) % 2147483647) AS mh$j").mkString(", ")
-    def sig(i: Int) =
-      (1 until 4).foldLeft(s"mh${i}")((acc, j) =>
-        s"(($acc) % $M * 131071 + mh${i + j}) % $M")
-    s""", sigs AS (SELECT doc_id, $cols FROM codes GROUP BY doc_id),
-       |bands AS (
-       |  SELECT doc_id, 0 AS band, ${sig(0)} AS sig FROM sigs
-       |  UNION ALL SELECT doc_id, 1, ${sig(4)} FROM sigs),
-       |pairs AS (
-       |  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-       |  FROM bands l JOIN bands r
-       |    ON l.band = r.band AND l.sig = r.sig AND l.doc_id < r.doc_id)""".stripMargin
-  }
+  private[operators] val minhashPairsCte: String = tokCte + pairsCte("TRUE")
 
   val minhashPairsSql: String =
     minhashPairsCte + "\nSELECT a, b FROM pairs ORDER BY a, b"
 
-  /** Exact token-set Jaccard pairs at threshold 0.95.
-    *
-    * Candidate generation uses DELETION-NEIGHBORHOOD signatures instead of
-    * the naive inverted-index join (which explodes to Σ bucket² ≈ 200M rows
-    * on this corpus at sf0.1): with token sets of size n ≤ 31,
-    * J(A,B) ≥ 0.95 ⟹ |A Δ B| ≤ 1 (c/(c+2) ≥ 0.95 needs c ≥ 38 > 31), so
-    * every qualifying pair has equal sets or differs by one token. Each doc
-    * emits an additive set hash H = Σ h(w) (exact long, no overflow:
-    * ≤ 31·2^36) plus n delete-one hashes H − h(w); qualifying pairs always
-    * collide on a signature, and candidates are verified EXACTLY via
-    * array_intersect — hash collisions only cost verification work, never
-    * correctness. Near-linear: |sigs| = Σ(n+1), buckets ≈ true-pair sized.
-    * (For thresholds where |AΔB| is unbounded, prefix filtering is the
-    * standard fallback; MinHash-LSH above is the approximate path.)
-    */
   /** Sorted-neighborhood blocking (Hernández & Stolfo's merge/purge,
     * SIGMOD 1995) — the OTHER classic candidate-generation family next
     * to LSH banding: sort the corpus by a cheap blocking key, slide a
@@ -1391,6 +1230,21 @@ object TextOps {
        |ORDER BY a, b""".stripMargin
   }
 
+  /** Exact token-set Jaccard pairs at threshold 0.95.
+    *
+    * Candidate generation uses DELETION-NEIGHBORHOOD signatures instead of
+    * the naive inverted-index join (which explodes to Σ bucket² ≈ 200M rows
+    * on this corpus at sf0.1): with token sets of size n ≤ 31,
+    * J(A,B) ≥ 0.95 ⟹ |A Δ B| ≤ 1 (c/(c+2) ≥ 0.95 needs c ≥ 38 > 31), so
+    * every qualifying pair has equal sets or differs by one token. Each doc
+    * emits an additive set hash H = Σ h(w) (exact long, no overflow:
+    * ≤ 31·2^36) plus n delete-one hashes H − h(w); qualifying pairs always
+    * collide on a signature, and candidates are verified EXACTLY via
+    * array_intersect — hash collisions only cost verification work, never
+    * correctness. Near-linear: |sigs| = Σ(n+1), buckets ≈ true-pair sized.
+    * (For thresholds where |AΔB| is unbounded, prefix filtering is the
+    * standard fallback; MinHash-LSH above is the approximate path.)
+    */
   def jaccardPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // ONE tokenize pass over the corpus: tok feeds the per-doc aggregate
@@ -1441,94 +1295,19 @@ object TextOps {
       |WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.95
       |ORDER BY a, b""".stripMargin
 
-  /** Word-shingle (3-gram) MinHash: the full shingle→minhash→band→bucket
-    * pipeline over ORDER-SENSITIVE 3-word shingles (token-set MinHash above
-    * ignores order; shingles catch reorderings as different content).
-    * Shingle codes fold the three word codes with the modular polynomial;
-    * positions come from posexplode + lead(), identical in SQL.
+  /** Word-shingle (3-gram) MinHash signatures: the full
+    * shingle→minhash→band→bucket pipeline runs over the ORDER-SENSITIVE
+    * [[Fingerprint.shingleCodes]] (8 permutations over distinct
+    * 3-shingles).
     */
-  private[operators] def shingleCodes(s: SparkSession, dir: String): DataFrame =
-    shingleCodesOf(Tables.documents(s, dir))
-
-  /** Shingle codes of an arbitrary document frame — lets callers shingle a
-    * pre-filtered subset (e.g. just the eval split) instead of paying a
-    * full-corpus shingling pass and filtering after. Precondition:
-    * `doc_id` is unique per row (ShinglePerRowSpec checks the corpus);
-    * the distinct below is per row.
-    */
-  private[operators] def shingleCodesOf(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    // Per-ROW shingling (r17): the 3-gram fold over consecutive token
-    // codes is a pure array expression — token codes via transform, the
-    // trigram window via sequence + element_at — so the
-    // explode-then-lead-window form's per-derivation exchange + sort of
-    // every token (Window.partitionBy(doc_id)) is gone entirely. The
-    // audits/pair queries deliberately re-derive codes instead of
-    // checkpointing a corpus-sized frame (the prefixPairs memory rule),
-    // which made each derivation's window shuffle the dominant repeated
-    // cost; a per-row derivation is scan + explode + distinct only.
-    // Value-identical: same split, same token order, same modular fold;
-    // docs with fewer than 3 tokens emitted no c2-complete shingle before
-    // and are filtered out before the (ascending-only) sequence here.
-    docs
-      .select($"doc_id",
-        transform(split($"text", " "), w => tokenCode(w)).as("cs"))
-      .filter(size($"cs") >= 3)
-      // the distinct is PER-ROW too: all of one doc's shingles live in
-      // one array, and the global DISTINCT (doc_id, code) is exactly the
-      // per-doc distinct since doc_id is part of the key — array_distinct
-      // replaces a corpus-sized exchange per derivation
-      .select($"doc_id", explode(array_distinct(transform(
-        sequence(lit(0), size($"cs") - 3),
-        // reduced mod M so the minhash multiply a*code stays < 2^63
-        i => ((element_at($"cs", i + 1) % M * 131071L
-          + element_at($"cs", i + 2)) % M * 131071L
-          + element_at($"cs", i + 3)) % M))).as("code"))
-  }
-
-  private val shingleCte =
-    s"""WITH toks AS (
-       |  SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos,
-       |         unnest(string_split(text, ' ')) AS w
-       |  FROM documents),
-       |wcodes AS (SELECT doc_id, pos, $tokenCodeSql AS c0 FROM toks),
-       |scodes AS (
-       |  SELECT doc_id, c0,
-       |    lead(c0, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS c1,
-       |    lead(c0, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS c2
-       |  FROM wcodes),
-       |codes AS (
-       |  SELECT DISTINCT doc_id,
-       |    ((c0 % $M * 131071 + c1) % $M * 131071 + c2) % $M AS code
-       |  FROM scodes WHERE c2 IS NOT NULL)
-       |""".stripMargin
-
-  /** Shingle-MinHash signatures (8 permutations over distinct 3-shingles). */
   def shingleMinhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    shingleMinhashOf(shingleCodes(s, dir)).orderBy($"doc_id")
+    minhashOf(shingleCodes(s, dir)).orderBy($"doc_id")
   }
 
-  /** Signatures from an already-built (doc_id, code) frame — lets callers
-    * that materialized the codes (containmentPairs) reuse them instead of
-    * re-shingling the corpus.
-    */
-  private def shingleMinhashOf(codes: DataFrame): DataFrame = {
-    val s = codes.sparkSession
-    import s.implicits._
-    val aggs = A.indices.map(j =>
-      min((lit(A(j)) * $"code" + B(j)) % P).as(s"mh$j"))
-    codes.groupBy($"doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  val shingleMinhashSql: String = shingleCte + {
-    val cols = A.indices.map(j =>
-      s"min((${A(j)} * code + ${B(j)}) % 2147483647) AS mh$j").mkString(",\n  ")
-    s"""SELECT doc_id,
-       |  $cols
+  val shingleMinhashSql: String = shingleCte +
+    s"""SELECT doc_id, $minhashColsSql
        |FROM codes GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
 
   /** Exact n-gram overlap pairs (the exact-substring dedup family — Lee
     * et al., "Deduplicating Training Data Makes Language Models Better",
@@ -1547,11 +1326,9 @@ object TextOps {
     * one code space (the same sketch-input defect class as round 7's
     * prefix collapse, one corpus decade later). Windows are therefore
     * keyed on TWO independent full-character polynomial word hashes
-    * (the [[fingerprint]] aggregate ≡ list_reduce idiom — every char
-    * participates, so no packing artifact can collide two distinct
-    * words) folded per 4-gram into the pair (g1, g2): an effective
-    * ~2^61-value window space in which birthday collisions are
-    * negligible until ~10^9 distinct windows per df-cap bucket.
+    * folded per 4-gram into the pair (g1, g2) ([[Fingerprint.gramsOf]]):
+    * an effective ~2^61-value window space in which birthday collisions
+    * are negligible until ~10^9 distinct windows per df-cap bucket.
     *
     * Scale guards, both essential at 100 TB:
     *  - BOILERPLATE DF-CAP: windows appearing in more than 32 docs
@@ -1568,31 +1345,8 @@ object TextOps {
     */
   def ngramOverlapPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // two independent full-char rolling hashes per word: channel params
-    // (init, mult, mod) differ; mod < 2^31 keeps every gram-fold product
-    // below 2^49 — exact in int64 and float64 in both engines
-    def wordHash(w: Column, init: Long, mult: Long, mod: Long): Column =
-      aggregate(split(w, ""), lit(init),
-        (acc, c) => (acc * mult + ascii(c)) % mod)
-    def gramFold(cs: Seq[Column]): Column =
-      cs.reduceLeft((acc, c) => (acc % M * 131071L + c) % M)
-    val w = Window.partitionBy($"doc_id").orderBy($"pos")
-    val grams = Tables.documents(s, dir)
-      .select($"doc_id", posexplode(split($"text", " ")).as(Seq("pos", "w")))
-      .select($"doc_id", $"pos",
-        wordHash($"w", 7L, 31L, 1000000007L).as("c0"),
-        wordHash($"w", 13L, 131L, 998244353L).as("d0"))
-      .withColumn("c1", lead($"c0", 1).over(w))
-      .withColumn("c2", lead($"c0", 2).over(w))
-      .withColumn("c3", lead($"c0", 3).over(w))
-      .withColumn("d1", lead($"d0", 1).over(w))
-      .withColumn("d2", lead($"d0", 2).over(w))
-      .withColumn("d3", lead($"d0", 3).over(w))
-      .filter($"c3".isNotNull)
-      .select($"doc_id",
-        gramFold(Seq($"c0", $"c1", $"c2", $"c3")).as("g1"),
-        gramFold(Seq($"d0", $"d1", $"d2", $"d3")).as("g2"))
+    val grams = gramsOf(Tables.documents(s, dir), 4)
+      .select($"doc_id", $"g1", $"g2")
       .distinct()
     // df-capped gram frame, materialized once: both self-join sides and
     // nothing else read it (grams are distinct per doc, so the per-key
@@ -1611,45 +1365,17 @@ object TextOps {
       .orderBy($"a", $"b")
   }
 
-  val ngramOverlapPairsSql: String = {
-    def wh(init: Long, mult: Long, mod: Long): String =
-      s"""list_reduce(list_prepend($init::BIGINT,
-         |      [ascii(c)::BIGINT FOR c IN string_split(w, '')]),
-         |    (a, b) -> (a * $mult + b) % $mod)""".stripMargin
-    def fold(cs: Seq[String]): String =
-      cs.reduceLeft((acc, c) => s"(($acc) % $M * 131071 + $c) % $M")
-    s"""WITH toks AS (
-       |  SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos,
-       |         unnest(string_split(text, ' ')) AS w
-       |  FROM documents),
-       |wcodes AS (
-       |  SELECT doc_id, pos,
-       |    ${wh(7L, 31L, 1000000007L)} AS c0,
-       |    ${wh(13L, 131L, 998244353L)} AS d0
-       |  FROM toks),
-       |scodes AS (
-       |  SELECT doc_id, c0, d0,
-       |    lead(c0, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS c1,
-       |    lead(c0, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS c2,
-       |    lead(c0, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS c3,
-       |    lead(d0, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS d1,
-       |    lead(d0, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS d2,
-       |    lead(d0, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS d3
-       |  FROM wcodes),
-       |grams AS (
-       |  SELECT DISTINCT doc_id,
-       |    ${fold(Seq("c0", "c1", "c2", "c3"))} AS g1,
-       |    ${fold(Seq("d0", "d1", "d2", "d3"))} AS g2
-       |  FROM scodes WHERE c3 IS NOT NULL),
+  val ngramOverlapPairsSql: String = gramsCte(4) +
+    """,
+       |dgrams AS (SELECT DISTINCT doc_id, g1, g2 FROM grams),
        |kept AS (
-       |  SELECT g.doc_id, g.g1, g.g2 FROM grams g
-       |  JOIN (SELECT g1, g2 FROM grams GROUP BY g1, g2
+       |  SELECT g.doc_id, g.g1, g.g2 FROM dgrams g
+       |  JOIN (SELECT g1, g2 FROM dgrams GROUP BY g1, g2
        |        HAVING count(*) <= 32) d USING (g1, g2))
        |SELECT a.doc_id AS a, b.doc_id AS b, count(*)::BIGINT AS n_shared
        |FROM kept a JOIN kept b
        |  ON a.g1 = b.g1 AND a.g2 = b.g2 AND a.doc_id < b.doc_id
        |GROUP BY 1, 2 ORDER BY a, b""".stripMargin
-  }
 
   /** Per-doc 4-gram NOVELTY: the fraction of a document's 4-word windows
     * whose GLOBAL first occurrence (min (doc_id, pos) over the corpus in
@@ -1669,28 +1395,8 @@ object TextOps {
     */
   def ngramNovelty(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    def wordHash(w: Column, init: Long, mult: Long, mod: Long): Column =
-      aggregate(split(w, ""), lit(init),
-        (acc, c) => (acc * mult + ascii(c)) % mod)
-    def gramFold(cs: Seq[Column]): Column =
-      cs.reduceLeft((acc, c) => (acc % M * 131071L + c) % M)
-    val w = Window.partitionBy($"doc_id").orderBy($"pos")
-    val grams = Tables.documents(s, dir)
-      .select($"doc_id", posexplode(split($"text", " ")).as(Seq("pos", "w")))
-      .select($"doc_id", $"pos",
-        wordHash($"w", 7L, 31L, 1000000007L).as("c0"),
-        wordHash($"w", 13L, 131L, 998244353L).as("d0"))
-      .withColumn("c1", lead($"c0", 1).over(w))
-      .withColumn("c2", lead($"c0", 2).over(w))
-      .withColumn("c3", lead($"c0", 3).over(w))
-      .withColumn("d1", lead($"d0", 1).over(w))
-      .withColumn("d2", lead($"d0", 2).over(w))
-      .withColumn("d3", lead($"d0", 3).over(w))
-      .filter($"c3".isNotNull)
-      .select($"doc_id", $"pos",
-        gramFold(Seq($"c0", $"c1", $"c2", $"c3")).as("g1"),
-        gramFold(Seq($"d0", $"d1", $"d2", $"d3")).as("g2"))
+    val grams = gramsOf(Tables.documents(s, dir), 4)
+      .select($"doc_id", $"pos", $"g1", $"g2")
       .pin // owner agg + the join back
     val owner = grams.groupBy($"g1", $"g2")
       .agg(min(struct($"doc_id", $"pos")).as("first"))
@@ -1705,36 +1411,8 @@ object TextOps {
       .orderBy($"doc_id")
   }
 
-  val ngramNoveltySql: String = {
-    def wh(init: Long, mult: Long, mod: Long): String =
-      s"""list_reduce(list_prepend($init::BIGINT,
-         |      [ascii(c)::BIGINT FOR c IN string_split(w, '')]),
-         |    (a, b) -> (a * $mult + b) % $mod)""".stripMargin
-    def fold(cs: Seq[String]): String =
-      cs.reduceLeft((acc, c) => s"(($acc) % $M * 131071 + $c) % $M")
-    s"""WITH toks AS (
-       |  SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos,
-       |         unnest(string_split(text, ' ')) AS w
-       |  FROM documents),
-       |wcodes AS (
-       |  SELECT doc_id, pos,
-       |    ${wh(7L, 31L, 1000000007L)} AS c0,
-       |    ${wh(13L, 131L, 998244353L)} AS d0
-       |  FROM toks),
-       |scodes AS (
-       |  SELECT doc_id, pos, c0, d0,
-       |    lead(c0, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS c1,
-       |    lead(c0, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS c2,
-       |    lead(c0, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS c3,
-       |    lead(d0, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS d1,
-       |    lead(d0, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS d2,
-       |    lead(d0, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS d3
-       |  FROM wcodes),
-       |grams AS (
-       |  SELECT doc_id, pos,
-       |    ${fold(Seq("c0", "c1", "c2", "c3"))} AS g1,
-       |    ${fold(Seq("d0", "d1", "d2", "d3"))} AS g2
-       |  FROM scodes WHERE c3 IS NOT NULL),
+  val ngramNoveltySql: String = gramsCte(4) +
+    """,
        |owner AS (
        |  SELECT g1, g2, min(doc_id * 4294967296 + pos) AS fk
        |  FROM grams GROUP BY g1, g2)
@@ -1745,7 +1423,6 @@ object TextOps {
        |               THEN 1 ELSE 0 END)) // count(*))::BIGINT AS novelty_pm
        |FROM grams JOIN owner USING (g1, g2)
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
 
   /** Duplicated-span threshold: a position is duplicated when its
     * [[DupN]]-word window occurs at least twice corpus-wide. The paper
@@ -1759,6 +1436,22 @@ object TextOps {
     * false hits on formulaic-but-legitimate runs.
     */
   private val DupN = 8
+
+  /** Duplicated gram-start positions: (doc_id, nw, pos) for every
+    * position whose [[DupN]]-gram occurs at least twice corpus-wide.
+    * The shared front half of the span miner and the removal applier.
+    */
+  private[operators] def dupHitsOf(docs: DataFrame,
+      n: Int = DupN): DataFrame = {
+    val s = docs.sparkSession
+    import s.implicits._
+    import org.apache.spark.sql.expressions.Window
+    gramsOf(docs, n)
+      .withColumn("occ",
+        count(lit(1)).over(Window.partitionBy($"g1", $"g2")))
+      .filter($"occ" >= 2L)
+      .select($"doc_id", $"nw", $"pos")
+  }
 
   /** Maximal duplicated spans — the REMOVAL artifact of the
     * exact-substring dedup family (Lee et al., "Deduplicating Training
@@ -1782,43 +1475,6 @@ object TextOps {
     * The island merge and span fold are doc_id-keyed windows/aggs over
     * the (small) duplicated subset. Nothing is quadratic or driver-side.
     */
-  /** Duplicated gram-start positions: (doc_id, nw, pos) for every
-    * position whose [[DupN]]-gram occurs at least twice corpus-wide.
-    * The shared front half of the span miner and the removal applier.
-    */
-  private[operators] def dupHitsOf(docs: DataFrame,
-      n: Int = DupN): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    def wordHash(w: Column, init: Long, mult: Long, mod: Long): Column =
-      aggregate(split(w, ""), lit(init),
-        (acc, c) => (acc * mult + ascii(c)) % mod)
-    def gramFold(cs: Seq[Column]): Column =
-      cs.reduceLeft((acc, c) => (acc % M * 131071L + c) % M)
-    val dw = Window.partitionBy($"doc_id").orderBy($"pos")
-    val codes = docs
-      .select($"doc_id", size(split($"text", " ")).cast("long").as("nw"),
-        posexplode(split($"text", " ")).as(Seq("pos0", "w")))
-      .select($"doc_id", $"nw", ($"pos0" + 1L).as("pos"),
-        wordHash($"w", 7L, 31L, 1000000007L).as("c0"),
-        wordHash($"w", 13L, 131L, 998244353L).as("d0"))
-    val leads = (1 until n).foldLeft(codes) { (df, j) =>
-      df.withColumn(s"c$j", lead(col("c0"), j).over(dw))
-        .withColumn(s"d$j", lead(col("d0"), j).over(dw))
-    }
-    val grams = leads
-      .filter(col(s"c${n - 1}").isNotNull)
-      .select($"doc_id", $"nw", $"pos",
-        gramFold((0 until n).map(j => col(s"c$j"))).as("g1"),
-        gramFold((0 until n).map(j => col(s"d$j"))).as("g2"))
-    grams
-      .withColumn("occ",
-        count(lit(1)).over(Window.partitionBy($"g1", $"g2")))
-      .filter($"occ" >= 2L)
-      .select($"doc_id", $"nw", $"pos")
-  }
-
   private[operators] def dupSpansOf(docs: DataFrame,
       n: Int = DupN): DataFrame = {
     val s = docs.sparkSession
@@ -1913,43 +1569,14 @@ object TextOps {
       .orderBy($"doc_id")
   }
 
-  private val dupHitsCte: String = {
-    def wh(init: Long, mult: Long, mod: Long): String =
-      s"""list_reduce(list_prepend($init::BIGINT,
-         |      [ascii(c)::BIGINT FOR c IN string_split(w, '')]),
-         |    (a, b) -> (a * $mult + b) % $mod)""".stripMargin
-    def fold(cs: Seq[String]): String =
-      cs.reduceLeft((acc, c) => s"(($acc) % $M * 131071 + $c) % $M")
-    val leadCols = (1 until DupN).flatMap(j => Seq(
-      s"lead(c0, $j) OVER (PARTITION BY doc_id ORDER BY pos) AS c$j",
-      s"lead(d0, $j) OVER (PARTITION BY doc_id ORDER BY pos) AS d$j"))
-      .mkString(",\n    ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos,
-       |         unnest(string_split(text, ' ')) AS w,
-       |         len(string_split(text, ' '))::BIGINT AS nw
-       |  FROM documents),
-       |wcodes AS (
-       |  SELECT doc_id, pos, nw,
-       |    ${wh(7L, 31L, 1000000007L)} AS c0,
-       |    ${wh(13L, 131L, 998244353L)} AS d0
-       |  FROM toks),
-       |scodes AS (
-       |  SELECT doc_id, pos, nw, c0, d0,
-       |    $leadCols
-       |  FROM wcodes),
-       |grams AS (
-       |  SELECT doc_id, pos, nw,
-       |    ${fold((0 until DupN).map(j => s"c$j"))} AS g1,
-       |    ${fold((0 until DupN).map(j => s"d$j"))} AS g2
-       |  FROM scodes WHERE c${DupN - 1} IS NOT NULL),
-       |hits AS (
-       |  SELECT doc_id, pos, nw FROM (
-       |    SELECT doc_id, pos, nw,
-       |      count(*) OVER (PARTITION BY g1, g2) AS occ FROM grams) t
-       |  WHERE occ >= 2)
-       |""".stripMargin
-  }
+  private val dupHitsCte: String = gramsCte(DupN) +
+    """,
+      |hits AS (
+      |  SELECT doc_id, pos, nw FROM (
+      |    SELECT doc_id, pos, nw,
+      |      count(*) OVER (PARTITION BY g1, g2) AS occ FROM grams) t
+      |  WHERE occ >= 2)
+      |""".stripMargin
 
   private val dupSpanCte: String = dupHitsCte +
     s""",
@@ -2013,65 +1640,60 @@ object TextOps {
     * — the public query adds the deterministic sort).
     */
   private[operators] def shinglePairsOf(codes: DataFrame,
-      aPred: Option[Column => Column] = None): DataFrame = {
-    val s = codes.sparkSession
-    import s.implicits._
+      aPred: Option[Column => Column] = None): DataFrame =
     // materialized for the same reason as minhashPairs' signatures: band
-    // union × self-join would otherwise re-run the shingling agg 4×;
-    // first-matching-band emission (see minhashPairs) replaces the
-    // pair distinct with a filter riding the join
-    val sig = shingleMinhashOf(codes).pin
-    val bands = sig.select($"doc_id",
-        bandSig((0 until 4).map(i => col(s"mh$i"))).as("sig0"),
-        bandSig((4 until 8).map(i => col(s"mh$i"))).as("sig1"))
-      .select($"doc_id", $"sig0", explode(array(
-        struct(lit(0).as("band"), $"sig0".as("sig")),
-        struct(lit(1).as("band"), $"sig1".as("sig")))).as("e"))
-      .select($"doc_id", $"sig0", $"e.band", $"e.sig")
-    // aPred restricts the LEFT (min-id) side BEFORE the bucket join —
-    // the sampled recall audit's lever: per-bucket volume drops from
-    // |bucket|^2 to |stratum slice| x |bucket|
-    val l0 = bands.select($"doc_id".as("a"), $"sig0".as("s0a"), $"band", $"sig")
-    // None leaves l structurally identical to r (exchange-reuse safe);
-    // the filter node exists only when a stratum is actually requested
-    val l = aPred.fold(l0)(p => l0.filter(p($"a")))
-    val r = bands.select($"doc_id".as("b"), $"sig0".as("s0b"), $"band", $"sig")
-    l.join(r, Seq("band", "sig"))
-      .filter($"a" < $"b" && ($"band" === 0 || $"s0a" =!= $"s0b"))
-      .select($"a", $"b")
-  }
+    // union × self-join would otherwise re-run the shingling agg 4×
+    bandPairs(minhashOf(codes).pin, aPred)
 
-  /** sigs/bands/pairs CTEs over `codes` — the ONE copy of the banding SQL,
-    * shared by the three shingle-LSH oracles (pairs, clusters, containment)
-    * so the band count / fold constants can never drift between them.
-    */
-  /** The banded-LSH pair CTE with a predicate pushed into the bucket
-    * join's LEFT (= min-endpoint, since l.doc_id < r.doc_id) side —
-    * mirrors [[prefixCtesWith]] so a min-endpoint stratum restriction
-    * (the sampled recall audit) prunes the join itself instead of
-    * relying on the optimizer to push a post-DISTINCT filter.
-    */
-  private def shingleBandsCteWith(aCond: String): String = {
-    val cols = A.indices.map(j =>
-      s"min((${A(j)} * code + ${B(j)}) % 2147483647) AS mh$j").mkString(", ")
-    def sig(i: Int) =
-      (1 until 4).foldLeft(s"mh${i}")((acc, j) =>
-        s"(($acc) % $M * 131071 + mh${i + j}) % $M")
-    s""", sigs AS (SELECT doc_id, $cols FROM codes GROUP BY doc_id),
-       |bands AS (
-       |  SELECT doc_id, 0 AS band, ${sig(0)} AS sig FROM sigs
-       |  UNION ALL SELECT doc_id, 1, ${sig(4)} FROM sigs),
-       |pairs AS (
-       |  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-       |  FROM bands l JOIN bands r
-       |    ON l.band = r.band AND l.sig = r.sig AND l.doc_id < r.doc_id
-       |  WHERE $aCond)""".stripMargin
-  }
-
-  private val shingleBandsCte: String = shingleBandsCteWith("TRUE")
-
-  val shinglePairsSql: String = shingleCte + shingleBandsCte +
+  val shinglePairsSql: String = shingleCte + pairsCte("TRUE") +
     "\nSELECT a, b FROM pairs ORDER BY a, b"
+
+  /** Per-doc shingle-set sizes from the (checkpointed) codes frame. */
+  private def shingleSizes(codes: DataFrame): DataFrame = {
+    import codes.sparkSession.implicits._
+    codes.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+  }
+
+  /** (a, b, c): shared-shingle count for EVERY candidate pair — the
+    * ONE copy of the candidate-intersection join, shared by containment,
+    * the threshold curve, b-bit pairs and the LSH tuning table. LEFT join
+    * from the candidates: a band-fold collision can pair docs sharing no
+    * shingle, and such a pair must surface with c = 0, not vanish (the
+    * threshold curve's t = 0 anchor counts every candidate). The caller
+    * checkpoints `pairs` — it feeds both sides of the left join.
+    */
+  private def shingleInterCounts(pairs: DataFrame,
+      codes: DataFrame): DataFrame = {
+    import codes.sparkSession.implicits._
+    val inter = pairs
+      .join(codes.select($"doc_id".as("a"), $"code"), Seq("a"))
+      .join(codes.select($"doc_id".as("b"), $"code"), Seq("b", "code"))
+      .groupBy($"a", $"b").agg(count(lit(1)).as("c"))
+    pairs.join(inter, Seq("a", "b"), "left")
+      .select($"a", $"b", coalesce($"c", lit(0L)).as("c"))
+  }
+
+  /** `name(a, b, c)` over the pair CTE `pairs` and `codes` — the SQL
+    * mirror of [[shingleInterCounts]], so the intersection semantics can
+    * never drift between its oracles.
+    */
+  private def interCte(name: String, pairs: String): String =
+    s"""$name AS (
+       |  SELECT p.a, p.b, coalesce(i.c, 0)::BIGINT AS c
+       |  FROM $pairs p LEFT JOIN (
+       |    SELECT p2.a, p2.b, count(*)::BIGINT AS c
+       |    FROM $pairs p2
+       |    JOIN codes ca ON ca.doc_id = p2.a
+       |    JOIN codes cb ON cb.doc_id = p2.b AND cb.code = ca.code
+       |    GROUP BY 1, 2) i ON p.a = i.a AND p.b = i.b)""".stripMargin
+
+  /** sz + inter CTEs over `codes`/`pairs` — the SQL mirror of
+    * [[shingleSizes]]/[[shingleInterCounts]].
+    */
+  private val shingleInterCte: String =
+    s""",
+       |sz AS (SELECT doc_id, count(*)::BIGINT AS n FROM codes GROUP BY doc_id),
+       |${interCte("inter", "pairs")}""".stripMargin
 
   /** Asymmetric CONTAINMENT dedup: among the shingle-LSH candidate pairs,
     * pairs where one doc's shingle set is ≥80% contained in the other —
@@ -2082,54 +1704,13 @@ object TextOps {
     * shingle count joins only LSH candidates, never all pairs; shingle
     * sizes join back from a per-doc aggregate.
     */
-  /** Per-doc shingle-set sizes from the (checkpointed) codes frame. */
-  private def shingleSizes(codes: DataFrame): DataFrame = {
-    import codes.sparkSession.implicits._
-    codes.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-  }
-
-  /** (a, b, c): shared-shingle count for EVERY LSH candidate pair — the
-    * ONE copy of the candidate-intersection join, shared by containment
-    * and the threshold curve. LEFT join from the candidates: a band-fold
-    * collision can pair docs sharing no shingle, and such a pair must
-    * surface with c = 0, not vanish (the threshold curve's t = 0 anchor
-    * counts every candidate). The candidate frame is checkpointed — it
-    * feeds both sides of the left join.
-    */
-  private def shingleInterCounts(codes: DataFrame): DataFrame = {
-    import codes.sparkSession.implicits._
-    val pairs = shinglePairsOf(codes).pin
-    val inter = pairs
-      .join(codes.select($"doc_id".as("a"), $"code"), Seq("a"))
-      .join(codes.select($"doc_id".as("b"), $"code"), Seq("b", "code"))
-      .groupBy($"a", $"b").agg(count(lit(1)).as("c"))
-    pairs.join(inter, Seq("a", "b"), "left")
-      .select($"a", $"b", coalesce($"c", lit(0L)).as("c"))
-  }
-
-  /** sz + inter CTEs over `codes`/`pairs` — the SQL mirror of
-    * [[shingleSizes]]/[[shingleInterCounts]], shared by the same two
-    * oracles so the intersection semantics can never drift.
-    */
-  private val shingleInterCte: String =
-    """,
-      |sz AS (SELECT doc_id, count(*)::BIGINT AS n FROM codes GROUP BY doc_id),
-      |inter AS (
-      |  SELECT p.a, p.b, coalesce(i.c, 0)::BIGINT AS c
-      |  FROM pairs p LEFT JOIN (
-      |    SELECT p2.a, p2.b, count(*)::BIGINT AS c
-      |    FROM pairs p2
-      |    JOIN codes ca ON ca.doc_id = p2.a
-      |    JOIN codes cb ON cb.doc_id = p2.b AND cb.code = ca.code
-      |    GROUP BY 1, 2) i ON p.a = i.a AND p.b = i.b)""".stripMargin
-
   def containmentPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // one shingling pass, checkpointed: candidates, sizes, and the
     // intersection join all fan out from this frame
     val codes = shingleCodes(s, dir).pin
     val sizes = shingleSizes(codes)
-    shingleInterCounts(codes)
+    shingleInterCounts(shinglePairsOf(codes).pin, codes)
       .join(sizes.select($"doc_id".as("a"), $"n".as("na")), Seq("a"))
       .join(sizes.select($"doc_id".as("b"), $"n".as("nb")), Seq("b"))
       .select($"a", $"b", $"c",
@@ -2139,7 +1720,7 @@ object TextOps {
       .orderBy($"a", $"b")
   }
 
-  val containmentPairsSql: String = shingleCte + shingleBandsCte +
+  val containmentPairsSql: String = shingleCte + pairsCte("TRUE") +
     shingleInterCte +
     """
       |SELECT a, b, c, round(c * 1.0 / sa.n, 4) AS cont_a,
@@ -2163,7 +1744,7 @@ object TextOps {
     import s.implicits._
     val codes = shingleCodes(s, dir).pin
     val sizes = shingleSizes(codes)
-    val jac = shingleInterCounts(codes)
+    val jac = shingleInterCounts(shinglePairsOf(codes).pin, codes)
       .join(sizes.select($"doc_id".as("a"), $"n".as("na")), Seq("a"))
       .join(sizes.select($"doc_id".as("b"), $"n".as("nb")), Seq("b"))
       .select(round($"c" * 1.0 / ($"na" + $"nb" - $"c"), 4).as("jac"))
@@ -2179,7 +1760,7 @@ object TextOps {
       .orderBy($"threshold")
   }
 
-  val thresholdCurveSql: String = shingleCte + shingleBandsCte +
+  val thresholdCurveSql: String = shingleCte + pairsCte("TRUE") +
     shingleInterCte +
     """,
       |jac AS (
@@ -2209,7 +1790,7 @@ object TextOps {
   def bbitPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val codes = shingleCodes(s, dir).pin
-    val sigs = shingleMinhashOf(codes)
+    val sigs = minhashOf(codes)
     val sizes = shingleSizes(codes)
     def side(tag: String): DataFrame =
       sigs.select(col("doc_id").as(tag) +:
@@ -2218,7 +1799,7 @@ object TextOps {
     val collide = A.indices
       .map(j => when(col(s"a$j") === col(s"b$j"), 1L).otherwise(0L))
       .reduce(_ + _)
-    val jac = shingleInterCounts(codes)
+    val jac = shingleInterCounts(shinglePairsOf(codes).pin, codes)
       .join(sizes.select($"doc_id".as("a"), $"n".as("na")), Seq("a"))
       .join(sizes.select($"doc_id".as("b"), $"n".as("nb")), Seq("b"))
       .select($"a", $"b",
@@ -2231,7 +1812,7 @@ object TextOps {
       .orderBy($"a", $"b")
   }
 
-  lazy val bbitPairsSql: String = shingleCte + shingleBandsCte +
+  lazy val bbitPairsSql: String = shingleCte + pairsCte("TRUE") +
     shingleInterCte + {
       val collide = A.indices
         .map(j => s"CASE WHEN sa.mh$j % 2 = sb.mh$j % 2 THEN 1 ELSE 0 END")
@@ -2437,7 +2018,7 @@ object TextOps {
         $"missed_min_jac_pm", $"missed_max_jac_pm")
   }
 
-  val recallAuditSql: String = shingleCte + shingleBandsCte +
+  val recallAuditSql: String = shingleCte + pairsCte("TRUE") +
     shingleInterCte + prefixCtes +
     """,
       |truth AS (
@@ -2573,7 +2154,7 @@ object TextOps {
     // AllPairs prefix join's a-side AND the LSH bucket join's left
     // (min-endpoint) side — per-bucket volume drops ×1/S structurally,
     // not by optimizer grace
-    shingleCte + shingleBandsCteWith(strat.format("l.doc_id")) +
+    shingleCte + pairsCte(strat.format("l.doc_id")) +
       prefixCtesWith(strat.format("pa.doc_id")) +
       s""",
          |finter AS (
@@ -2650,25 +2231,19 @@ object TextOps {
   def lshTuning(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val codes = shingleCodes(s, dir).pin
-    val sigs = shingleMinhashOf(codes).pin
+    val sigs = minhashOf(codes).pin
     val sizes = shingleSizes(codes)
     val frames = Seq((2, 4), (4, 2), (8, 1)).map { case (b, r) =>
       val bands = (0 until b).map(i =>
         sigs.select($"doc_id", lit(i).as("band"),
-          bandSig((i * r until (i + 1) * r).map(j => col(s"mh$j")))
-            .as("sig")))
+          fold((i * r until (i + 1) * r).map(j => col(s"mh$j"))).as("sig")))
         .reduce(_ unionByName _)
       val cand = bands.select($"band", $"sig", $"doc_id".as("a"))
         .join(bands.select($"band", $"sig", $"doc_id".as("b")),
           Seq("band", "sig"))
         .filter($"a" < $"b").select($"a", $"b").distinct()
         .pin // candidate count + the intersection join
-      val inter = cand
-        .join(codes.select($"doc_id".as("a"), $"code"), Seq("a"))
-        .join(codes.select($"doc_id".as("b"), $"code"), Seq("b", "code"))
-        .groupBy($"a", $"b").agg(count(lit(1)).as("c"))
-      cand.join(inter, Seq("a", "b"), "left")
-        .select($"a", $"b", coalesce($"c", lit(0L)).as("c"))
+      shingleInterCounts(cand, codes)
         .join(sizes.select($"doc_id".as("a"), $"n".as("na")), Seq("a"))
         .join(sizes.select($"doc_id".as("b"), $"n".as("nb")), Seq("b"))
         .select(round($"c" * 1.0 / ($"na" + $"nb" - $"c"), 4).as("jac"))
@@ -2683,30 +2258,14 @@ object TextOps {
   }
 
   lazy val lshTuningSql: String = {
-    def sig(i: Int, r: Int): String =
-      (1 until r).foldLeft(s"mh${i * r}")((acc, j) =>
-        s"(($acc) % $M * 131071 + mh${i * r + j}) % $M")
-    val cols = A.indices.map(j =>
-      s"min((${A(j)} * code + ${B(j)}) % 2147483647) AS mh$j").mkString(", ")
     val perConfig = Seq((2, 4), (4, 2), (8, 1)).map { case (b, r) =>
-      val bandRows = (0 until b).map(i =>
-        s"SELECT doc_id, $i AS band, ${sig(i, r)} AS sig FROM sigs")
-        .mkString("\n  UNION ALL ")
       s""",
-         |bands$b AS (
-         |  $bandRows),
+         |${bandsCte(s"bands$b", b, r)},
          |cand$b AS (
          |  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
          |  FROM bands$b l JOIN bands$b r
          |    ON l.band = r.band AND l.sig = r.sig AND l.doc_id < r.doc_id),
-         |inter$b AS (
-         |  SELECT c.a, c.b, coalesce(i.c, 0)::BIGINT AS c
-         |  FROM cand$b c LEFT JOIN (
-         |    SELECT p.a, p.b, count(*)::BIGINT AS c
-         |    FROM cand$b p
-         |    JOIN codes ca ON ca.doc_id = p.a
-         |    JOIN codes cb ON cb.doc_id = p.b AND cb.code = ca.code
-         |    GROUP BY 1, 2) i ON c.a = i.a AND c.b = i.b),
+         |${interCte(s"inter$b", s"cand$b")},
          |stat$b AS (
          |  SELECT $b::BIGINT AS bands, $r::BIGINT AS rows_per_band,
          |    count(*)::BIGINT AS n_candidates,
@@ -2715,8 +2274,8 @@ object TextOps {
          |  FROM inter$b i
          |  JOIN sz sa ON i.a = sa.doc_id JOIN sz sb ON i.b = sb.doc_id)""".stripMargin
     }.mkString
-    shingleCte +
-      s""", sigs AS (SELECT doc_id, $cols FROM codes GROUP BY doc_id),
+    shingleCte + sigsCte +
+      s""",
          |sz AS (SELECT doc_id, count(*)::BIGINT AS n FROM codes
          |       GROUP BY doc_id)""".stripMargin +
       perConfig +
@@ -2800,12 +2359,16 @@ object TextOps {
     starContraction(Tables.documents(s, dir).select(col("doc_id")),
       shinglePairsOf(shingleCodes(s, dir)))._1
 
-  /** `edges` + `reach` over the shingle-LSH `pairs` CTE: the oracle of
-    * [[docClusters]] ([[Graph.reachCte]]). */
+  /** The shingle-LSH `pairs` CTEs, then `edges` + `reach` over them: the
+    * oracle of [[docClusters]] ([[Graph.reachCte]]). Opens a recursive
+    * WITH list.
+    */
   private val docReach: String =
-    s"""${undirectedCte("edges", "pairs")},
-       |${reachCte("edges", "doc_id, doc_id FROM documents")}"""
-      .stripMargin
+    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + pairsCte("TRUE") +
+      s""",
+         |${undirectedCte("edges", "pairs")},
+         |${reachCte("edges", "doc_id, doc_id FROM documents")}"""
+        .stripMargin
 
   /** Near-dup CLUSTERING: connected components over the shingle-LSH pair
     * graph — the step a dedup pipeline runs after pair generation to pick
@@ -2822,13 +2385,14 @@ object TextOps {
   }
 
   val dedupClustersSql: String =
-    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
-      s""",
-         |$docReach
+    docReach +
+      s"""
          |SELECT node AS doc_id, min(m)::BIGINT AS cluster,
          |  CASE WHEN node = min(m) THEN 1 ELSE 0 END AS is_canonical
          |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
-    }
+
+  /** Fold count shared by [[groupKfold]] and its SQL oracle. */
+  val KFolds = 5
 
   /** GROUP-AWARE k-fold assignment: folds are a hash of the near-dup
     * CLUSTER, not the document — the split discipline behind honest
@@ -2840,17 +2404,17 @@ object TextOps {
     * its k-fold generalization, reporting per fold the doc count,
     * cluster count, and token mass — the balance readout that tells you
     * whether the cluster-size skew (one giant template family) broke
-    * fold comparability. Fold = cluster·Knuth mod 2³¹ mod 5 (headroom:
-    * cluster ids < 2³¹ keep the product exact in int64).
+    * fold comparability. Fold = cluster·Knuth mod 2³¹ mod [[KFolds]]
+    * (headroom: cluster ids < 2³¹ keep the product exact in int64).
     *
     * Scale: rides [[Graph.starContraction]]'s cluster labels (O(log n) keyed
     * rounds); the assignment is a projection and the report one
     * fold-keyed aggregation. Nothing new shuffles beyond the clustering.
     */
-  def groupKfold(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def groupKfold(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val folds = docClusters(s, dir).select($"doc_id", $"label",
-      ($"label" * 2654435761L % 2147483647L % k).as("fold"))
+      ($"label" * 2654435761L % 2147483647L % KFolds).as("fold"))
     val docs = Tables.documents(s, dir)
       .select($"doc_id", size(split($"text", " ")).cast("long").as("toks"))
     folds.join(docs, Seq("doc_id"))
@@ -2862,13 +2426,12 @@ object TextOps {
   }
 
   val groupKfoldSql: String =
-    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
+    docReach +
       s""",
-         |$docReach,
          |lab AS (SELECT node AS doc_id, min(m) AS label FROM reach
          |        GROUP BY node),
          |f AS (SELECT doc_id, label,
-         |        label * 2654435761 % 2147483647 % 5 AS fold FROM lab),
+         |        label * 2654435761 % 2147483647 % $KFolds AS fold FROM lab),
          |t AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS toks
          |      FROM documents)
          |SELECT fold::BIGINT AS fold, count(*)::BIGINT AS n_docs,
@@ -2876,7 +2439,6 @@ object TextOps {
          |  sum(toks)::BIGINT AS n_tokens
          |FROM f JOIN t USING (doc_id) GROUP BY fold ORDER BY fold"""
         .stripMargin
-    }
 
   /** Cluster PURITY audit: over the multi-member near-dup clusters, how
     * often the members agree on language — the cheap ground-truth proxy
@@ -2909,9 +2471,8 @@ object TextOps {
   }
 
   lazy val clusterPuritySql: String =
-    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
+    docReach +
       s""",
-         |$docReach,
          |lab AS (SELECT node AS doc_id, min(m) AS label FROM reach
          |        GROUP BY node),
          |cl AS (
@@ -2929,7 +2490,6 @@ object TextOps {
          |  (1000 * sum(maxcnt) // sum(size))::BIGINT
          |    AS weighted_purity_pm
          |FROM pc""".stripMargin
-    }
 
   /** LEAKAGE-SAFE train/eval split: assign documents to splits by a
     * deterministic hash of their near-dup CLUSTER label, never of the
@@ -2964,9 +2524,8 @@ object TextOps {
   }
 
   lazy val leakageSafeSplitSql: String =
-    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
+    docReach +
       s""",
-         |$docReach,
          |lab AS (SELECT node AS doc_id, min(m) AS label FROM reach
          |        GROUP BY node),
          |sp AS (
@@ -2978,7 +2537,6 @@ object TextOps {
          |SELECT split, count(*)::BIGINT AS n_docs, sum(t)::BIGINT AS n_tokens,
          |  count(DISTINCT label)::BIGINT AS n_clusters
          |FROM sp GROUP BY split ORDER BY split""".stripMargin
-    }
 
   /** Canonical-document SELECTION — the dedup *action* that follows
     * clustering: per near-dup cluster, keep the highest-quality member
@@ -3015,9 +2573,8 @@ object TextOps {
   }
 
   val keepBestSql: String =
-    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
+    docReach +
       s""",
-        |$docReach,
         |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
         |        FROM reach GROUP BY node),
         |nw AS (SELECT doc_id,
@@ -3034,7 +2591,6 @@ object TextOps {
         |  min(CASE WHEN rk = 1 THEN n_words END)::BIGINT AS keep_words,
         |  count(*)::BIGINT AS n_members
         |FROM rk GROUP BY cluster ORDER BY cluster""".stripMargin
-    }
 
   /** Duplicate-aware SOFT reweighting — the alternative dedup *action* to
     * hard removal ([[keepBest]]): instead of dropping near-duplicates,
@@ -3066,9 +2622,8 @@ object TextOps {
   }
 
   val softWeightsSql: String =
-    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
+    docReach +
       s""",
-        |$docReach,
         |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
         |        FROM reach GROUP BY node),
         |sz AS (SELECT cluster, count(*)::BIGINT AS n_members
@@ -3076,7 +2631,6 @@ object TextOps {
         |SELECT doc_id, cluster, n_members,
         |  (1000 // n_members)::BIGINT AS weight_permille
         |FROM lab JOIN sz USING (cluster) ORDER BY doc_id""".stripMargin
-    }
 
   /** Effective dataset size under soft dedup — the composition of
     * [[softWeights]] with per-doc token counts: per language, raw token
@@ -3111,9 +2665,8 @@ object TextOps {
   }
 
   val softTokensSql: String =
-    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
+    docReach +
       s""",
-        |$docReach,
         |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
         |        FROM reach GROUP BY node),
         |sz AS (SELECT cluster, count(*)::BIGINT AS n_members
@@ -3129,7 +2682,6 @@ object TextOps {
         |  floor(sum(n_tokens * w) / sum(n_tokens))::BIGINT AS discount_pm
         |FROM tk JOIN wt USING (doc_id)
         |GROUP BY lang ORDER BY lang""".stripMargin
-    }
 
   /** The END-TO-END curation verdict — one frame answering "does this
     * document go into the training set?", composing the three gates every
@@ -3181,11 +2733,10 @@ object TextOps {
     * oracle composes the identical stage definitions.
     */
   private val keepManifestCtes: String =
-    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
+    docReach + {
       val stopList = Seq("the", "be", "to", "of", "and", "that", "have", "with")
         .map(w => s"'$w'").mkString(", ")
       s""",
-         |$docReach,
          |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
          |        FROM reach GROUP BY node),
          |nw AS (SELECT doc_id,
@@ -3458,10 +3009,6 @@ object TextOps {
     // despite constant data (~3.5k rows / 1 MB) its checkpoint job
     // DOUBLED per round (0.2 s → 69 s by round 24) while the
     // union+anti form stays flat at ~0.2 s/round on identical inputs.
-    def pin(df: DataFrame, r: Int): DataFrame = {
-      val _ = r
-      df.pin
-    }
     val base = Tables.documents(s, dir)
       .select($"doc_id", split($"text", " ").as("toks"))
       .pin
@@ -3470,13 +3017,11 @@ object TextOps {
     var nTokens = base.agg(sum(size($"toks"))).head().getLong(0)
     val report = Seq.newBuilder[(Long, String, String, Long, Long)]
     for (r <- 1 to rounds) {
-      val roundT0 = System.nanoTime()
       val win = pc.orderBy($"freq".desc, $"a", $"b").limit(1).collect()
       if (win.nonEmpty) {
         val (a, b, freq) =
           (win(0).getString(0), win(0).getString(1), win(0).getLong(2))
         val ab = a + "@" + b
-        val tWin = System.nanoTime()
         val cur = base.join(mods.select($"doc_id", $"toks".as("mt")),
             Seq("doc_id"), "left")
           .select($"doc_id", coalesce($"mt", $"toks").as("toks"))
@@ -3504,40 +3049,16 @@ object TextOps {
             },
             acc => acc.getField("out")).as("ntoks"))
           .pin
-        val tAff = System.nanoTime()
-        val nRepl = aff.agg(sum(size($"toks") - size($"ntoks")))
+        nTokens -= aff.agg(sum(size($"toks") - size($"ntoks")))
           .head().getLong(0)
-        val tRepl = System.nanoTime()
-        nTokens -= nRepl
-        val prevPc = pc
-        val prevMods = mods
-        pc = pin(pc.unionByName(pairCounts($"toks", -1L)(aff))
+        pc = pc.unionByName(pairCounts($"toks", -1L)(aff))
           .unionByName(pairCounts($"ntoks", 1L)(aff))
           .groupBy($"a", $"b").agg(sum($"freq").as("freq"))
-          .filter($"freq" > 0), r)
-        val tPc = System.nanoTime()
+          .filter($"freq" > 0).pin
         // overlay upsert: rewritten docs replace their previous entry
-        mods = pin(aff.select($"doc_id", $"ntoks".as("toks"))
+        mods = aff.select($"doc_id", $"ntoks".as("toks"))
           .unionByName(mods.join(aff.select($"doc_id"), Seq("doc_id"),
-            "left_anti")), r)
-        // the eager checkpoints above already materialized the new state
-        val _ = (prevPc, prevMods)
-        if (sys.env.contains("GRAFT_BPE_TRACE")) {
-          val stats = mods.agg(count(lit(1)), sum(size($"toks")),
-            sum(aggregate($"toks", lit(0L), (z, t) => z + length(t))))
-            .head()
-          println(s"[bpe] round=$r freq=$freq nRepl=$nRepl " +
-            s"ms=${(System.nanoTime() - roundT0) / 1000000} " +
-            s"winMs=${(tWin - roundT0) / 1000000} " +
-            s"affMs=${(tAff - tWin) / 1000000} " +
-            s"replMs=${(tRepl - tAff) / 1000000} " +
-            s"pcMs=${(tPc - tRepl) / 1000000} " +
-            s"modsMs=${(System.nanoTime() - tPc) / 1000000} " +
-            s"modsRows=${stats.getLong(0)} modsToks=${stats.getLong(1)} " +
-            s"modsChars=${stats.getLong(2)} " +
-            s"modsParts=${mods.rdd.getNumPartitions} " +
-            s"pcParts=${pc.rdd.getNumPartitions}")
-        }
+            "left_anti")).pin
         report += ((r.toLong, a, b, freq, nTokens))
       }
     }
@@ -3643,8 +3164,7 @@ object TextOps {
     * aggs); the 3 BSP rounds are joins over the vocabulary-bounded edge
     * frame, never the corpus.
     */
-  def textRankTerms(s: SparkSession, dir: String,
-      iters: Int = 3): DataFrame = {
+  def textRankTerms(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val dw = Window.partitionBy($"doc_id").orderBy($"pos")
@@ -3661,8 +3181,7 @@ object TextOps {
       .filter($"n_ab" >= 5L)
       .select($"a", $"b")
       .pin // node derivation + both union branches of the BSP
-    pageRankBsp(degrees(edges).select($"v", lit(true).as("seed")),
-      edges, iters)
+    pageRankBsp(degrees(edges).select($"v", lit(true).as("seed")), edges)
       .select($"v".as("term"), $"rank")
       .orderBy($"rank".desc, $"term").limit(20)
   }
@@ -3684,7 +3203,8 @@ object TextOps {
       .stripMargin +
       pageRankCtes("e", "SELECT a AS v FROM e UNION SELECT b FROM e", "v",
         personalized = false) +
-      "\nSELECT v AS term, r AS rank FROM r3 ORDER BY rank DESC, term LIMIT 20"
+      s"\nSELECT v AS term, r AS rank FROM r$PrIters " +
+      "ORDER BY rank DESC, term LIMIT 20"
 
   /** WINNOWING document fingerprints (Schleimer, Wilkerson & Aiken,
     * SIGMOD'03 — the MOSS algorithm): per doc, 4-token-gram rolling
@@ -3707,7 +3227,6 @@ object TextOps {
   def winnowingMatches(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val P = 2147483647L
     val dw = Window.partitionBy($"doc_id").orderBy($"pos")
     val toks = Tables.documents(s, dir)
       .select($"doc_id", posexplode(split($"text", " ")).as(Seq("pos", "w")))
@@ -3867,9 +3386,6 @@ object TextOps {
       .orderBy($"replica")
   }
 
-  /** The 31-bit hash modulus shared with the sketch family. */
-  private val M31 = 2147483647L
-
   val poissonBootstrapSql: String = {
     val cases = PoissonThresholds
       .map(t => s"(CASE WHEN u >= $t THEN 1 ELSE 0 END)")
@@ -4009,11 +3525,6 @@ object TextOps {
       |  array_to_string((list(doc_id ORDER BY doc_id))[1:20], ',') AS postings
       |FROM tok GROUP BY w ORDER BY term""".stripMargin
 
-  /** SimHash (16-bit): per token-hash bit, ±1 votes over the distinct token
-    * set; sign of each bit-sum forms the fingerprint. Near-dup docs differ
-    * in few bits. Pure integer arithmetic (floor-div instead of dynamic
-    * shifts, which Spark's shiftright can't do with a column shift amount).
-    */
   /** Unordered (doc_id, simhash) frame shared by the signature query and
     * the pairs query.
     */
@@ -4030,6 +3541,11 @@ object TextOps {
         pow(lit(2.0), $"b").cast("long")).otherwise(0L)).as("simhash"))
   }
 
+  /** SimHash (16-bit): per token-hash bit, ±1 votes over the distinct token
+    * set; sign of each bit-sum forms the fingerprint. Near-dup docs differ
+    * in few bits. Pure integer arithmetic (floor-div instead of dynamic
+    * shifts, which Spark's shiftright can't do with a column shift amount).
+    */
   def simhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     simhashRaw(s, dir).orderBy($"doc_id")
@@ -4311,14 +3827,6 @@ object TextOps {
       |  FROM tf JOIN df ON tf.term = df.term) t
       |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin
 
-  /** Sequence packing, concat-and-chunk style: within each source shard,
-    * documents are concatenated in stable doc_id order and cut into
-    * 2048-token bins — each doc's bin is floor(tokens-before-it / 2048),
-    * exactly the pretraining packer's accounting. The running sum windows
-    * per SOURCE (the shard key), so packing parallelizes across shards
-    * instead of serializing on a global order — a global cumsum is the one
-    * window no 1000-executor cluster should ever run.
-    */
   /** Per-document bin assignment over an arbitrary document frame — the
     * DataFrame-to-DataFrame form pipelines compose with (the query below
     * is its per-bin accounting at the default 2048-token bin size).
@@ -4339,6 +3847,14 @@ object TextOps {
           .cast("long"))
   }
 
+  /** Sequence packing, concat-and-chunk style: within each source shard,
+    * documents are concatenated in stable doc_id order and cut into
+    * 2048-token bins — each doc's bin is floor(tokens-before-it / 2048),
+    * exactly the pretraining packer's accounting. The running sum windows
+    * per SOURCE (the shard key), so packing parallelizes across shards
+    * instead of serializing on a global order — a global cumsum is the one
+    * window no 1000-executor cluster should ever run.
+    */
   def packSequences(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     packSequencesOf(Tables.documents(s, dir), 2048L)
@@ -4756,34 +4272,6 @@ object TextOps {
   private val P31: Array[Long] =
     Iterator.iterate(1L)(_ * 31L).take(8).toArray // 31^0 .. 31^7
 
-  /** Content-defined chunking (Rabin/Gear-style, as in LBFS/FastCDC and
-    * the chunk-level dedup used for code corpora): split every doc at
-    * positions where an 8-char window hash ≡ 0 (mod 64), then measure how
-    * much of each doc is chunk-level copy-paste shared with OTHER docs —
-    * the sub-document dedup signal whole-doc MinHash can't give (a doc
-    * that embeds a copied paragraph inside fresh text). Boundaries depend
-    * only on local content, so insertions shift chunk frames without
-    * invalidating downstream chunks — the property that makes CDC work
-    * where fixed-width blocking fails.
-    *
-    * Window hash = Σ ascii(c_j)·31^(7-j) over the 8 trailing chars —
-    * max < 7.3e12, exact in int64 on both engines; expected chunk ≈ 64
-    * chars. The doc end is always a sentinel boundary, so every doc has
-    * ≥ 1 chunk and the per-doc ratio is never 0/0.
-    *
-    * Scale: boundary detection explodes the doc into its character-code
-    * stream and computes the window hash with 8 `lag`s over one per-doc
-    * window — O(chars) work and one narrow (doc_id, pos, code) shuffle.
-    * (The first cut evaluated `substr(text, i, 1)` per position instead:
-    * UTF8 position lookup is O(i), which makes that shape O(L²) per doc —
-    * measured 12s vs 1s at sf0.1 for ~300-char docs, and the gap grows
-    * with document length.) The per-doc window parallelizes across docs,
-    * the unit that scales at 100 TB. Chunk assembly is one per-doc lag
-    * over the SMALL boundary frame (~len/64 rows per doc, not per char);
-    * occurrence counting shuffles on chunk content exactly like exact
-    * dedup. The chunk frame is materialized once for its two consumers
-    * (occurrence count + scoring join).
-    */
   /** Shared CDC chunk frame: (doc_id, st, chunk), st = 1-based start of the
     * chunk inside its doc — consumed by [[cdcChunks]] (occurrence scoring)
     * and [[chunkPrune]] (first-owner pruning, which needs st to order
@@ -4815,6 +4303,34 @@ object TextOps {
         $"text".substr($"st", $"b" - $"st" + 1).as("chunk"))
   }
 
+  /** Content-defined chunking (Rabin/Gear-style, as in LBFS/FastCDC and
+    * the chunk-level dedup used for code corpora): split every doc at
+    * positions where an 8-char window hash ≡ 0 (mod 64), then measure how
+    * much of each doc is chunk-level copy-paste shared with OTHER docs —
+    * the sub-document dedup signal whole-doc MinHash can't give (a doc
+    * that embeds a copied paragraph inside fresh text). Boundaries depend
+    * only on local content, so insertions shift chunk frames without
+    * invalidating downstream chunks — the property that makes CDC work
+    * where fixed-width blocking fails.
+    *
+    * Window hash = Σ ascii(c_j)·31^(7-j) over the 8 trailing chars —
+    * max < 7.3e12, exact in int64 on both engines; expected chunk ≈ 64
+    * chars. The doc end is always a sentinel boundary, so every doc has
+    * ≥ 1 chunk and the per-doc ratio is never 0/0.
+    *
+    * Scale: boundary detection explodes the doc into its character-code
+    * stream and computes the window hash with 8 `lag`s over one per-doc
+    * window — O(chars) work and one narrow (doc_id, pos, code) shuffle.
+    * (The first cut evaluated `substr(text, i, 1)` per position instead:
+    * UTF8 position lookup is O(i), which makes that shape O(L²) per doc —
+    * measured 12s vs 1s at sf0.1 for ~300-char docs, and the gap grows
+    * with document length.) The per-doc window parallelizes across docs,
+    * the unit that scales at 100 TB. Chunk assembly is one per-doc lag
+    * over the SMALL boundary frame (~len/64 rows per doc, not per char);
+    * occurrence counting shuffles on chunk content exactly like exact
+    * dedup. The chunk frame is materialized once for its two consumers
+    * (occurrence count + scoring join).
+    */
   def cdcChunks(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val chunks = cdcChunkFrame(s, dir).pin
@@ -5019,9 +4535,8 @@ object TextOps {
   }
 
   lazy val softBudgetSql: String =
-    shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + shingleBandsCte + {
+    docReach +
       s""",
-        |$docReach,
         |lab AS (SELECT node AS doc_id, min(m)::BIGINT AS cluster
         |        FROM reach GROUP BY node),
         |szc AS (SELECT cluster, count(*)::BIGINT AS nm FROM lab
@@ -5049,7 +4564,6 @@ object TextOps {
         |  ttr AS ttr_permille,
         |  (CASE WHEN ttr >= thr THEN 1 ELSE 0 END)::BIGINT AS keep
         |FROM sc CROSS JOIN th ORDER BY doc_id""".stripMargin
-    }
 
   // ---- RAG chunking ----
 
@@ -5182,29 +4696,6 @@ object TextOps {
       |  row_number() OVER (ORDER BY score_millis DESC, doc_id) AS rnk
       |FROM top ORDER BY rnk""".stripMargin
 
-  /** Zipf rank-frequency audit: the vocabulary ranked by corpus frequency
-    * (freq desc, token tie-break), log₂-bucketed by rank (bucket =
-    * bitlength(rank) — the same integer-log idiom as [[pplBuckets]] /
-    * [[Graph.degreeHist]]), with per-bucket token counts and frequency ranges,
-    * plus the least-squares slope of bitlength(freq) on bitlength(rank)
-    * over ALL vocabulary points as constant columns. Natural text obeys
-    * slope ≈ −1 (Zipf's law); a corpus whose slope is far off is
-    * template-heavy (flat head) or OCR-noise-heavy (fat tail of hapaxes)
-    * — the one-glance corpus-health diagnostic run before tokenizer
-    * training (vocab sizing reads exactly this curve).
-    *
-    * Everything is exact: counts and bitlengths are int64; the regression
-    * numerator/denominator n·Σxy − Σx·Σy and n·Σx² − (Σx)² are exact
-    * int64 (cross-multiplied, the [[Events]] anomaly-test idiom), and the
-    * one division is a single rounded double of identical ints.
-    *
-    * Scale: one token count (map-side combinable); vocabulary ranks come
-    * from the two-pass [[GlobalOrder.rank]] (range-partitioned local
-    * ranks + broadcast offsets — the vocabulary is ≪ corpus but still
-    * ~10⁷–10⁸ distinct tokens at 100 TB, too wide for a single-reducer
-    * global window); then O(vocab) arithmetic. The corpus-sized pass is
-    * only the first count.
-    */
   /** Per-term BURSTINESS (Church & Gale 1995's deviation-from-Poisson
     * diagnostic, as the variance-to-mean ratio of within-document term
     * frequency over the documents CONTAINING the term): a Poisson term
@@ -5256,6 +4747,29 @@ object TextOps {
       |FROM st WHERE df >= 50
       |ORDER BY burstiness_pm DESC, term LIMIT 20""".stripMargin
 
+  /** Zipf rank-frequency audit: the vocabulary ranked by corpus frequency
+    * (freq desc, token tie-break), log₂-bucketed by rank (bucket =
+    * bitlength(rank) — the same integer-log idiom as [[pplBuckets]] /
+    * [[Graph.degreeHist]]), with per-bucket token counts and frequency ranges,
+    * plus the least-squares slope of bitlength(freq) on bitlength(rank)
+    * over ALL vocabulary points as constant columns. Natural text obeys
+    * slope ≈ −1 (Zipf's law); a corpus whose slope is far off is
+    * template-heavy (flat head) or OCR-noise-heavy (fat tail of hapaxes)
+    * — the one-glance corpus-health diagnostic run before tokenizer
+    * training (vocab sizing reads exactly this curve).
+    *
+    * Everything is exact: counts and bitlengths are int64; the regression
+    * numerator/denominator n·Σxy − Σx·Σy and n·Σx² − (Σx)² are exact
+    * int64 (cross-multiplied, the [[Events]] anomaly-test idiom), and the
+    * one division is a single rounded double of identical ints.
+    *
+    * Scale: one token count (map-side combinable); vocabulary ranks come
+    * from the two-pass [[GlobalOrder.rank]] (range-partitioned local
+    * ranks + broadcast offsets — the vocabulary is ≪ corpus but still
+    * ~10⁷–10⁸ distinct tokens at 100 TB, too wide for a single-reducer
+    * global window); then O(vocab) arithmetic. The corpus-sized pass is
+    * only the first count.
+    */
   def zipfCurve(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val freq = Tables.documents(s, dir)
@@ -5918,7 +5432,7 @@ object TextOps {
     "text_langid_confusion" -> langIdConfusion _,
     "eval_cohens_kappa" -> cohensKappa _,
     "eval_mcnemar" -> mcnemar _,
-    "text_lsa_power" -> ((s: SparkSession, dir: String) => lsaPower(s, dir)),
+    "text_lsa_power" -> lsaPower _,
     "text_lang_nb" -> langNb _,
     "text_zipf_curve" -> zipfCurve _,
     "text_burstiness" -> burstiness _,
@@ -5945,12 +5459,11 @@ object TextOps {
     "text_bpe_train_incremental" ->
       ((s: SparkSession, dir: String) => bpeTrainIncremental(s, dir)),
     "text_bpe_encode" -> bpeEncode _,
-    "text_textrank_terms" ->
-      ((s: SparkSession, dir: String) => textRankTerms(s, dir)),
+    "text_textrank_terms" -> textRankTerms _,
     "text_winnowing" -> winnowingMatches _,
     "text_inverted_index" -> invertedIndex _,
     "sample_leakage_split" -> leakageSafeSplit _,
-    "sample_group_kfold" -> ((s: SparkSession, dir: String) => groupKfold(s, dir)),
+    "sample_group_kfold" -> groupKfold _,
     "dedup_lsh_tuning" -> lshTuning _,
     "dedup_cluster_purity" -> clusterPurity _,
     "sample_soft_budget" -> softBudget _,

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextOps
+import graft.operators.Fingerprint
 
 /** Streaming near-duplicate detection: continuous corpus ingestion with
   * MinHash-LSH filtering against a persisted signature index — the
@@ -11,7 +11,7 @@ import graft.operators.TextOps
   * (the batch delta-vs-corpus shape).
   *
   * The whole path is APPEND-MODE SAFE by construction:
-  *  - signatures are per-row array expressions ([[TextOps.minhashSigCols]])
+  *  - signatures are per-row array expressions ([[Fingerprint.minhashSigCols]])
   *    — no groupBy, no state, no watermark needed to emit;
   *  - banding is a map + explode;
   *  - the candidate join is stream-static on (band, sig) against the
@@ -33,7 +33,7 @@ object DedupStream {
     * batch and streaming frames alike (map-only).
     */
   def signatures(docs: DataFrame): DataFrame =
-    docs.select((col("doc_id") +: TextOps.minhashSigCols): _*)
+    docs.select((col("doc_id") +: Fingerprint.minhashSigCols): _*)
 
   /** Streaming matches: every delta doc paired with the indexed corpus
     * docs whose LSH bands collide. `deltaDocs` may be a streaming
@@ -43,10 +43,10 @@ object DedupStream {
     * (re-submission guard, same contract as the batch helper).
     */
   def nearDupMatches(deltaDocs: DataFrame, corpusSig: DataFrame): DataFrame = {
-    val d = TextOps.bandedOf(signatures(deltaDocs))
+    val d = Fingerprint.bandedOf(signatures(deltaDocs))
       .select(col("doc_id").as("new_id"), col("sig0").as("s0n"),
         col("band"), col("sig"))
-    val c = TextOps.bandedOf(corpusSig)
+    val c = Fingerprint.bandedOf(corpusSig)
       .select(col("doc_id").as("match_id"), col("sig0").as("s0c"),
         col("band"), col("sig"))
     d.join(c, Seq("band", "sig"))
@@ -81,9 +81,9 @@ object DedupStream {
     *  - emission is append-mode-safe (inner equi-join on (band, sig)) and
     *    each unordered pair appears exactly once: the match_id < new_id
     *    orientation kills the mirrored row, first-matching-band kills the
-    *    second band's duplicate — same contract as the batch
-    *    [[TextOps.incrementalPairsOf]] delta side, which this converges
-    *    to when every delta doc arrives within one horizon.
+    *    second band's duplicate — same contract as the batch delta side
+    *    of [[graft.operators.TextOps.incrementalPairsOf]], which this
+    *    converges to when every delta doc arrives within one horizon.
     *
     * Pairs separated by MORE than the horizon are intentionally not
     * emitted here — by then the earlier doc is in the index and
@@ -92,9 +92,9 @@ object DedupStream {
     */
   def withinStreamMatches(deltaDocs: DataFrame,
       horizon: String = "1 hour"): DataFrame = {
-    val banded = TextOps.bandedOf(
+    val banded = Fingerprint.bandedOf(
       deltaDocs.select((col("doc_id") +: col("ingest_ts") +:
-        TextOps.minhashSigCols): _*),
+        Fingerprint.minhashSigCols): _*),
       carry = Seq("ingest_ts"))
     // per-side column names: a self-join of one streaming source would
     // otherwise carry ambiguous attribute references into the condition

@@ -43,7 +43,7 @@ class GroupKfoldSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     def fold(label: Long): Long = label * 2654435761L % 2147483647L % 5
     val pairs = TextOps.shinglePairsOf(
-      TextOps.shingleCodes(spark, dir)).collect()
+      Fingerprint.shingleCodes(spark, dir)).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "corpus has near-dup pairs to guard")
     pairs.foreach { case (a, b) =>

@@ -13,7 +13,7 @@ class PrefixPairsSpec extends SparkSpec {
 
   private val M = 68719476731L
 
-  /** Serial mirror of TextOps.tokenCode + the shingle fold. */
+  /** Serial mirror of Fingerprint.tokenCode + the shingle fold. */
   private def shingleSet(text: String): Set[Long] = {
     def tc(w: String): Long = {
       def ch(i: Int): Long =

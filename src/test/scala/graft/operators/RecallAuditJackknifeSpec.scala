@@ -59,7 +59,7 @@ class RecallAuditJackknifeSpec extends SparkSpec {
     }
     writeDocs(cand, s"$work/probe")
     val lshPairs = TextOps.shinglePairsOf(
-        TextOps.shingleCodesOf(spark.read.parquet(s"$work/probe/documents.parquet")))
+        Fingerprint.shingleCodesOf(spark.read.parquet(s"$work/probe/documents.parquet")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val missedIdx = (0 until 24).filterNot(i =>
       lshPairs.contains((2000L + 2 * i, 2001L + 2 * i)))

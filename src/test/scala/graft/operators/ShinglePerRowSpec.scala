@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** r17 focused law: the window-free per-row [[TextOps.shingleCodesOf]]
+/** r17 focused law: the window-free per-row [[Fingerprint.shingleCodesOf]]
   * (transform + sequence + element_at + in-row array_distinct) must emit
   * exactly the same (doc_id, code) set as the definition it replaced —
   * posexplode + two lead() windows + global DISTINCT — here checked
@@ -20,7 +20,7 @@ class ShinglePerRowSpec extends SparkSpec {
   private def asciiAt(w: String, i: Int): Long =
     if (i >= 0 && i < w.length) w.charAt(i).toLong else 0L
 
-  /** Plain-Scala mirror of TextOps.tokenCode (ascii('') = 0 semantics). */
+  /** Plain-Scala mirror of Fingerprint.tokenCode (ascii('') = 0 semantics). */
   private def code(w: String): Long =
     (asciiAt(w, 0) * 65536L + asciiAt(w, 1) * 256L + asciiAt(w, 2)
       + w.length.toLong) * 256L + asciiAt(w, w.length - 1)
@@ -43,7 +43,7 @@ class ShinglePerRowSpec extends SparkSpec {
       (7L, "aa aa aa aa"), // repeated tokens, one distinct shingle
       (8L, "w1  w2 w3") // double space -> empty middle token kept by split
     ).toDF("doc_id", "text")
-    val got = TextOps.shingleCodesOf(docs)
+    val got = Fingerprint.shingleCodesOf(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = docs.collect()
       .flatMap(r => refCodes(r.getLong(0), r.getString(1))).toSet
@@ -58,7 +58,7 @@ class ShinglePerRowSpec extends SparkSpec {
   test("per-row shingling matches the reference on the sf0.001 corpus") {
     val docs = graft.sources.Tables.documents(spark, sf("sf0.001"))
       .select("doc_id", "text")
-    val got = TextOps.shingleCodesOf(docs)
+    val got = Fingerprint.shingleCodesOf(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = docs.collect()
       .flatMap(r => refCodes(r.getLong(0), r.getString(1))).toSet
@@ -72,7 +72,7 @@ class ShinglePerRowSpec extends SparkSpec {
       val docs = graft.sources.Tables.documents(spark, sf(scale))
       assert(docs.groupBy("doc_id").count().filter($"count" > 1).isEmpty,
         s"duplicate doc_id at $scale")
-      val codes = TextOps.shingleCodesOf(docs)
+      val codes = Fingerprint.shingleCodesOf(docs)
       assert(codes.count() == codes.distinct().count(), scale)
     }
   }

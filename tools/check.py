@@ -1,15 +1,23 @@
 #!/usr/bin/env python3
 """Local pre-validation of SparkEntry oracles (mimics the driver's t2 gate).
 
-Usage: python3 tools/check.py [sfdir] [outdir] [--skip-spark] [names...]
+Usage: python3 tools/check.py [sfdir] [outdir] [--skip-spark]
+                              [--against OTHER/oracle_sql.json] [names...]
 
 1. Runs graft.Verify via sbt at sfdir (default sf0.01) -> outdir parquet dumps.
 2. Registers the corpus parquet as DuckDB views, runs each oracle_sql entry.
 3. Compares Spark parquet vs DuckDB result: columns sorted by name, rows
    compared in order and as sorted multisets; exact match required (this is
    stricter than any plausible driver compare).
+
+--against compares oracles with oracles instead, and runs no Spark: every
+oracle string in outdir/oracle_sql.json that differs from OTHER's once
+whitespace is collapsed runs in DuckDB next to OTHER's string on the same
+sfdir, and prints `same <name>` or `FAIL <name>: <why>`. Dump the oracles
+of a build without running its queries with
+`sbt "runMain graft.Verify <sfdir> <outdir> __none__"`.
 """
-import json, subprocess, sys, math
+import json, re, subprocess, sys, math
 from pathlib import Path
 
 import duckdb
@@ -78,12 +86,61 @@ def compare(name, spark_rows, duck_rows, spark_cols, duck_cols):
     return "VALUE mismatch (unlocated)"
 
 
+def connect(sfdir):
+    c = duckdb.connect()
+    for t in TABLES:
+        p = f"{sfdir}/{t}.parquet"
+        if Path(p).exists():
+            c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return c
+
+
+def collapse(sql):
+    return re.sub(r"\s+", " ", sql).strip()
+
+
+def against(con, oracles, other, only=()):
+    """Runs each oracle whose string differs from `other`'s (whitespace
+    collapsed) next to `other`'s string on `con`; returns (same, failed)."""
+    n_same = n_bad = 0
+    for name in sorted(oracles):
+        if (only and name not in only) or name not in other \
+                or collapse(oracles[name]) == collapse(other[name]):
+            continue
+        try:
+            res = [con.execute(sql).fetchdf() for sql in
+                   (oracles[name], other[name])]
+            err = compare(name, *[list(df.itertuples(index=False, name=None))
+                                  for df in res],
+                          *[list(df.columns) for df in res])
+        except Exception as e:
+            err = str(e)[:300]
+        if err:
+            print(f"FAIL {name}: {err}")
+            n_bad += 1
+        else:
+            print(f"same {name}")
+            n_same += 1
+    return n_same, n_bad
+
+
 def main():
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    argv = sys.argv[1:]
+    other = None
+    if "--against" in argv:
+        i = argv.index("--against")
+        other = json.loads(Path(argv[i + 1]).read_text())
+        argv = argv[:i] + argv[i + 2:]
+    args = [a for a in argv if not a.startswith("--")]
     sfdir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
     outdir = args[1] if len(args) > 1 else "/tmp/verify_out"
     only = set(args[2:])
-    if "--skip-spark" not in sys.argv:
+    if other is not None:
+        oracles = json.loads(Path(f"{outdir}/oracle_sql.json").read_text())
+        n_same, n_bad = against(connect(sfdir), oracles, other, only)
+        print(f"\n{n_same} same, {n_bad} failed")
+        sys.exit(1 if n_bad else 0)
+    if "--skip-spark" not in argv:
         names = " " + ",".join(sorted(only)) if only else ""
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}{names}'],
@@ -99,16 +156,7 @@ def main():
                     print(" ", line)
 
     oracles = json.loads(Path(f"{outdir}/oracle_sql.json").read_text())
-
-    def connect():
-        c = duckdb.connect()
-        for t in TABLES:
-            p = f"{sfdir}/{t}.parquet"
-            if Path(p).exists():
-                c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        return c
-
-    con = connect()
+    con = connect(sfdir)
 
     n_ok = n_bad = 0
     for name in sorted(oracles):
@@ -131,7 +179,7 @@ def main():
         except Exception as e:
             print(f"FAIL {name}: {str(e)[:300]}")
             n_bad += 1
-            con = connect()  # a fatal duckdb error invalidates the connection
+            con = connect(sfdir)  # a fatal duckdb error invalidates the connection
             continue
         err = compare(name, spark_rows, duck_rows, spark_cols, duck_cols) \
             or dtype_err(name, spark_df, duck_df)
