@@ -81,13 +81,20 @@ object Fingerprint {
 
   /** Folds columns into one code, (acc·131071 + c) mod [[M]]: band
     * signatures over minhash rows, shingle codes over word codes and
-    * n-gram window codes over word hashes.
+    * n-gram window codes over word hashes. Only the head term is reduced
+    * before its first product (it may be ≥ M or negative); every later
+    * accumulator is already a remainder, |acc| < M, and (x % M) % M ==
+    * x % M under the truncated remainder of both engines. A single term
+    * is its own fold.
     */
   private[operators] def fold(cs: Seq[Column]): Column =
-    cs.reduceLeft((acc, c) => (acc % M * 131071L + c) % M)
+    if (cs.size == 1) cs.head
+    else cs.tail.foldLeft(cs.head % M)((acc, c) => (acc * 131071L + c) % M)
 
   private[operators] def foldSql(cs: Seq[String]): String =
-    cs.reduceLeft((acc, c) => s"(($acc) % $M * 131071 + $c) % $M")
+    if (cs.size == 1) cs.head
+    else cs.tail.foldLeft(s"(${cs.head}) % $M")(
+      (acc, c) => s"($acc * 131071 + $c) % $M")
 
   // ---- MinHash ----
 

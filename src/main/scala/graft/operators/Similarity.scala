@@ -39,57 +39,163 @@ object Similarity {
 
   private def norm2(a: Column): Column = ArrayOps.longNorm2(a)
 
-  private val qvecCte =
-    """WITH qv AS (
-      |  SELECT vec_id,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
-      |nrm AS (
-      |  SELECT vec_id, sum(e * e)::BIGINT AS n2
-      |  FROM (SELECT vec_id, unnest(q) AS e FROM qv) GROUP BY vec_id)
-      |""".stripMargin
+  // ---- the vector probe kernel: each Spark piece next to its DuckDB twin ----
+
+  /** The probe set: vectors vec_id < Probes are the queries every probe,
+    * top-k and recall query scores against the corpus.
+    */
+  final val Probes = 10
+
+  /** The quantized embedding list in DuckDB: the twin of [[qvec]]. */
+  private val qvecSql =
+    "[floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding]"
+
+  /** Quantized embeddings frame (vec_id, cols…, q, n2) shared by every
+    * vector query.
+    */
+  private[operators] def qEmb(s: SparkSession, dir: String,
+      cols: Column*): DataFrame =
+    Tables.embeddings(s, dir)
+      .select((col("vec_id") +: cols) :+ qvec(col("embedding")).as("q"): _*)
+      .withColumn("n2", norm2(col("q")))
+
+  /** `WITH qv(cols…, q)` and `nrm(vec_id, n2)`: the SQL twin of [[qEmb]].
+    * `recursive` opens a recursive WITH list (the reachability oracles),
+    * `materialized` computes both CTEs once (the oracles that read them
+    * from many CTEs).
+    */
+  private def qvCte(cols: String = "vec_id", recursive: Boolean = false,
+      materialized: Boolean = false): String = {
+    val m = if (materialized) " MATERIALIZED" else ""
+    s"""WITH ${if (recursive) "RECURSIVE " else ""}qv AS$m (
+       |  SELECT $cols,
+       |    $qvecSql AS q
+       |  FROM embeddings),
+       |nrm AS$m (
+       |  SELECT vec_id, sum(e * e)::BIGINT AS n2
+       |  FROM (SELECT vec_id, unnest(q) AS e FROM qv) GROUP BY vec_id)
+       |""".stripMargin
+  }
+
+  private val qvecCte = qvCte()
+
+  /** The probe rows of a quantized frame as (qid, qq, qn2, extra…). */
+  private def probesOf(emb: DataFrame, extra: Column*): DataFrame =
+    emb.filter(col("vec_id") < Probes).select(Seq(col("vec_id").as("qid"),
+      col("q").as("qq"), col("n2").as("qn2")) ++ extra: _*)
+
+  /** Exact cosine of an int64 dot `num` over the norms `n2a`, `n2b`,
+    * rounded to 4 places: one IEEE sqrt pair and one division, so both
+    * engines produce the same double.
+    */
+  private def cosine(num: Column, n2a: Column, n2b: Column): Column =
+    round(num.cast("double")
+      / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double"))), 4)
+
+  /** SQL twin of [[cosine]]: the dot `d` over the `n2` of aliases `a`, `b`. */
+  private def cosineSql(d: String, a: String, b: String): String =
+    s"round($d / (sqrt($a.n2) * sqrt($b.n2)), 4)"
+
+  /** Every row of `emb` (vec_id, q, n2, …) against every other probe row
+    * of it (qid, qq, qn2), the pair's exact `cos` added: the brute-force
+    * scoring pass of every exact query and recall baseline.
+    */
+  private def cosineScored(emb: DataFrame): DataFrame =
+    emb.crossJoin(broadcast(probesOf(emb)))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("cos",
+        cosine(dot(col("q"), col("qq")), col("n2"), col("qn2")))
+
+  /** `SELECT keys…, sum(x * y)::BIGINT AS d … GROUP BY keys`: the exact
+    * int64 dot of list `a` with list `b` for every row of `from`, grouped
+    * by `keys` (each `expr [AS name]`, output under its name). The SQL
+    * twin of [[dot]], and so of the dot in [[centroidD2]].
+    */
+  private def dotSql(keys: Seq[String], a: String, b: String,
+      from: String): String = {
+    val names = keys.map(_.split(" AS ").last.split('.').last)
+    s"""SELECT ${names.mkString(", ")}, sum(x * y)::BIGINT AS d FROM (
+       |    SELECT ${keys.mkString(", ")}, unnest($a) AS x, unnest($b) AS y
+       |    FROM $from) z
+       |  GROUP BY ${keys.indices.map(_ + 1).mkString(", ")}""".stripMargin
+  }
+
+  /** Every probe row `q` of `src` (vec_id, q, …) joined to every other
+    * row `e` of it: the SQL twin of the probe cross join.
+    */
+  private def probeJoin(src: String = "qv"): String =
+    s"""(SELECT * FROM $src WHERE vec_id < $Probes) q
+       |    JOIN $src e ON e.vec_id <> q.vec_id""".stripMargin
+
+  /** (qid, vec_id, d): the dot of the probe rows `q` with the rows `e` of
+    * `from`, by default [[probeJoin]].
+    */
+  private def probeDotsSql(from: String = probeJoin()): String =
+    dotSql(Seq("q.vec_id AS qid", "e.vec_id"), "q.q", "e.q", from)
+
+  /** `name(qid, vec_id, cos)` from the (qid, vec_id, d) rows of `dots`
+    * and the norms table `norms`: the SQL twin of [[cosineScored]].
+    */
+  private def cosineCte(name: String, dots: String = probeDotsSql(),
+      norms: String = "nrm"): String =
+    s"""$name AS (
+       |  SELECT d.qid, d.vec_id, ${cosineSql("d.d", "nq", "ne")} AS cos
+       |  FROM ($dots) d
+       |  JOIN $norms nq ON d.qid = nq.vec_id
+       |  JOIN $norms ne ON d.vec_id = ne.vec_id)""".stripMargin
+
+  /** The rows of `df` ranked 1..k within each `by` group under `order`,
+    * the rank kept as `rank`: a row_number window then a filter, the
+    * shape [[graft.plans.GroupedTopKRewrite]] plans as a grouped top-k.
+    */
+  private def topK(df: DataFrame, k: Int, order: Seq[Column],
+      by: String = "qid", rank: String = "rn"): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(col(by)).orderBy(order: _*)))
+      .filter(col(rank) <= k)
+  }
+
+  /** SQL twin of [[topK]]: `cols` of the rows of `from` ranked 1..k. */
+  private def topKSql(cols: String, from: String, k: Int, order: String,
+      by: String = "qid", rank: String = "rn"): String =
+    s"""SELECT $cols FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY $by
+       |    ORDER BY $order) AS $rank FROM $from) t
+       |WHERE $rank <= $k""".stripMargin
+
+  /** Per probe, how many of its exact top-k rows (qid, vec_id) the
+    * approximate side (aqid, avid) also returned, as (qid, n_exact,
+    * n_hit). A left join, so a probe the approximate side missed reads
+    * n_hit 0.
+    */
+  private def hitsOf(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.join(approx,
+        col("qid") === col("aqid") && col("vec_id") === col("avid"), "left")
+      .groupBy(col("qid"))
+      .agg(count(lit(1)).as("n_exact"), count(col("avid")).as("n_hit"))
+
+  /** SQL twin of [[hitsOf]] over the (qid, vec_id) tables `exact`, `approx`. */
+  private def hitsSql(exact: String, approx: String): String =
+    s"""SELECT e.qid, count(*)::BIGINT AS n_exact,
+       |    count(a.vec_id)::BIGINT AS n_hit
+       |  FROM $exact e LEFT JOIN $approx a
+       |    ON e.qid = a.qid AND e.vec_id = a.vec_id
+       |  GROUP BY e.qid""".stripMargin
 
   /** Brute-force cosine top-5 per query vector (query set = vec_id < 10).
     * The exact baseline every ANN variant is judged against.
     */
   def cosineTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(s, dir)
-      .select($"vec_id", qvec($"embedding").as("q"))
-      .withColumn("n2", norm2($"q"))
-    val queries = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"))
-    val scored = emb.crossJoin(broadcast(queries))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("cos",
-        round(dot($"q", $"qq").cast("double")
-          / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
-    scored
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"cos".desc, $"vec_id")))
-      .filter($"rn" <= 5)
+    topK(cosineScored(qEmb(s, dir)), 5, Seq($"cos".desc, $"vec_id"))
       .select($"qid", $"vec_id", $"cos", $"rn")
       .orderBy($"qid", $"rn")
   }
 
-  val cosineTopKSql: String = qvecCte +
-    """, dots AS (
-      |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 10) q
-      |    JOIN qv e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2),
-      |scored AS (
-      |  SELECT qid, d.vec_id,
-      |    round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) AS cos
-      |  FROM dots d JOIN nrm nq ON d.qid = nq.vec_id
-      |              JOIN nrm ne ON d.vec_id = ne.vec_id)
-      |SELECT qid, vec_id, cos, rn FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY qid
-      |    ORDER BY cos DESC, vec_id) AS rn FROM scored) t
-      |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+  val cosineTopKSql: String = qvecCte + ", " + cosineCte("scored") +
+    "\n" + topKSql("qid, vec_id, cos, rn", "scored", 5, "cos DESC, vec_id") +
+    " ORDER BY qid, rn"
 
   /** Hard-negative mining for contrastive training: per query vector, the
     * top-3 highest-cosine candidates whose LABEL DIFFERS from the query's —
@@ -106,68 +212,29 @@ object Similarity {
     */
   def hardNegatives(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(s, dir)
-      .select($"vec_id", $"label", qvec($"embedding").as("q"))
-      .withColumn("n2", norm2($"q"))
-    val queries = emb.filter($"vec_id" < 10)
+    val emb = qEmb(s, dir, $"label")
+    val queries = emb.filter($"vec_id" < Probes)
       .select($"vec_id".as("qid"), $"label".as("qlabel"),
         $"q".as("qq"), $"n2".as("qn2"))
-    emb.crossJoin(broadcast(queries))
-      .filter($"label" =!= $"qlabel")
-      .withColumn("cos",
-        round(dot($"q", $"qq").cast("double")
-          / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"cos".desc, $"vec_id")))
-      .filter($"rn" <= 3)
+    topK(emb.crossJoin(broadcast(queries))
+        .filter($"label" =!= $"qlabel")
+        .withColumn("cos", cosine(dot($"q", $"qq"), $"n2", $"qn2")),
+      3, Seq($"cos".desc, $"vec_id"))
       .select($"qid", $"vec_id", $"label".cast("long").as("neg_label"),
         $"cos", $"rn")
       .orderBy($"qid", $"rn")
   }
 
-  val hardNegativesSql: String =
-    """WITH qv AS (
-      |  SELECT vec_id, label,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
-      |nrm AS (
-      |  SELECT vec_id, sum(e * e)::BIGINT AS n2
-      |  FROM (SELECT vec_id, unnest(q) AS e FROM qv) GROUP BY vec_id),
-      |dots AS (
-      |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, label, q FROM qv WHERE vec_id < 10) q
-      |    JOIN qv e ON e.label <> q.label) z
-      |  GROUP BY 1, 2),
-      |scored AS (
-      |  SELECT qid, d.vec_id,
-      |    round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) AS cos
-      |  FROM dots d JOIN nrm nq ON d.qid = nq.vec_id
-      |              JOIN nrm ne ON d.vec_id = ne.vec_id)
-      |SELECT t.qid, t.vec_id, qv.label::BIGINT AS neg_label, t.cos, t.rn
-      |FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY qid
-      |    ORDER BY cos DESC, vec_id) AS rn FROM scored) t
-      |JOIN qv ON t.vec_id = qv.vec_id
-      |WHERE t.rn <= 3 ORDER BY t.qid, t.rn""".stripMargin
+  val hardNegativesSql: String = qvCte("vec_id, label") + ", " +
+    cosineCte("scored", probeDotsSql(
+      s"""(SELECT * FROM qv WHERE vec_id < $Probes) q
+         |    JOIN qv e ON e.label <> q.label""".stripMargin)) +
+    s""",
+       |top AS (${topKSql("*", "scored", 3, "cos DESC, vec_id")})
+       |SELECT t.qid, t.vec_id, qv.label::BIGINT AS neg_label, t.cos, t.rn
+       |FROM top t JOIN qv ON t.vec_id = qv.vec_id
+       |ORDER BY t.qid, t.rn""".stripMargin
 
-  /** Near-duplicate pairs: all pairs with cosine ≥ 0.45 (calibrated to this
-    * corpus's max pairwise cosine of 0.51), computed EXACTLY.
-    *
-    * Shape: a B×B grid-blocked self-equi-join (the Okcan–Riedewald
-    * theta-join): each side is replicated B ways on a block coordinate and
-    * the pair (x, y) meets in exactly one (g(x), g(y)) cell, so the Θ(n²)
-    * compares hash-partition evenly across the cluster — no
-    * BroadcastNestedLoopJoin, nothing broadcast that grows with the data.
-    * Exact all-pairs at this radius is inherently quadratic in compares
-    * (LSH gating was measured on this corpus: 8-hyperplane buckets recall
-    * 1/14 of the true pairs at sf0.01 — sketch bits don't separate at
-    * cos ≈ 0.45, so candidate gating would change the answer); the
-    * sub-quadratic alternative when approximate recall is acceptable is
-    * [[lshTopK]]/[[ivfTopK]].
-    */
   /** Grid-join core over quantized rows (vec_id, q, n2) — package-visible
     * so the spec can feed synthetic vectors and compare against a naive
     * all-pairs reference.
@@ -190,21 +257,26 @@ object Similarity {
       // probe side through codegen (measured 4× faster at sf0.1).
       .hint("shuffle_hash")
     l.join(r, Seq("gl", "gr")).filter($"a" < $"b")
-      .withColumn("cos",
-        round(dot($"qa", $"qb").cast("double")
-          / (sqrt($"na".cast("double")) * sqrt($"nb".cast("double"))), 4))
+      .withColumn("cos", cosine(dot($"qa", $"qb"), $"na", $"nb"))
       .filter($"cos" >= threshold)
       .select($"a", $"b", $"cos")
   }
 
-  /** Quantized embeddings frame shared by the pair queries: (vec_id, q, n2). */
-  private[operators] def qEmb(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.embeddings(s, dir)
-      .select($"vec_id", qvec($"embedding").as("q"))
-      .withColumn("n2", norm2($"q"))
-  }
-
+  /** Near-duplicate pairs: all pairs with cosine ≥ 0.45 (calibrated to this
+    * corpus's max pairwise cosine of 0.51), computed EXACTLY.
+    *
+    * Shape: a B×B grid-blocked self-equi-join (the Okcan–Riedewald
+    * theta-join): each side is replicated B ways on a block coordinate and
+    * the pair (x, y) meets in exactly one (g(x), g(y)) cell, so the Θ(n²)
+    * compares hash-partition evenly across the cluster — no
+    * BroadcastNestedLoopJoin, nothing broadcast that grows with the data.
+    * Exact all-pairs at this radius is inherently quadratic in compares
+    * (LSH gating was measured on this corpus: 8-hyperplane buckets recall
+    * 1/14 of the true pairs at sf0.01 — sketch bits don't separate at
+    * cos ≈ 0.45, so candidate gating would change the answer); the
+    * sub-quadratic alternative when approximate recall is acceptable is
+    * [[lshTopK]]/[[ivfTopK]].
+    */
   def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // 32 blocks → 1024 cells: finer cells cost more replication (each row
@@ -214,17 +286,23 @@ object Similarity {
     nearDupPairsOf(qEmb(s, dir), 0.45, 32).orderBy($"a", $"b")
   }
 
+  /** (a, b, cos) for the pairs of `from` (rows `a`, `b` with lists a.q,
+    * b.q) whose exact cosine is ≥ `threshold`: the SQL twin of the verify
+    * step of [[nearDupPairsOf]] and [[ivfEpsEdges]].
+    */
+  private def pairsSql(from: String, threshold: Double): String =
+    s"""SELECT * FROM (
+       |  SELECT d.a, d.b, ${cosineSql("d.d", "na", "nb")} AS cos
+       |  FROM (${dotSql(Seq("a.vec_id AS a", "b.vec_id AS b"), "a.q", "b.q",
+                    from)}) d
+       |  JOIN nrm na ON d.a = na.vec_id JOIN nrm nb ON d.b = nb.vec_id) p
+       |WHERE cos >= $threshold""".stripMargin
+
+  /** Every pair of `qv` rows a < b. */
+  private val allPairs = "qv a JOIN qv b ON a.vec_id < b.vec_id"
+
   val nearDupPairsSql: String = qvecCte +
-    """, dots AS (
-      |  SELECT a, b, sum(x * y) AS d FROM (
-      |    SELECT a.vec_id AS a, b.vec_id AS b,
-      |           unnest(a.q) AS x, unnest(b.q) AS y
-      |    FROM qv a JOIN qv b ON a.vec_id < b.vec_id) z
-      |  GROUP BY 1, 2)
-      |SELECT a, b, round(d / (sqrt(na.n2) * sqrt(nb.n2)), 4) AS cos
-      |FROM dots JOIN nrm na ON a = na.vec_id JOIN nrm nb ON b = nb.vec_id
-      |WHERE round(d / (sqrt(na.n2) * sqrt(nb.n2)), 4) >= 0.45
-      |ORDER BY a, b""".stripMargin
+    s"${pairsSql(allPairs, 0.45)}\nORDER BY a, b"
 
   /** SEMANTIC dedup clusters: connected components over the exact
     * cosine ≥ 0.45 pair graph — the embedding-space analogue of
@@ -248,23 +326,13 @@ object Similarity {
       .orderBy($"vec_id")
   }
 
-  val semanticClustersSql: String =
-    qvecCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      s""", dots AS (
-        |  SELECT a, b, sum(x * y) AS d FROM (
-        |    SELECT a.vec_id AS a, b.vec_id AS b,
-        |           unnest(a.q) AS x, unnest(b.q) AS y
-        |    FROM qv a JOIN qv b ON a.vec_id < b.vec_id) z
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT a, b FROM dots
-        |  JOIN nrm na ON a = na.vec_id JOIN nrm nb ON b = nb.vec_id
-        |  WHERE round(d / (sqrt(na.n2) * sqrt(nb.n2)), 4) >= 0.45),
-        |${Graph.undirectedCte("edges", "pairs")},
-        |${Graph.reachCte("edges", "vec_id, vec_id FROM embeddings")}
-        |SELECT node AS vec_id, min(m)::BIGINT AS cluster,
-        |  CASE WHEN node = min(m) THEN 1 ELSE 0 END AS is_canonical
-        |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin
+  val semanticClustersSql: String = qvCte(recursive = true) +
+    s""", pairs AS (SELECT a, b FROM (${pairsSql(allPairs, 0.45)})),
+       |${Graph.undirectedCte("edges", "pairs")},
+       |${Graph.reachCte("edges", "vec_id, vec_id FROM embeddings")}
+       |SELECT node AS vec_id, min(m)::BIGINT AS cluster,
+       |  CASE WHEN node = min(m) THEN 1 ELSE 0 END AS is_canonical
+       |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin
 
   /** DBSCAN over the embedding space (Ester et al., KDD'96), ε-neighbor
     * predicate = exact cosine ≥ 0.30, minPts = 4: CORE points are those
@@ -329,46 +397,38 @@ object Similarity {
       .orderBy($"vec_id")
   }
 
+  /** The core/border/noise fold of an `eps(a, b)` CTE (a < b): the SQL
+    * twin of [[dbscanTail]], shared by both DBSCAN oracles.
+    */
+  private val dbscanTailSql: String =
+    s""",
+       |sym AS MATERIALIZED (
+       |  SELECT a, b FROM eps UNION ALL SELECT b, a FROM eps),
+       |core AS MATERIALIZED (
+       |  SELECT a AS v FROM sym GROUP BY a HAVING count(*) >= 3),
+       |ce AS MATERIALIZED (
+       |  SELECT e.a, e.b FROM eps e
+       |  JOIN core ca ON e.a = ca.v JOIN core cb ON e.b = cb.v),
+       |${Graph.undirectedCte("cedges", "ce")},
+       |${Graph.reachCte("cedges", "v, v FROM core")},
+       |cl AS MATERIALIZED (
+       |  SELECT node, min(m)::BIGINT AS cluster FROM reach GROUP BY node),
+       |nearcore AS (
+       |  SELECT s.a AS v, min(c.cluster) AS bcl
+       |  FROM sym s JOIN cl c ON c.node = s.b GROUP BY s.a)
+       |SELECT e.vec_id,
+       |  (CASE WHEN c.cluster IS NOT NULL THEN 2
+       |        WHEN n.bcl IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS role,
+       |  coalesce(c.cluster, n.bcl, -1)::BIGINT AS cluster
+       |FROM embeddings e
+       |LEFT JOIN cl c ON c.node = e.vec_id
+       |LEFT JOIN nearcore n ON n.v = e.vec_id
+       |ORDER BY vec_id""".stripMargin
+
   val dbscanClustersSql: String =
-    s"""WITH RECURSIVE qv AS MATERIALIZED (
-      |  SELECT vec_id,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
-      |nrm AS MATERIALIZED (
-      |  SELECT vec_id, sum(e * e)::BIGINT AS n2
-      |  FROM (SELECT vec_id, unnest(q) AS e FROM qv) GROUP BY vec_id),
-      |dots AS MATERIALIZED (
-      |  SELECT a, b, sum(x * y) AS d FROM (
-      |    SELECT a.vec_id AS a, b.vec_id AS b,
-      |           unnest(a.q) AS x, unnest(b.q) AS y
-      |    FROM qv a JOIN qv b ON a.vec_id < b.vec_id) z
-      |  GROUP BY 1, 2),
-      |eps AS MATERIALIZED (
-      |  SELECT a, b FROM dots
-      |  JOIN nrm na ON a = na.vec_id JOIN nrm nb ON b = nb.vec_id
-      |  WHERE round(d / (sqrt(na.n2) * sqrt(nb.n2)), 4) >= 0.30),
-      |sym AS MATERIALIZED (
-      |  SELECT a, b FROM eps UNION ALL SELECT b, a FROM eps),
-      |core AS MATERIALIZED (
-      |  SELECT a AS v FROM sym GROUP BY a HAVING count(*) >= 3),
-      |ce AS MATERIALIZED (
-      |  SELECT e.a, e.b FROM eps e
-      |  JOIN core ca ON e.a = ca.v JOIN core cb ON e.b = cb.v),
-      |${Graph.undirectedCte("cedges", "ce")},
-      |${Graph.reachCte("cedges", "v, v FROM core")},
-      |cl AS MATERIALIZED (
-      |  SELECT node, min(m)::BIGINT AS cluster FROM reach GROUP BY node),
-      |nearcore AS (
-      |  SELECT s.a AS v, min(c.cluster) AS bcl
-      |  FROM sym s JOIN cl c ON c.node = s.b GROUP BY s.a)
-      |SELECT e.vec_id,
-      |  (CASE WHEN c.cluster IS NOT NULL THEN 2
-      |        WHEN n.bcl IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS role,
-      |  coalesce(c.cluster, n.bcl, -1)::BIGINT AS cluster
-      |FROM embeddings e
-      |LEFT JOIN cl c ON c.node = e.vec_id
-      |LEFT JOIN nearcore n ON n.v = e.vec_id
-      |ORDER BY vec_id""".stripMargin
+    qvCte(recursive = true, materialized = true) +
+      s", eps AS MATERIALIZED (SELECT a, b FROM (${pairsSql(allPairs, 0.3)}))" +
+      dbscanTailSql
 
   /** IVF-BUCKETED DBSCAN — the 100 TB form of [[dbscanClusters]] (VERDICT
     * r13 missing #3): ε-graph CANDIDATES come from IVF cell co-membership
@@ -392,7 +452,7 @@ object Similarity {
     * SAME approximate answer.
     */
   def dbscanIvfClusters(s: SparkSession, dir: String,
-      nCells: Int = 8): DataFrame =
+      nCells: Int = IvfCells): DataFrame =
     dbscanTail(s, dir, ivfEpsEdges(s, dir, nCells))
 
   /** The IVF-bucketed ε-graph of [[dbscanIvfClusters]] (candidates from
@@ -401,9 +461,8 @@ object Similarity {
     * grid-join ε-graph.
     */
   private[operators] def ivfEpsEdges(s: SparkSession, dir: String,
-      nCells: Int = 8): DataFrame = {
+      nCells: Int = IvfCells): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val emb = qEmb(s, dir).pin // fit + membership scoring
     val n = lit(nCells.toLong)
     // nprobe=2 membership: the (d2, cid) pack makes the per-vector top-2
@@ -414,11 +473,8 @@ object Similarity {
     // candidate shuffle, not the compares, was the wall); this shape
     // verifies in the join like the grid join and distincts only the
     // surviving ε-pairs (a pair can co-occur in both probed cells).
-    val memb = centroidD2(emb, ivfCentroids(s, emb, nCells))
-      .withColumn("key", $"d2" * n + $"cid")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"key")))
-      .filter($"rn" <= 2)
+    val memb = topK(centroidD2(emb, ivfCentroids(s, emb, nCells))
+        .withColumn("key", $"d2" * n + $"cid"), 2, Seq($"key"), by = "vec_id")
       .select($"vec_id", ($"key" % n).as("cell"), $"q", $"n2")
       .pin // both sides of the co-membership join; 2 rows/vec
     val l = memb.select($"cell", $"vec_id".as("a"), $"q".as("qa"),
@@ -430,9 +486,7 @@ object Similarity {
       .hint("shuffle_hash")
     l.join(r, Seq("cell"))
       .filter($"a" < $"b")
-      .filter(round(dot($"qa", $"qb").cast("double")
-        / (sqrt($"na".cast("double")) * sqrt($"nb".cast("double"))), 4)
-        >= 0.30)
+      .filter(cosine(dot($"qa", $"qb"), $"na", $"nb") >= 0.30)
       .select($"a", $"b").distinct()
   }
 
@@ -441,55 +495,23 @@ object Similarity {
   // pprRankGroupsSql precedent)
   lazy val dbscanIvfClustersSql: String = {
     val t = kmeansIters
-    qvecCte.replaceFirst("WITH ", "WITH RECURSIVE ") + kmeansCtes +
+    qvCte(recursive = true) + kmeansCtes +
       s""",
          |keys AS (
          |  SELECT cd.vec_id,
-         |    ((ne.n2 - 2 * cd.d + cn.cn2) * 8 + cd.cid) AS key
+         |    ((ne.n2 - 2 * cd.d + cn.cn2) * $IvfCells + cd.cid) AS key
          |  FROM cd$t cd JOIN nrm ne ON cd.vec_id = ne.vec_id
          |               JOIN cn$t cn ON cd.cid = cn.cid),
-         |memb AS MATERIALIZED (
-         |  SELECT vec_id, (key % 8)::BIGINT AS cell FROM (
-         |    SELECT vec_id, key,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY key) AS rn
-         |    FROM keys) z
-         |  WHERE rn <= 2),
+         |memb AS MATERIALIZED (${topKSql(
+           s"vec_id, (key % $IvfCells)::BIGINT AS cell", "keys", 2, "key",
+           by = "vec_id")}),
          |cand AS (
          |  SELECT DISTINCT l.vec_id AS a, r.vec_id AS b
          |  FROM memb l JOIN memb r ON l.cell = r.cell
          |    AND l.vec_id < r.vec_id),
-         |dots AS MATERIALIZED (
-         |  SELECT a, b, sum(x * y) AS d FROM (
-         |    SELECT c.a, c.b, unnest(qa.q) AS x, unnest(qb.q) AS y
-         |    FROM cand c JOIN qv qa ON c.a = qa.vec_id
-         |                JOIN qv qb ON c.b = qb.vec_id) z
-         |  GROUP BY 1, 2),
-         |eps AS MATERIALIZED (
-         |  SELECT a, b FROM dots
-         |  JOIN nrm na ON a = na.vec_id JOIN nrm nb ON b = nb.vec_id
-         |  WHERE round(d / (sqrt(na.n2) * sqrt(nb.n2)), 4) >= 0.30),
-         |sym AS MATERIALIZED (
-         |  SELECT a, b FROM eps UNION ALL SELECT b, a FROM eps),
-         |core AS MATERIALIZED (
-         |  SELECT a AS v FROM sym GROUP BY a HAVING count(*) >= 3),
-         |ce AS MATERIALIZED (
-         |  SELECT e.a, e.b FROM eps e
-         |  JOIN core ca ON e.a = ca.v JOIN core cb ON e.b = cb.v),
-         |${Graph.undirectedCte("cedges", "ce")},
-         |${Graph.reachCte("cedges", "v, v FROM core")},
-         |cl AS MATERIALIZED (
-         |  SELECT node, min(m)::BIGINT AS cluster FROM reach GROUP BY node),
-         |nearcore AS (
-         |  SELECT s.a AS v, min(c.cluster) AS bcl
-         |  FROM sym s JOIN cl c ON c.node = s.b GROUP BY s.a)
-         |SELECT e.vec_id,
-         |  (CASE WHEN c.cluster IS NOT NULL THEN 2
-         |        WHEN n.bcl IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS role,
-         |  coalesce(c.cluster, n.bcl, -1)::BIGINT AS cluster
-         |FROM embeddings e
-         |LEFT JOIN cl c ON c.node = e.vec_id
-         |LEFT JOIN nearcore n ON n.v = e.vec_id
-         |ORDER BY vec_id""".stripMargin
+         |eps AS MATERIALIZED (SELECT a, b FROM (${pairsSql(
+           "cand c JOIN qv a ON c.a = a.vec_id JOIN qv b ON c.b = b.vec_id",
+           0.3)}))""".stripMargin + dbscanTailSql
   }
 
   /** Random-hyperplane LSH bucketing: 8 deterministic integer hyperplanes
@@ -507,13 +529,11 @@ object Similarity {
   private def lshBucketsRaw(s: SparkSession, dir: String,
       nPlanes: Int = 8): DataFrame = {
     import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-      .select($"vec_id", qvec($"embedding").as("q"))
     val bucket = (0 until nPlanes).map { j =>
       val h = array(hyperplane(j).map(lit): _*)
       when(dot($"q", h) >= 0, 1L << j).otherwise(0L)
     }.reduce(_ + _)
-    emb.select($"vec_id", bucket.as("bucket"))
+    qEmb(s, dir).select($"vec_id", bucket.as("bucket"))
   }
 
   def lshBuckets(s: SparkSession, dir: String): DataFrame = {
@@ -547,47 +567,43 @@ object Similarity {
   /** Bucketed ANN top-3: brute-force cosine, but only within the query's
     * LSH bucket — the sub-linear scale path (candidates ∝ bucket size).
     */
-  def lshTopK(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(s, dir)
-      .select($"vec_id", qvec($"embedding").as("q"))
-      .withColumn("n2", norm2($"q"))
-    val buckets = lshBucketsRaw(s, dir)
-    val withB = emb.join(buckets, Seq("vec_id"))
-    val queries = withB.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"),
-        $"bucket".as("qbucket"))
-    withB.join(broadcast(queries),
-        $"bucket" === $"qbucket" && $"vec_id" =!= $"qid")
-      .withColumn("cos",
-        round(dot($"q", $"qq").cast("double")
-          / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"cos".desc, $"vec_id")))
-      .filter($"rn" <= 3)
+  def lshTopK(s: SparkSession, dir: String): DataFrame =
+    cellTop3(qEmb(s, dir).join(lshBucketsRaw(s, dir), Seq("vec_id")),
+      "bucket", "qbucket")
+
+  /** The exact-cosine top-3 of each probe among the rows of `emb`
+    * (vec_id, q, n2, `cell`) that share its `cell` value (the probe's own
+    * value rides the broadcast as `qcell`): the cell-restricted probe of
+    * [[lshTopK]] and [[ivfTopK]], inline fit or saved index, so the
+    * probes can never drift apart.
+    */
+  private def cellTop3(emb: DataFrame, cell: String,
+      qcell: String): DataFrame = {
+    import emb.sparkSession.implicits._
+    topK(emb.join(broadcast(probesOf(emb, col(cell).as(qcell))),
+          col(cell) === col(qcell) && $"vec_id" =!= $"qid")
+        .withColumn("cos", cosine(dot($"q", $"qq"), $"n2", $"qn2")),
+      3, Seq($"cos".desc, $"vec_id"))
       .select($"qid", $"vec_id", $"cos", $"rn")
       .orderBy($"qid", $"rn")
   }
 
-  val lshTopKSql: String = qvecCte + bucketsCte +
-    """,
-      |dots AS (
-      |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT * FROM qb WHERE vec_id < 10) q
-      |    JOIN qb e ON q.bucket = e.bucket AND e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2),
-      |scored AS (
-      |  SELECT qid, d.vec_id,
-      |    round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) AS cos
-      |  FROM dots d JOIN nrm nq ON d.qid = nq.vec_id
-      |              JOIN nrm ne ON d.vec_id = ne.vec_id)
-      |SELECT qid, vec_id, cos, rn FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY qid
-      |    ORDER BY cos DESC, vec_id) AS rn FROM scored) t
-      |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin
+  /** SQL twin of [[cellTop3]] over `src` (vec_id, q, `cell`). */
+  private def cellTop3Sql(src: String, cell: String): String =
+    ",\n" + cosineCte("scored", probeDotsSql(
+      s"""(SELECT * FROM $src WHERE vec_id < $Probes) q
+         |    JOIN $src e ON q.$cell = e.$cell AND e.vec_id <> q.vec_id"""
+        .stripMargin)) + "\n" +
+    topKSql("qid, vec_id, cos, rn", "scored", 3, "cos DESC, vec_id") +
+    " ORDER BY qid, rn"
+
+  val lshTopKSql: String = qvecCte + bucketsCte + cellTop3Sql("qb", "bucket")
+
+  /** Exact squared L2 ‖a−c‖² = ‖a‖² − 2a·c + ‖c‖² of the lists `a`, `c`
+    * with squared norms `n2a`, `n2c`, all int64.
+    */
+  private def l2(a: Column, n2a: Column, c: Column, n2c: Column): Column =
+    n2a - lit(2L) * dot(a, c) + n2c
 
   /** Exact squared L2 from every point (vec_id, keys…, q, n2) to every
     * centroid (keys…, cid, cq) of its key group: ‖a−c‖² = ‖a‖² − 2a·c +
@@ -599,7 +615,7 @@ object Similarity {
     import points.sparkSession.implicits._
     val withN = broadcast(cents.withColumn("cn2", norm2($"cq")))
     (if (keys.isEmpty) points.crossJoin(withN) else points.join(withN, keys))
-      .withColumn("d2", $"n2" - lit(2L) * dot($"q", $"cq") + $"cn2")
+      .withColumn("d2", l2($"q", $"n2", $"cq", $"cn2"))
   }
 
   /** Nearest centroid per (vec_id, keys…) as `cid`: smallest d2, ties to
@@ -673,8 +689,13 @@ object Similarity {
     */
   private val kmeansIters = 2
 
+  /** The gate's IVF cell count: the default of every IVF builder and the
+    * count its oracle strings render.
+    */
+  final val IvfCells = 8
+
   private[operators] def ivfCentroids(s: SparkSession, emb: DataFrame,
-      nCells: Int = 8, iters: Int = kmeansIters): DataFrame = {
+      nCells: Int = IvfCells, iters: Int = kmeansIters): DataFrame = {
     import s.implicits._
     require(nCells > 0, s"nCells must be positive, got $nCells")
     lloyd(emb, emb.filter($"vec_id" < nCells)
@@ -697,9 +718,28 @@ object Similarity {
     * low digits mod nCells).
     */
   private[operators] def ivfAssignOf(emb: DataFrame, centroids: DataFrame,
-      nCells: Int = 8): DataFrame =
+      nCells: Int = IvfCells): DataFrame =
     nearestCentroid(emb, centroids, Nil, nCells)
       .withColumnRenamed("cid", "centroid")
+
+  /** `cn<t>(cid, cn2)`, `cd<t>(vec_id, cid, d)` and `a<t>(vec_id, cid)`:
+    * every row of `src` assigned to its nearest centroid of `cents` (cid,
+    * cq) — the SQL twin of [[nearestCentroid]] with no key.
+    */
+  private def assignCtes(t: String, src: String, cents: String): String =
+    s""",
+       |cn$t AS (
+       |  SELECT cid, sum(y * y)::BIGINT AS cn2
+       |  FROM (SELECT cid, unnest(cq) AS y FROM $cents) GROUP BY cid),
+       |cd$t AS (${dotSql(Seq("e.vec_id", "c.cid"), "e.q", "c.cq",
+                    s"$src e CROSS JOIN $cents c")}),
+       |a$t AS (
+       |  SELECT cd.vec_id,
+       |    (min((ne.n2 - 2 * cd.d + cn.cn2) * $IvfCells + cd.cid)
+       |      % $IvfCells)::BIGINT AS cid
+       |  FROM cd$t cd JOIN nrm ne ON cd.vec_id = ne.vec_id
+       |               JOIN cn$t cn ON cd.cid = cn.cid
+       |  GROUP BY cd.vec_id)""".stripMargin
 
   /** SQL mirror of the k-means fit: one (cn, cd, a) assignment block per
     * iteration plus (s, k, cent) mean-requantization blocks; the final
@@ -714,24 +754,9 @@ object Similarity {
     */
   private def kmeansCtesOver(src: String): String = {
     val sb = new StringBuilder
-    sb ++= s", cent0 AS (SELECT vec_id AS cid, q AS cq FROM $src WHERE vec_id < 8)"
+    sb ++= s", cent0 AS (SELECT vec_id AS cid, q AS cq FROM $src WHERE vec_id < $IvfCells)"
     for (t <- 0 to kmeansIters) {
-      sb ++=
-        s""",
-           |cn$t AS (
-           |  SELECT cid, sum(y * y)::BIGINT AS cn2
-           |  FROM (SELECT cid, unnest(cq) AS y FROM cent$t) GROUP BY cid),
-           |cd$t AS (
-           |  SELECT vec_id, cid, sum(x * y)::BIGINT AS d FROM (
-           |    SELECT e.vec_id, c.cid, unnest(e.q) AS x, unnest(c.cq) AS y
-           |    FROM $src e CROSS JOIN cent$t c) z
-           |  GROUP BY 1, 2),
-           |a$t AS (
-           |  SELECT cd.vec_id,
-           |    (min((ne.n2 - 2 * cd.d + cn.cn2) * 8 + cd.cid) % 8)::BIGINT AS cid
-           |  FROM cd$t cd JOIN nrm ne ON cd.vec_id = ne.vec_id
-           |               JOIN cn$t cn ON cd.cid = cn.cid
-           |  GROUP BY cd.vec_id)""".stripMargin
+      sb ++= assignCtes(t.toString, src, s"cent$t")
       if (t < kmeansIters) {
         sb ++=
           s""",
@@ -778,7 +803,7 @@ object Similarity {
     * aggs; rides the same fitted centroids as every IVF query.
     */
   def simSilhouette(s: SparkSession, dir: String,
-      nCells: Int = 8): DataFrame = {
+      nCells: Int = IvfCells): DataFrame = {
     import s.implicits._
     val emb = qEmb(s, dir).pin // fit + the distance fan
     val n = lit(nCells.toLong)
@@ -814,8 +839,8 @@ object Similarity {
          |  FROM cd$t cd JOIN nrm ne ON cd.vec_id = ne.vec_id
          |               JOIN cn$t cn ON cd.cid = cn.cid),
          |own AS (
-         |  SELECT vec_id, (min(d2 * 8 + cid) % 8)::BIGINT AS cid,
-         |         (min(d2 * 8 + cid) // 8)::BIGINT AS a2
+         |  SELECT vec_id, (min(d2 * $IvfCells + cid) % $IvfCells)::BIGINT AS cid,
+         |         (min(d2 * $IvfCells + cid) // $IvfCells)::BIGINT AS a2
          |  FROM dall GROUP BY vec_id),
          |alt AS (
          |  SELECT d.vec_id, min(d.d2)::BIGINT AS b2
@@ -871,29 +896,8 @@ object Similarity {
 
   /** IVF top-3: brute-force cosine restricted to the query's cell. */
   def ivfTopK(s: SparkSession, dir: String): DataFrame =
-    ivfProbe(qEmb(s, dir).join(ivfAssignRaw(s, dir), Seq("vec_id")))
-
-  /** The cell-probe tail shared by the inline-fit and saved-index paths:
-    * input is the quantized frame with its cell assignment (vec_id, q, n2,
-    * centroid); ONE maintained copy so the two probes can never drift.
-    */
-  private def ivfProbe(emb: DataFrame): DataFrame = {
-    import emb.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val queries = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"),
-        $"centroid".as("qc"))
-    emb.join(broadcast(queries),
-        $"centroid" === $"qc" && $"vec_id" =!= $"qid")
-      .withColumn("cos",
-        round(dot($"q", $"qq").cast("double")
-          / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"cos".desc, $"vec_id")))
-      .filter($"rn" <= 3)
-      .select($"qid", $"vec_id", $"cos", $"rn")
-      .orderBy($"qid", $"rn")
-  }
+    cellTop3(qEmb(s, dir).join(ivfAssignRaw(s, dir), Seq("vec_id")),
+      "centroid", "qc")
 
   /** Persist the fitted IVF index — the nCells-row centroid table and the
     * per-vector cell assignment — as [[graft.sources.VersionedTable]]
@@ -906,7 +910,7 @@ object Similarity {
     * corpus (defaults match the gate queries' 8/2 pin).
     */
   def saveIvfIndex(s: SparkSession, dir: String, path: String,
-      nCells: Int = 8, iters: Int = kmeansIters): Unit =
+      nCells: Int = IvfCells, iters: Int = kmeansIters): Unit =
     saveIvfIndexOf(s, qEmb(s, dir), path, nCells, iters)
 
   /** [[saveIvfIndex]] over a caller-supplied quantized frame — lets the
@@ -914,7 +918,7 @@ object Similarity {
     * rest in as an append batch.
     */
   private[operators] def saveIvfIndexOf(s: SparkSession, emb: DataFrame,
-      path: String, nCells: Int = 8, iters: Int = kmeansIters): Unit = {
+      path: String, nCells: Int = IvfCells, iters: Int = kmeansIters): Unit = {
     import s.implicits._
     import graft.sources.VersionedTable
     // ONE fit feeds both snapshots (the fit is the expensive corpus pass;
@@ -942,7 +946,7 @@ object Similarity {
       version: Int = -1): DataFrame = {
     val assign = graft.sources.VersionedTable
       .read(s, s"$path/assign", version)
-    ivfProbe(qEmb(s, dir).join(assign, Seq("vec_id")))
+    cellTop3(qEmb(s, dir).join(assign, Seq("vec_id")), "centroid", "qc")
   }
 
   /** Mini-batch IVF refresh cells (Sculley, "Web-scale k-means
@@ -968,7 +972,7 @@ object Similarity {
     * Output: one row per (cid, pos) with c_old, c_new, m_old, n_new.
     */
   private[operators] def ivfRefreshCells(cents: DataFrame, mOld: DataFrame,
-      appends: DataFrame, nCells: Int = 8): DataFrame = {
+      appends: DataFrame, nCells: Int = IvfCells): DataFrame = {
     import cents.sparkSession.implicits._
     val aAssign = ivfAssignOf(appends, cents, nCells)
     val newSums = aAssign.join(appends, Seq("vec_id"))
@@ -1096,24 +1100,10 @@ object Similarity {
   val ivfRefreshSql: String = qvecCte +
     ", qb AS (SELECT * FROM qv WHERE vec_id % 4 <> 3)" +
     ", qa AS (SELECT * FROM qv WHERE vec_id % 4 = 3)" +
-    kmeansCtesOver("qb") +
+    kmeansCtesOver("qb") + assignCtes("r", "qa", s"cent$kmeansIters") +
     s""",
        |mold AS (SELECT cid, count(*)::BIGINT AS m_old
        |         FROM a$kmeansIters GROUP BY cid),
-       |cnr AS (SELECT cid, sum(y * y)::BIGINT AS cn2
-       |        FROM (SELECT cid, unnest(cq) AS y FROM cent$kmeansIters)
-       |        GROUP BY cid),
-       |cdr AS (
-       |  SELECT vec_id, cid, sum(x * y)::BIGINT AS d FROM (
-       |    SELECT e.vec_id, c.cid, unnest(e.q) AS x, unnest(c.cq) AS y
-       |    FROM qa e CROSS JOIN cent$kmeansIters c) z
-       |  GROUP BY 1, 2),
-       |ar AS (
-       |  SELECT cd.vec_id,
-       |    (min((ne.n2 - 2 * cd.d + cn.cn2) * 8 + cd.cid) % 8)::BIGINT AS cid
-       |  FROM cdr cd JOIN nrm ne ON cd.vec_id = ne.vec_id
-       |              JOIN cnr cn ON cd.cid = cn.cid
-       |  GROUP BY cd.vec_id),
        |ns AS (
        |  SELECT a.cid, u.i, sum(u.e)::BIGINT AS sn, count(*)::BIGINT AS nn
        |  FROM ar a JOIN (
@@ -1147,7 +1137,7 @@ object Similarity {
     * (which can also create/retire cells) commits via [[saveIvfIndex]].
     */
   def refreshIvfIndex(s: SparkSession, path: String, appends: DataFrame,
-      nCells: Int = 8): Unit = {
+      nCells: Int = IvfCells): Unit = {
     import s.implicits._
     import graft.sources.VersionedTable
     val cents = VersionedTable.read(s, s"$path/centroids")
@@ -1181,8 +1171,7 @@ object Similarity {
       out: String): DataFrame = {
     import mem.sparkSession.implicits._
     mem.join(broadcast(anchor), Seq("cid"))
-      .withColumn("d2",
-        $"n2" - lit(2L) * dot($"q", $"aq") + norm2($"aq"))
+      .withColumn("d2", l2($"q", $"n2", $"aq", norm2($"aq")))
       .groupBy($"cid")
       .agg(min_by($"q", struct((-$"d2").as("nd"), $"vec_id")).as(out))
   }
@@ -1256,7 +1245,7 @@ object Similarity {
     val hot = assign.groupBy($"centroid".as("cid"))
       .agg(count(lit(1)).as("m_before"))
       .withColumn("nv", sum($"m_before").over(Window.partitionBy()))
-      .filter($"m_before" * 8L > $"nv")
+      .filter($"m_before" * IvfCells.toLong > $"nv")
       .select($"cid", $"m_before")
       .pin // ≤ nCells rows; member filter + report
     val mem = assign.join(broadcast(hot.select($"cid")),
@@ -1292,6 +1281,34 @@ object Similarity {
       .orderBy($"cid")
   }
 
+  /** `<p>n(cid, n2)` and `<p>d(cid, vec_id, d)`: the squared norm of each
+    * split cell's anchor list `anchors`.`col` and its dot with every
+    * member of the cell in `mem`.
+    */
+  private def anchorCtes(p: String, anchors: String, col: String): String =
+    s""",
+       |${p}n AS MATERIALIZED (SELECT cid, sum(y * y)::BIGINT AS n2
+       |  FROM (SELECT cid, unnest($col) AS y FROM $anchors) GROUP BY cid),
+       |${p}d AS MATERIALIZED (${dotSql(Seq("m.cid", "m.vec_id"), "m.q",
+                                  s"c.$col", s"mem m JOIN $anchors c USING (cid)")})"""
+      .stripMargin
+
+  /** `out(cid, to)`: per split cell, the vector of the member farthest
+    * from the anchor `anchors`.`col` (ties to the smallest vec_id) — the
+    * SQL twin of [[farthestFrom]].
+    */
+  private def farthestSql(out: String, anchors: String, col: String,
+      to: String): String =
+    anchorCtes(out, anchors, col) +
+      s""",
+         |$out AS MATERIALIZED (SELECT f.cid, qv.q AS $to FROM (
+         |    SELECT d.cid, d.vec_id, row_number() OVER (
+         |        PARTITION BY d.cid
+         |        ORDER BY (n.n2 - 2 * d.d + a.n2) DESC, d.vec_id) AS rn
+         |    FROM ${out}d d JOIN nrm n ON d.vec_id = n.vec_id
+         |                   JOIN ${out}n a ON d.cid = a.cid) f
+         |  JOIN qv ON f.vec_id = qv.vec_id WHERE f.rn = 1)""".stripMargin
+
   /** SQL mirror of the split: seeds (farthest-from-parent, then
     * farthest-from-A), `splitIters` Lloyd rounds, final assignment —
     * the same CTE-per-iteration scheme as [[kmeansCtesOver]].
@@ -1304,64 +1321,29 @@ object Similarity {
          |mass AS MATERIALIZED (SELECT cid, count(*)::BIGINT AS m
          |         FROM a$kmeansIters GROUP BY cid),
          |hot AS MATERIALIZED (SELECT cid, m AS m_before FROM mass
-         |        WHERE m * 8 > (SELECT sum(m) FROM mass)),
+         |        WHERE m * $IvfCells > (SELECT sum(m) FROM mass)),
          |mem AS MATERIALIZED (SELECT a.cid, a.vec_id, qv.q, n.n2
          |        FROM a$kmeansIters a JOIN qv USING (vec_id)
          |             JOIN nrm n USING (vec_id)
          |        WHERE a.cid IN (SELECT cid FROM hot)),
          |hc AS MATERIALIZED (SELECT cid, cq FROM cent$kmeansIters
-         |       WHERE cid IN (SELECT cid FROM hot)),
-         |pn AS MATERIALIZED (SELECT cid, sum(y * y)::BIGINT AS pn2
-         |       FROM (SELECT cid, unnest(cq) AS y FROM hc) GROUP BY cid),
-         |pd AS MATERIALIZED (SELECT cid, vec_id, sum(x * y)::BIGINT AS d FROM (
-         |    SELECT m.cid, m.vec_id, unnest(m.q) AS x, unnest(c.cq) AS y
-         |    FROM mem m JOIN hc c USING (cid)) z GROUP BY 1, 2),
-         |sa AS MATERIALIZED (SELECT cid, vec_id FROM (
-         |    SELECT pd.cid, pd.vec_id, row_number() OVER (
-         |        PARTITION BY pd.cid
-         |        ORDER BY (n.n2 - 2 * pd.d + pn.pn2) DESC, pd.vec_id)
-         |      AS rn
-         |    FROM pd JOIN nrm n ON pd.vec_id = n.vec_id
-         |            JOIN pn USING (cid)) t WHERE rn = 1),
-         |ca0 AS MATERIALIZED (SELECT sa.cid, qv.q AS aq
-         |        FROM sa JOIN qv ON sa.vec_id = qv.vec_id),
-         |sn0 AS MATERIALIZED (SELECT cid, sum(y * y)::BIGINT AS an2
-         |        FROM (SELECT cid, unnest(aq) AS y FROM ca0) GROUP BY cid),
-         |sd0 AS MATERIALIZED (SELECT cid, vec_id, sum(x * y)::BIGINT AS d FROM (
-         |    SELECT m.cid, m.vec_id, unnest(m.q) AS x, unnest(c.aq) AS y
-         |    FROM mem m JOIN ca0 c USING (cid)) z GROUP BY 1, 2),
-         |sb_ AS MATERIALIZED (SELECT cid, vec_id FROM (
-         |    SELECT sd0.cid, sd0.vec_id, row_number() OVER (
-         |        PARTITION BY sd0.cid
-         |        ORDER BY (n.n2 - 2 * sd0.d + s.an2) DESC, sd0.vec_id)
-         |      AS rn
-         |    FROM sd0 JOIN nrm n ON sd0.vec_id = n.vec_id
-         |             JOIN sn0 s USING (cid)) t WHERE rn = 1),
-         |cb0 AS MATERIALIZED (SELECT sb_.cid, qv.q AS bq
-         |        FROM sb_ JOIN qv ON sb_.vec_id = qv.vec_id)""".stripMargin
+         |       WHERE cid IN (SELECT cid FROM hot))""".stripMargin
+    sb ++= farthestSql("ca0", "hc", "cq", "aq") +
+      farthestSql("cb0", "ca0", "aq", "bq")
     for (t <- 0 to splitIters) {
+      sb ++= anchorCtes(s"a$t", s"ca$t", "aq") + anchorCtes(s"b$t", s"cb$t", "bq")
       sb ++=
         s""",
-           |an$t AS MATERIALIZED (SELECT cid, sum(y * y)::BIGINT AS an2
-           |  FROM (SELECT cid, unnest(aq) AS y FROM ca$t) GROUP BY cid),
-           |bn$t AS MATERIALIZED (SELECT cid, sum(y * y)::BIGINT AS bn2
-           |  FROM (SELECT cid, unnest(bq) AS y FROM cb$t) GROUP BY cid),
-           |ad$t AS MATERIALIZED (SELECT cid, vec_id, sum(x * y)::BIGINT AS d FROM (
-           |    SELECT m.cid, m.vec_id, unnest(m.q) AS x, unnest(c.aq) AS y
-           |    FROM mem m JOIN ca$t c USING (cid)) z GROUP BY 1, 2),
-           |bd$t AS MATERIALIZED (SELECT cid, vec_id, sum(x * y)::BIGINT AS d FROM (
-           |    SELECT m.cid, m.vec_id, unnest(m.q) AS x, unnest(c.bq) AS y
-           |    FROM mem m JOIN cb$t c USING (cid)) z GROUP BY 1, 2),
            |asg$t AS MATERIALIZED (
            |  SELECT m.cid, m.vec_id,
-           |    CASE WHEN (n.n2 - 2 * ad.d + an.an2)
-           |              <= (n.n2 - 2 * bd.d + bn.bn2)
+           |    CASE WHEN (n.n2 - 2 * ad.d + an.n2)
+           |              <= (n.n2 - 2 * bd.d + bn.n2)
            |         THEN 0 ELSE 1 END AS child
            |  FROM mem m JOIN nrm n ON m.vec_id = n.vec_id
-           |    JOIN ad$t ad ON m.cid = ad.cid AND m.vec_id = ad.vec_id
-           |    JOIN bd$t bd ON m.cid = bd.cid AND m.vec_id = bd.vec_id
-           |    JOIN an$t an ON m.cid = an.cid
-           |    JOIN bn$t bn ON m.cid = bn.cid)""".stripMargin
+           |    JOIN a${t}d ad ON m.cid = ad.cid AND m.vec_id = ad.vec_id
+           |    JOIN b${t}d bd ON m.cid = bd.cid AND m.vec_id = bd.vec_id
+           |    JOIN a${t}n an ON m.cid = an.cid
+           |    JOIN b${t}n bn ON m.cid = bn.cid)""".stripMargin
       if (t < splitIters) {
         sb ++=
           s""",
@@ -1488,27 +1470,9 @@ object Similarity {
 
   val ivfTopKSql: String = qvecCte + kmeansCtes +
     s""",
-       |assign AS (SELECT vec_id, cid AS centroid FROM a$kmeansIters),
-       |dots AS (""".stripMargin +
-    """
-      |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT qv.vec_id, qv.q, a.centroid FROM qv
-      |          JOIN assign a ON qv.vec_id = a.vec_id WHERE qv.vec_id < 10) q
-      |    JOIN (SELECT qv.vec_id, qv.q, a.centroid FROM qv
-      |          JOIN assign a ON qv.vec_id = a.vec_id) e
-      |      ON q.centroid = e.centroid AND e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2),
-      |scored AS (
-      |  SELECT qid, d.vec_id,
-      |    round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) AS cos
-      |  FROM dots d JOIN nrm nq ON d.qid = nq.vec_id
-      |              JOIN nrm ne ON d.vec_id = ne.vec_id)
-      |SELECT qid, vec_id, cos, rn FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY qid
-      |    ORDER BY cos DESC, vec_id) AS rn FROM scored) t
-      |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin
+       |qc AS (SELECT qv.vec_id, qv.q, a.cid AS centroid
+       |       FROM qv JOIN a$kmeansIters a ON qv.vec_id = a.vec_id)""".stripMargin +
+    cellTop3Sql("qc", "centroid")
 
   /** Embedding DRIFT monitor: split the corpus into two deterministic
     * snapshots (vec_id parity — standing in for "last week's embeddings
@@ -1545,10 +1509,8 @@ object Similarity {
   }
 
   val driftSql: String =
-    """WITH qv AS (
-      |  SELECT label, vec_id % 2 AS snap,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
+    s"""WITH qv AS (
+      |  SELECT label, vec_id % 2 AS snap, $qvecSql AS q FROM embeddings),
       |ex AS (SELECT label, snap, unnest(q) AS e,
       |              generate_subscripts(q, 1) - 1 AS d FROM qv),
       |c AS (SELECT label, snap, d, count(*)::BIGINT AS n,
@@ -1583,10 +1545,7 @@ object Similarity {
   }
 
   val labelCentroidsSql: String =
-    """WITH qv AS (
-      |  SELECT label,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
+    s"""WITH qv AS (SELECT label, $qvecSql AS q FROM embeddings),
       |ex AS (SELECT label, unnest(q) AS e,
       |              generate_subscripts(q, 1) - 1 AS d FROM qv)
       |SELECT label::BIGINT AS label, d::BIGINT AS d, count(*)::BIGINT AS n,
@@ -1613,13 +1572,9 @@ object Similarity {
       // returned-count aggregate below
       .pin
       .select($"qid".as("aqid"), $"vec_id".as("avid"))
-    val hits = exact.join(approx,
-        $"qid" === $"aqid" && $"vec_id" === $"avid", "left")
-      .groupBy($"qid")
-      .agg(count(lit(1)).as("n_exact"), count($"avid").as("n_hit"))
     val returned = approx.groupBy($"aqid".as("qid"))
       .agg(count(lit(1)).as("n_returned"))
-    hits.join(returned, Seq("qid"), "left")
+    hitsOf(exact, approx).join(returned, Seq("qid"), "left")
       .select($"qid", $"n_exact", $"n_hit",
         coalesce($"n_returned", lit(0L)).as("n_returned"))
       .orderBy($"qid")
@@ -1629,11 +1584,7 @@ object Similarity {
     s"""WITH e0 AS ($cosineTopKSql),
        |e AS (SELECT * FROM e0 WHERE rn <= 3),
        |a AS ($lshTopKSql),
-       |hits AS (
-       |  SELECT e.qid, count(*)::BIGINT AS n_exact,
-       |    count(a.vec_id)::BIGINT AS n_hit
-       |  FROM e LEFT JOIN a ON e.qid = a.qid AND e.vec_id = a.vec_id
-       |  GROUP BY e.qid),
+       |hits AS (${hitsSql("e", "a")}),
        |ret AS (SELECT qid, count(*)::BIGINT AS n_returned FROM a GROUP BY qid)
        |SELECT h.qid, h.n_exact, h.n_hit,
        |  coalesce(r.n_returned, 0)::BIGINT AS n_returned
@@ -1663,7 +1614,7 @@ object Similarity {
       .pin
     // per query: ALL centroids ranked by exact integer distance; each
     // nprobe setting keeps a prefix of the same ranking
-    val qcells = centroidD2(withCell.filter($"vec_id" < 10), cents)
+    val qcells = centroidD2(withCell.filter($"vec_id" < Probes), cents)
       .withColumn("cell_rank", row_number().over(
         Window.partitionBy($"vec_id").orderBy($"d2", $"cid")))
       .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"),
@@ -1672,25 +1623,17 @@ object Similarity {
     val exact = cosineTopK(s, dir).filter($"rn" <= 3)
       .select($"qid", $"vec_id").pin
     val perNprobe = Seq(1, 2).map { np =>
-      val approx = withCell.join(
-          broadcast(qcells.filter($"cell_rank" <= np)),
-          $"centroid" === $"qc" && $"vec_id" =!= $"qid")
-        .withColumn("cos",
-          round(dot($"q", $"qq").cast("double")
-            / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy($"cos".desc, $"vec_id")))
-        .filter($"rn" <= 3)
+      val approx = topK(withCell.join(
+            broadcast(qcells.filter($"cell_rank" <= np)),
+            $"centroid" === $"qc" && $"vec_id" =!= $"qid")
+          .withColumn("cos", cosine(dot($"q", $"qq"), $"n2", $"qn2")),
+        3, Seq($"cos".desc, $"vec_id"))
         // one pass: feeds both the hits join and the returned-count agg
         .select($"qid".as("aqid"), $"vec_id".as("avid"))
         .pin
-      val hits = exact.join(approx,
-          $"qid" === $"aqid" && $"vec_id" === $"avid", "left")
-        .groupBy($"qid")
-        .agg(count(lit(1)).as("n_exact"), count($"avid").as("n_hit"))
       val returned = approx.groupBy($"aqid".as("qid"))
         .agg(count(lit(1)).as("n_returned"))
-      hits.join(returned, Seq("qid"), "left")
+      hitsOf(exact, approx).join(returned, Seq("qid"), "left")
         .select(lit(np).as("nprobe"), $"qid", $"n_exact", $"n_hit",
           coalesce($"n_returned", lit(0L)).as("n_returned"))
     }
@@ -1702,30 +1645,15 @@ object Similarity {
     */
   val ivfRecallSql: String = {
     def probe(np: Int) =
+      ",\n" + cosineCte(s"scored$np", probeDotsSql(
+        s"""(SELECT c.qid AS vec_id, qc.q, c.cid FROM qcells c
+           |          JOIN qc ON qc.vec_id = c.qid WHERE c.cell_rank <= $np) q
+           |    JOIN qc e ON q.cid = e.cid AND e.vec_id <> q.vec_id"""
+          .stripMargin)) +
       s""",
-         |dots$np AS (
-         |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-         |    SELECT q.qid, e.vec_id, unnest(q.q) AS x, unnest(e.q) AS y
-         |    FROM (SELECT c.qid, qv.q, c.cid FROM qcells c
-         |          JOIN qv ON qv.vec_id = c.qid WHERE c.cell_rank <= $np) q
-         |    JOIN (SELECT qv.vec_id, qv.q, a.cid FROM qv
-         |          JOIN a$kmeansIters a ON qv.vec_id = a.vec_id) e
-         |      ON q.cid = e.cid AND e.vec_id <> q.qid) z
-         |  GROUP BY 1, 2),
-         |top$np AS (
-         |  SELECT qid, vec_id FROM (
-         |    SELECT qid, d.vec_id, row_number() OVER (PARTITION BY qid
-         |      ORDER BY round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) DESC,
-         |        d.vec_id) AS rn
-         |    FROM dots$np d JOIN nrm nq ON d.qid = nq.vec_id
-         |                   JOIN nrm ne ON d.vec_id = ne.vec_id) t
-         |  WHERE rn <= 3),
-         |hit$np AS (
-         |  SELECT e.qid, count(*)::BIGINT AS n_exact,
-         |    count(t.vec_id)::BIGINT AS n_hit
-         |  FROM exact3 e LEFT JOIN top$np t
-         |    ON e.qid = t.qid AND e.vec_id = t.vec_id
-         |  GROUP BY e.qid),
+         |top$np AS (${topKSql("qid, vec_id", s"scored$np", 3,
+                        "cos DESC, vec_id")}),
+         |hit$np AS (${hitsSql("exact3", s"top$np")}),
          |rec$np AS (
          |  SELECT $np AS nprobe, h.qid, h.n_exact, h.n_hit,
          |    coalesce(r.n_returned, 0)::BIGINT AS n_returned
@@ -1741,22 +1669,12 @@ object Similarity {
          |  FROM cd$kmeansIters cd
          |  JOIN nrm ne ON cd.vec_id = ne.vec_id
          |  JOIN cn$kmeansIters cn ON cd.cid = cn.cid
-         |  WHERE cd.vec_id < 10),
-         |edots AS (
-         |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-         |    SELECT q.vec_id AS qid, e.vec_id,
-         |           unnest(q.q) AS x, unnest(e.q) AS y
-         |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 10) q
-         |    JOIN qv e ON e.vec_id <> q.vec_id) z
-         |  GROUP BY 1, 2),
-         |exact3 AS (
-         |  SELECT qid, vec_id FROM (
-         |    SELECT qid, d.vec_id, row_number() OVER (PARTITION BY qid
-         |      ORDER BY round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) DESC,
-         |        d.vec_id) AS rn
-         |    FROM edots d JOIN nrm nq ON d.qid = nq.vec_id
-         |                 JOIN nrm ne ON d.vec_id = ne.vec_id) t
-         |  WHERE rn <= 3)""".stripMargin +
+         |  WHERE cd.vec_id < $Probes),
+         |qc AS (SELECT qv.vec_id, qv.q, a.cid
+         |       FROM qv JOIN a$kmeansIters a ON qv.vec_id = a.vec_id),
+         |${cosineCte("escored")},
+         |exact3 AS (${topKSql("qid, vec_id", "escored", 3, "cos DESC, vec_id")})"""
+        .stripMargin +
       probe(1) + probe(2) +
       """
         |SELECT * FROM rec1 UNION ALL SELECT * FROM rec2
@@ -1794,10 +1712,7 @@ object Similarity {
   }
 
   val quantizeErrSql: String =
-    """WITH qv AS (
-      |  SELECT label,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
+    s"""WITH qv AS (SELECT label, $qvecSql AS q FROM embeddings),
       |pv AS (
       |  SELECT label, q,
       |    greatest(1, floor((list_max([abs(e) FOR e IN q]) + 126) / 127)::BIGINT)
@@ -1873,15 +1788,12 @@ object Similarity {
   private[graft] def pqAdcTop3(s: SparkSession, dir: String,
       mSub: Int = pqM, kCents: Int = pqK): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val (codes, lut) = pqCodesAndLut(s, dir, mSub, kCents)
-    codes.join(broadcast(lut), Seq("m", "cid"))
-      .filter($"vec_id" =!= $"qid")
-      .groupBy($"qid", $"vec_id")
-      .agg(sum($"qd2").as("d2_adc"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"d2_adc", $"vec_id")))
-      .filter($"rn" <= 3)
+    topK(codes.join(broadcast(lut), Seq("m", "cid"))
+        .filter($"vec_id" =!= $"qid")
+        .groupBy($"qid", $"vec_id")
+        .agg(sum($"qd2").as("d2_adc")),
+      3, Seq($"d2_adc", $"vec_id"))
   }
 
   /** The PQ encode shared by the flat-ADC and IVF-PQ probes: the corpus
@@ -1896,7 +1808,7 @@ object Similarity {
     val sub = pqSub(qEmb(s, dir), mSub).pin
     val book = pqCodebook(sub, kCents)
     val codes = nearestCentroid(sub, book, Seq("m"), kCents)
-    val lut = centroidD2(sub.filter($"vec_id" < 10), book, Seq("m"))
+    val lut = centroidD2(sub.filter($"vec_id" < Probes), book, Seq("m"))
       .select($"vec_id".as("qid"), $"m", $"cid", $"d2".as("qd2"))
     (codes, lut)
   }
@@ -1968,11 +1880,8 @@ object Similarity {
            |pcn$t AS (
            |  SELECT m, cid, sum(y * y)::BIGINT AS cn2
            |  FROM (SELECT m, cid, unnest(cq) AS y FROM pcent$t) GROUP BY 1, 2),
-           |pcd$t AS (
-           |  SELECT vec_id, m, cid, sum(x * y)::BIGINT AS d FROM (
-           |    SELECT s.vec_id, s.m, c.cid, unnest(s.sq) AS x, unnest(c.cq) AS y
-           |    FROM sub s JOIN pcent$t c ON s.m = c.m) z
-           |  GROUP BY 1, 2, 3),
+           |pcd$t AS (${dotSql(Seq("s.vec_id", "s.m", "c.cid"), "s.sq", "c.cq",
+                          s"sub s JOIN pcent$t c ON s.m = c.m")}),
            |pa$t AS (
            |  SELECT cd.vec_id, cd.m,
            |    (min((sn.sn2 - 2 * cd.d + cn.cn2) * $pqK + cd.cid) % $pqK)::BIGINT
@@ -2013,19 +1922,16 @@ object Similarity {
        |  FROM pcd$kmeansIters cd
        |  JOIN psubn sn ON cd.vec_id = sn.vec_id AND cd.m = sn.m
        |  JOIN pcn$kmeansIters cn ON cd.m = cn.m AND cd.cid = cn.cid
-       |  WHERE cd.vec_id < 10),
+       |  WHERE cd.vec_id < $Probes),
        |adc AS (
        |  SELECT l.qid, c.vec_id, sum(l.qd2)::BIGINT AS d2_adc
        |  FROM pa$kmeansIters c JOIN lut l ON c.m = l.m AND c.cid = l.cid
        |  WHERE c.vec_id <> l.qid
        |  GROUP BY 1, 2)""".stripMargin
 
-  val pqTopKSql: String = qvecCte + pqCtes + pqAdcCtes +
-    """
-      |SELECT qid, vec_id, d2_adc, rn FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY qid
-      |    ORDER BY d2_adc, vec_id) AS rn FROM adc) t
-      |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin
+  val pqTopKSql: String = qvecCte + pqCtes + pqAdcCtes + "\n" +
+    topKSql("qid, vec_id, d2_adc, rn", "adc", 3, "d2_adc, vec_id") +
+    " ORDER BY qid, rn"
 
   /** PQ self-evaluation, mirroring [[lshRecall]]/[[ivfRecall]]: recall@3 of
     * the ADC top-3 against the EXACT integer L2 top-3 (the metric ADC
@@ -2034,48 +1940,29 @@ object Similarity {
     */
   def pqRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val emb = qEmb(s, dir)
-    val queries = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"))
-    val exact = emb.crossJoin(broadcast(queries))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("d2", $"n2" - lit(2L) * dot($"q", $"qq") + $"qn2")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"d2", $"vec_id")))
-      .filter($"rn" <= 3)
+    val exact = topK(emb.crossJoin(broadcast(probesOf(emb)))
+        .filter($"vec_id" =!= $"qid")
+        .withColumn("d2", l2($"q", $"n2", $"qq", $"qn2")),
+      3, Seq($"d2", $"vec_id"))
       .select($"qid", $"vec_id")
     val approx = pqAdcTop3(s, dir)
       .select($"qid".as("aqid"), $"vec_id".as("avid"))
-    exact.join(approx, $"qid" === $"aqid" && $"vec_id" === $"avid", "left")
-      .groupBy($"qid")
-      .agg(count(lit(1)).as("n_exact"), count($"avid").as("n_hit"))
-      .orderBy($"qid")
+    hitsOf(exact, approx).orderBy($"qid")
   }
 
-  val pqRecallSql: String = qvecCte + pqCtes + pqAdcCtes +
-    """,
-      |atop AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-      |      ORDER BY d2_adc, vec_id) AS rn FROM adc) t
-      |  WHERE rn <= 3),
-      |edots AS (
-      |  SELECT qid, vec_id, sum(x * y)::BIGINT AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id, unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 10) q
-      |    JOIN qv e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2),
-      |exact3 AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT d.qid, d.vec_id, row_number() OVER (PARTITION BY d.qid
-      |      ORDER BY ne.n2 - 2 * d.d + nq.n2, d.vec_id) AS rn
-      |    FROM edots d JOIN nrm nq ON d.qid = nq.vec_id
-      |                 JOIN nrm ne ON d.vec_id = ne.vec_id) t
-      |  WHERE rn <= 3)
-      |SELECT e.qid, count(*)::BIGINT AS n_exact, count(a.vec_id)::BIGINT AS n_hit
-      |FROM exact3 e LEFT JOIN atop a ON e.qid = a.qid AND e.vec_id = a.vec_id
-      |GROUP BY e.qid ORDER BY e.qid""".stripMargin
+  val pqRecallSql: String = {
+    val scored =
+      s"""(SELECT d.qid, d.vec_id, ne.n2 - 2 * d.d + nq.n2 AS d2
+         |    FROM (${probeDotsSql()}) d
+         |    JOIN nrm nq ON d.qid = nq.vec_id
+         |    JOIN nrm ne ON d.vec_id = ne.vec_id) s""".stripMargin
+    qvecCte + pqCtes + pqAdcCtes +
+      s""",
+         |atop AS (${topKSql("qid, vec_id", "adc", 3, "d2_adc, vec_id")}),
+         |exact3 AS (${topKSql("qid, vec_id", scored, 3, "d2, vec_id")})
+         |${hitsSql("exact3", "atop")} ORDER BY e.qid""".stripMargin
+  }
 
   /** IVF-PQ composed probe — the production billion-scale ANN architecture
     * (Jégou et al. TPAMI 2011 §V; the FAISS `IVFPQ` index): the coarse IVF
@@ -2096,22 +1983,19 @@ object Similarity {
     */
   def ivfPqTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val emb = qEmb(s, dir)
     val assign = ivfAssignOf(emb, ivfCentroids(s, emb)).pin
     val (codes, lut) = pqCodesAndLut(s, dir)
     val cellCodes = codes.join(assign, Seq("vec_id"))
     // the probe queries' cells, 10 rows: broadcast, so AQE never races
     // this pinned side's shuffle against the lut side's broadcast
-    val cellLut = lut.join(broadcast(assign.filter($"vec_id" < 10)
+    val cellLut = lut.join(broadcast(assign.filter($"vec_id" < Probes)
       .select($"vec_id".as("qid"), $"centroid".as("qc"))), Seq("qid"))
-    cellCodes.join(broadcast(cellLut), Seq("m", "cid"))
-      .filter($"centroid" === $"qc" && $"vec_id" =!= $"qid")
-      .groupBy($"qid", $"vec_id")
-      .agg(sum($"qd2").as("d2_adc"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"d2_adc", $"vec_id")))
-      .filter($"rn" <= 3)
+    topK(cellCodes.join(broadcast(cellLut), Seq("m", "cid"))
+        .filter($"centroid" === $"qc" && $"vec_id" =!= $"qid")
+        .groupBy($"qid", $"vec_id")
+        .agg(sum($"qd2").as("d2_adc")),
+      3, Seq($"d2_adc", $"vec_id"))
       .select($"qid", $"vec_id", $"d2_adc", $"rn")
       .orderBy($"qid", $"rn")
   }
@@ -2130,10 +2014,8 @@ object Similarity {
        |  FROM adc a JOIN assign ea ON a.vec_id = ea.vec_id
        |             JOIN assign qa ON a.qid = qa.vec_id
        |  WHERE ea.centroid = qa.centroid)
-       |SELECT qid, vec_id, d2_adc, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY qid
-       |    ORDER BY d2_adc, vec_id) AS rn FROM cadc) t
-       |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin
+       |${topKSql("qid, vec_id, d2_adc, rn", "cadc", 3, "d2_adc, vec_id")}
+       |ORDER BY qid, rn""".stripMargin
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     * near-duplicate grouping SCOPED TO IVF cells. The published recipe:
@@ -2157,7 +2039,7 @@ object Similarity {
     * `is_kept = 0` rows IS the dedup action.
     */
   def semanticDedup(s: SparkSession, dir: String): DataFrame =
-    semanticDedup(s, dir, nCells = 8)
+    semanticDedup(s, dir, nCells = IvfCells)
 
   /** [[semanticDedup]] with the cell count as a parameter: the gate query
     * pins 8 (mirrored by the oracle SQL); a real deployment sizes
@@ -2185,8 +2067,7 @@ object Similarity {
     val r = withCell.select($"centroid", $"vec_id".as("b"), $"q".as("qb"),
       $"n2".as("nb"))
     val pairs = l.join(r, Seq("centroid")).filter($"a" < $"b")
-      .withColumn("cos", round(dot($"qa", $"qb").cast("double")
-        / (sqrt($"na".cast("double")) * sqrt($"nb".cast("double"))), 4))
+      .withColumn("cos", cosine(dot($"qa", $"qb"), $"na", $"nb"))
       .filter($"cos" >= 0.45)
       .select($"a", $"b")
     val (labels, _) = Graph.starContraction(emb.select($"vec_id"), pairs)
@@ -2200,47 +2081,29 @@ object Similarity {
       .orderBy($"vec_id")
   }
 
-  val semanticDedupSql: String =
-    qvecCte.replaceFirst("WITH ", "WITH RECURSIVE ") + kmeansCtes +
-      s""",
-         |cells AS (SELECT vec_id, cid FROM a$kmeansIters),
-         |cn2f AS (
-         |  SELECT cid, sum(y * y)::BIGINT AS cn2
-         |  FROM (SELECT cid, unnest(cq) AS y FROM cent$kmeansIters)
-         |  GROUP BY cid),
-         |sdot AS (
-         |  SELECT vec_id, sum(x * y)::BIGINT AS d FROM (
-         |    SELECT e.vec_id, unnest(e.q) AS x, unnest(c.cq) AS y
-         |    FROM qv e JOIN cells s ON e.vec_id = s.vec_id
-         |              JOIN cent$kmeansIters c ON s.cid = c.cid) z
-         |  GROUP BY vec_id),
-         |selfd AS (
-         |  SELECT s.vec_id, n.n2 - 2 * sd.d + cn.cn2 AS d2
-         |  FROM cells s JOIN sdot sd ON s.vec_id = sd.vec_id
-         |    JOIN nrm n ON s.vec_id = n.vec_id
-         |    JOIN cn2f cn ON s.cid = cn.cid),
-         |pd AS (
-         |  SELECT a, b, sum(x * y) AS d FROM (
-         |    SELECT a.vec_id AS a, b.vec_id AS b,
-         |           unnest(a.q) AS x, unnest(b.q) AS y
-         |    FROM (SELECT qv.*, c.cid FROM qv JOIN cells c USING (vec_id)) a
-         |    JOIN (SELECT qv.*, c.cid FROM qv JOIN cells c USING (vec_id)) b
-         |      ON a.cid = b.cid AND a.vec_id < b.vec_id) z
-         |  GROUP BY 1, 2),
-         |cpairs AS (
-         |  SELECT a, b FROM pd
-         |  JOIN nrm na ON a = na.vec_id JOIN nrm nb ON b = nb.vec_id
-         |  WHERE round(d / (sqrt(na.n2) * sqrt(nb.n2)), 4) >= 0.45),
-         |${Graph.undirectedCte("edges", "cpairs")},
-         |${Graph.reachCte("edges", "vec_id, vec_id FROM embeddings")},
-         |grp AS (SELECT node AS vec_id, min(m)::BIGINT AS grp
-         |        FROM reach GROUP BY node)
-         |SELECT g.vec_id, s.cid AS cell, g.grp,
-         |  CASE WHEN row_number() OVER (PARTITION BY g.grp
-         |    ORDER BY d.d2 DESC, g.vec_id) = 1 THEN 1 ELSE 0 END AS is_kept
-         |FROM grp g JOIN cells s ON g.vec_id = s.vec_id
-         |           JOIN selfd d ON g.vec_id = d.vec_id
-         |ORDER BY g.vec_id""".stripMargin
+  val semanticDedupSql: String = qvCte(recursive = true) + kmeansCtes +
+    s""",
+       |cells AS (SELECT vec_id, cid FROM a$kmeansIters),
+       |sdot AS (${dotSql(Seq("e.vec_id"), "e.q", "c.cq", "qv e JOIN cells s " +
+                   s"ON e.vec_id = s.vec_id JOIN cent$kmeansIters c ON s.cid = c.cid")}),
+       |selfd AS (
+       |  SELECT s.vec_id, n.n2 - 2 * sd.d + cn.cn2 AS d2
+       |  FROM cells s JOIN sdot sd ON s.vec_id = sd.vec_id
+       |    JOIN nrm n ON s.vec_id = n.vec_id
+       |    JOIN cn$kmeansIters cn ON s.cid = cn.cid),
+       |qc AS (SELECT qv.*, c.cid FROM qv JOIN cells c USING (vec_id)),
+       |cpairs AS (SELECT a, b FROM (${pairsSql(
+         "qc a JOIN qc b ON a.cid = b.cid AND a.vec_id < b.vec_id", 0.45)})),
+       |${Graph.undirectedCte("edges", "cpairs")},
+       |${Graph.reachCte("edges", "vec_id, vec_id FROM embeddings")},
+       |grp AS (SELECT node AS vec_id, min(m)::BIGINT AS grp
+       |        FROM reach GROUP BY node)
+       |SELECT g.vec_id, s.cid AS cell, g.grp,
+       |  CASE WHEN row_number() OVER (PARTITION BY g.grp
+       |    ORDER BY d.d2 DESC, g.vec_id) = 1 THEN 1 ELSE 0 END AS is_kept
+       |FROM grp g JOIN cells s ON g.vec_id = s.vec_id
+       |           JOIN selfd d ON g.vec_id = d.vec_id
+       |ORDER BY g.vec_id""".stripMargin
 
   /** Maximum-inner-product top-5 per query vector — the recommender /
     * retrieval scoring order (user·item), which differs from cosine when
@@ -2257,33 +2120,18 @@ object Similarity {
     */
   def mipsTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(s, dir)
-      .select($"vec_id", qvec($"embedding").as("q"))
-    val queries = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"q".as("qq"))
-    emb.crossJoin(broadcast(queries))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("dp", dot($"q", $"qq"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"dp".desc, $"vec_id")))
-      .filter($"rn" <= 5)
+    val emb = qEmb(s, dir)
+    topK(emb.crossJoin(broadcast(probesOf(emb)))
+        .filter($"vec_id" =!= $"qid")
+        .withColumn("dp", dot($"q", $"qq")),
+      5, Seq($"dp".desc, $"vec_id"))
       .select($"qid", $"vec_id", $"dp", $"rn")
       .orderBy($"qid", $"rn")
   }
 
-  val mipsTopKSql: String = qvecCte +
-    """, dots AS (
-      |  SELECT qid, vec_id, sum(x * y)::BIGINT AS dp FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 10) q
-      |    JOIN qv e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2)
-      |SELECT qid, vec_id, dp, rn FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY qid
-      |    ORDER BY dp DESC, vec_id) AS rn FROM dots) t
-      |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+  val mipsTopKSql: String = qvecCte + s", dots AS (${probeDotsSql()})\n" +
+    topKSql("qid, vec_id, d AS dp, rn", "dots", 5, "d DESC, vec_id") +
+    " ORDER BY qid, rn"
 
   /** k-NN GRAPH over the whole corpus: every vector's top-3 exact-cosine
     * neighbors among its LSH-bucket mates. This is the graph that feeds
@@ -2304,39 +2152,28 @@ object Similarity {
     */
   def knnGraph(s: SparkSession, dir: String, nPlanes: Int = 8): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val withB = qEmb(s, dir).join(lshBucketsRaw(s, dir, nPlanes), Seq("vec_id"))
     val l = withB.select($"bucket", $"vec_id", $"q", $"n2")
     val r = withB.select($"bucket", $"vec_id".as("nbr"), $"q".as("qn"),
       $"n2".as("nn"))
-    l.join(r, Seq("bucket")).filter($"vec_id" =!= $"nbr")
-      .withColumn("cos", round(dot($"q", $"qn").cast("double")
-        / (sqrt($"n2".cast("double")) * sqrt($"nn".cast("double"))), 4))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"cos".desc, $"nbr")))
-      .filter($"rn" <= 3)
+    topK(l.join(r, Seq("bucket")).filter($"vec_id" =!= $"nbr")
+        .withColumn("cos", cosine(dot($"q", $"qn"), $"n2", $"nn")),
+      3, Seq($"cos".desc, $"nbr"), by = "vec_id")
       .select($"vec_id", $"nbr", $"cos", $"rn")
       .orderBy($"vec_id", $"rn")
   }
 
-  val knnGraphSql: String = qvecCte + bucketsCte +
-    """,
-      |dots AS (
-      |  SELECT vid, nbr, sum(x * y) AS d FROM (
-      |    SELECT l.vec_id AS vid, e.vec_id AS nbr,
-      |           unnest(l.q) AS x, unnest(e.q) AS y
-      |    FROM qb l JOIN qb e
-      |      ON l.bucket = e.bucket AND e.vec_id <> l.vec_id) z
-      |  GROUP BY 1, 2),
-      |scored AS (
-      |  SELECT vid, nbr,
-      |    round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) AS cos
-      |  FROM dots d JOIN nrm nq ON d.vid = nq.vec_id
-      |              JOIN nrm ne ON d.nbr = ne.vec_id)
-      |SELECT vid AS vec_id, nbr, cos, rn FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY vid
-      |    ORDER BY cos DESC, nbr) AS rn FROM scored) t
-      |WHERE rn <= 3 ORDER BY vec_id, rn""".stripMargin
+  /** `knn(vec_id, nbr, cos, rn)` after the `qb` CTE: the SQL twin of
+    * [[knnGraph]] at its 8 planes.
+    */
+  private val knnCte: String = ",\n" + cosineCte("scored", probeDotsSql(
+    "qb q JOIN qb e ON q.bucket = e.bucket AND e.vec_id <> q.vec_id")) +
+    s""",
+       |knn AS (${topKSql("t.qid AS vec_id, t.vec_id AS nbr, cos, rn",
+                  "scored", 3, "cos DESC, vec_id")})""".stripMargin
+
+  val knnGraphSql: String = qvecCte + bucketsCte + knnCte +
+    "\nSELECT * FROM knn ORDER BY vec_id, rn"
 
   /** Semi-supervised label propagation over the k-NN graph (Zhu &
     * Ghahramani 2002, CMU-CALD-02-107): the 100-vector eval set starts
@@ -2391,11 +2228,8 @@ object Similarity {
          |  SELECT e.vec_id, l.cur AS nl, count(*) AS v
          |  FROM edges e JOIN lab${i - 1} l ON e.nbr = l.vec_id
          |  WHERE l.cur IS NOT NULL GROUP BY 1, 2),
-         |maj$i AS (
-         |  SELECT vec_id, nl FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY v DESC, nl) AS rn FROM votes$i) t
-         |  WHERE rn = 1),
+         |maj$i AS (${topKSql("vec_id, nl", s"votes$i", 1, "v DESC, nl",
+                      by = "vec_id")}),
          |lab$i AS (
          |  SELECT l.vec_id, l.true_label,
          |    CASE WHEN l.vec_id >= 100 THEN l.cur
@@ -2403,11 +2237,7 @@ object Similarity {
          |  FROM lab${i - 1} l LEFT JOIN maj$i m USING (vec_id))"""
         .stripMargin
     }.mkString(",\n")
-    knnGraphSql
-      .replace("SELECT vid AS vec_id, nbr, cos, rn FROM (",
-        ", knn AS (SELECT vid AS vec_id, nbr, cos, rn FROM (")
-      .replace("WHERE rn <= 3 ORDER BY vec_id, rn",
-        "WHERE rn <= 3)") +
+    qvecCte + bucketsCte + knnCte +
       s""",
          |edges AS (SELECT vec_id, nbr FROM knn),
          |lab0 AS (
@@ -2437,19 +2267,9 @@ object Similarity {
     */
   def matryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    def top3(emb: DataFrame): DataFrame = {
-      val queries = emb.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"))
-      emb.crossJoin(broadcast(queries))
-        .filter($"vec_id" =!= $"qid")
-        .withColumn("cos", round(dot($"q", $"qq").cast("double")
-          / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"qid").orderBy($"cos".desc, $"vec_id")))
-        .filter($"rn" <= 3)
+    def top3(emb: DataFrame): DataFrame =
+      topK(cosineScored(emb), 3, Seq($"cos".desc, $"vec_id"))
         .select($"qid", $"vec_id")
-    }
     val emb = qEmb(s, dir).pin // full + prefix passes
     val full = top3(emb)
     val prefix = top3(emb.select($"vec_id", slice($"q", 1, 16).as("q"))
@@ -2465,49 +2285,18 @@ object Similarity {
   }
 
   val matryoshkaRecallSql: String = qvecCte +
-    """, qp AS (SELECT vec_id, q[1:16] AS q FROM qv),
-      |np AS (
-      |  SELECT vec_id, sum(e * e)::BIGINT AS n2
-      |  FROM (SELECT vec_id, unnest(q) AS e FROM qp) GROUP BY vec_id),
-      |fd AS (
-      |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 10) q
-      |    JOIN qv e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2),
-      |ft AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, fd.vec_id, row_number() OVER (PARTITION BY qid
-      |      ORDER BY round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) DESC,
-      |               fd.vec_id) AS rn
-      |    FROM fd JOIN nrm nq ON fd.qid = nq.vec_id
-      |            JOIN nrm ne ON fd.vec_id = ne.vec_id) t
-      |  WHERE rn <= 3),
-      |pd AS (
-      |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, q FROM qp WHERE vec_id < 10) q
-      |    JOIN qp e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2),
-      |pt AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, pd.vec_id, row_number() OVER (PARTITION BY qid
-      |      ORDER BY round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) DESC,
-      |               pd.vec_id) AS rn
-      |    FROM pd JOIN np nq ON pd.qid = nq.vec_id
-      |            JOIN np ne ON pd.vec_id = ne.vec_id) t
-      |  WHERE rn <= 3),
-      |hits AS (
-      |  SELECT ft.qid, count(*)::BIGINT AS n_hits
-      |  FROM ft JOIN pt ON ft.qid = pt.qid AND ft.vec_id = pt.vec_id
-      |  GROUP BY ft.qid)
-      |SELECT q.qid, coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-      |  ((coalesce(h.n_hits, 0) * 1000) // 3)::BIGINT AS recall_permille
-      |FROM (SELECT DISTINCT qid FROM ft) q
-      |LEFT JOIN hits h ON q.qid = h.qid
-      |ORDER BY q.qid""".stripMargin
+    s""", qp AS (SELECT vec_id, q[1:16] AS q FROM qv),
+       |np AS (
+       |  SELECT vec_id, sum(e * e)::BIGINT AS n2
+       |  FROM (SELECT vec_id, unnest(q) AS e FROM qp) GROUP BY vec_id),
+       |${cosineCte("fs")},
+       |${cosineCte("ps", probeDotsSql(probeJoin("qp")), "np")},
+       |ft AS (${topKSql("qid, vec_id", "fs", 3, "cos DESC, vec_id")}),
+       |pt AS (${topKSql("qid, vec_id", "ps", 3, "cos DESC, vec_id")}),
+       |hits AS (${hitsSql("ft", "pt")})
+       |SELECT qid, n_hit AS n_hits,
+       |  ((n_hit * 1000) // 3)::BIGINT AS recall_permille
+       |FROM hits ORDER BY qid""".stripMargin
 
   /** Selection size k shared by [[diversitySample]] and its SQL oracle. */
   val DiversityK = 10
@@ -2560,7 +2349,7 @@ object Similarity {
         .join(broadcast(chosen.select($"cid".as("vec_id"))),
           Seq("vec_id"), "left_anti")
         .crossJoin(broadcast(chosen.select($"cid", $"cq", $"cn2")))
-        .withColumn("d2", $"n2" - lit(2L) * dot($"q", $"cq") + $"cn2")
+        .withColumn("d2", l2($"q", $"n2", $"cq", $"cn2"))
         .groupBy($"vec_id").agg(min($"d2").as("md2"))
         .orderBy($"md2".desc, $"vec_id")
         .limit(1)
@@ -2592,13 +2381,9 @@ object Similarity {
       val prev = s"ch${i - 1}"
       sb ++=
         s""",
-           |dd$i AS (
-           |  SELECT vec_id, cid, sum(x * y) AS d FROM (
-           |    SELECT e.vec_id, c.vec_id AS cid,
-           |           unnest(e.q) AS x, unnest(c.q) AS y
-           |    FROM qv e CROSS JOIN $prev c
-           |    WHERE e.vec_id NOT IN (SELECT vec_id FROM $prev)) z
-           |  GROUP BY 1, 2),
+           |dd$i AS (${dotSql(Seq("e.vec_id", "c.vec_id AS cid"), "e.q", "c.q",
+                         s"qv e CROSS JOIN $prev c\n    WHERE e.vec_id " +
+                           s"NOT IN (SELECT vec_id FROM $prev)")}),
            |m$i AS (
            |  SELECT dd.vec_id,
            |    min(ne.n2 - 2 * dd.d + nc.n2)::BIGINT AS md2
@@ -2645,13 +2430,12 @@ object Similarity {
   private def sqScored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = sq8(qEmb(s, dir))
-    val queries = emb.filter($"vec_id" < 10)
+    val queries = emb.filter($"vec_id" < Probes)
       .select($"vec_id".as("qid"), $"c".as("qc"), $"qs".as("qqs"), $"n2".as("qn2"))
     emb.crossJoin(broadcast(queries))
       .filter($"vec_id" =!= $"qid")
       .withColumn("cos_sq",
-        round(($"qqs" * $"qs" * dot($"c", $"qc")).cast("double")
-          / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
+        cosine($"qqs" * $"qs" * dot($"c", $"qc"), $"n2", $"qn2"))
       .select($"qid", $"vec_id", $"cos_sq")
   }
 
@@ -2664,17 +2448,13 @@ object Similarity {
     */
   def sqTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    sqScored(s, dir)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"cos_sq".desc, $"vec_id")))
-      .filter($"rn" <= 3)
+    topK(sqScored(s, dir), 3, Seq($"cos_sq".desc, $"vec_id"))
       .select($"qid", $"vec_id", $"cos_sq", $"rn")
       .orderBy($"qid", $"rn")
   }
 
   private val sqCtes: String =
-    """, sqv AS (
+    s""", sqv AS (
       |  SELECT vec_id,
       |    greatest(1, floor((list_max([abs(e) FOR e IN q]) + 126) / 127)::BIGINT)
       |      AS qs,
@@ -2684,25 +2464,18 @@ object Similarity {
       |  SELECT vec_id, qs,
       |    [floor(e::DOUBLE / qs)::BIGINT FOR e IN q] AS c
       |  FROM sqv),
-      |cdots AS (
-      |  SELECT qid, vec_id, qqs, dqs, sum(x * y)::BIGINT AS cd FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id, q.qs AS qqs, e.qs AS dqs,
-      |           unnest(q.c) AS x, unnest(e.c) AS y
-      |    FROM (SELECT * FROM sqc WHERE vec_id < 10) q
-      |    JOIN sqc e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2, 3, 4),
       |sqscored AS (
-      |  SELECT qid, cdots.vec_id,
-      |    round(qqs * dqs * cd / (sqrt(ne.n2) * sqrt(nq.n2)), 4) AS cos_sq
-      |  FROM cdots JOIN nrm nq ON cdots.qid = nq.vec_id
-      |             JOIN nrm ne ON cdots.vec_id = ne.vec_id)
+      |  SELECT d.qid, d.vec_id,
+      |    ${cosineSql("d.qqs * d.dqs * d.d", "nq", "ne")} AS cos_sq
+      |  FROM (${dotSql(Seq("q.vec_id AS qid", "e.vec_id", "q.qs AS qqs",
+                 "e.qs AS dqs"), "q.c", "e.c", probeJoin("sqc"))}) d
+      |  JOIN nrm nq ON d.qid = nq.vec_id
+      |  JOIN nrm ne ON d.vec_id = ne.vec_id)
       |""".stripMargin
 
   val sqTopKSql: String = qvecCte + sqCtes +
-    """SELECT qid, vec_id, cos_sq, rn FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY qid
-      |    ORDER BY cos_sq DESC, vec_id) AS rn FROM sqscored) t
-      |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin
+    topKSql("qid, vec_id, cos_sq, rn", "sqscored", 3, "cos_sq DESC, vec_id") +
+    " ORDER BY qid, rn"
 
   /** SQ8 recall@3 against the exact-cosine top-3 — the acceptance gate a
     * deployment runs before swapping the float store for codes (same
@@ -2711,53 +2484,19 @@ object Similarity {
     */
   def sqRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val emb = qEmb(s, dir)
-    val queries = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"))
-    val exact = emb.crossJoin(broadcast(queries))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("cos",
-        round(dot($"q", $"qq").cast("double")
-          / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"cos".desc, $"vec_id")))
-      .filter($"rn" <= 3)
+    val exact = topK(cosineScored(qEmb(s, dir)), 3, Seq($"cos".desc, $"vec_id"))
       .select($"qid", $"vec_id")
-    val approx = sqScored(s, dir)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"cos_sq".desc, $"vec_id")))
-      .filter($"rn" <= 3)
+    val approx = topK(sqScored(s, dir), 3, Seq($"cos_sq".desc, $"vec_id"))
       .select($"qid".as("aqid"), $"vec_id".as("avid"))
-    exact.join(approx, $"qid" === $"aqid" && $"vec_id" === $"avid", "left")
-      .groupBy($"qid")
-      .agg(count(lit(1)).as("n_exact"), count($"avid").as("n_hit"))
-      .orderBy($"qid")
+    hitsOf(exact, approx).orderBy($"qid")
   }
 
   val sqRecallSql: String = qvecCte + sqCtes +
-    """, atop AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-      |      ORDER BY cos_sq DESC, vec_id) AS rn FROM sqscored) t
-      |  WHERE rn <= 3),
-      |edots AS (
-      |  SELECT qid, vec_id, sum(x * y)::BIGINT AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id, unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 10) q
-      |    JOIN qv e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2),
-      |exact3 AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT d.qid, d.vec_id, row_number() OVER (PARTITION BY d.qid
-      |      ORDER BY round(d.d / (sqrt(ne.n2) * sqrt(nq.n2)), 4) DESC,
-      |               d.vec_id) AS rn
-      |    FROM edots d JOIN nrm nq ON d.qid = nq.vec_id
-      |                 JOIN nrm ne ON d.vec_id = ne.vec_id) t
-      |  WHERE rn <= 3)
-      |SELECT e.qid, count(*)::BIGINT AS n_exact, count(a.vec_id)::BIGINT AS n_hit
-      |FROM exact3 e LEFT JOIN atop a ON e.qid = a.qid AND e.vec_id = a.vec_id
-      |GROUP BY e.qid ORDER BY e.qid""".stripMargin
+    s""", atop AS (${topKSql("qid, vec_id", "sqscored", 3,
+                     "cos_sq DESC, vec_id")}),
+       |${cosineCte("escored")},
+       |exact3 AS (${topKSql("qid, vec_id", "escored", 3, "cos DESC, vec_id")})
+       |${hitsSql("exact3", "atop")} ORDER BY e.qid""".stripMargin
 
   /** MMR (Maximal Marginal Relevance, Carbonell & Goldstein 1998)
     * diversity rerank of retrieval candidates: per query (vec_id < 5),
@@ -2784,12 +2523,10 @@ object Similarity {
     val emb = qEmb(s, dir)
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"q".as("qq"))
-    val pool = emb.crossJoin(broadcast(queries))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("dq", dot($"q", $"qq"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"dq".desc, $"vec_id")))
-      .filter($"rn" <= 8)
+    val pool = topK(emb.crossJoin(broadcast(queries))
+        .filter($"vec_id" =!= $"qid")
+        .withColumn("dq", dot($"q", $"qq")),
+      8, Seq($"dq".desc, $"vec_id"))
       .select($"qid", $"vec_id".as("cid"), $"q", $"dq")
       .pin // pairwise dots + every greedy round
     val ccd = pool.select($"qid", $"cid".as("c1"), $"q".as("q1"))
@@ -2825,32 +2562,21 @@ object Similarity {
 
   val mmrRerankSql: String = {
     val sb = new StringBuilder(qvecCte)
-    sb ++=
-      """, qdots AS (
-        |  SELECT qid, vec_id, sum(x * y)::BIGINT AS dq FROM (
-        |    SELECT q.vec_id AS qid, e.vec_id,
-        |           unnest(q.q) AS x, unnest(e.q) AS y
-        |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 5) q
-        |    JOIN qv e ON e.vec_id <> q.vec_id) z
-        |  GROUP BY 1, 2),
-        |pool AS MATERIALIZED (
-        |  SELECT qid, vec_id AS cid, dq FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY qid
-        |      ORDER BY dq DESC, vec_id) AS rn
-        |    FROM qdots) t WHERE rn <= 8),
-        |ccd AS MATERIALIZED (
-        |  SELECT qid, c1, c2, sum(x * y)::BIGINT AS d FROM (
-        |    SELECT a.qid, a.cid AS c1, b.cid AS c2,
-        |           unnest(qa.q) AS x, unnest(qb.q) AS y
-        |    FROM pool a JOIN pool b ON a.qid = b.qid AND a.cid <> b.cid
+    val dots = probeDotsSql("(SELECT vec_id, q FROM qv WHERE vec_id < 5) q" +
+      "\n    JOIN qv e ON e.vec_id <> q.vec_id")
+    val pairDots = dotSql(Seq("a.qid", "a.cid AS c1", "b.cid AS c2"),
+      "qa.q", "qb.q",
+      """pool a JOIN pool b ON a.qid = b.qid AND a.cid <> b.cid
         |    JOIN qv qa ON a.cid = qa.vec_id
-        |    JOIN qv qb ON b.cid = qb.vec_id) z
-        |  GROUP BY 1, 2, 3),
-        |s1 AS MATERIALIZED (
-        |  SELECT qid, cid, 1 AS sel_order, 7 * dq AS mmr_score FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY qid
-        |      ORDER BY dq DESC, cid) AS rn
-        |    FROM pool) t WHERE rn = 1),
+        |    JOIN qv qb ON b.cid = qb.vec_id""".stripMargin)
+    sb ++=
+      s""", qdots AS ($dots),
+        |pool AS MATERIALIZED (${topKSql("qid, vec_id AS cid, d AS dq",
+                                  "qdots", 8, "d DESC, vec_id")}),
+        |ccd AS MATERIALIZED ($pairDots),
+        |s1 AS MATERIALIZED (${topKSql(
+          "qid, cid, 1 AS sel_order, 7 * dq AS mmr_score", "pool", 1,
+          "dq DESC, cid")}),
         |ch1 AS (SELECT qid, cid FROM s1)""".stripMargin
     for (i <- 2 to 4) {
       sb ++=
@@ -2863,11 +2589,9 @@ object Similarity {
            |  WHERE NOT EXISTS (SELECT 1 FROM ch${i - 1} w
            |                    WHERE w.qid = p.qid AND w.cid = p.cid)
            |  GROUP BY p.qid, p.cid, p.dq),
-           |s$i AS MATERIALIZED (
-           |  SELECT qid, cid, $i AS sel_order, score AS mmr_score FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY qid
-           |      ORDER BY score DESC, cid) AS rn
-           |    FROM cand$i) t WHERE rn = 1),
+           |s$i AS MATERIALIZED (${topKSql(
+             s"qid, cid, $i AS sel_order, score AS mmr_score", s"cand$i", 1,
+             "score DESC, cid")}),
            |ch$i AS (SELECT qid, cid FROM ch${i - 1}
            |         UNION ALL SELECT qid, cid FROM s$i)""".stripMargin
     }
@@ -2917,10 +2641,7 @@ object Similarity {
   }
 
   val nearestCentroidSql: String =
-    """WITH qv AS (
-      |  SELECT vec_id, label,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
+    s"""WITH qv AS (SELECT vec_id, label, $qvecSql AS q FROM embeddings),
       |ex AS (SELECT vec_id, label, unnest(q) AS e,
       |              generate_subscripts(q, 1) - 1 AS d FROM qv),
       |cent AS (SELECT label AS clabel, d,
@@ -2930,11 +2651,8 @@ object Similarity {
       |  SELECT vec_id, label, clabel,
       |    sum((e - m) * (e - m))::BIGINT AS dist
       |  FROM ex JOIN cent USING (d) GROUP BY 1, 2, 3),
-      |pred AS (
-      |  SELECT vec_id, label, clabel AS pred_label FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist, clabel) AS rn FROM dist) t
-      |  WHERE rn = 1)
+      |pred AS (${topKSql("vec_id, label, clabel AS pred_label", "dist", 1,
+                  "dist, clabel", by = "vec_id")})
       |SELECT label::BIGINT AS true_label, pred_label::BIGINT AS pred_label,
       |  count(*)::BIGINT AS n
       |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
@@ -2961,20 +2679,7 @@ object Similarity {
   def knnClassify(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(s, dir)
-      .select($"vec_id", $"label".cast("long").as("label"),
-        qvec($"embedding").as("q"))
-      .withColumn("n2", norm2($"q"))
-    val test = emb.filter($"vec_id" < 100)
-      .select($"vec_id".as("qid"), $"label".as("true_label"),
-        $"q".as("qq"), $"n2".as("qn2"))
-    val train = emb.filter($"vec_id" >= 100)
-    train.crossJoin(broadcast(test))
-      .select($"qid", $"true_label", $"vec_id", $"label",
-        ($"n2" + $"qn2" - lit(2L) * dot($"q", $"qq")).as("d2"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"d2", $"vec_id")))
-      .filter($"rn" <= 5)
+    l2TopK(qEmb(s, dir, $"label".cast("long").as("label")), 100, 5)
       .groupBy($"qid", $"true_label", $"label")
       .agg(count(lit(1)).as("v"))
       .withColumn("vr", row_number().over(
@@ -2985,36 +2690,71 @@ object Similarity {
       .orderBy($"true_label", $"pred_label")
   }
 
-  val knnClassifySql: String =
-    """WITH qv AS (
-      |  SELECT vec_id, label::BIGINT AS label,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
-      |tr AS (SELECT * FROM qv WHERE vec_id >= 100),
-      |te AS (SELECT vec_id AS qid, label AS true_label, q AS qq
-      |       FROM qv WHERE vec_id < 100),
-      |d AS (
-      |  SELECT qid, true_label, vec_id, label,
-      |    sum((x - y) * (x - y))::BIGINT AS d2
-      |  FROM (SELECT te.qid, te.true_label, tr.vec_id, tr.label,
-      |          unnest(tr.q) AS x, unnest(te.qq) AS y
-      |        FROM tr, te) z
-      |  GROUP BY 1, 2, 3, 4),
-      |nn AS (
-      |  SELECT qid, true_label, label FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY qid
-      |      ORDER BY d2, vec_id) AS rn FROM d) t
-      |  WHERE rn <= 5),
+  /** The `k` nearest vectors by exact squared L2 of each of the first `n`
+    * vectors of `emb` (vec_id, label, q, n2), searched among the rest, as
+    * (qid, true_label, vec_id, label, d2, rn): the exact retrieval under
+    * [[knnClassify]]'s vote and [[rankedTopOf]]'s ranking evals.
+    */
+  private def l2TopK(emb: DataFrame, n: Int, k: Int): DataFrame = {
+    import emb.sparkSession.implicits._
+    val probes = emb.filter($"vec_id" < n)
+      .select($"vec_id".as("qid"), $"label".as("true_label"),
+        $"q".as("qq"), $"n2".as("qn2"))
+    topK(emb.filter($"vec_id" >= n).crossJoin(broadcast(probes))
+        .select($"qid", $"true_label", $"vec_id", $"label",
+          ($"n2" + $"qn2" - lit(2L) * dot($"q", $"qq")).as("d2")),
+      k, Seq($"d2", $"vec_id"))
+  }
+
+  /** `qv`/`nrm` over the labeled vectors and `top(qid, true_label,
+    * vec_id, label, d, d2, rn)`: the SQL twin of [[l2TopK]].
+    */
+  private def l2TopSql(n: Int, k: Int): String = {
+    val dots = dotSql(Seq("p.vec_id AS qid", "p.label AS true_label",
+      "c.vec_id", "c.label"), "p.q", "c.q",
+      s"qv p JOIN qv c ON p.vec_id < $n AND c.vec_id >= $n")
+    val scored =
+      s"""(SELECT d.*, np.n2 + nc.n2 - 2 * d.d AS d2
+         |    FROM ($dots) d
+         |    JOIN nrm np ON d.qid = np.vec_id
+         |    JOIN nrm nc ON d.vec_id = nc.vec_id) s""".stripMargin
+    qvCte("vec_id, label::BIGINT AS label") +
+      s", top AS (${topKSql("*", scored, k, "d2, vec_id")})"
+  }
+
+  val knnClassifySql: String = l2TopSql(100, 5) +
+    s""",
       |votes AS (
       |  SELECT qid, true_label, label, count(*) AS v
-      |  FROM nn GROUP BY 1, 2, 3),
-      |pred AS (
-      |  SELECT qid, true_label, label AS pred_label FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY qid
-      |      ORDER BY v DESC, label) AS rn FROM votes) t
-      |  WHERE rn = 1)
+      |  FROM top GROUP BY 1, 2, 3),
+      |pred AS (${topKSql("qid, true_label, label AS pred_label", "votes", 1,
+                  "v DESC, label")})
       |SELECT true_label, pred_label, count(*)::BIGINT AS n
       |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** The exact top-10 retrieval frame under label relevance — (qid,
+    * true_label, vec_id, label, rn), rn 1..10 by quantized L2 with
+    * vec_id ties — shared by [[evalNdcg]] and [[evalRankBattery]]; the
+    * per-label corpus counts ride along for the ideal-ranking
+    * denominators.
+    */
+  private def rankedTopOf(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val emb = qEmb(s, dir, $"label".cast("long").as("label"))
+    val nLabel = emb.filter($"vec_id" >= Probes)
+      .groupBy($"label".as("true_label"))
+      .agg(count(lit(1)).as("n_label"))
+    (l2TopK(emb, Probes, 10), nLabel)
+  }
+
+  /** SQL twin of [[rankedTopOf]]: [[l2TopSql]] and `nl(true_label,
+    * n_label)`.
+    */
+  private val rankedTopSql: String = l2TopSql(Probes, 10) +
+    s""",
+       |nl AS (SELECT label AS true_label, count(*)::BIGINT AS n_label
+       |       FROM qv WHERE vec_id >= $Probes GROUP BY 1)""".stripMargin
 
   /** nDCG@10 of the exact k-NN retrieval under label relevance — the
     * ranking-quality metric that completes the eval battery (AUC and
@@ -3037,35 +2777,6 @@ object Similarity {
     * one keyed aggregation. Nothing holds more than 10 rows per query
     * past the scan.
     */
-  /** The exact top-10 retrieval frame under label relevance — (qid,
-    * true_label, vec_id, label, rn), rn 1..10 by quantized L2 with
-    * vec_id ties — shared by [[evalNdcg]] and [[evalRankBattery]]; the
-    * per-label corpus counts ride along for the ideal-ranking
-    * denominators.
-    */
-  private def rankedTopOf(s: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(s, dir)
-      .select($"vec_id", $"label".cast("long").as("label"),
-        qvec($"embedding").as("q"))
-      .withColumn("n2", norm2($"q"))
-    val qs = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"label".as("true_label"),
-        $"q".as("qq"), $"n2".as("qn2"))
-    val corpus = emb.filter($"vec_id" >= 10)
-    val nLabel = corpus.groupBy($"label".as("true_label"))
-      .agg(count(lit(1)).as("n_label"))
-    val top = corpus.crossJoin(broadcast(qs))
-      .select($"qid", $"true_label", $"vec_id", $"label",
-        ($"n2" + $"qn2" - lit(2L) * dot($"q", $"qq")).as("d2"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qid").orderBy($"d2", $"vec_id")))
-      .filter($"rn" <= 10)
-    (top, nLabel)
-  }
-
   def evalNdcg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val wts = Seq(13860L, 9240L, 6930L, 5544L, 4620L,
@@ -3087,28 +2798,8 @@ object Similarity {
       .orderBy($"qid")
   }
 
-  val evalNdcgSql: String =
-    """WITH qv AS (
-      |  SELECT vec_id, label::BIGINT AS label,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
-      |co AS (SELECT * FROM qv WHERE vec_id >= 10),
-      |qs AS (SELECT vec_id AS qid, label AS true_label, q AS qq
-      |       FROM qv WHERE vec_id < 10),
-      |nl AS (SELECT label AS true_label, count(*)::BIGINT AS n_label
-      |       FROM co GROUP BY 1),
-      |d AS (
-      |  SELECT qid, true_label, vec_id, label,
-      |    sum((x - y) * (x - y))::BIGINT AS d2
-      |  FROM (SELECT qs.qid, qs.true_label, co.vec_id, co.label,
-      |          unnest(co.q) AS x, unnest(qs.qq) AS y
-      |        FROM co, qs) z
-      |  GROUP BY 1, 2, 3, 4),
-      |top AS (
-      |  SELECT qid, true_label, label, rn FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY qid
-      |      ORDER BY d2, vec_id) AS rn FROM d) t
-      |  WHERE rn <= 10),
+  val evalNdcgSql: String = rankedTopSql +
+    """,
       |g AS (
       |  SELECT qid, true_label,
       |    sum(CASE WHEN label = true_label THEN
@@ -3166,33 +2857,12 @@ object Similarity {
       .orderBy($"qid")
   }
 
-  val evalRankBatterySql: String =
-    """WITH qv AS (
-      |  SELECT vec_id, label::BIGINT AS label,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
-      |co AS (SELECT * FROM qv WHERE vec_id >= 10),
-      |qs AS (SELECT vec_id AS qid, label AS true_label, q AS qq
-      |       FROM qv WHERE vec_id < 10),
-      |nl AS (SELECT label AS true_label, count(*)::BIGINT AS n_label
-      |       FROM co GROUP BY 1),
-      |d AS (
-      |  SELECT qid, true_label, vec_id, label,
-      |    sum((x - y) * (x - y))::BIGINT AS d2
-      |  FROM (SELECT qs.qid, qs.true_label, co.vec_id, co.label,
-      |          unnest(co.q) AS x, unnest(qs.qq) AS y
-      |        FROM co, qs) z
-      |  GROUP BY 1, 2, 3, 4),
-      |top AS (
-      |  SELECT qid, true_label, label, rn,
-      |    CASE WHEN label = true_label THEN 1 ELSE 0 END AS rel
-      |  FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY qid
-      |      ORDER BY d2, vec_id) AS rn FROM d) t
-      |  WHERE rn <= 10),
+  val evalRankBatterySql: String = rankedTopSql +
+    """,
       |m AS (
       |  SELECT *, sum(rel) OVER (PARTITION BY qid ORDER BY rn) AS ck
-      |  FROM top),
+      |  FROM (SELECT *, CASE WHEN label = true_label THEN 1 ELSE 0 END AS rel
+      |        FROM top)),
       |g AS (
       |  SELECT qid, true_label, sum(rel)::BIGINT AS n_rel,
       |    sum(CASE WHEN rel = 1 THEN ck * (2520 // rn) ELSE 0 END)::BIGINT
@@ -3238,29 +2908,15 @@ object Similarity {
     */
   def hybridRrf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val byQ = Window.partitionBy($"qid")
-    val emb = Tables.embeddings(s, dir)
-      .select($"vec_id", qvec($"embedding").as("q"))
-      .withColumn("n2", norm2($"q"))
-    val probes = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"))
-    val vrank = emb.crossJoin(broadcast(probes))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("cos", round(dot($"q", $"qq").cast("double")
-        / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
-      .withColumn("rv",
-        row_number().over(byQ.orderBy($"cos".desc, $"vec_id")))
-      .filter($"rv" <= 20)
+    val vrank = topK(cosineScored(qEmb(s, dir)), 20,
+        Seq($"cos".desc, $"vec_id"), rank = "rv")
       .select($"qid", $"vec_id".as("doc_id"), $"rv")
     val lrank = hybridRrfLex(s, dir)
-    vrank.join(lrank, Seq("qid", "doc_id"), "full_outer")
-      .withColumn("rrf_score",
-        coalesce(expr("1000000 div (60 + rv)"), lit(0L))
-          + coalesce(expr("1000000 div (60 + rl)"), lit(0L)))
-      .withColumn("rank",
-        row_number().over(byQ.orderBy($"rrf_score".desc, $"doc_id")))
-      .filter($"rank" <= 5)
+    topK(vrank.join(lrank, Seq("qid", "doc_id"), "full_outer")
+        .withColumn("rrf_score",
+          coalesce(expr("1000000 div (60 + rv)"), lit(0L))
+            + coalesce(expr("1000000 div (60 + rl)"), lit(0L))),
+      5, Seq($"rrf_score".desc, $"doc_id"), rank = "rank")
       .select($"qid", $"rank".cast("long").as("rank"), $"doc_id",
         $"rrf_score", $"rv".cast("long").as("vec_rank"),
         $"rl".cast("long").as("lex_rank"))
@@ -3271,8 +2927,6 @@ object Similarity {
     * idf-weighted overlap over the df-pruned probe vocabulary. */
   def hybridRrfLex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val byQ = Window.partitionBy($"qid")
     val words = Tables.documents(s, dir)
       .select($"doc_id", explode(split($"text", " ")).as("w")).distinct()
     val ndocs = Tables.documents(s, dir)
@@ -3286,36 +2940,21 @@ object Similarity {
       .select($"w", $"df")
     // probe vocab ∩ kept terms is tiny (10 docs' tail vocabulary):
     // broadcast it against the posting scan — no shuffle on the term key
-    val probeTerms = words.filter($"doc_id" < 10)
+    val probeTerms = words.filter($"doc_id" < Probes)
       .select($"doc_id".as("qid"), $"w")
       .join(dfreq, Seq("w"))
-    words.join(broadcast(probeTerms), Seq("w"))
-      .filter($"doc_id" =!= $"qid")
-      .groupBy($"qid", $"doc_id")
-      .agg(sum(expr("1000000 div df")).as("lex"))
-      .withColumn("rl",
-        row_number().over(byQ.orderBy($"lex".desc, $"doc_id")))
-      .filter($"rl" <= 20)
+    topK(words.join(broadcast(probeTerms), Seq("w"))
+        .filter($"doc_id" =!= $"qid")
+        .groupBy($"qid", $"doc_id")
+        .agg(sum(expr("1000000 div df")).as("lex")),
+      20, Seq($"lex".desc, $"doc_id"), rank = "rl")
       .select($"qid", $"doc_id", $"rl")
   }
 
   val hybridRrfSql: String = qvecCte +
-    """, dots AS (
-      |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 10) q
-      |    JOIN qv e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2),
-      |vrank AS (
-      |  SELECT qid, vec_id AS doc_id, rv FROM (
-      |    SELECT qid, d.vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY
-      |        round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) DESC, d.vec_id)
-      |        AS rv
-      |    FROM dots d JOIN nrm nq ON d.qid = nq.vec_id
-      |                JOIN nrm ne ON d.vec_id = ne.vec_id) t
-      |  WHERE rv <= 20),
+    s""", ${cosineCte("scored")},
+      |vrank AS (${topKSql("qid, vec_id AS doc_id, rv", "scored", 20,
+                    "cos DESC, vec_id", rank = "rv")}),
       |words AS (
       |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w
       |  FROM documents),
@@ -3324,19 +2963,14 @@ object Similarity {
       |  SELECT w, df FROM (
       |    SELECT w, count(*)::BIGINT AS df FROM words GROUP BY w) d, nd
       |  WHERE d.df * 10 <= nd.ndocs OR d.df <= 16),
-      |lrank AS (
-      |  SELECT qid, doc_id, rl FROM (
-      |    SELECT qid, doc_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY lex DESC, doc_id)
-      |        AS rl
-      |    FROM (
-      |      SELECT p.doc_id AS qid, c.doc_id,
-      |        sum(1000000 // df)::BIGINT AS lex
-      |      FROM words p JOIN words c ON p.w = c.w AND p.doc_id <> c.doc_id
-      |      JOIN dfreq f ON f.w = p.w
-      |      WHERE p.doc_id < 10
-      |      GROUP BY 1, 2) s) t
-      |  WHERE rl <= 20),
+      |lex AS (
+      |  SELECT p.doc_id AS qid, c.doc_id, sum(1000000 // df)::BIGINT AS lex
+      |  FROM words p JOIN words c ON p.w = c.w AND p.doc_id <> c.doc_id
+      |  JOIN dfreq f ON f.w = p.w
+      |  WHERE p.doc_id < $Probes
+      |  GROUP BY 1, 2),
+      |lrank AS (${topKSql("qid, doc_id, rl", "lex", 20, "lex DESC, doc_id",
+                   rank = "rl")}),
       |fused AS (
       |  SELECT coalesce(v.qid, l.qid) AS qid,
       |    coalesce(v.doc_id, l.doc_id) AS doc_id,
@@ -3345,11 +2979,9 @@ object Similarity {
       |    v.rv::BIGINT AS vec_rank, l.rl::BIGINT AS lex_rank
       |  FROM vrank v FULL OUTER JOIN lrank l
       |    ON v.qid = l.qid AND v.doc_id = l.doc_id)
-      |SELECT qid, rank, doc_id, rrf_score, vec_rank, lex_rank FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY qid
-      |    ORDER BY rrf_score DESC, doc_id)::BIGINT AS rank
-      |  FROM fused) t
-      |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin
+      |${topKSql("qid, rank, doc_id, rrf_score, vec_rank, lex_rank", "fused",
+         5, "rrf_score DESC, doc_id", rank = "rank")}
+      |ORDER BY qid, rank""".stripMargin
 
   /** Radius (range) search: every corpus vector within exact cosine ≥ 0.30
     * of each probe vector (vec_id < 10) — FAISS's `range_search` contract,
@@ -3366,33 +2998,14 @@ object Similarity {
     */
   def rangeSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val emb = qEmb(s, dir)
-    val queries = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"))
-    emb.crossJoin(broadcast(queries))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("cos",
-        round(dot($"q", $"qq").cast("double")
-          / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
+    cosineScored(qEmb(s, dir))
       .filter($"cos" >= 0.30)
       .select($"qid", $"vec_id", $"cos")
       .orderBy($"qid", $"vec_id")
   }
 
-  val rangeSearchSql: String = qvecCte +
-    """, dots AS (
-      |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 10) q
-      |    JOIN qv e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2)
-      |SELECT qid, d.vec_id,
-      |  round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) AS cos
-      |FROM dots d JOIN nrm nq ON d.qid = nq.vec_id
-      |            JOIN nrm ne ON d.vec_id = ne.vec_id
-      |WHERE round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) >= 0.30
-      |ORDER BY qid, d.vec_id""".stripMargin
+  val rangeSearchSql: String = qvecCte + s", ${cosineCte("scored")}" +
+    "\nSELECT * FROM scored WHERE cos >= 0.30 ORDER BY qid, vec_id"
 
   /** Label-outlier mining: the 20 vectors FARTHEST (exact integer squared
     * L2) from their OWN label centroid — the "probably mislabeled or
@@ -3426,10 +3039,7 @@ object Similarity {
   }
 
   val labelOutliersSql: String =
-    """WITH qv AS (
-      |  SELECT vec_id, label,
-      |    [floor(x::DOUBLE * 10000)::BIGINT FOR x IN embedding] AS q
-      |  FROM embeddings),
+    s"""WITH qv AS (SELECT vec_id, label, $qvecSql AS q FROM embeddings),
       |ex AS (SELECT vec_id, label, unnest(q) AS e,
       |              generate_subscripts(q, 1) - 1 AS d FROM qv),
       |cent AS (SELECT label, d,
@@ -3511,14 +3121,7 @@ object Similarity {
   def sqSpearman(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val emb = qEmb(s, dir)
-    val queries = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("qid"), $"q".as("qq"), $"n2".as("qn2"))
-    val exact = emb.crossJoin(broadcast(queries))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("cos",
-        round(dot($"q", $"qq").cast("double")
-          / (sqrt($"n2".cast("double")) * sqrt($"qn2".cast("double"))), 4))
+    val exact = cosineScored(qEmb(s, dir))
       .withColumn("re", row_number().over(
         Window.partitionBy($"qid").orderBy($"cos".desc, $"vec_id"))
         .cast("long"))
@@ -3540,20 +3143,12 @@ object Similarity {
   }
 
   lazy val sqSpearmanSql: String = qvecCte + sqCtes +
-    """, edots AS (
-      |  SELECT qid, vec_id, sum(x * y) AS d FROM (
-      |    SELECT q.vec_id AS qid, e.vec_id,
-      |           unnest(q.q) AS x, unnest(e.q) AS y
-      |    FROM (SELECT vec_id, q FROM qv WHERE vec_id < 10) q
-      |    JOIN qv e ON e.vec_id <> q.vec_id) z
-      |  GROUP BY 1, 2),
+    s""", ${cosineCte("escored")},
       |erank AS (
-      |  SELECT edots.qid, edots.vec_id,
-      |    row_number() OVER (PARTITION BY edots.qid ORDER BY
-      |      round(d / (sqrt(nq.n2) * sqrt(ne.n2)), 4) DESC, edots.vec_id)
-      |      ::BIGINT AS re
-      |  FROM edots JOIN nrm nq ON edots.qid = nq.vec_id
-      |             JOIN nrm ne ON edots.vec_id = ne.vec_id),
+      |  SELECT qid, vec_id,
+      |    row_number() OVER (PARTITION BY qid
+      |      ORDER BY cos DESC, vec_id)::BIGINT AS re
+      |  FROM escored),
       |arank AS (
       |  SELECT qid, vec_id,
       |    row_number() OVER (PARTITION BY qid
@@ -3605,9 +3200,7 @@ object Similarity {
     import s.implicits._
     val d = 64
     val q = Tables.embeddings(s, dir)
-      .select($"vec_id",
-        transform($"embedding",
-          x => floor(x.cast("double") * 10000d).cast("long")).as("q"))
+      .select($"vec_id", qvec($"embedding").as("q"))
     val tri = flatten(transform(sequence(lit(0), lit(d - 1)), i =>
       transform(sequence(i, lit(d - 1)), j =>
         struct(i.as("i"), j.as("j"),

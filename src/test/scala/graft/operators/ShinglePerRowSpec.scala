@@ -76,4 +76,28 @@ class ShinglePerRowSpec extends SparkSpec {
       assert(codes.count() == codes.distinct().count(), scale)
     }
   }
+
+  test("fold law: reducing only the head gives the per-step remainder's values") {
+    import org.apache.spark.sql.functions.lit
+    // the formula Fingerprint.fold replaced: the accumulator reduced
+    // again before every product
+    def perStep(cs: Seq[Long]): Long =
+      cs.reduceLeft((acc, c) => (acc % M * 131071L + c) % M)
+    val top = (1L << 53) - 1 // the 2^53 bound of Fingerprint.M's scaladoc
+    val cases = Seq(
+      Seq(5L, 7L, 11L),
+      Seq(1L, 2L, 3L, 4L),
+      Seq(M + 12345L, 3L, M - 1L), // head ≥ M
+      Seq(3L * M + 7L, M - 1L, M - 2L, M - 3L),
+      Seq(-17L, 5L, 1L - M), // negative terms
+      Seq(-(M + 9L), -4L, -3L, -2L),
+      Seq(top, top - 1L, top - 2L), // terms near 2^53
+      Seq(top, -top, top, -top),
+      Seq(M - 1L, top, -1L, M))
+    val row = spark.range(1).select(cases.zipWithIndex.map { case (cs, i) =>
+      Fingerprint.fold(cs.map(lit)).as(s"f$i")
+    }: _*).head()
+    for ((cs, i) <- cases.zipWithIndex)
+      assert(row.getLong(i) == perStep(cs), cs.mkString(", "))
+  }
 }
